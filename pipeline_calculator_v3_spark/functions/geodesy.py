@@ -20,11 +20,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .. import US_SURVEY_MILE_M
+
 # Mean Earth radius (IUGG), meters.
 EARTH_RADIUS_M = 6371008.8
-
-# US Survey Mile (src/pipeline_calculator_v3.py:49).
-US_SURVEY_MILE_M = 1609.347218694
 
 
 def haversine_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:

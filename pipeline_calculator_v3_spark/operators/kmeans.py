@@ -120,10 +120,12 @@ def _kernel_batches(batches, cids, C, row_chunk: int, out_schema):
         if n == 0:
             continue
         ids, varr = batch.column(0), batch.column(1)
-        if varr.null_count == 0 and varr.values.null_count == 0 and (
+        # list_flatten honours the batch's slice offset; .values does not
+        flat = pc.list_flatten(varr)
+        if varr.null_count == 0 and flat.null_count == 0 and (
             np.asarray(pc.list_value_length(varr), dtype=np.int64) == d
         ).all():
-            V = np.asarray(varr.values, dtype=np.float64).reshape(n, d)
+            V = np.asarray(flat, dtype=np.float64).reshape(n, d)
             dirty = None
         else:
             # slow lane: per-row python lists; dirty rows (NULL vector,

@@ -541,12 +541,14 @@ def _pairs_cosine_arrow(
         # it, for EVERY partner), so they are filtered in the JVM — which
         # also keeps the Arrow batch free of NULL list elements (Arrow ->
         # pandas turns those into NaN, which has the OPPOSITE threshold
-        # semantics: NaN keeps, NULL drops)
+        # semantics: NaN keeps, NULL drops).  A NULL norm likewise makes
+        # the join's cosine NULL; in the batch it would read as NaN
         .where(
             F.col("vid").isNotNull()
             & F.col("blk").isNotNull()
             & F.col("v").isNotNull()
             & ~F.exists("v", lambda x: x.isNull())
+            & F.col("nrm").isNotNull()
         )
         .withColumn("__g", g)
         .withColumn(

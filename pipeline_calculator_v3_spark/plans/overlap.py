@@ -5,11 +5,21 @@ Input: a T1 `pipelines` DataFrame (pipeline_id, name,
 geometry ARRAY<STRUCT<lon,lat>>).  Output: a dict of DataFrames mirroring the
 reference's result envelope (:885-897).
 
-DAG (SURVEY.md §3): pipelines -> vertices -> lengths
-                                   \\-> segments (cached: 3 downstream uses)
-                                         -> distance join -> sessions ->
-                                            {sections+corridors, per-pipeline
-                                             rollup, effective length}
+DAG (SURVEY.md §3), named by the stage functions below:
+
+    pipelines -> vertices -> lengths
+                    \\-> segmentize -> segments (cached: 3 downstream uses)
+                          -> distance_self_join -> pairs (cached)
+                               |-> sessionize -> bundled_hits (cached)
+                               |      |-> section_stats + corridor_polygons
+                               |      |     -> sections
+                               |      \\-> bundled_rollup -> per_pipeline_overlap
+                               \\-> segment_effective (+ lengths) -> effective
+                                      -> overlap_summary -> summary
+
+The stage functions are the only DataFrame spelling of ops 13-22: the
+registry queries in ``queries_spatial`` / ``queries_e2e`` compose the same
+functions over the oracle-shared synthetic segment field.
 
 The reference mutates pipeline dicts in place to attach segments (:298) and
 re-walks them three times; here `segments` is computed once and cached —
@@ -43,6 +53,104 @@ def _clamp_params(detection_range, min_parallel, segment_length, angular_tol):
         max(min_parallel, 10.0),
         max(segment_length, 1.0),
         min(max(angular_tol, 1.0), 90.0),
+    )
+
+
+def sessionize(pairs: DataFrame) -> DataFrame:
+    """Ops 13-14: sort + 2-index gap sessionization (signed deltas > 2
+    break a section, src/pipeline_calculator_v3.py:421-422).  Every input
+    column rides through plus the ``is_new`` flag and the running bigint
+    ``section`` id per (p1, p2)."""
+    ws = Window.partitionBy("p1", "p2").orderBy("seg1", "seg2")
+    flagged = pairs.withColumn(
+        "is_new",
+        F.when(
+            (F.col("seg1") - F.lag("seg1").over(ws) > 2)
+            | (F.col("seg2") - F.lag("seg2").over(ws) > 2)
+            | F.lag("seg1").over(ws).isNull(),
+            1,
+        ).otherwise(0),
+    )
+    return flagged.withColumn(
+        "section",
+        F.sum("is_new").over(ws.rowsBetween(Window.unboundedPreceding, 0)).cast("bigint"),
+    )
+
+
+def bundled_hits(
+    hits: DataFrame, segment_length_m: float, min_parallel_m: float
+) -> DataFrame:
+    """The HAVING gate: keep the hit rows of sections at least
+    ``min_parallel_m`` long (:425,429) — rows, not aggregates, because the
+    corridor kernel and the op-18 rollup need the hits themselves."""
+    wsec = Window.partitionBy("p1", "p2", "section")
+    return (
+        hits.withColumn("sec_n", F.count(F.lit(1)).over(wsec))
+        .where(F.col("sec_n") * segment_length_m >= min_parallel_m)
+        .drop("sec_n", "is_new")
+    )
+
+
+def section_stats(hits: DataFrame, segment_length_m: float, *extra_aggs) -> DataFrame:
+    """Op 15 per-section aggregates: hit count, bundled length in m and
+    US survey miles, mean separation (plus any ``extra_aggs``)."""
+    n = F.count(F.lit(1))
+    return hits.groupBy("p1", "p2", "section").agg(
+        n.cast("bigint").alias("n_hits"),
+        (n * segment_length_m).alias("bundled_length_m"),
+        (n * segment_length_m / US_SURVEY_MILE_M).alias("bundled_length_mi"),
+        F.avg("dist_m").alias("average_separation"),
+        *extra_aggs,
+    )
+
+
+def bundled_rollup(hits: DataFrame, segment_length_m: float) -> DataFrame:
+    """Op 18: per-pipeline distinct bundled segments (:714-716,748-756) —
+    the set-union of segment indices becomes mirror union + countDistinct."""
+    exploded = hits.select(
+        F.col("p1").alias("pipeline_id"), F.col("seg1").alias("seg")
+    ).unionAll(
+        hits.select(F.col("p2").alias("pipeline_id"), F.col("seg2").alias("seg"))
+    )
+    return (
+        exploded.groupBy("pipeline_id")
+        .agg(F.countDistinct("seg").cast("bigint").alias("bundled_segments"))
+        .select(
+            "pipeline_id",
+            "bundled_segments",
+            (F.col("bundled_segments") * segment_length_m).alias("bundled_length_m"),
+            (
+                F.col("bundled_segments") * segment_length_m / US_SURVEY_MILE_M
+            ).alias("bundled_length_mi"),
+        )
+    )
+
+
+def segment_effective(segments: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Op 21 k-cluster effective length over the segments: per (pipeline,
+    segment), k = distinct parallel pipelines + 1 via the mirror union
+    (:824-833); unmatched segments take k = 1.  Returns per pipeline the
+    summed ``length / k`` (``seg_eff_m``) next to the segmented total
+    (``seg_total_m``)."""
+    neighbors = pairs.select(
+        F.col("p1").alias("p"), F.col("seg1").alias("i"), F.col("p2").alias("o")
+    ).unionAll(
+        pairs.select(F.col("p2").alias("p"), F.col("seg2").alias("i"), F.col("p1").alias("o"))
+    )
+    k = neighbors.groupBy("p", "i").agg((F.countDistinct("o") + 1).alias("k"))
+    return (
+        segments.join(
+            k,
+            (k.p == segments.pipeline_id) & (k.i == segments.seg_index),
+            "left",
+        )
+        .select(
+            "pipeline_id",
+            (F.col("length") / F.coalesce("k", F.lit(1))).alias("eff_m"),
+            "length",
+        )
+        .groupBy("pipeline_id")
+        .agg(F.sum("eff_m").alias("seg_eff_m"), F.sum("length").alias("seg_total_m"))
     )
 
 
@@ -150,92 +258,24 @@ def analyze_pipelines(
         )
     )
 
-    # ops 13-14: sort + 2-index gap sessionization (signed deltas,
-    # src/pipeline_calculator_v3.py:421-422)
-    ws = Window.partitionBy("p1", "p2").orderBy("seg1", "seg2")
-    flagged = pairs.withColumn(
-        "is_new",
-        F.when(
-            (F.col("seg1") - F.lag("seg1").over(ws) > 2)
-            | (F.col("seg2") - F.lag("seg2").over(ws) > 2)
-            | F.lag("seg1").over(ws).isNull(),
-            1,
-        ).otherwise(0),
-    )
-    hits = flagged.withColumn(
-        "section",
-        F.sum("is_new").over(ws.rowsBetween(Window.unboundedPreceding, 0)).cast("bigint"),
-    )
-
-    # HAVING: sections >= min_parallel (:425,429); keep hit rows of kept
-    # sections for corridor geometry + rollups
-    wsec = Window.partitionBy("p1", "p2", "section")
+    # ops 13-17: sessions, kept >= min_parallel hits (persisted: the
+    # section aggregate, the corridor kernel and the op-18 rollup read them)
     kept_hits = persist_tracked(
-        hits.withColumn("sec_n", F.count(F.lit(1)).over(wsec))
-        .where(F.col("sec_n") * segment_length_m >= min_parallel_m)
-        .drop("sec_n", "is_new")
+        bundled_hits(sessionize(pairs), segment_length_m, min_parallel_m)
     )
-
-    # op 15 aggregates + ops 16-17 corridor geometry
     sections = (
-        kept_hits.groupBy("p1", "p2", "section")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_hits"),
-            (F.count(F.lit(1)) * segment_length_m).alias("bundled_length_m"),
-            (F.count(F.lit(1)) * segment_length_m / US_SURVEY_MILE_M).alias(
-                "bundled_length_mi"
-            ),
-            F.avg("dist_m").alias("average_separation"),
-        )
+        section_stats(kept_hits, segment_length_m)
         .join(
             corridor_polygons(kept_hits, detection_range_m, segment_length_m),
             ["p1", "p2", "section", "n_hits"],
         )
         .orderBy(F.desc("bundled_length_mi"))  # op 19 (:744-745)
     )
-
-    # op 18: per-pipeline distinct bundled segments rollup (:714-716,748-756)
-    exploded = kept_hits.select(
-        F.col("p1").alias("pipeline_id"), F.col("seg1").alias("seg")
-    ).unionAll(
-        kept_hits.select(F.col("p2").alias("pipeline_id"), F.col("seg2").alias("seg"))
-    )
-    per_pipeline_overlap = (
-        exploded.groupBy("pipeline_id")
-        .agg(F.countDistinct("seg").cast("bigint").alias("bundled_segments"))
-        .select(
-            "pipeline_id",
-            "bundled_segments",
-            (F.col("bundled_segments") * segment_length_m).alias("bundled_length_m"),
-            (
-                F.col("bundled_segments") * segment_length_m / US_SURVEY_MILE_M
-            ).alias("bundled_length_mi"),
-        )
-    )
+    per_pipeline_overlap = bundled_rollup(kept_hits, segment_length_m)
 
     # op 21: k-cluster effective length + per-pipeline tails (:824-845)
-    neighbors = pairs.select(
-        F.col("p1").alias("p"), F.col("seg1").alias("i"), F.col("p2").alias("o")
-    ).unionAll(
-        pairs.select(F.col("p2").alias("p"), F.col("seg2").alias("i"), F.col("p1").alias("o"))
-    )
-    k = neighbors.groupBy("p", "i").agg((F.countDistinct("o") + 1).alias("k"))
-    seg_eff = (
-        segments.join(
-            k,
-            (k.p == segments.pipeline_id) & (k.i == segments.seg_index),
-            "left",
-        )
-        .select(
-            "pipeline_id",
-            (F.col("length") / F.coalesce("k", F.lit(1))).alias("eff_m"),
-            "length",
-        )
-        .groupBy("pipeline_id")
-        .agg(F.sum("eff_m").alias("seg_eff_m"), F.sum("length").alias("seg_total_m"))
-    )
     effective = (
-        lengths.join(seg_eff, "pipeline_id", "left")
+        lengths.join(segment_effective(segments, pairs), "pipeline_id", "left")
         .select(
             "pipeline_id",
             "length_m",
@@ -251,10 +291,7 @@ def analyze_pipelines(
 
     # op 22 envelope: clamps + savings + parameter echo (:872-896)
     summary = overlap_summary(
-        effective,
-        detection_range_m,
-        min_parallel_m,
-        segment_length_m,
+        effective, detection_range_m, min_parallel_m, segment_length_m,
         angular_tolerance_deg,
     )
 

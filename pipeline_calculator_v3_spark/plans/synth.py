@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import SEGMENT_LENGTH_M
+
 # Segment-field constants (shared with the SQL text below).
 N_PIPES = 8
 LON0 = -103.5
@@ -99,7 +101,10 @@ vertices AS (
 
 
 def segments_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark twin of the ``segments`` CTE (same formulas, same values)."""
+    """Spark twin of the ``segments`` CTE (same formulas, same values),
+    plus segmentize's ``length`` column: every synthetic segment is one
+    literal ``SEGMENT_LENGTH_M`` long, so the op-21 stage of
+    plans/overlap.py runs on this field unchanged."""
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     base = (
         orders.where(F.col("o_orderkey") < SEG_KEY_CAP)
@@ -114,6 +119,7 @@ def segments_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{LON0} + pid * {DLON} AS mid_lon",
             f"{LAT0} + idx * {DLAT} AS mid_lat",
         )
+        .withColumn("length", F.lit(SEGMENT_LENGTH_M))
     )
 
 

@@ -16,8 +16,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import US_SURVEY_MILE_M
 from .functions import timeutil
-from .functions.geodesy import US_SURVEY_MILE_M, haversine_sql
+from .functions.geodesy import haversine_sql
 from .plans import synth
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}

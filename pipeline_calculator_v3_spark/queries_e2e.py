@@ -4,27 +4,33 @@ full-pipeline twin and q_udf_surface)."""
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from . import ANGULAR_TOLERANCE_DEG
+from . import (
+    ANGULAR_TOLERANCE_DEG,
+    DEFAULT_DETECTION_RANGE_M,
+    MIN_PARALLEL_LENGTH_M,
+    SEGMENT_LENGTH_M,
+)
 from .caching import persist_tracked
-from .functions.geodesy import US_SURVEY_MILE_M
 from .operators.spatial import distance_self_join
 from .plans import synth
-from .plans.overlap import analyze_pipelines, overlap_summary
+from .plans.overlap import (
+    analyze_pipelines,
+    bundled_hits,
+    overlap_summary,
+    section_stats,
+    segment_effective,
+    sessionize,
+)
 from .queries import query
 from .queries_spatial import (
     _PAIR_DIST,
     _PAIRS_CTE,
     _SESSIONS_CTE,
-    _k_per_segment,
     _persisted_pairs,
-    _sessionized_hits,
-    DETECTION_RANGE_M,
-    MIN_PARALLEL_M,
-    SEG_LEN_M,
 )
 
 
@@ -68,7 +74,7 @@ pairs_c AS (
            b.mid_lon AS b_lon, b.mid_lat AS b_lat
     FROM segments a JOIN segments b
       ON a.pipeline_id < b.pipeline_id
-    WHERE {_PAIR_DIST} <= {DETECTION_RANGE_M!r}
+    WHERE {_PAIR_DIST} <= {DEFAULT_DETECTION_RANGE_M!r}
 ),
 pairs AS (SELECT p1, p2, seg1, seg2, dist_m FROM pairs_c),
 {_SESSIONS_CTE},
@@ -94,7 +100,7 @@ box AS (
 ),
 wd AS (
     SELECT p1, p2, section,
-           LEAST(MAX(dist_m) + 10.0, {2.0 * DETECTION_RANGE_M!r})
+           LEAST(MAX(dist_m) + 10.0, {2.0 * DEFAULT_DETECTION_RANGE_M!r})
                AS oriented_width_m
     FROM kh GROUP BY 1, 2, 3
 )
@@ -126,24 +132,16 @@ def q_overlap_sections(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.corridor import corridor_polygons
 
     seg = synth.segments_df(spark, sf_dir)
-    pairs = distance_self_join(seg, DETECTION_RANGE_M, keep_coords=True)
-    hits = _sessionized_hits(pairs)
-    wsec = Window.partitionBy("p1", "p2", "section")
+    pairs = distance_self_join(seg, DEFAULT_DETECTION_RANGE_M, keep_coords=True)
     kept = persist_tracked(
-        hits.withColumn("sec_n", F.count(F.lit(1)).over(wsec))
-        .where(F.col("sec_n") * SEG_LEN_M >= MIN_PARALLEL_M)
-        .drop("sec_n", "is_new")
-        .withColumn("section", F.col("section").cast("bigint"))
+        bundled_hits(sessionize(pairs), SEGMENT_LENGTH_M, MIN_PARALLEL_LENGTH_M)
     )
-    agg = kept.groupBy("p1", "p2", "section").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hits"),
-        (F.count(F.lit(1)) * SEG_LEN_M).alias("bundled_length_m"),
-        (F.count(F.lit(1)) * SEG_LEN_M / US_SURVEY_MILE_M).alias(
-            "bundled_length_mi"
-        ),
-        F.avg("dist_m").alias("avg_separation_m"),
+    agg = section_stats(kept, SEGMENT_LENGTH_M).withColumnRenamed(
+        "average_separation", "avg_separation_m"
     )
-    corr = corridor_polygons(kept, DETECTION_RANGE_M, SEG_LEN_M).select(
+    corr = corridor_polygons(
+        kept, DEFAULT_DETECTION_RANGE_M, SEGMENT_LENGTH_M
+    ).select(
         "p1", "p2", "section", "n_hits",
         "center_lon", "center_lat",
         "min_lon", "max_lon", "min_lat", "max_lat",
@@ -168,8 +166,8 @@ k_per_seg AS (
 ),
 eff AS (
     SELECT s.pipeline_id,
-           COUNT(*) * {SEG_LEN_M!r} AS length_m,
-           SUM({SEG_LEN_M!r} / COALESCE(k.k, 1)) AS effective_m
+           COUNT(*) * {SEGMENT_LENGTH_M!r} AS length_m,
+           SUM({SEGMENT_LENGTH_M!r} / COALESCE(k.k, 1)) AS effective_m
     FROM segments s
     LEFT JOIN k_per_seg k ON k.p = s.pipeline_id AND k.i = s.seg_index
     GROUP BY s.pipeline_id
@@ -188,9 +186,9 @@ SELECT ROUND(total_m, 6) AS total_m,
        ROUND(CASE WHEN total_m > 0
                   THEN (total_m - effective_m) / total_m * 100.0
                   ELSE 0.0 END, 6) AS savings_pct,
-       {DETECTION_RANGE_M!r} AS param_detection_range_m,
-       {MIN_PARALLEL_M!r} AS param_min_parallel_m,
-       {SEG_LEN_M!r} AS param_segment_length_m,
+       {DEFAULT_DETECTION_RANGE_M!r} AS param_detection_range_m,
+       {MIN_PARALLEL_LENGTH_M!r} AS param_min_parallel_m,
+       {SEGMENT_LENGTH_M!r} AS param_segment_length_m,
        {ANGULAR_TOLERANCE_DEG!r} AS param_angular_tolerance_deg
 FROM clamped
 """,
@@ -204,21 +202,16 @@ def q_overlap_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     pandas-UDF resampling stays rows-only as q_overlap_e2e).  Float sums
     round to 6 dp on both sides for hash stability."""
     seg = synth.segments_df(spark, sf_dir)
-    k = _k_per_segment(_persisted_pairs(seg))
-    effective = (
-        seg.join(k, (k.p == seg.pipeline_id) & (k.i == seg.seg_index), "left")
-        .select("pipeline_id", F.coalesce("k", F.lit(1)).alias("k"))
-        .groupBy("pipeline_id")
-        .agg(
-            (F.count(F.lit(1)) * SEG_LEN_M).alias("length_m"),
-            F.sum(F.lit(SEG_LEN_M) / F.col("k")).alias("effective_m"),
-        )
+    effective = segment_effective(seg, _persisted_pairs(seg)).select(
+        "pipeline_id",
+        F.col("seg_total_m").alias("length_m"),
+        F.col("seg_eff_m").alias("effective_m"),
     )
     summary = overlap_summary(
         effective,
-        DETECTION_RANGE_M,
-        MIN_PARALLEL_M,
-        SEG_LEN_M,
+        DEFAULT_DETECTION_RANGE_M,
+        MIN_PARALLEL_LENGTH_M,
+        SEGMENT_LENGTH_M,
         ANGULAR_TOLERANCE_DEG,
     )
     return summary.select(

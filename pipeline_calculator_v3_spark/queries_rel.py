@@ -944,9 +944,8 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: both snapshots shuffle once on the key (the full outer
     join cannot broadcast and should not — both sides are table-scale);
     the classification is a post-join projection and the rollup is four
-    groups.  In production the two sides would be bucketed on the key,
-    making the diff shuffle-free — operators/bucketing.py demonstrates
-    exactly that layout."""
+    groups.  In production the two sides would be bucketed on the key
+    (``DataFrameWriter.bucketBy``), making the diff shuffle-free."""
     o = t(spark, sf_dir, "orders")
     old = o.where(F.col("o_orderdate") < "1998-01-01").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"

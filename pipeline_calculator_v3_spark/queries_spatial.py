@@ -4,24 +4,35 @@ Spark-first (SURVEY.md §2 ops 11-21).
 Oracle ground truth is the *cross join* form at sf<=0.01 (tractable for
 DuckDB); the Spark plans use the grid-bucket distance join — different
 physical strategy, identical semantics, which is exactly what the gate
-should prove.
+should prove.  Ops 13-21 are composed from plans/overlap.py's stage
+functions, the code the CLI's ``analyze_pipelines`` runs, so the oracle
+gates that code and not a copy of it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.geodesy import US_SURVEY_MILE_M, haversine_sql
+from . import (
+    DEFAULT_DETECTION_RANGE_M,
+    MIN_PARALLEL_LENGTH_M,
+    SEGMENT_LENGTH_M,
+    US_SURVEY_MILE_M,
+)
+from .functions.geodesy import haversine_sql
 from .operators.segmentize import segmentize
 from .operators.spatial import distance_self_join
 from .plans import synth
+from .plans.overlap import (
+    bundled_hits,
+    bundled_rollup,
+    section_stats,
+    segment_effective,
+    sessionize,
+)
 from .caching import persist_tracked
 from .queries import query
-
-DETECTION_RANGE_M = 15.0  # src/pipeline_calculator_v3.py:38
-MIN_PARALLEL_M = 200.0    # src/pipeline_calculator_v3.py:39
-SEG_LEN_M = 5.0           # src/pipeline_calculator_v3.py:40
 
 _PAIR_DIST = haversine_sql("a.mid_lat", "a.mid_lon", "b.mid_lat", "b.mid_lon")
 
@@ -35,26 +46,11 @@ def _persisted_pairs(seg: DataFrame) -> DataFrame:
     q_effective_length / q_overlap_rollup here and q_overlap_summary in
     queries_e2e.py (review r08: the block was copy-pasted three times)."""
     return persist_tracked(
-        distance_self_join(seg, DETECTION_RANGE_M).select(
+        distance_self_join(seg, DEFAULT_DETECTION_RANGE_M).select(
             "p1", "seg1", "p2", "seg2"
         )
     )
 
-
-def _k_per_segment(pairs: DataFrame) -> DataFrame:
-    """Op 21's bundling factor: per (pipeline, segment), k = distinct
-    parallel pipelines + 1 (src/pipeline_calculator_v3.py:824-833) via the
-    mirror union — each pair contributes both orientations."""
-    neighbors = pairs.select(
-        F.col("p1").alias("p"), F.col("seg1").alias("i"), F.col("p2").alias("o")
-    ).unionAll(
-        pairs.select(
-            F.col("p2").alias("p"), F.col("seg2").alias("i"), F.col("p1").alias("o")
-        )
-    )
-    return neighbors.groupBy("p", "i").agg(
-        (F.countDistinct("o") + 1).cast("bigint").alias("k")
-    )
 
 # Cross-join ground truth for the distance self-join (the reference's exact
 # recheck, src/pipeline_calculator_v3.py:352-361, without the KDTree).
@@ -65,7 +61,7 @@ pairs AS (
            {_PAIR_DIST} AS dist_m
     FROM segments a JOIN segments b
       ON a.pipeline_id < b.pipeline_id
-    WHERE {_PAIR_DIST} <= {DETECTION_RANGE_M!r}
+    WHERE {_PAIR_DIST} <= {DEFAULT_DETECTION_RANGE_M!r}
 )"""
 
 
@@ -81,7 +77,7 @@ def q_spatial_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distance self-join (op 12): grid-bucket equi-join + exact haversine
     recheck vs the oracle's brute-force cross join."""
     seg = synth.segments_df(spark, sf_dir)
-    return distance_self_join(seg, DETECTION_RANGE_M).select(
+    return distance_self_join(seg, DEFAULT_DETECTION_RANGE_M).select(
         "p1", "p2", "seg1", "seg2", "dist_m"
     )
 
@@ -95,7 +91,7 @@ SELECT a.pipeline_id AS p1, b.pipeline_id AS p2,
        {_PAIR_DIST} AS dist_m
 FROM polar_segments a JOIN polar_segments b
   ON a.pipeline_id < b.pipeline_id
-WHERE {_PAIR_DIST} <= {DETECTION_RANGE_M!r}
+WHERE {_PAIR_DIST} <= {DEFAULT_DETECTION_RANGE_M!r}
 """,
 )
 def q_spatial_polar_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -112,7 +108,7 @@ def q_spatial_polar_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE-skew-splittable, exact haversine as the only semantic gate."""
     seg = synth.polar_segments_df(spark, sf_dir)
     return distance_self_join(
-        seg, DETECTION_RANGE_M, max_abs_lat_deg=None
+        seg, DEFAULT_DETECTION_RANGE_M, max_abs_lat_deg=None
     ).select("p1", "p2", "seg1", "seg2", "dist_m")
 
 
@@ -134,59 +130,25 @@ sessioned AS (
 sections AS (
     SELECT p1, p2, CAST(section AS BIGINT) AS section,
            CAST(COUNT(*) AS BIGINT) AS n_hits,
-           COUNT(*) * {SEG_LEN_M!r} AS bundled_length_m,
-           COUNT(*) * {SEG_LEN_M!r} / {US_SURVEY_MILE_M!r} AS bundled_length_mi,
+           COUNT(*) * {SEGMENT_LENGTH_M!r} AS bundled_length_m,
+           COUNT(*) * {SEGMENT_LENGTH_M!r} / {US_SURVEY_MILE_M!r} AS bundled_length_mi,
            AVG(dist_m) AS avg_separation_m,
            MIN(seg1) AS seg1_min, MAX(seg1) AS seg1_max
     FROM sessioned
     GROUP BY p1, p2, section
-    HAVING COUNT(*) * {SEG_LEN_M!r} >= {MIN_PARALLEL_M!r}
+    HAVING COUNT(*) * {SEGMENT_LENGTH_M!r} >= {MIN_PARALLEL_LENGTH_M!r}
 )"""
 
 
-def _sessionized_hits(pairs: DataFrame) -> DataFrame:
-    """The ONE spelling of the flag -> sessionize hit labeling (gap>2
-    break rule, src/pipeline_calculator_v3.py:421-422): every input column
-    rides through plus ``is_new`` and the running ``section`` id.  Shared
-    by the per-section rollup below and the corridor-scalar face
-    (q_overlap_sections), which needs the labeled HIT rows — not the
-    aggregate — to attach midpoint coords for bbox/width math."""
-    w = Window.partitionBy("p1", "p2").orderBy("seg1", "seg2")
-    flagged = pairs.select(
-        "*",
-        F.when(
-            (F.col("seg1") - F.lag("seg1").over(w) > 2)
-            | (F.col("seg2") - F.lag("seg2").over(w) > 2)
-            | F.lag("seg1").over(w).isNull(),
-            1,
-        ).otherwise(0).alias("is_new"),
+def _overlap_sections(pairs: DataFrame, *extra_aggs) -> DataFrame:
+    """Ops 13-15 over a pair frame with the reference constants: sessions,
+    the 200 m HAVING gate, per-section aggregates under the oracle's
+    column names — shared by the oracle-gated query and its scale twin."""
+    hits = bundled_hits(
+        sessionize(pairs), SEGMENT_LENGTH_M, MIN_PARALLEL_LENGTH_M
     )
-    return flagged.withColumn(
-        "section",
-        F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-
-
-def _sessionized_sections(pairs: DataFrame, extra_aggs=()) -> DataFrame:
-    """The ONE spelling of the flag -> sessionize -> per-section rollup
-    pipeline (gap>2 break rule, 200 m HAVING gate) — shared by the
-    oracle-gated query and the scale-stress twin (review r06: the two
-    verbatim copies were a drift channel for the section contract)."""
-    sessioned = _sessionized_hits(
-        pairs.select("p1", "p2", "seg1", "seg2", "dist_m")
-    )
-    return (
-        sessioned.groupBy(
-            "p1", "p2", F.col("section").cast("bigint").alias("section")
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_hits"),
-            (F.count(F.lit(1)) * SEG_LEN_M).alias("bundled_length_m"),
-            *extra_aggs,
-            F.avg("dist_m").alias("avg_separation_m"),
-        )
-        .where(F.col("bundled_length_m") >= MIN_PARALLEL_M)
-    )
+    stats = section_stats(hits, SEGMENT_LENGTH_M, *extra_aggs)
+    return stats.withColumnRenamed("average_separation", "avg_separation_m")
 
 
 @query(
@@ -204,16 +166,10 @@ def q_parallel_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> per-section aggregates with the 200 m HAVING gate (:425,429).
     """
     pairs = distance_self_join(
-        synth.segments_df(spark, sf_dir), DETECTION_RANGE_M
+        synth.segments_df(spark, sf_dir), DEFAULT_DETECTION_RANGE_M
     )
-    return _sessionized_sections(
-        pairs,
-        extra_aggs=(
-            (F.count(F.lit(1)) * SEG_LEN_M / US_SURVEY_MILE_M)
-            .alias("bundled_length_mi"),
-            F.min("seg1").alias("seg1_min"),
-            F.max("seg1").alias("seg1_max"),
-        ),
+    return _overlap_sections(
+        pairs, F.min("seg1").alias("seg1_min"), F.max("seg1").alias("seg1_max")
     )
 
 
@@ -232,10 +188,10 @@ k_per_seg AS (
     FROM neighbors GROUP BY p, i
 )
 SELECT s.pipeline_id,
-       CAST(COUNT(*) AS BIGINT) * {SEG_LEN_M!r} AS total_m,
-       SUM({SEG_LEN_M!r} / COALESCE(k.k, 1)) AS effective_m,
-       CAST(COUNT(*) AS BIGINT) * {SEG_LEN_M!r}
-         - SUM({SEG_LEN_M!r} / COALESCE(k.k, 1)) AS savings_m
+       CAST(COUNT(*) AS BIGINT) * {SEGMENT_LENGTH_M!r} AS total_m,
+       SUM({SEGMENT_LENGTH_M!r} / COALESCE(k.k, 1)) AS effective_m,
+       CAST(COUNT(*) AS BIGINT) * {SEGMENT_LENGTH_M!r}
+         - SUM({SEGMENT_LENGTH_M!r} / COALESCE(k.k, 1)) AS savings_m
 FROM segments s
 LEFT JOIN k_per_seg k ON k.p = s.pipeline_id AND k.i = s.seg_index
 GROUP BY s.pipeline_id
@@ -246,16 +202,11 @@ def q_effective_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines + 1 (src/pipeline_calculator_v3.py:824-833); attribute len/k
     (:835-837); unmatched segments contribute full length (k=1)."""
     seg = synth.segments_df(spark, sf_dir)
-    k = _k_per_segment(_persisted_pairs(seg))
-    joined = seg.join(
-        k, (k.p == seg.pipeline_id) & (k.i == seg.seg_index), "left"
-    ).select("pipeline_id", F.coalesce("k", F.lit(1)).alias("k"))
-    return joined.groupBy("pipeline_id").agg(
-        (F.count(F.lit(1)) * SEG_LEN_M).cast("double").alias("total_m"),
-        F.sum(F.lit(SEG_LEN_M) / F.col("k")).alias("effective_m"),
-        (
-            F.count(F.lit(1)) * SEG_LEN_M - F.sum(F.lit(SEG_LEN_M) / F.col("k"))
-        ).alias("savings_m"),
+    return segment_effective(seg, _persisted_pairs(seg)).select(
+        "pipeline_id",
+        F.col("seg_total_m").alias("total_m"),
+        F.col("seg_eff_m").alias("effective_m"),
+        (F.col("seg_total_m") - F.col("seg_eff_m")).alias("savings_m"),
     )
 
 
@@ -264,7 +215,7 @@ def q_segmentize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Op 11: pandas-UDF polyline resampler over the synthetic vertex table
     (rows-only check; unit-tested against closed-form geometry in
     tests/test_segmentize.py)."""
-    return segmentize(synth.vertices_df(spark, sf_dir), SEG_LEN_M)
+    return segmentize(synth.vertices_df(spark, sf_dir), SEGMENT_LENGTH_M)
 
 
 def _segments_xl(spark: SparkSession, sf_dir: str):
@@ -291,16 +242,17 @@ def q_spatial_distance_join_xl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distance self-join over the full-sf segment field (64 parallel
     pipelines, ~150k segments at sf0.1, ~700k pairs): proves the grid join
     scales with data volume, unlike a driver-side KDTree."""
-    return distance_self_join(_segments_xl(spark, sf_dir), DETECTION_RANGE_M).select(
-        "p1", "p2", "seg1", "seg2", "dist_m"
-    )
+    return distance_self_join(
+        _segments_xl(spark, sf_dir), DEFAULT_DETECTION_RANGE_M
+    ).select("p1", "p2", "seg1", "seg2", "dist_m")
 
 
 @query("q_parallel_overlap_xl")  # rows-only: scale-stress variant
 def q_parallel_overlap_xl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full sessionized overlap over the uncapped field."""
-    pairs = distance_self_join(_segments_xl(spark, sf_dir), DETECTION_RANGE_M)
-    return _sessionized_sections(pairs)
+    return _overlap_sections(
+        distance_self_join(_segments_xl(spark, sf_dir), DEFAULT_DETECTION_RANGE_M)
+    )
 
 
 @query(
@@ -315,8 +267,8 @@ exploded AS (
 )
 SELECT pipeline_id,
        CAST(COUNT(DISTINCT seg) AS BIGINT) AS bundled_segments,
-       COUNT(DISTINCT seg) * {SEG_LEN_M!r} AS bundled_length_m,
-       COUNT(DISTINCT seg) * {SEG_LEN_M!r} / {US_SURVEY_MILE_M!r} AS bundled_length_mi
+       COUNT(DISTINCT seg) * {SEGMENT_LENGTH_M!r} AS bundled_length_m,
+       COUNT(DISTINCT seg) * {SEGMENT_LENGTH_M!r} / {US_SURVEY_MILE_M!r} AS bundled_length_mi
 FROM exploded
 GROUP BY pipeline_id
 """,
@@ -325,16 +277,8 @@ def q_overlap_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Op 18: per-pipeline distinct bundled-segment rollup
     (src/pipeline_calculator_v3.py:714-716,748-756) — the set-union of
     bundled segment indices becomes explode + countDistinct."""
-    pairs = _persisted_pairs(synth.segments_df(spark, sf_dir))
-    exploded = pairs.select(
-        F.col("p1").alias("pipeline_id"), F.col("seg1").alias("seg")
-    ).unionAll(
-        pairs.select(F.col("p2").alias("pipeline_id"), F.col("seg2").alias("seg"))
-    )
-    return exploded.groupBy("pipeline_id").agg(
-        F.countDistinct("seg").cast("bigint").alias("bundled_segments"),
-        (F.countDistinct("seg") * SEG_LEN_M).alias("bundled_length_m"),
-        (F.countDistinct("seg") * SEG_LEN_M / US_SURVEY_MILE_M).alias("bundled_length_mi"),
+    return bundled_rollup(
+        _persisted_pairs(synth.segments_df(spark, sf_dir)), SEGMENT_LENGTH_M
     )
 
 

@@ -225,3 +225,37 @@ def test_arrow_assign_bit_identical_to_hof(spark, sf_dir):
         .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
     )
     assert_same(emb, seeds, "float32-corpus")
+
+
+def test_arrow_kernel_sliced_batch_matches_unsliced():
+    """The Arrow fast lane must honour a batch's slice offset: rows taken
+    from a sliced (non-zero-offset) batch get the same cid and the same
+    sqd bits as those rows of the unsliced batch."""
+    import pyarrow as pa
+
+    from pipeline_calculator_v3_spark.operators.kmeans import _kernel_batches
+
+    rng = np.random.default_rng(7)
+    vecs = rng.normal(size=(12, 3)).tolist()
+    C = rng.normal(size=(4, 3))
+    cids = [10, 20, 30, 40]
+    schema = pa.schema([
+        pa.field("vid", pa.int64()),
+        pa.field("v", pa.list_(pa.float64())),
+        pa.field("cid", pa.int64()),
+        pa.field("sqd", pa.float64()),
+    ])
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(range(12), pa.int64()), pa.array(vecs, pa.list_(pa.float64()))],
+        names=["vid", "v"],
+    )
+
+    def assign(b):
+        (out,) = list(_kernel_batches([b], cids, C, 5, schema))
+        return [
+            (r["vid"], r["cid"], r["sqd"].hex()) for r in out.to_pylist()
+        ]
+
+    whole = assign(batch)
+    sliced = assign(batch.slice(4, 5))
+    assert sliced == whole[4:9]

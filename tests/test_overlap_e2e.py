@@ -135,3 +135,62 @@ def test_parameter_echo_and_clamps(spark):
     assert s.param_min_parallel_m == 10.0
     assert s.param_segment_length_m == 1.0
     assert s.param_angular_tolerance_deg == 90.0
+
+
+# result frame -> key columns that identify a row
+_FRAME_KEYS = {
+    "lengths": ("pipeline_id",),
+    "totals": (),
+    "sections": ("p1", "p2", "section"),
+    "per_pipeline_overlap": ("pipeline_id",),
+    "effective": ("pipeline_id",),
+    "summary": (),
+}
+
+
+def _leaves(v):
+    if isinstance(v, dict):
+        for k in sorted(v):
+            yield from _leaves(v[k])
+    elif isinstance(v, (list, tuple)):
+        for x in v:
+            yield from _leaves(x)
+    else:
+        yield v
+
+
+def test_results_stable_across_shuffle_partitions(spark, sf_dir):
+    """The CLI plan gives the same lengths, section set, per-pipeline
+    rollup, effective length and summary at 8 and at 32 shuffle
+    partitions (floats to 1e-9 relative: partial sums may reorder)."""
+    from pipeline_calculator_v3_spark import release_caches
+    from pipeline_calculator_v3_spark.plans import synth
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    runs = []
+    try:
+        for n in (8, 32):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            res = analyze_pipelines(synth.pipelines_df(spark, sf_dir))
+            runs.append({
+                name: {
+                    tuple(r[k] for k in key): r.asDict(recursive=True)
+                    for r in res[name].collect()
+                }
+                for name, key in _FRAME_KEYS.items()
+            })
+            release_caches(spark)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    a, b = runs
+    assert a["sections"] and a["per_pipeline_overlap"]
+    for name in _FRAME_KEYS:
+        assert a[name].keys() == b[name].keys(), name
+        for key, row in a[name].items():
+            la, lb = list(_leaves(row)), list(_leaves(b[name][key]))
+            assert len(la) == len(lb), (name, key)
+            for x, y in zip(la, lb):
+                if isinstance(x, float):
+                    assert y == pytest.approx(x, rel=1e-9, abs=1e-9), (name, key)
+                else:
+                    assert x == y, (name, key)

@@ -116,10 +116,10 @@ def test_arrow_pair_kernel_matches_salted_join(spark):
     """r15 Arrow pair-stage gate: _pairs_cosine_arrow must produce the
     IDENTICAL pair set as the salted self-join + HOF cosine spelling it
     replaced, with bit-identical cos_sim doubles — across threshold
-    boundaries, zero norms, NaN/overflow inputs, NULL elements, NULL
-    vectors, NULL ids and ragged lengths.  (A NaN cosine is kept on both
-    paths; its exported value is NULL on the Arrow path — the documented
-    pandas->Arrow coercion — so NaN-old may read NULL-new.)"""
+    boundaries, zero norms, NULL norms, NaN/overflow inputs, NULL
+    elements, NULL vectors, NULL ids and ragged lengths.  (A NaN cosine is
+    kept on both paths; its exported value is NULL on the Arrow path — the
+    documented pandas->Arrow coercion — so NaN-old may read NULL-new.)"""
     from pyspark.sql import functions as F
 
     from pipeline_calculator_v3_spark.functions.vectors import dot, norm
@@ -182,6 +182,11 @@ def test_arrow_pair_kernel_matches_salted_join(spark):
     )
     check(labeled, 0.99, 4, "edge-cases")
     check(labeled, -2.0, 4, "keep-all")
+    # a NULL norm on a clean vector: NULL cosine in the join -> never pairs
+    null_nrm = labeled.withColumn(
+        "nrm", F.when(F.col("vid") != 1, F.col("nrm"))
+    )
+    check(null_nrm, 0.5, 4, "null-norm")
 
     # hash-random 16-dim corpus, thresholds inside the cosine distribution
     big = spark.range(0, 800).select(
