@@ -30,6 +30,20 @@ import os
 import sys
 
 
+def _int_at_least(lo: int):
+    """argparse ``type`` for an int >= ``lo``: a bad value exits 2 at parse
+    time, before a Spark session is started."""
+
+    def parse(text: str) -> int:
+        value = int(text)
+        if value < lo:
+            raise argparse.ArgumentTypeError(f"must be >= {lo}, got {value}")
+        return value
+
+    parse.__name__ = "int"  # argparse names the type in its error message
+    return parse
+
+
 def _build_parser() -> argparse.ArgumentParser:
     from . import (
         ANGULAR_TOLERANCE_DEG,
@@ -62,7 +76,7 @@ def _build_parser() -> argparse.ArgumentParser:
         "--angular-tolerance", type=float, default=ANGULAR_TOLERANCE_DEG,
         help="bearing tolerance for parallelism, degrees",
     )
-    a.add_argument("--top", type=int, default=10,
+    a.add_argument("--top", type=_int_at_least(0), default=10,
                    help="bundled sections shown on stdout (op 27)")
     a.add_argument("--single-file", action="store_true",
                    help="reference-parity one-file-per-table CSV export")
@@ -70,7 +84,7 @@ def _build_parser() -> argparse.ArgumentParser:
                    help="JSON-lines part files instead of one envelope")
     a.add_argument("--no-kml", action="store_true",
                    help="skip per-section corridor KML export")
-    a.add_argument("--cpus", type=int, default=None,
+    a.add_argument("--cpus", type=_int_at_least(1), default=None,
                    help="local[N] cores (default: all)")
 
     q = sub.add_parser(
@@ -86,7 +100,7 @@ def _build_parser() -> argparse.ArgumentParser:
                    help="also write the FULL result as parquet here")
     q.add_argument("--explain", action="store_true",
                    help="print the formatted physical plan instead")
-    q.add_argument("--cpus", type=int, default=None)
+    q.add_argument("--cpus", type=_int_at_least(1), default=None)
     return p
 
 
@@ -113,58 +127,63 @@ def _analyze(args: argparse.Namespace) -> int:
         master=f"local[{args.cpus}]" if args.cpus else None,
     )
     spark.sparkContext.setLogLevel("ERROR")
-    pipes = read_pipelines(spark, args.input)
-    results = analyze_pipelines(
-        pipes.select("pipeline_id", "name", "geometry"),
-        detection_range_m=args.detection_range,
-        min_parallel_m=args.min_parallel,
-        segment_length_m=args.segment_length,
-        angular_tolerance_deg=args.angular_tolerance,
-    )
+    # analyze_pipelines pins segments/pairs/hits/lengths/sections; a sink
+    # that raises (unwritable out-dir, full disk) must not leave them
+    # cached in a long-lived session — released in finally, as _query
+    try:
+        pipes = read_pipelines(spark, args.input)
+        results = analyze_pipelines(
+            pipes.select("pipeline_id", "name", "geometry"),
+            detection_range_m=args.detection_range,
+            min_parallel_m=args.min_parallel,
+            segment_length_m=args.segment_length,
+            angular_tolerance_deg=args.angular_tolerance,
+        )
 
-    # ops 27-28: the GUI's display tables on stdout
-    # zero valid pipelines leaves the SUM aggregates NULL (the PERMISSIVE
-    # reader returns an empty frame instead of raising) — report zeros,
-    # the write_txt_summary rule (review r12)
-    t = results["totals"].collect()[0]
-    print(f"pipelines: {t.n_pipelines}  total: {t.total_m or 0.0:,.1f} m "
-          f"({t.total_mi or 0.0:.4f} US survey mi)")
-    sections = results["sections"]
-    shown = sections.drop("oriented_polygon", "corridor_polygon").limit(
-        args.top
-    )
-    for r in shown.collect():
-        print(f"  section p{r.p1}<->p{r.p2}#{r.section}: "
-              f"{r.bundled_length_mi:.4f} mi over {r.n_hits} stations, "
-              f"avg sep {r.average_separation:.2f} m")
-    s = results["summary"].collect()[0]
-    print(f"effective: {s.effective_m or 0.0:,.1f} m "
-          f"of {s.total_m or 0.0:,.1f} m "
-          f"(savings {s.savings_pct or 0.0:.1f}%)")
+        # ops 27-28: the GUI's display tables on stdout
+        # zero valid pipelines leaves the SUM aggregates NULL (the PERMISSIVE
+        # reader returns an empty frame instead of raising) — report zeros,
+        # the write_txt_summary rule
+        t = results["totals"].collect()[0]
+        print(f"pipelines: {t.n_pipelines}  total: {t.total_m or 0.0:,.1f} m "
+              f"({t.total_mi or 0.0:.4f} US survey mi)")
+        sections = results["sections"]
+        shown = sections.drop("oriented_polygon", "corridor_polygon").limit(
+            args.top
+        )
+        for r in shown.collect():
+            print(f"  section p{r.p1}<->p{r.p2}#{r.section}: "
+                  f"{r.bundled_length_mi:.4f} mi over {r.n_hits} stations, "
+                  f"avg sep {r.average_separation:.2f} m")
+        s = results["summary"].collect()[0]
+        print(f"effective: {s.effective_m or 0.0:,.1f} m "
+              f"of {s.total_m or 0.0:,.1f} m "
+              f"(savings {s.savings_pct or 0.0:.1f}%)")
 
-    # ops 23-26: exports
-    out = args.out_dir
-    os.makedirs(out, exist_ok=True)
-    write_csv(results, out, single_file=args.single_file)
-    if args.distributed_json:
-        write_json_distributed(results, os.path.join(out, "json"))
-    else:
-        write_json(results, os.path.join(out, "analysis.json"))
-    write_txt_summary(results, os.path.join(out, "summary.txt"))
-    if not args.no_kml:
-        kml_dir = os.path.join(out, "corridors")
-        os.makedirs(kml_dir, exist_ok=True)
-        # toLocalIterator streams one partition at a time to the driver —
-        # a corpus-scale sections table (the case --distributed-json
-        # exists for) must not re-materialize wholesale here (advice r10)
-        for r in sections.toLocalIterator():
-            write_corridor_kml(
-                r,
-                os.path.join(
-                    kml_dir, f"corridor_p{r.p1}_p{r.p2}_s{r.section}.kml"
-                ),
-            )
-    release_caches(spark)
+        # ops 23-26: exports
+        out = args.out_dir
+        os.makedirs(out, exist_ok=True)
+        write_csv(results, out, single_file=args.single_file)
+        if args.distributed_json:
+            write_json_distributed(results, os.path.join(out, "json"))
+        else:
+            write_json(results, os.path.join(out, "analysis.json"))
+        write_txt_summary(results, os.path.join(out, "summary.txt"))
+        if not args.no_kml:
+            kml_dir = os.path.join(out, "corridors")
+            os.makedirs(kml_dir, exist_ok=True)
+            # toLocalIterator streams one partition at a time into this
+            # process — a corpus-scale sections table (the case
+            # --distributed-json exists for) must not be collected wholesale
+            for r in sections.toLocalIterator():
+                write_corridor_kml(
+                    r,
+                    os.path.join(
+                        kml_dir, f"corridor_p{r.p1}_p{r.p2}_s{r.section}.kml"
+                    ),
+                )
+    finally:
+        release_caches(spark)
     print(f"exports written to {out}/")
     return 0
 

@@ -11,6 +11,12 @@ Two kinds of pinned executor state exist in the engine:
   ``SparkContext.getPersistentRDDs`` (measured: the id delta around the
   checkpoint call identifies exactly the new blocks).
 
+A tracked cache is sized by AQE from its measured bytes, like any other
+shuffle: ``get_spark`` sets ``canChangeCachedPlanOutputPartitioning`` so
+the cached plan may coalesce below ``spark.sql.shuffle.partitions`` (a tiny
+cache is one or two partitions, not 32), and every plan that reads the
+cache inherits that layout.
+
 Operators register everything they pin here; ``release_caches(spark)``
 frees it all.  Call it strictly AFTER the final materialization of a
 query's result — a localCheckpoint's lineage is cut, so once its blocks

@@ -7,15 +7,23 @@ reference's result envelope (:885-897).
 
 DAG (SURVEY.md §3), named by the stage functions below:
 
-    pipelines -> vertices -> lengths
+    pipelines -> vertices -> lengths (cached)
                     \\-> segmentize -> segments (cached: 3 downstream uses)
                           -> distance_self_join -> pairs (cached)
                                |-> sessionize -> bundled_hits (cached)
                                |      |-> section_stats + corridor_polygons
-                               |      |     -> sections
+                               |      |     -> sections (cached, sorted)
                                |      \\-> bundled_rollup -> per_pipeline_overlap
                                \\-> segment_effective (+ lengths) -> effective
                                       -> overlap_summary -> summary
+
+The two cached result frames are the ones every consumer re-reads:
+``lengths`` feeds ``totals``, ``effective`` (hence ``summary``) and the
+pipelines table of the CSV, JSON and TXT sinks; ``sections`` feeds the CLI's
+stdout top-k, the CSV overlaps table, the JSON envelope and the corridor
+KML files.  Uncached, each of those reads would re-run the hop window or
+the corridor kernel.  Like every ``persist_tracked`` frame they are laid
+out by AQE from their measured bytes (``session.get_spark``).
 
 The stage functions are the only DataFrame spelling of ops 13-22: the
 registry queries in ``queries_spatial`` / ``queries_e2e`` compose the same
@@ -222,7 +230,8 @@ def analyze_pipelines(
             F.lag("lat").over(w), F.lag("lon").over(w), F.col("lat"), F.col("lon")
         ).alias("hop_m"),
     )
-    lengths = (
+    # persisted: re-read by totals, effective and every sink (module docstring)
+    lengths = persist_tracked(
         hops.groupBy("pipeline_id")
         .agg(F.coalesce(F.sum("hop_m"), F.lit(0.0)).alias("length_m"))
         .join(pipelines.select("pipeline_id", "name"), "pipeline_id")
@@ -263,13 +272,16 @@ def analyze_pipelines(
     kept_hits = persist_tracked(
         bundled_hits(sessionize(pairs), segment_length_m, min_parallel_m)
     )
-    sections = (
+    # op 19 (:744-745), persisted (module docstring).  Ties on
+    # bundled_length_mi (n_hits x segment length) are common: the key
+    # columns break them so the export order does not follow the layout.
+    sections = persist_tracked(
         section_stats(kept_hits, segment_length_m)
         .join(
             corridor_polygons(kept_hits, detection_range_m, segment_length_m),
             ["p1", "p2", "section", "n_hits"],
         )
-        .orderBy(F.desc("bundled_length_mi"))  # op 19 (:744-745)
+        .orderBy(F.desc("bundled_length_mi"), "p1", "p2", "section")
     )
     per_pipeline_overlap = bundled_rollup(kept_hits, segment_length_m)
 

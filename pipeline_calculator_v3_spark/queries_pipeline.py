@@ -273,7 +273,7 @@ def q_contamination_xl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries_textml import _synth_docs_from_lineitem
 
     docs = _synth_docs_from_lineitem(
-        t(spark, sf_dir, "lineitem"), as_tokens=True
+        t(spark, sf_dir, "lineitem"), as_tokens=True, spread=True
     ).withColumn("bucket", F.concat(F.lit("b"), F.pmod("doc_id", F.lit(16))))
     return _contamination_counts(
         docs, spark, group_col="bucket", pre_tokenized=True

@@ -1716,7 +1716,7 @@ def q_dedup_minhash_xl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Aggregate BEFORE synthesizing: one (partkey, suppkey) survivor struct
     # per order shuffles 16 bytes/row; synthesizing the 40-token text first
     # would build 4x the strings and push them all through the shuffle.
-    docs = _synth_docs_from_lineitem(t(spark, sf_dir, "lineitem"))
+    docs = _synth_docs_from_lineitem(t(spark, sf_dir, "lineitem"), spread=True)
     return minhash_lsh_pairs(docs, num_hashes=16, bands=4, min_jaccard=0.8)
 
 
@@ -1733,8 +1733,7 @@ def _synth_docs_from_lineitem(
     ``as_tokens=True`` returns the token ARRAY column ``t`` directly —
     consumers that tokenize anyway (decontamination) skip the
     concat_ws->split round-trip (measured 5.3 s -> sub-second staging at
-    sf0.1), and the groupBy has already distributed the rows so no
-    re-partition is needed.
+    sf0.1).
 
     ``spread=True`` round-robins the aggregated KEY rows (doc_id + 16-byte
     struct — never the synthesized text) to the session's default
@@ -1746,8 +1745,12 @@ def _synth_docs_from_lineitem(
     of 32 cores (measured: q_chunk_documents_xl stage = 12.7 task-s on 2
     tasks).  The extra exchange moves keys only, and the partition count
     tracks ``defaultParallelism`` — cluster-adaptive, not a local constant.
-    Consumers that re-shuffle anyway (minhash bands, bm25 postings) must
-    NOT pay it."""
+    A persisted consumer is coalesced the same way (cached plans follow
+    AQE's measured-size rule, ``session.get_spark``), so per-row compute
+    inside the cache needs it too: the minhash signatures, the
+    decontamination shingles and the substring spans are all built
+    before their next shuffle.  Consumers whose heavy work follows a
+    re-shuffle (bm25 postings) must NOT pay it."""
     keys = lineitem.groupBy(F.col("l_orderkey").alias("doc_id")).agg(
         F.min(F.struct("l_partkey", "l_suppkey")).alias("ps")
     )
@@ -1781,7 +1784,7 @@ def q_dedup_substring_xl(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode + dup-span groupBy + interval union stays ~linear."""
     base = persist_tracked(
         _synth_docs_from_lineitem(
-            t(spark, sf_dir, "lineitem"), as_tokens=True
+            t(spark, sf_dir, "lineitem"), as_tokens=True, spread=True
         ).select("doc_id", "t")
     )
     return _substring_dup_stats(base)

@@ -68,6 +68,17 @@ def get_spark(app_name: str = "pipeline_calculator_v3_spark",
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
             os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "256k"),
         )
+        # Let AQE coalesce cached plans too.  Spark's default (false) keeps
+        # a persisted frame at spark.sql.shuffle.partitions so its readers
+        # see a fixed output partitioning; the bytes-based rule above then
+        # never reaches a persist_tracked frame or any stage reading it,
+        # and a small cache (the CLI's segments/pairs/hits) runs its
+        # grouped-map Python kernels as 32 mostly empty tasks.  Spark
+        # reads this when persist() is called, so it is a session setting,
+        # covering every engine cache.
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow batches for every pandas UDF / toPandas boundary.

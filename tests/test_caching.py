@@ -9,7 +9,7 @@ import math
 from pyspark.sql import functions as F
 
 from pipeline_calculator_v3_spark import release_caches
-from pipeline_calculator_v3_spark.caching import _persistent_ids
+from pipeline_calculator_v3_spark.caching import _persistent_ids, persist_tracked
 from pipeline_calculator_v3_spark.functions.geodesy import EARTH_RADIUS_M
 from pipeline_calculator_v3_spark.plans.overlap import analyze_pipelines
 from pipeline_calculator_v3_spark.queries import QUERIES, events_t
@@ -43,6 +43,9 @@ def test_overlap_e2e_releases_everything(spark):
         T1_SCHEMA,
     )
     results = analyze_pipelines(pipes)
+    # the result frames every sink re-reads are pinned, not recomputed
+    for name in ("lengths", "sections"):
+        assert results[name].storageLevel.useMemory, name
     # materialize the full envelope (the driver/sinks would)
     for name in ("lengths", "totals", "sections", "per_pipeline_overlap",
                  "effective", "summary"):
@@ -50,6 +53,31 @@ def test_overlap_e2e_releases_everything(spark):
     assert _persistent_ids(spark), "expected pinned segments/hits before release"
     release_caches(spark)
     assert _persistent_ids(spark) == set(), "dangling cached RDDs after release"
+
+
+def test_tracked_cache_is_sized_from_measured_bytes(spark):
+    """A persist_tracked shuffle is coalesced by AQE like an uncached one:
+    a few hundred bytes land in fewer than spark.sql.shuffle.partitions
+    partitions instead of one near-empty task per shuffle partition."""
+    release_caches(spark)
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n_shuffle > 1
+    # a plan of its own (odd modulus, distinct alias): CacheManager must
+    # not hand back a cache some other test built
+    tiny = persist_tracked(
+        spark.range(0, 97)
+        .groupBy((F.col("id") % 13).alias("sized_cache_probe"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    try:
+        assert tiny.count() == 13
+        parts = (
+            tiny.select("sized_cache_probe", "n")
+            ._jdf.queryExecution().executedPlan().execute().getNumPartitions()
+        )
+        assert parts < n_shuffle, (parts, n_shuffle)
+    finally:
+        release_caches(spark)
 
 
 def test_minhash_releases_staged(spark, sf_dir):

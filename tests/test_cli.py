@@ -75,6 +75,43 @@ def test_missing_input_is_a_clean_error(tmp_path, capsys):
     assert "no such input" in capsys.readouterr().err
 
 
+@pytest.mark.parametrize("flag", [["--top", "-1"], ["--cpus", "0"]])
+def test_bad_counts_rejected_before_spark(tmp_path, capsys, flag):
+    """A negative --top (a negative LIMIT in Spark) or --cpus 0
+    (``local[0]``) is an argparse error, exit 2, with no export written."""
+    src = tmp_path / "pair.kml"
+    src.write_text(_KML)
+    out = tmp_path / "out"
+    with pytest.raises(SystemExit) as exc:
+        main(["analyze", str(src), "--out-dir", str(out), *flag])
+    assert exc.value.code == 2
+    assert f"argument {flag[0]}" in capsys.readouterr().err
+    assert not out.exists()
+
+
+@pytest.mark.parametrize("sink_fails", [False, True])
+def test_analyze_leaves_no_cache(spark, tmp_path, sink_fails):
+    """Every frame the analysis pins is released before main() returns or
+    raises: repeated runs in one session must not pile up cached blocks.
+    The failing case points --out-dir at a regular file, so the export
+    step raises after the stdout tables have materialized the caches."""
+    from pipeline_calculator_v3_spark import release_caches
+    from pipeline_calculator_v3_spark.caching import _persistent_ids
+
+    release_caches(spark)
+    src = tmp_path / "pair.kml"
+    src.write_text(_KML)
+    out = tmp_path / "out"
+    argv = ["analyze", str(src), "--out-dir", str(out)]
+    if sink_fails:
+        out.write_text("not a directory")
+        with pytest.raises(FileExistsError):
+            main(argv)
+    else:
+        assert main(argv) == 0
+    assert _persistent_ids(spark) == set()
+
+
 def test_distributed_exports_and_multi_input(spark, tmp_path):
     """The 100 TB export path: part-file CSV/JSON (no driver collect of
     the big tables), summary still a single small file; plus multi-file

@@ -162,7 +162,8 @@ def _leaves(v):
 def test_results_stable_across_shuffle_partitions(spark, sf_dir):
     """The CLI plan gives the same lengths, section set, per-pipeline
     rollup, effective length and summary at 8 and at 32 shuffle
-    partitions (floats to 1e-9 relative: partial sums may reorder)."""
+    partitions (floats to 1e-9 relative: partial sums may reorder), and
+    the sections in the same op-19 order (ties broken by key)."""
     from pipeline_calculator_v3_spark import release_caches
     from pipeline_calculator_v3_spark.plans import synth
 
@@ -184,6 +185,8 @@ def test_results_stable_across_shuffle_partitions(spark, sf_dir):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     a, b = runs
     assert a["sections"] and a["per_pipeline_overlap"]
+    # dicts keep collect order: the op-19 order itself must match
+    assert list(a["sections"]) == list(b["sections"])
     for name in _FRAME_KEYS:
         assert a[name].keys() == b[name].keys(), name
         for key, row in a[name].items():

@@ -119,7 +119,7 @@ def test_arrow_pair_kernel_matches_salted_join(spark):
     boundaries, zero norms, NULL norms, NaN/overflow inputs, NULL
     elements, NULL vectors, NULL ids and ragged lengths.  (A NaN cosine is
     kept on both paths; its exported value is NULL on the Arrow path — the
-    documented pandas->Arrow coercion — so NaN-old may read NULL-new.)"""
+    documented pandas->Arrow coercion — so NaN-old reads exactly NULL-new.)"""
     from pyspark.sql import functions as F
 
     from pipeline_calculator_v3_spark.functions.vectors import dot, norm
@@ -156,10 +156,9 @@ def test_arrow_pair_kernel_matches_salted_join(spark):
         assert set(a) == set(b), (tag, set(a) ^ set(b))
         for k in a:
             assert a[k][0] == b[k][0], (tag, k, a[k], b[k])
-            if b[k][1] == "nan":
-                assert a[k][1] in (None, "nan"), (tag, k, a[k], b[k])
-            else:
-                assert a[k][1] == b[k][1], (tag, k, a[k], b[k])
+            want = None if b[k][1] == "nan" else b[k][1]
+            assert a[k][1] == want, (tag, k, a[k], b[k])
+        return sum(v[1] == "nan" for v in b.values())
 
     nan = float("nan")
     rows = [
@@ -180,7 +179,7 @@ def test_arrow_pair_kernel_matches_salted_join(spark):
         F.col("vec_id").alias("vid"), F.col("embedding").alias("v"),
         F.col("blk").alias("blk"), norm(F.col("embedding")).alias("nrm"),
     )
-    check(labeled, 0.99, 4, "edge-cases")
+    assert check(labeled, 0.99, 4, "edge-cases") > 0  # the NaN->NULL case ran
     check(labeled, -2.0, 4, "keep-all")
     # a NULL norm on a clean vector: NULL cosine in the join -> never pairs
     null_nrm = labeled.withColumn(
