@@ -26,6 +26,7 @@ driver OOM on corpus-scale section tables).
 from __future__ import annotations
 
 import argparse
+import math
 import os
 import sys
 
@@ -42,6 +43,22 @@ def _int_at_least(lo: int):
 
     parse.__name__ = "int"  # argparse names the type in its error message
     return parse
+
+
+def _finite_float(text: str) -> float:
+    """argparse ``type`` for a finite float: NaN and +-inf exit 2 at parse
+    time, before a Spark session is started.  A NaN parameter would get
+    through the plan's clamps (``max``/``min`` return the NaN), and a NaN
+    angular tolerance switches the bearing predicate off, because Spark
+    orders NaN above every number."""
+    value = float(text)
+    if not math.isfinite(value):
+        raise argparse.ArgumentTypeError(f"must be finite, got {text}")
+    return value
+
+
+# argparse names the type in its error message
+_finite_float.__name__ = "float"
 
 
 def _build_parser() -> argparse.ArgumentParser:
@@ -61,19 +78,23 @@ def _build_parser() -> argparse.ArgumentParser:
     a.add_argument("input", nargs="+", help="KML/KMZ file(s)")
     a.add_argument("--out-dir", default="pipeline_analysis_out")
     a.add_argument(
-        "--detection-range", type=float, default=DEFAULT_DETECTION_RANGE_M,
+        "--detection-range", type=_finite_float,
+        default=DEFAULT_DETECTION_RANGE_M,
         help="parallel detection range, meters",
     )
     a.add_argument(
-        "--min-parallel", type=float, default=MIN_PARALLEL_LENGTH_M,
+        "--min-parallel", type=_finite_float,
+        default=MIN_PARALLEL_LENGTH_M,
         help="minimum bundled-section length, meters",
     )
     a.add_argument(
-        "--segment-length", type=float, default=SEGMENT_LENGTH_M,
+        "--segment-length", type=_finite_float,
+        default=SEGMENT_LENGTH_M,
         help="resampling station spacing, meters",
     )
     a.add_argument(
-        "--angular-tolerance", type=float, default=ANGULAR_TOLERANCE_DEG,
+        "--angular-tolerance", type=_finite_float,
+        default=ANGULAR_TOLERANCE_DEG,
         help="bearing tolerance for parallelism, degrees",
     )
     a.add_argument("--top", type=_int_at_least(0), default=10,

@@ -187,7 +187,7 @@ def diff_manifests(
 
 
 def _recover_interrupted_swap(out_dir: str) -> None:
-    """Heal a dataset left in a partial state by a compact_dataset crash.
+    """Heal a dataset left in a partial state by an optimize_dataset crash.
     Two distinct crash windows exist around the swap's rename pair:
 
     - BETWEEN the renames: an orphaned ``.__old__`` with no live
@@ -202,7 +202,7 @@ def _recover_interrupted_swap(out_dir: str) -> None:
     a write landing during the between-renames window would otherwise
     create a fresh ``out_dir`` next to the stranded original and turn this
     delete into data loss (review r06).  The delete is best-effort
-    (ignore_errors): a concurrently finishing compact_dataset removes the
+    (ignore_errors): a concurrently finishing optimize_dataset removes the
     same tree, and losing that race must not fail this entry point."""
     import shutil
 
@@ -310,100 +310,6 @@ def _list_parquet(root: str) -> list[tuple[str, int]]:
     )
 
 
-def compact_dataset(
-    spark: SparkSession, out_dir: str, files_per_partition: int = 1
-) -> dict:
-    """Rewrite a :func:`write_dataset` dataset with UP TO
-    ``files_per_partition`` files per partition value — the small-file
-    compaction every long-lived ingest directory eventually needs (each
-    streaming micro-batch / incremental append leaves its own files; scan
-    planning cost grows with file count, not bytes).  "Up to": file salts
-    are hash-routed to shuffle tasks, and two salts of one partition value
-    can share a task and merge into one file.
-
-    Safety protocol (ordered so no failure strands the dataset):
-    1. rewrite to a sibling ``.__compact__`` directory;
-    2. VALIDATE the rewrite against the original manifest while the
-       original is still live — the order-independent checksums prove the
-       key-column content survived the re-layout (validation strength =
-       ``key_cols`` coverage: corruption in non-key columns is outside the
-       proof; use key_cols spanning every column you need guarded);
-    3. only then swap: two ``os.rename`` calls.  POSIX cannot exchange two
-       directories in one atomic step, so there is a sub-millisecond
-       window where ``out_dir`` is absent and a concurrent reader would
-       see a missing path (retry-safe: both states on either side are
-       complete datasets);
-    4. a crashed previous run is recovered at entry (an orphaned
-       ``.__old__`` with no live ``out_dir`` is restored; stale temp
-       trees are cleared).
-
-    Partition directory names are preserved verbatim: the rewrite reads
-    with partition-type inference OFF (scoped), so ``month=01`` stays
-    ``month=01`` instead of being silently rewritten to ``month=1`` by
-    the int-inference round trip.
-
-    Returns ``{"files_before", "files_after", "validation"}``; raises
-    (original untouched, temp tree removed) if validation fails."""
-    import shutil
-
-    if files_per_partition < 1:
-        raise ValueError("files_per_partition must be >= 1")
-    tmp = out_dir.rstrip("/") + ".__compact__"
-    old = out_dir.rstrip("/") + ".__old__"
-    _recover_interrupted_swap(out_dir)
-    for stale in (tmp, old):
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
-    with open(os.path.join(out_dir, _MANIFEST)) as f:
-        manifest = json.load(f)
-    if manifest.get("digest_version", 1) != DIGEST_VERSION:
-        # re-stamp from the live original FIRST: validating the rewrite
-        # against a stale-formula manifest would degrade step 2's proof to
-        # counts-only exactly when it matters (advice r06 migration path)
-        manifest = restamp_manifest(spark, out_dir)
-    partition_by = manifest["partition_by"]
-    key_cols = manifest["key_cols"]
-
-    def _count_files(d: str) -> int:
-        return len(_list_parquet(d))
-
-    files_before = _count_files(out_dir)
-    df = _read_raw(spark, out_dir)
-    if files_per_partition == 1:
-        compacted = df.repartition(*[F.col(c) for c in partition_by])
-    else:
-        salt = F.pmod(
-            F.xxhash64(*[F.col(c).cast("string") for c in key_cols]),
-            F.lit(files_per_partition),
-        )
-        compacted = df.repartition(
-            *[F.col(c) for c in partition_by], salt
-        )
-    compacted.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
-    shutil.copy(
-        os.path.join(out_dir, _MANIFEST), os.path.join(tmp, _MANIFEST)
-    )
-    # validate the REWRITE while the original is still live
-    report = validate_dataset(spark, tmp)
-    if not report["ok"]:
-        shutil.rmtree(tmp)
-        raise RuntimeError(
-            f"compaction changed key-column content, original untouched: "
-            f"{report}"
-        )
-    os.rename(out_dir, old)
-    os.rename(tmp, out_dir)
-    # best-effort: a concurrently scheduled validate_dataset may recover
-    # the same superseded tree first; losing that race must not fail a
-    # compaction whose swap already succeeded (review r06)
-    shutil.rmtree(old, ignore_errors=True)
-    return {
-        "files_before": files_before,
-        "files_after": _count_files(out_dir),
-        "validation": report,
-    }
-
-
 def optimize_dataset(
     spark: SparkSession,
     out_dir: str,
@@ -416,8 +322,7 @@ def optimize_dataset(
     listing, rewrite ONLY the small-file pack groups (one output file
     per group), and carry every already-target-sized file into the new
     tree untouched via hardlink — a steady-state table pays for its
-    small-file tail, never a full rewrite (the wholesale path is
-    :func:`compact_dataset`).
+    small-file tail, never a full rewrite.
 
     ``sort_by`` (column names or SQL expressions, e.g. a
     ``operators/zorder.py`` Morton-key expression) sorts rows WITHIN each
@@ -425,13 +330,19 @@ def optimize_dataset(
     the rows move anyway, so clustering them then is free shuffle-wise.
     Untouched files keep their existing order.
 
-    Safety protocol — identical to :func:`compact_dataset`: build the
-    full sibling tree (rewritten groups + hardlinked big files), copy the
-    manifest in, VALIDATE the sibling against it while the original is
-    still live (order-independent checksums — a rewrite/sort cannot
-    change them unless content changed), then the two-rename swap with
-    crash recovery at entry.  A plan with no multi-file group returns
-    early without touching the dataset.
+    Safety protocol (ordered so no failure strands the dataset): build
+    the full sibling tree (rewritten groups + hardlinked big files), copy
+    the manifest in, VALIDATE the sibling against it while the original
+    is still live (order-independent checksums — a rewrite/sort cannot
+    change them unless content changed; validation strength is the
+    manifest's ``key_cols`` coverage), then swap with two ``os.rename``
+    calls.  POSIX cannot exchange two directories in one atomic step, so
+    for a sub-millisecond window ``out_dir`` is absent (retry-safe: the
+    states on either side are complete datasets).  A crashed previous
+    run is recovered at entry (:func:`_recover_interrupted_swap`) and a
+    pre-versioning manifest is re-stamped before validation.  A plan
+    with no multi-file group returns early without touching the
+    dataset.
 
     Scale shape: planning is pure Column arithmetic over the file
     listing (metadata, hive-partition-local windows); the rewrite reads

@@ -37,10 +37,6 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(text, TOKEN_SPLIT_RE), lambda t: t != "")
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
-
-
 def normalized_text(text: Column) -> Column:
     """Whitespace-collapsed, lowercased — dedup canonical form."""
     return F.lower(F.trim(F.regexp_replace(text, r"\s+", " ")))
@@ -55,37 +51,19 @@ def fingerprint_md5(text: Column) -> Column:
     return F.md5(normalized_text(text))
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as an array<string> (for MinHash/Jaccard).
-
-    Guarded for sub-``n``-token inputs: ``F.sequence(0, -1)`` counts DOWN
-    ([0, -1]), it is not empty — unguarded, short docs produce garbage
-    positions (and ``slice``/``element_at`` errors)."""
-    toks = tokens(normalized_text(text))
-    # NULL text stays NULL (review r12): size(NULL) makes the condition
-    # non-true, so the otherwise([]) branch silently mapped unknown text
-    # to the EMPTY shingle set — tokens()/token_count() propagate NULL,
-    # and a []-fingerprinted NULL doc would spuriously collide with every
-    # short doc downstream (simhash votes over zero shingles).
-    return F.when(toks.isNull(), F.lit(None).cast("array<string>")).when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def shingles_from_tokens(t: Column, n: int = 3) -> Column:
     """String n-gram shingles from a MATERIALIZED token-array column.
 
-    Same output as :func:`shingles`, but ~3x faster at corpus scale
-    (measured 0.8 s -> 0.26 s warm on 5000 docs): pass a real column
-    reference so the tokenizer runs once per row, and build each shingle
-    with ``element_at`` x n instead of ``slice`` (which allocates a
-    sub-array per position).  Mirrors the shingles_from_token_hashes
-    materialization contract below.  Same sub-``n`` guard as
-    :func:`shingles` (Spark sequence counts DOWN when end < start).
+    Pass a real column reference so the tokenizer runs once per row; each
+    shingle is built with ``element_at`` x n instead of ``slice`` (which
+    allocates a sub-array per position) — ~3x faster than slicing inline
+    tokens (measured 0.8 s -> 0.26 s warm on 5000 docs).  Mirrors the
+    shingles_from_token_hashes materialization contract below.
+
+    Guarded for sub-``n``-token inputs: Spark's sequence counts DOWN when
+    end < start, so unguarded short docs would produce garbage
+    positions.  NULL tokens stay NULL rather than becoming the empty
+    shingle set, which would collide with every short doc downstream.
     """
     return F.when(t.isNull(), F.lit(None).cast("array<string>")).when(
         F.size(t) >= n,
@@ -124,14 +102,3 @@ def shingles_from_token_hashes(th: Column, n: int = 3) -> Column:
             ),
         ),
     ).otherwise(F.array().cast("array<bigint>"))
-
-
-def shingle_hashes(text: Column, n: int = 3) -> Column:
-    """Word-3-gram shingle *hashes* as array<bigint>, straight from text.
-
-    Convenience form for small inputs; hot paths should stage
-    :func:`token_hashes` as a column first (see shingles_from_token_hashes).
-    Hash-set Jaccard equals string-set Jaccard up to negligible 64-bit
-    collisions.
-    """
-    return shingles_from_token_hashes(token_hashes(text), n)

@@ -208,21 +208,3 @@ def bloom_prefilter_join(
     )
     pruned = bloom_filter_keys(fact, bitmap, fact_key, n_hashes=n_hashes)
     return pruned.join(dim, pruned[fact_key] == dim[dim_key], how)
-
-
-def bloom_params(n_keys: int, fp_rate: float = 0.01) -> tuple[int, int]:
-    """(m_bits, n_hashes) sized for ``n_keys`` at ``fp_rate`` — the
-    textbook optimum m = -n ln p / (ln 2)^2, k = (m/n) ln 2, with m
-    rounded up to a multiple of 64 and k clamped to [1, 16].  Use on the
-    build side when the dim cardinality is known (or cheaply counted)
-    instead of guessing at the defaults."""
-    import math
-
-    if n_keys < 1:
-        raise ValueError("n_keys must be >= 1")
-    if not 0.0 < fp_rate < 1.0:
-        raise ValueError("fp_rate must be in (0, 1)")
-    m = math.ceil(-n_keys * math.log(fp_rate) / (math.log(2) ** 2))
-    m = ((m + 63) // 64) * 64
-    k = max(1, min(16, round(m / n_keys * math.log(2))))
-    return m, k

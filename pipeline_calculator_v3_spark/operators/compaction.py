@@ -4,14 +4,11 @@ given a table's file listing (the dataset.py ``_manifest.json`` shape —
 file id + byte size), decide which files to rewrite together so the table
 converges on target-sized files without rewriting the big ones.
 
-Relationship to ``dataset.py::compact_dataset``: that routine REWRITES a
-dataset wholesale (every partition re-laid to <= N files, checksummed,
-atomically swapped) — right when the whole table drifted.  This module
-is the SELECTIVE planner that decides WHICH files are worth rewriting at
-all: files already at target size pass through untouched, so a steady-
-state table pays only for its small-file tail instead of a full rewrite.
-The two compose: plan here, rewrite each group with the dataset sink's
-checksum/swap protocol.
+This module is the SELECTIVE planner that decides WHICH files are worth
+rewriting at all: files already at target size pass through untouched, so
+a steady-state table pays only for its small-file tail instead of a full
+rewrite.  ``dataset.py::optimize_dataset`` executes the plan: it rewrites
+each group under the dataset sink's checksum/swap protocol.
 
 The plan itself must be cheap relative to the rewrite it schedules: this
 is pure Column arithmetic over the manifest (thousands of rows per
@@ -110,20 +107,3 @@ def compaction_plan(
         (-F.row_number().over(w)).cast("bigint").alias("group_id"),
     )
     return packed.unionByName(solo)
-
-
-def compaction_groups(plan: DataFrame, bytes_col: str = "bytes") -> DataFrame:
-    """Per-group rollup of a :func:`compaction_plan`: file count, total
-    bytes, and whether the group is an actual rewrite (>= 2 files and
-    compactable) — the work order a maintenance scheduler executes.
-    One hash aggregate over the group id space."""
-    return (
-        plan.groupBy("compact", "group_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_files"),
-            F.sum(bytes_col).cast("bigint").alias("total_bytes"),
-        )
-        .withColumn(
-            "rewrite", F.col("compact") & (F.col("n_files") >= 2)
-        )
-    )

@@ -22,8 +22,6 @@ from pyspark.sql import functions as F
 from ..caching import persist_tracked
 from ..functions.text import (
     normalized_text,
-    shingle_hashes,
-    shingles,
     shingles_from_token_hashes,
     shingles_from_tokens,
     token_hashes,
@@ -80,7 +78,6 @@ def minhash_signature_from_hashes(hashes: Column, num_hashes: int = 32) -> Colum
         F.array_repeat(F.lit(MAX_LONG).cast("long"), num_hashes),
         lambda acc, h: F.zip_with(acc, seeds, lambda a, i: F.least(a, F.xxhash64(h, i))),
     )
-
 
 
 def jaccard_verify(
@@ -414,41 +411,6 @@ def minhash_lsh_match_md5(
     )
 
 
-def simhash64(text: Column, shingle_n: int = 3) -> Column:
-    """64-bit SimHash over word shingles, as a BIGINT column.
-
-    bit b of the result = sign of sum over shingles of (+1 if bit b of
-    xxhash64(shingle) else -1).  Pure HOF arithmetic — no UDF.
-    """
-    # Single pass over the shingle hashes: hash each shingle ONCE, then carry
-    # a 64-long vote vector through one aggregate (zip_with against a literal
-    # bit-mask array).  The per-bit-unrolled form re-hashed every shingle 64x
-    # and was ~60x slower.
-    masks = F.array(
-        *[F.lit(1 << b if b < 63 else -(1 << 63)).cast("long") for b in range(64)]
-    )
-    hashes = shingle_hashes(text, 3) if shingle_n == 3 else F.transform(
-        shingles(text, shingle_n), lambda s: F.xxhash64(s)
-    )
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, h: F.zip_with(
-            acc,
-            masks,
-            lambda a, m: a
-            + F.when(h.bitwiseAND(m) != 0, F.lit(1)).otherwise(F.lit(-1)),
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            votes, masks, lambda v, m: F.when(v > 0, m).otherwise(F.lit(0).cast("long"))
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-
-
 def simhash64_md5_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -478,8 +440,6 @@ def simhash64_md5_pairs(
     SUM aggregates with map-side combine -> pack to one BIGINT -> 16-bit
     prefix blocking -> ``salted_self_pairs`` (hot blocks split
     n_groups^2 ways, identical output) -> XOR bit_count hamming filter.
-    The xxhash64 face (:func:`simhash64`) stays the single-pass Column
-    variant for throughput callers.
 
     ``tokens_col`` (optional): a pre-materialized token-array column —
     same contract as :func:`minhash_lsh_pairs_md5`'s parameter (the

@@ -150,24 +150,3 @@ def hilbert_sql_ctes(
         f"{final} AS (SELECT * EXCLUDE (hx, hy) FROM {prefix}{n})"
     )
     return ",\n".join(steps), final
-
-
-def cluster_by_hilbert(
-    df: DataFrame,
-    lat_col: str,
-    lon_col: str,
-    n_partitions: int,
-    bits: int = 16,
-) -> DataFrame:
-    """Re-cluster ``df`` for write: range-partition on the Hilbert key
-    (each output file covers a contiguous curve range — a tighter spatial
-    tile than the Morton equivalent) and sort within partitions so
-    row-group min/max stats are tight.  Rows with NULL keys quarantine
-    into the first range partition, the cluster_by_zorder rule.  One
-    shuffle (the range exchange)."""
-    keyed = with_hilbert_key(df, lat_col, lon_col, bits, key_col="_hkey")
-    return (
-        keyed.repartitionByRange(n_partitions, "_hkey")
-        .sortWithinPartitions("_hkey")
-        .drop("_hkey")
-    )

@@ -1,5 +1,5 @@
-"""Big-big join strategies: sort-merge/shuffle-hash (no broadcast) and
-salted joins for skewed keys.
+"""Big-big join strategies: sort-merge (no broadcast) and salted joins for
+skewed keys.
 
 At 100 TB a fact-fact join can't broadcast; it shuffles both sides on the
 key.  Two failure modes matter: (a) Spark picking a broadcast plan that OOMs
@@ -20,13 +20,6 @@ def merge_join(left: DataFrame, right: DataFrame, on: list[str],
                how: str = "inner") -> DataFrame:
     """Force a sort-merge join (both sides shuffle + sort on the key)."""
     return left.hint("merge").join(right.hint("merge"), on, how)
-
-
-def shuffle_hash_join(left: DataFrame, right: DataFrame, on: list[str],
-                      how: str = "inner") -> DataFrame:
-    """Force a shuffled hash join — cheaper than SMJ when one side fits a
-    per-partition hash table (skips both sorts)."""
-    return left.join(right.hint("shuffle_hash"), on, how)
 
 
 def salted_join(

@@ -102,91 +102,3 @@ def kn_bigram_probs(
             F.round(p_kn, 6).alias("p_kn"),
         )
     )
-
-
-def kn_doc_nll(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    discount: float = 0.75,
-) -> DataFrame:
-    """Per-document negative log-likelihood under the interpolated-KN
-    bigram model trained on the SAME corpus — the CCNet scoring shape
-    with the smoothing family perplexity filters actually ship (the
-    Lidstone face is q_lm_perplexity; KN's continuation backoff stops
-    frequent-but-rigid words from dragging genuinely odd documents
-    under the radar).
-
-    Training on the scored corpus means every document bigram is
-    observed, so P_KN is the exact closed form with no OOV branch —
-    deterministic and ANSI-SQL-replayable (tests/test_ngram_lm.py).
-
-    Returns one row per document with >= 2 tokens: ``id_col``,
-    ``n_bigrams`` BIGINT, ``nll_nats`` DOUBLE (mean -ln P_KN, 6 dp),
-    ``ppl`` DOUBLE (exp of the ROUNDED mean, 4 dp — a pure function of
-    the ranking grain).
-
-    Scale shape: the model table is vocab-pair-bounded (kn_bigram_probs'
-    three counting aggregates); scoring is ONE (ctx, nxt)-keyed join of
-    the document bigram stream against it plus a doc-keyed mean — the
-    q_lm_perplexity exchange family with a different probability
-    column."""
-    model = kn_bigram_probs(docs, text_col=text_col, discount=discount)
-    tok = tokens(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
-    bigrams = (
-        docs.select(F.col(id_col), tok.alias("tok"))
-        .where(F.size("tok") > 1)
-        .select(
-            id_col,
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("tok") - 1),
-                    lambda i: F.struct(
-                        F.element_at(F.col("tok"), i).alias("ctx"),
-                        F.element_at(F.col("tok"), i + 1).alias("nxt"),
-                    ),
-                )
-            ).alias("b"),
-        )
-        .select(id_col, F.col("b.ctx").alias("ctx"), F.col("b.nxt").alias("nxt"))
-    )
-    # p_kn re-derives from the model's exact-integer columns, NOT the
-    # 6-dp p_kn/p_cont columns: rounding before the log would quantize
-    # the ranking signal itself (the q_lm_perplexity rule — round the
-    # FINAL per-doc mean, nothing upstream).  The continuation ratio's
-    # integer pieces (n1p_w, n1p_all) are model-table aggregates, so the
-    # whole probability is exact doubles on both engines.
-    from ..caching import persist_tracked
-
-    model = persist_tracked(
-        model.select("ctx", "nxt", "c", "c_ctx", "n1p_ctx")
-    )  # scored join + both continuation aggregates read it
-    n1p_w = model.groupBy("nxt").agg(
-        F.count(F.lit(1)).cast("bigint").alias("_n1p_w")
-    )
-    cont = model.groupBy().agg(F.count(F.lit(1)).alias("_n1p_all"))
-    d = F.lit(float(discount))
-    p = (
-        F.greatest(F.col("c").cast("double") - d, F.lit(0.0))
-        / F.col("c_ctx").cast("double")
-        + d
-        * F.col("n1p_ctx").cast("double")
-        / F.col("c_ctx").cast("double")
-        * (F.col("_n1p_w").cast("double") / F.col("_n1p_all").cast("double"))
-    )
-    # fold the continuation pieces into the vocab-bounded model table
-    # BEFORE touching the corpus-sized bigram stream: joining them after
-    # would shuffle the stream twice (once on (ctx, nxt), again on nxt);
-    # this way the stream crosses exactly one exchange
-    full_model = model.join(n1p_w, "nxt").crossJoin(F.broadcast(cont))
-    scored = bigrams.join(full_model, ["ctx", "nxt"])
-    per_doc = scored.select(
-        id_col, (-F.log(p)).alias("_nll")
-    ).groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
-        F.round(F.avg("_nll"), 6).alias("nll_nats"),
-    )
-    return per_doc.select(
-        id_col, "n_bigrams", "nll_nats",
-        F.round(F.exp(F.col("nll_nats")), 4).alias("ppl"),
-    )

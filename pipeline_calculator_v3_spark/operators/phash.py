@@ -51,9 +51,7 @@ runs adaptive multi-index recursion over DISTINCT hashes:
   remain, a group's members agree on 61+ of 64 bits, so it holds at
   most 2^3 = 8 distinct hashes and all-pairs within it is trivial.
   Every pair-generating group is therefore <= bucket_cap members (or
-  <= 8 at the floor) — no single key anywhere produces unbounded pairs;
-- :func:`ahash_pairs_ledger` reports the hot groups per level (the
-  capped-keys observability ledger, the q_zorder_pruned_scan pattern).
+  <= 8 at the floor) — no single key anywhere produces unbounded pairs.
 
 Decode runs the REAL stdlib PNG codec (operators/pngcodec.py) through
 one Arrow ``mapInPandas`` pass — hash extraction is a pure map, zero
@@ -129,62 +127,6 @@ def ahash64(media: DataFrame) -> DataFrame:
     return media.mapInPandas(gen, AHASH_SCHEMA)
 
 
-def dhash64(media: DataFrame) -> DataFrame:
-    """64-bit difference hash (dHash) per PNG blob — the gradient-based
-    sibling of :func:`ahash64`: bit (r, j) = sample(r, j) > sample(r, j+1)
-    over an 8x9 nearest-neighbor grid, so the fingerprint encodes local
-    brightness GRADIENTS and survives global brightness/contrast shifts
-    that move every cell relative to the aHash mean.  The classic pairing
-    (Krawetz's aHash/dHash) — candidates matched under either hash.
-
-    Same integer-only contract as ahash64 (9-column sampling at
-    ``(j*w)//9``, strict ``>`` on integer samples, two non-negative
-    BIGINT halves, same banding/pair machinery via :func:`ahash_pairs` on
-    the renamed columns), same PERMISSIVE degradation, same one-pass
-    Arrow map.  Output schema matches ahash64."""
-    from .pngcodec import decode_png
-
-    ensure_pkg_shipped(media.sparkSession)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                # id conversion OUTSIDE the degrade guard: a NULL media_id
-                # must not make the except handler itself raise and fail
-                # the whole Arrow batch (review r12)
-                try:
-                    mid = int(mid)
-                except (TypeError, ValueError):
-                    rows.append((None, 0, 0, 0, 0, False))
-                    continue
-                try:
-                    a = decode_png(bytes(content))
-                    if a.ndim == 3:
-                        a = a.mean(axis=2).astype(np.int64)
-                    a = a.astype(np.int64)
-                    h, w = a.shape
-                    rr = (np.arange(8) * h) // 8
-                    jj = (np.arange(9) * w) // 9
-                    grid = a[np.ix_(rr, jj)]
-                    bits = (grid[:, :8] > grid[:, 1:]).astype(np.int64)
-                    weights = 1 << (
-                        (np.arange(4)[:, None] * 8) + np.arange(8)[None, :]
-                    )
-                    lo = int((bits[:4] * weights).sum())
-                    hi = int((bits[4:] * weights).sum())
-                    rows.append((mid, w, h, hi, lo, True))
-                except Exception:  # zlib.error / struct.error / ValueError
-                    rows.append((mid, 0, 0, 0, 0, False))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height",
-                         "ahash_hi", "ahash_lo", "valid"],
-            )
-
-    return media.mapInPandas(gen, AHASH_SCHEMA)
-
-
 def _hash_lt(a, b):
     """Lexicographic (hi, lo) order — the canonical distinct-hash pair
     orientation (a single 64-bit compare would hit the signed-bit trap
@@ -204,26 +146,40 @@ def _grp_pairs(members: DataFrame) -> DataFrame:
     )
 
 
-def _ahash_pairs_impl(
+def ahash_pairs(
     hashes: DataFrame,
-    id_col: str,
-    max_hamming: int,
-    bucket_cap: int,
-):
-    """Shared core: (id-pair DataFrame, hot-group ledger DataFrame).
+    id_col: str = "media_id",
+    max_hamming: int = 3,
+    bucket_cap: int = 1024,
+) -> DataFrame:
+    """Near-duplicate image pairs by banded aHash matching.
 
-    Adaptive multi-index recursion over distinct hashes — see the module
-    docstring for the completeness argument and the structural 2^3
-    termination bound.  All recursion frames are metadata-light: rows are
-    (grp STRING, rest BIGINT, hi, lo), and only members of over-cap
-    groups ever enter the next level."""
+    Returns (``id_a``, ``id_b``, ``hamming`` INT) with id_a < id_b and
+    hamming <= ``max_hamming``.  Complete (no missed pairs) for
+    max_hamming <= 3 by pigeonhole over the four 16-bit bands — and the
+    guarantee SURVIVES skew: groups larger than ``bucket_cap`` recurse
+    through adaptive sub-banding of their unmatched bits instead of
+    joining quadratically (module docstring), so no (band, key) hot
+    bucket ever drives O(n^2) pair generation.  Above Hamming 3 recall
+    is LSH-style best-effort.  Invalid rows never match.
+
+    All recursion frames are metadata-light: rows are (grp STRING, rest
+    BIGINT, hi, lo), and only members of over-cap groups ever enter the
+    next level.
+
+    Lifetime contract (advice r13): unlike most operators this call
+    executes EAGERLY (one stats job per recursion level, plus
+    localCheckpoint actions on deep frontiers), and the returned
+    DataFrame references persisted/localCheckpoint state that does NOT
+    recompute once ``caching.release_caches`` drops it — materialize the
+    result (collect/write) BEFORE releasing caches, the caching.py
+    contract."""
     if max_hamming < 0:
         raise ValueError("max_hamming must be >= 0")
     if bucket_cap < 1:
         raise ValueError("bucket_cap must be >= 1")
     from ..caching import local_checkpoint_tracked, persist_tracked
 
-    spark = hashes.sparkSession
     # distinct: duplicate (id, hash) input rows would multiply both the
     # expansion joins and the identical-hash self-join below, emitting
     # duplicated (id_a, id_b, hamming) rows where the contract promises
@@ -273,7 +229,6 @@ def _ahash_pairs_impl(
     ).select("ahash_hi", "ahash_lo", "_b.grp", "_b.rest")
 
     pair_frames = []
-    ledger_frames = []
     pending = {48: level0}
     level0_frame = True
     while pending:
@@ -314,22 +269,16 @@ def _ahash_pairs_impl(
         if stats["n_hot"] == 0:
             pair_frames.append(_grp_pairs(frame))
             continue
-        # hot path: counts feeds the ledger, the anti-join, and the
-        # semi-join — persist so the groupBy computes once, not thrice
+        # hot path: counts feeds the anti-join and the semi-join —
+        # persist so the groupBy computes once, not twice
         counts = persist_tracked(counts)
         hot = counts.where(F.col("n") > bucket_cap)
-        ledger_frames.append(
-            hot.select(
-                F.lit(48 - width).alias("depth"), "grp",
-                F.col("n").alias("n_hashes"),
-            )
-        )
         cold = frame.join(F.broadcast(hot.select("grp")), "grp", "left_anti")
         pair_frames.append(_grp_pairs(cold))
         if width < 4:
             # Structural floor: members agree on 64-width >= 61 bits, so a
             # group holds <= 2^3 distinct hashes — all-pairs is trivial
-            # regardless of the cap (the ledger row above records it).
+            # regardless of the cap.
             hotm = frame.join(
                 F.broadcast(hot.select("grp")), "grp", "left_semi"
             )
@@ -439,79 +388,4 @@ def _ahash_pairs_impl(
             F.lit(0).alias("hamming"),
         )
     )
-    pairs = expanded.unionByName(ident)
-    if ledger_frames:
-        ledger = ledger_frames[0]
-        for f in ledger_frames[1:]:
-            ledger = ledger.unionByName(f)
-    else:  # empty input short-circuits every level
-        ledger = spark.createDataFrame(
-            [], "depth int, grp string, n_hashes bigint"
-        )
-    return pairs, ledger
-
-
-def ahash_pairs(
-    hashes: DataFrame,
-    id_col: str = "media_id",
-    max_hamming: int = 3,
-    bucket_cap: int = 1024,
-) -> DataFrame:
-    """Near-duplicate image pairs by banded aHash matching.
-
-    Returns (``id_a``, ``id_b``, ``hamming`` INT) with id_a < id_b and
-    hamming <= ``max_hamming``.  Complete (no missed pairs) for
-    max_hamming <= 3 by pigeonhole over the four 16-bit bands — and the
-    guarantee SURVIVES skew: groups larger than ``bucket_cap`` recurse
-    through adaptive sub-banding of their unmatched bits instead of
-    joining quadratically (module docstring), so no (band, key) hot
-    bucket ever drives O(n^2) pair generation.  Above Hamming 3 recall
-    is LSH-style best-effort.  Invalid rows never match.
-
-    Lifetime contract (advice r13): unlike most operators this call
-    executes EAGERLY (one stats job per recursion level, plus
-    localCheckpoint actions on deep frontiers), and the returned
-    DataFrame references persisted/localCheckpoint state that does NOT
-    recompute once ``caching.release_caches`` drops it — materialize the
-    result (collect/write) BEFORE releasing caches, the caching.py
-    contract."""
-    pairs, _ = _ahash_pairs_impl(hashes, id_col, max_hamming, bucket_cap)
-    return pairs
-
-
-def ahash_groups(hashes: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Identical-hash group representatives — the dedup KEEP-decision
-    surface that skips pair expansion entirely.
-
-    Returns one row per distinct valid hash: (``ahash_hi``, ``ahash_lo``,
-    ``rep_id`` BIGINT — the smallest member id, the deterministic keep
-    candidate, ``n_ids`` BIGINT — member count).  An identical-hash group
-    of m media emits m(m-1)/2 Hamming-0 rows through :func:`ahash_pairs`
-    (the pair contract is inherently output-bound), so consumers that
-    only need "which copies collapse to which representative" — connected
-    components over exact groups, best-copy keeps, storage dedup — read
-    THIS instead: one hash aggregate, linear in the input, no join
-    anywhere.  Keep :func:`ahash_pairs` for the audit faces that need the
-    pairs themselves."""
-    return (
-        hashes.where(F.col("valid"))
-        .groupBy("ahash_hi", "ahash_lo")
-        .agg(
-            F.min(F.col(id_col)).cast("bigint").alias("rep_id"),
-            F.countDistinct(F.col(id_col)).cast("bigint").alias("n_ids"),
-        )
-    )
-
-
-def ahash_pairs_ledger(
-    hashes: DataFrame,
-    id_col: str = "media_id",
-    bucket_cap: int = 1024,
-) -> DataFrame:
-    """The capped-keys observability ledger for :func:`ahash_pairs`:
-    one row per over-cap group per recursion level — (``depth`` INT,
-    0 = the 16-bit band level; ``grp`` STRING, the matched band path
-    ``band:key/m:subval/...``; ``n_hashes`` BIGINT, distinct hashes in
-    the group).  Empty means no bucket anywhere exceeded the cap."""
-    _, ledger = _ahash_pairs_impl(hashes, id_col, 3, bucket_cap)
-    return ledger
+    return expanded.unionByName(ident)

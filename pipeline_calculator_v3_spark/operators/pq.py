@@ -209,27 +209,6 @@ def _codes_expr(m: int, ksub: int, dsub: int, vec_col: str) -> Column:
     )
 
 
-def pq_encode(
-    df: DataFrame,
-    codebooks: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Encode every vector as ``codes`` ARRAY<BIGINT> of length m —
-    per subspace, the argmin-squared-L2 centroid (ties -> lowest code).
-
-    Pure map over ``df`` after a one-row codebook broadcast: per row,
-    m * ksub small-dim distance evaluations inside one HOF expression —
-    zero exchanges, zero UDFs."""
-    m, ksub, dsub = _shape_of(codebooks)
-    return (
-        df.crossJoin(F.broadcast(_books_row(codebooks)))
-        .select(
-            F.col(id_col), _codes_expr(m, ksub, dsub, vec_col).alias("codes")
-        )
-    )
-
-
 def _lut_expr(dsub: int) -> Column:
     """The per-query ADC lookup table against the broadcast ``_cb`` row:
     squared distance from each query subvector (``_qv``) to each centroid.
@@ -268,126 +247,6 @@ def _adc_sum(m: int, ksub: int) -> Column:
     )
 
 
-def pq_adc_topk(
-    queries: DataFrame,
-    codes: DataFrame,
-    codebooks: DataFrame,
-    k: int = 10,
-    q_id: str = "vec_id",
-    c_id: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ADC top-k: nearest corpus vectors by PQ-approximated squared L2.
-
-    Per query, ONE (m x ksub) lookup table — the squared distance from
-    each query subvector to each centroid, laid out as an array indexed
-    by ``subspace * ksub + code`` — then the corpus scan is m
-    element_at lookups + a sum per code row.  Ties rank by candidate id.
-
-    Returns (qid, cid, approx_sqdist DOUBLE, rank BIGINT).
-
-    Scale shape: the query side (tiny by contract) broadcasts WITH its
-    lookup tables; the corpus side streams code arrays through a
-    map-side scoring pass, and the rank<=k filter plans as
-    WindowGroupLimit (verified in PLANS.md) — each map task forwards at
-    most k rows per query to the window exchange, so the per-query sort
-    never sees the corpus, only k * n_upstream_partitions survivors —
-    the exact cosine_topk shape with 256 B/vector swapped for m bytes."""
-    m, ksub, dsub = _shape_of(codebooks)
-    q = (
-        queries.select(
-            F.col(q_id).alias("qid"), F.col(vec_col).alias("_qv")
-        )
-        .crossJoin(F.broadcast(_books_row(codebooks)))
-        .select("qid", _lut_expr(dsub).alias("_lut"))
-    )
-    approx = _adc_sum(m, ksub)
-    scored = (
-        codes.select(F.col(c_id).alias("cid"), "codes")
-        .crossJoin(F.broadcast(q))
-        .where(F.col("qid") != F.col("cid"))
-        .select("qid", "cid", approx.alias("approx_sqdist"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.asc("approx_sqdist"), F.asc("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-    )
-
-
-def _exact_refine(
-    coarse: DataFrame,
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    q_id: str,
-    c_id: str,
-    vec_col: str,
-) -> DataFrame:
-    """Shared refine stage: exact squared-L2 rescoring of coarse (qid,
-    cid, approx_sqdist) candidates against full-precision vectors, per-
-    query top-k on (sqdist ASC, cid ASC).  ONE spelling for the ADC-scan
-    and IVF-PQ faces — a tie-rule or rank-type fix applied to one would
-    otherwise silently fork the other (review r11)."""
-
-    def cast_d(v: Column) -> Column:
-        return F.transform(v, lambda x: x.cast("double"))
-
-    qv = queries.select(
-        F.col(q_id).alias("qid"), cast_d(F.col(vec_col)).alias("_qd")
-    )
-    cv = corpus.select(
-        F.col(c_id).alias("cid"), cast_d(F.col(vec_col)).alias("_cd")
-    )
-    refined = (
-        coarse.join(F.broadcast(qv), "qid")
-        .join(cv, "cid")
-        .select(
-            "qid", "cid", "approx_sqdist",
-            _sqdist(F.col("_qd"), F.col("_cd")).alias("sqdist"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.asc("sqdist"), F.asc("cid"))
-    return (
-        refined.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-    )
-
-
-def pq_adc_refine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    codes: DataFrame,
-    codebooks: DataFrame,
-    k: int = 10,
-    k_coarse: int = 100,
-    q_id: str = "vec_id",
-    c_id: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The production PQ shape: ADC over codes as the CANDIDATE GENERATOR
-    (top ``k_coarse``), then exact squared-L2 rescoring of just those
-    survivors against the full-precision vectors (the
-    cosine_topk_ivf_refine stage-2 move applied to PQ).  Raw ADC@10 on
-    weakly-clustered corpora is poor by nature — measured 0.30-0.31 on
-    the synthetic embeddings — but its top-100 contains ~87% of the true
-    top-10, which the refine stage recovers at the cost of k_coarse
-    full-vector reads per query.
-
-    Returns (qid, cid, approx_sqdist DOUBLE, sqdist DOUBLE, rank BIGINT).
-
-    Scale shape: the corpus-wide pass reads m-byte codes only; the
-    refine join touches k_coarse rows per query by id — at 100 TB that
-    is the difference between streaming 8 B/vector and 256 B/vector
-    through the scan, with the exact pass bounded by queries, not
-    corpus."""
-    coarse = pq_adc_topk(
-        queries, codes, codebooks, k=k_coarse,
-        q_id=q_id, c_id=c_id, vec_col=vec_col,
-    ).drop("rank")
-    return _exact_refine(coarse, queries, corpus, k, q_id, c_id, vec_col)
-
-
 def pq_ivf_adc_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -412,8 +271,8 @@ def pq_ivf_adc_topk(
 
     Returns (qid, cid, approx_sqdist DOUBLE, sqdist DOUBLE, rank BIGINT).
 
-    Scale shape — the piece neither pq_adc_refine_topk (full-corpus ADC
-    scan) nor cosine_topk_ivf_refine (full-precision probed scan) has:
+    Scale shape — the piece neither a full-corpus ADC scan nor
+    cosine_topk_ivf_refine (full-precision probed scan) has:
     the corpus crosses ZERO exchanges end-to-end.  One map pass computes
     each vector's code word AND its list assignment against two one-row
     broadcasts (codebooks + coarse centroids); the probe join is a
@@ -499,4 +358,24 @@ def pq_ivf_adc_topk(
         .where(F.col("r") <= k_coarse)
         .drop("r")
     )
-    return _exact_refine(coarse, queries, corpus, k, q_id, c_id, vec_col)
+    # exact squared-L2 rescoring of the coarse survivors against the
+    # full-precision vectors; per-query top-k on (sqdist ASC, cid ASC)
+    qv = queries.select(
+        F.col(q_id).alias("qid"), cast_d(F.col(vec_col)).alias("_qd")
+    )
+    cv = corpus.select(
+        F.col(c_id).alias("cid"), cast_d(F.col(vec_col)).alias("_cd")
+    )
+    refined = (
+        coarse.join(F.broadcast(qv), "qid")
+        .join(cv, "cid")
+        .select(
+            "qid", "cid", "approx_sqdist",
+            _sqdist(F.col("_qd"), F.col("_cd")).alias("sqdist"),
+        )
+    )
+    w = Window.partitionBy("qid").orderBy(F.asc("sqdist"), F.asc("cid"))
+    return (
+        refined.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .where(F.col("rank") <= k)
+    )

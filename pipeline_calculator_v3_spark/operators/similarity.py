@@ -640,6 +640,32 @@ def _pairs_cosine_arrow(
     return rep.groupBy("blk", "__g1", "__g2").applyInPandas(emit, out_ddl)
 
 
+def _pairs_cosine_join(
+    labeled: DataFrame, min_cosine: float, n_groups: int
+) -> DataFrame:
+    """All within-``blk`` pairs (a_vid < b_vid) at cosine >= ``min_cosine``
+    via the salted self-join + interpreted HOF cosine — the small-k
+    spelling of :func:`_pairs_cosine_arrow` (same pair set, same
+    (id1, id2, cluster_id, cos_sim) columns, bit-identical doubles)."""
+    from .joins import salted_self_pairs
+
+    pairs = salted_self_pairs(labeled, "blk", "vid", n_groups=n_groups).where(
+        F.col("a_vid") < F.col("b_vid")
+    )
+    cos = dot(F.col("a_v"), F.col("b_v")) / F.nullif(
+        F.col("a_nrm") * F.col("b_nrm"), F.lit(0.0)
+    )
+    return (
+        pairs.select(
+            F.col("a_vid").alias("id1"),
+            F.col("b_vid").alias("id2"),
+            F.col("a_blk").alias("cluster_id"),
+            cos.alias("cos_sim"),
+        )
+        .where(F.col("cos_sim") >= min_cosine)
+    )
+
+
 def semantic_dedup_pairs(
     vectors: DataFrame,
     id_col: str = "vec_id",
@@ -650,7 +676,6 @@ def semantic_dedup_pairs(
     n_groups: int = 4,
     assign_sink: list | None = None,
     centroids_sink: list | None = None,
-    pair_kernel: str = "auto",
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs — the third dedup axis
     (exact=fingerprint, lexical=minhash, semantic=embedding-cluster).
@@ -702,36 +727,16 @@ def semantic_dedup_pairs(
     # faster end-to-end (xl twin 13.4 -> 8.7 s min-of-3; see
     # _pairs_cosine_arrow for the fold-order and NULL/NaN argument),
     # while on sub-10k planted corpora the ~320 tiny grouped-map tasks
-    # cost ~0.5 s of pure overhead.  "auto" keys the choice on k, the
+    # cost ~0.5 s of pure overhead.  The choice keys on k, the
     # documented corpus-size signal (callers size k = N/500 per the
     # SemDeDup deployment rule), so the kernel engages exactly where
     # the pair volume justifies it; both paths are gated bit-identical
     # by tests/test_semantic_dedup.py.
-    if pair_kernel not in ("auto", "arrow", "join"):
-        raise ValueError(f"pair_kernel must be auto|arrow|join: {pair_kernel}")
-    if pair_kernel == "auto":
-        pair_kernel = "arrow" if k >= 64 else "join"
-    if pair_kernel == "arrow":
+    if k >= 64:
         return _pairs_cosine_arrow(
             labeled, min_cosine, n_groups, block_out="cluster_id"
         )
-    from .joins import salted_self_pairs
-
-    pairs = salted_self_pairs(labeled, "blk", "vid", n_groups=n_groups).where(
-        F.col("a_vid") < F.col("b_vid")
-    )
-    cos = dot(F.col("a_v"), F.col("b_v")) / F.nullif(
-        F.col("a_nrm") * F.col("b_nrm"), F.lit(0.0)
-    )
-    return (
-        pairs.select(
-            F.col("a_vid").alias("id1"),
-            F.col("b_vid").alias("id2"),
-            F.col("a_blk").alias("cluster_id"),
-            cos.alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= min_cosine)
-    )
+    return _pairs_cosine_join(labeled, min_cosine, n_groups)
 
 
 def embedding_contamination(

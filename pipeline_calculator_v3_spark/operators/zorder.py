@@ -10,15 +10,15 @@ needs no layout (SURVEY §1); at cluster scale layout IS the index.
 
 Everything here is pure Column arithmetic (quantize + bit interleave via
 shift/mask terms, all inside whole-stage codegen) — no UDF, no shuffle of
-its own.  ``cluster_by_zorder`` does one range-repartition + in-partition
-sort, the standard price of re-clustering a table.
+its own.  Re-clustering a table on the key costs the caller one
+range-repartition + in-partition sort.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -62,33 +62,6 @@ def zorder_key(lat: Column, lon: Column, bits: int = 16) -> Column:
         | (F.abs(lon.cast("double")) == F.lit(inf))
     )
     return F.when(bad, F.lit(None).cast("bigint")).otherwise(key)
-
-
-def cluster_by_zorder(
-    df: DataFrame,
-    lat_col: str,
-    lon_col: str,
-    n_partitions: int,
-    bits: int = 16,
-) -> DataFrame:
-    """Re-cluster ``df`` for write: range-partition on the z-key (each
-    output file covers a contiguous z-range, i.e. a compact spatial tile)
-    and sort within partitions so row-group min/max stats are tight.
-
-    Rows with NULL/NaN coordinates carry a NULL z-key and land together in
-    the first range partition — quarantined, not scattered into valid
-    tiles.  One shuffle (the range exchange) — the cost every table
-    re-clustering pays; downstream bbox scans repay it on every query."""
-    if "_zkey" in df.columns:
-        raise ValueError("input frame already has a _zkey column")
-    keyed = df.withColumn(
-        "_zkey", zorder_key(F.col(lat_col), F.col(lon_col), bits)
-    )
-    return (
-        keyed.repartitionByRange(n_partitions, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-    )
 
 
 # --- DuckDB oracle faces (one generator beside the Column face it mirrors,

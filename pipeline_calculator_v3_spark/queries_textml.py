@@ -617,8 +617,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= 16 — upgraded from the xxhash64 face to the oracle-checkable md5
     face (VERDICT r07 #6); the whole pipeline (bit votes, blocking,
     candidates, hamming) replays in ANSI SQL for a value-level verdict.
-    The xxhash64 single-pass Column face (operators/dedup.py::simhash64)
-    stays the throughput variant.
 
     Blocking tops out at 65k buckets, so real corpora WILL concentrate:
     pair generation goes through ``salted_self_pairs`` (same output,

@@ -8,8 +8,8 @@ exactly the drift class the r12 shingle-NULL fix patched in the verify
 path: a stop-on-failure or timeout fix landing in one copy silently
 misses the others (review r13, extracted r14).
 
-The memory sink is a TEST harness (file_sink.py holds the durable
-foreachBatch path); `processAllAvailable` gives the bounded-input
+The memory sink is a TEST harness (cdc.py and ingest.py hold the
+durable foreachBatch paths); `processAllAvailable` gives the bounded-input
 semantics every face relies on — it returns only when every available
 micro-batch has committed, and the `finally: stop()` guarantees a
 failing transform never leaks a running query holding the sink name

@@ -77,9 +77,9 @@ def run_stateful_to_memory(spark, events_dir: str, name: str,
     state carries across batches.  Returns the LATEST row per user.
 
     The memory sink does NOT support checkpoint recovery — the
-    restart-resume contract is proven against the foreachBatch parquet
-    sink instead (streaming/file_sink.py,
-    tests/test_stateful_streaming.py::test_stateful_restart...).
+    restart-resume contract is proven against a foreachBatch parquet
+    writer instead (tests/test_stateful_streaming.py::
+    test_stateful_restart...).
 
     Shares queries.EVENTS_SCHEMA (native TIMESTAMP_NTZ) so batch and
     streaming readers agree on the timestamp unit — zero session mutation,

@@ -106,20 +106,6 @@ def test_reserved_column_collision_rejected(spark):
         bloom_filter_keys(poisoned, bitmap, "k")
 
 
-def test_bloom_params_hits_requested_fp_rate(spark):
-    from pipeline_calculator_v3_spark.operators.bloom import bloom_params
-
-    n = 2000
-    m, k = bloom_params(n, fp_rate=0.01)
-    assert m % 64 == 0 and 1 <= k <= 16
-    build = spark.range(0, n).select(F.col("id").alias("k"))
-    bitmap = bloom_build(build, "k", m_bits=m, n_hashes=k)
-    probe = spark.range(10_000_000, 10_050_000).select(F.col("id").alias("k"))
-    fp = bloom_filter_keys(probe, bitmap, "k").count()
-    # requested 1%; allow 3x slack on 50k probes
-    assert fp < 0.03 * 50_000, (m, k, fp)
-
-
 def test_oversized_explicit_n_hashes_fails_loudly(spark):
     """r05 advice: an explicit n_hashes larger than the build-side k probes
     bits that were never set — false negatives, the one guarantee the

@@ -89,6 +89,36 @@ def test_bad_counts_rejected_before_spark(tmp_path, capsys, flag):
     assert not out.exists()
 
 
+@pytest.mark.parametrize("value", ["nan", "inf", "-inf"])
+@pytest.mark.parametrize(
+    "option",
+    ["--detection-range", "--min-parallel", "--segment-length",
+     "--angular-tolerance"],
+)
+def test_non_finite_parameters_rejected_before_spark(
+    tmp_path, capsys, monkeypatch, option, value
+):
+    """A NaN or infinite analysis parameter is an argparse error, exit 2,
+    before any Spark session starts and with no export written.  A NaN
+    angular tolerance used to disable the bearing predicate silently; a
+    NaN detection range failed deep inside the spatial join."""
+    import pipeline_calculator_v3_spark.session as session
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("Spark session requested")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    src = tmp_path / "pair.kml"
+    src.write_text(_KML)
+    out = tmp_path / "out"
+    with pytest.raises(SystemExit) as exc:
+        # --opt=value: argparse would take a bare "-inf" for an option
+        main(["analyze", str(src), "--out-dir", str(out), f"{option}={value}"])
+    assert exc.value.code == 2
+    assert f"argument {option}: must be finite" in capsys.readouterr().err
+    assert not out.exists()
+
+
 @pytest.mark.parametrize("sink_fails", [False, True])
 def test_analyze_leaves_no_cache(spark, tmp_path, sink_fails):
     """Every frame the analysis pins is released before main() returns or

@@ -9,10 +9,7 @@ import duckdb
 import pandas as pd
 import pytest
 
-from pipeline_calculator_v3_spark.operators.compaction import (
-    compaction_groups,
-    compaction_plan,
-)
+from pipeline_calculator_v3_spark.operators.compaction import compaction_plan
 
 TARGET = 100
 # ids deliberately unsorted on input; bytes mix tiny, mid, at-target, huge
@@ -48,25 +45,6 @@ def test_greedy_groups_by_id_order(plan):
     expect = {1: 0, 2: 0, 4: 0, 5: 1, 6: 1, 7: 2, 8: 2}
     for fid, gid in expect.items():
         assert plan[fid][1] == gid, (fid, plan[fid])
-
-
-def test_group_rollup(spark, plan):
-    df = spark.createDataFrame(FILES, "file_id long, bytes long")
-    groups = {
-        (r.compact, r.group_id): (r.n_files, r.total_bytes, r.rewrite)
-        for r in compaction_groups(
-            compaction_plan(df, target_bytes=TARGET)
-        ).collect()
-    }
-    assert groups[(True, 0)] == (3, 115, True)
-    assert groups[(True, 1)] == (2, 109, True)
-    assert groups[(True, 2)] == (2, 95, True)
-    solos = [k for k in groups if not k[0]]
-    assert len(solos) == 2
-    assert sorted(groups[k][1] for k in solos) == [100, 120]
-    for k in solos:
-        n, _, rewrite = groups[k]
-        assert n == 1 and not rewrite
 
 
 def test_duckdb_replay_agrees(plan):

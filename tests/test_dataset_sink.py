@@ -204,99 +204,6 @@ def test_curated_corpus_writes_validated_dataset(spark, sf_dir, tmp_path):
     )
 
 
-def test_compaction_shrinks_files_and_preserves_content(spark, docs, tmp_path):
-    from pyspark.sql import functions as F
-
-    from pipeline_calculator_v3_spark.dataset import compact_dataset
-
-    out = str(tmp_path / "frag")
-    # fragment: many tasks each writing into every partition dir
-    write_dataset(
-        docs.repartition(20),
-        out,
-        partition_by=["lang"],
-        key_cols=["doc_id", "text"],
-    )
-    n_langs = docs.select("lang").distinct().count()
-    report = compact_dataset(spark, out, files_per_partition=1)
-    assert report["files_before"] > n_langs * 3
-    assert report["files_after"] == n_langs
-    assert report["validation"]["ok"]
-    # content untouched
-    assert spark.read.parquet(out).count() == docs.count()
-    assert not os.path.exists(out + ".__old__")
-    assert not os.path.exists(out + ".__compact__")
-
-
-def test_numeric_string_partitions_preserved_through_compaction(
-    spark, docs, tmp_path
-):
-    """month=01-style directories must survive compaction verbatim —
-    partition-type inference would rewrite them to month=1 and break
-    external path consumers (review finding, r05)."""
-    from pyspark.sql import functions as F
-
-    from pipeline_calculator_v3_spark.dataset import compact_dataset
-
-    out = str(tmp_path / "months")
-    monthly = docs.withColumn(
-        "month",
-        F.lpad((F.col("doc_id") % 12 + 1).cast("string"), 2, "0"),
-    )
-    write_dataset(
-        monthly.repartition(10),
-        out,
-        partition_by=["month"],
-        key_cols=["doc_id"],
-    )
-    dirs_before = sorted(
-        d for d in os.listdir(out) if d.startswith("month=")
-    )
-    assert "month=01" in dirs_before  # zero-padded on disk
-    report = compact_dataset(spark, out)
-    assert report["validation"]["ok"]
-    dirs_after = sorted(
-        d for d in os.listdir(out) if d.startswith("month=")
-    )
-    assert dirs_after == dirs_before
-
-
-def test_compaction_recovers_from_crashed_predecessor(spark, docs, tmp_path):
-    """An orphaned .__old__ with no live out_dir (crash between the two
-    renames) is restored at entry instead of failing forever."""
-    from pipeline_calculator_v3_spark.dataset import compact_dataset
-
-    out = str(tmp_path / "ds")
-    write_dataset(
-        docs, out, partition_by=["lang"], key_cols=["doc_id", "text"]
-    )
-    os.rename(out, out + ".__old__")  # simulate mid-swap crash
-    report = compact_dataset(spark, out)
-    assert report["validation"]["ok"]
-    assert os.path.exists(out)
-    assert not os.path.exists(out + ".__old__")
-
-
-def test_compaction_multiple_files_per_partition(spark, docs, tmp_path):
-    """files_per_partition is an upper bound ('up to': salts can share a
-    shuffle task); content is preserved regardless."""
-    from pipeline_calculator_v3_spark.dataset import compact_dataset
-
-    out = str(tmp_path / "frag4")
-    write_dataset(
-        docs.repartition(20),
-        out,
-        partition_by=["lang"],
-        key_cols=["doc_id", "text"],
-    )
-    n_langs = docs.select("lang").distinct().count()
-    report = compact_dataset(spark, out, files_per_partition=4)
-    assert report["validation"]["ok"]
-    assert report["files_after"] <= 4 * n_langs
-    assert report["files_after"] < report["files_before"]
-    assert spark.read.parquet(out).count() == docs.count()
-
-
 def test_validate_self_heals_interrupted_swap(spark, docs, tmp_path):
     out = str(tmp_path / "ds")
     write_dataset(
@@ -430,22 +337,3 @@ def test_restamp_refuses_count_drift(spark, docs, tmp_path):
     shutil.rmtree(os.path.join(out, victim))
     with pytest.raises(RuntimeError, match="refusing to re-stamp"):
         restamp_manifest(spark, out)
-
-
-def test_compaction_restamps_stale_manifest(spark, docs, tmp_path):
-    """Compaction on a pre-versioning manifest re-stamps FIRST so its
-    rewrite validation keeps full checksum strength."""
-    from pipeline_calculator_v3_spark.dataset import compact_dataset
-    from pipeline_calculator_v3_spark.functions.checksum import (
-        DIGEST_VERSION,
-    )
-
-    out = str(tmp_path / "ds")
-    write_dataset(
-        docs, out, partition_by=["lang"], key_cols=["doc_id", "text"]
-    )
-    _age_manifest(out)
-    compact_dataset(spark, out, files_per_partition=1)
-    with open(os.path.join(out, "_manifest.json")) as f:
-        assert json.load(f)["digest_version"] == DIGEST_VERSION
-    assert validate_dataset(spark, out)["ok"]

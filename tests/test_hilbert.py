@@ -1,7 +1,7 @@
 """operators/hilbert.py — Hilbert-curve clustering keys (staged r13 for
 an r14 registry face): full-grid bijectivity, the unit-step locality
-property Z-order cannot satisfy, the DuckDB CTE-chain replay, NULL/NaN/
-Inf quarantine, and the cluster_by_hilbert range layout."""
+property Z-order cannot satisfy, the DuckDB CTE-chain replay, and
+NULL/NaN/Inf quarantine."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from pipeline_calculator_v3_spark.operators.hilbert import (
     _hilbert_steps,
-    cluster_by_hilbert,
     hilbert_sql_ctes,
     with_hilbert_key,
 )
@@ -152,27 +151,3 @@ def test_arg_guards(spark):
         with_hilbert_key(df, "lat", "lon", 32)
     with pytest.raises(ValueError):
         with_hilbert_key(df.withColumn("hkey", F.lit(1)), "lat", "lon", 8)
-
-
-def test_cluster_by_hilbert_layout(spark):
-    """Range layout: rows land in curve-contiguous partitions (max key of
-    partition p <= min key of partition p+1, NULLs first) and nothing is
-    lost or reordered within the schema."""
-    rows = [(i, float((i * 37) % 180 - 90), float((i * 53) % 360 - 180))
-            for i in range(400)]
-    rows += [(1000, None, None)]
-    df = spark.createDataFrame(rows, "id long, lat double, lon double")
-    out = cluster_by_hilbert(df, "lat", "lon", 4, bits=8)
-    assert out.count() == 401 and out.columns == ["id", "lat", "lon"]
-    keyed = with_hilbert_key(out, "lat", "lon", 8).select(
-        F.spark_partition_id().alias("p"), F.col("hkey").alias("k")
-    ).collect()
-    bounds = {}
-    for r in keyed:
-        if r.k is None:
-            assert r.p == 0  # quarantined into the first range partition
-            continue
-        lo, hi = bounds.get(r.p, (r.k, r.k))
-        bounds[r.p] = (min(lo, r.k), max(hi, r.k))
-    ordered = [bounds[p] for p in sorted(bounds)]
-    assert all(a[1] <= b[0] for a, b in zip(ordered, ordered[1:]))

@@ -142,177 +142,3 @@ def test_plan_lints(spark):
     from tests.compare import assert_no_plan_antipatterns
 
     assert_no_plan_antipatterns(kn_bigram_probs(df))
-
-
-# ---------------------------------------------------------------------------
-# kn_doc_nll — per-document scoring under the KN model (staged r14 for
-# an r15 face): the CCNet shape with KN instead of Lidstone smoothing.
-# ---------------------------------------------------------------------------
-DOC_NLL_ORACLE = f"""
-WITH t AS (
-    SELECT doc_id, {TOKENS_SQL} AS tok FROM documents
-    WHERE len({TOKENS_SQL}) > 1
-),
-bg AS (
-    SELECT doc_id, split_part(b, ' ', 1) AS ctx, split_part(b, ' ', 2) AS nxt
-    FROM (SELECT doc_id,
-                 unnest(list_transform(
-                     range(1, greatest(len(tok) - 1, 0) + 1),
-                     i -> tok[i] || ' ' || tok[i + 1])) AS b
-          FROM t)
-),
-counts AS (
-    SELECT ctx, nxt, CAST(count(*) AS BIGINT) AS c FROM bg GROUP BY 1, 2
-),
-ctx_stats AS (
-    SELECT ctx, CAST(sum(c) AS BIGINT) AS c_ctx,
-           CAST(count(*) AS BIGINT) AS n1p_ctx
-    FROM counts GROUP BY 1
-),
-cont AS (
-    SELECT nxt, CAST(count(*) AS BIGINT) AS n1p_w FROM counts GROUP BY 1
-),
-total AS (SELECT CAST(count(*) AS BIGINT) AS n1p_all FROM counts),
-scored AS (
-    SELECT b.doc_id,
-           -ln(greatest(CAST(c.c AS DOUBLE) - {D!r}, 0.0) / s.c_ctx
-               + {D!r} * s.n1p_ctx / s.c_ctx
-                 * (CAST(w.n1p_w AS DOUBLE) / t2.n1p_all)) AS nll
-    FROM bg b
-    JOIN counts c USING (ctx, nxt)
-    JOIN ctx_stats s USING (ctx)
-    JOIN cont w USING (nxt)
-    CROSS JOIN total t2
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-       round(avg(nll), 6) AS nll_nats,
-       round(exp(round(avg(nll), 6)), 4) AS ppl
-FROM scored GROUP BY doc_id
-"""
-
-
-def test_doc_nll_planted_values(spark):
-    """Hand-checkable score: every bigram of doc 3 ("a b c b") is a
-    singleton, so each P_KN = (1-D)/c_ctx + D*n1p_ctx/c_ctx*p_cont —
-    recomputed here in plain floats."""
-    import math
-
-    from pipeline_calculator_v3_spark.operators.ngram_lm import kn_doc_nll
-
-    df = spark.createDataFrame(PLANTED, "doc_id long, text string")
-    got = {r.doc_id: r for r in kn_doc_nll(df, discount=D).collect()}
-    assert set(got) == {1, 2, 3} and got[3].n_bigrams == 3
-    n1p_all = 6
-    # doc 3 bigrams: (a,b) c=1,c_ctx=1,n1p=1; (b,c) c=1,c_ctx=1,n1p=1;
-    # (c,b) c=1,c_ctx=1,n1p=1.  p_cont: b: 2/6 (after a and after c);
-    # c: 1/6.
-    def pkn(c, c_ctx, n1p_ctx, n1p_w):
-        return max(c - D, 0.0) / c_ctx + D * n1p_ctx / c_ctx * (
-            n1p_w / n1p_all
-        )
-
-    ps = [pkn(1, 1, 1, 2), pkn(1, 1, 1, 1), pkn(1, 1, 1, 2)]
-    want = round(sum(-math.log(p) for p in ps) / 3, 6)
-    assert got[3].nll_nats == pytest.approx(want, abs=2e-6)
-    assert got[3].ppl == round(math.exp(got[3].nll_nats), 4)
-    # doc 1 ("san francisco san francisco") repeats the corpus's most
-    # predictable bigrams -> lowest perplexity; doc 2's rare
-    # (san, diego) continuation makes it the outlier
-    assert got[1].nll_nats < got[3].nll_nats < got[2].nll_nats
-
-
-def test_doc_nll_documents_oracle(spark, duck, sf_dir):
-    from pipeline_calculator_v3_spark.operators.ngram_lm import kn_doc_nll
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    got = {
-        r.doc_id: (r.n_bigrams, r.nll_nats, r.ppl)
-        for r in kn_doc_nll(docs, discount=D).collect()
-    }
-    want = {
-        r[0]: (r[1], round(r[2], 6), r[3])
-        for r in duck.execute(DOC_NLL_ORACLE).fetchall()
-    }
-    assert len(got) == len(want) > 400
-    for k in want:
-        assert got[k][0] == want[k][0], k
-        assert got[k][1] == pytest.approx(want[k][1], abs=2e-6), k
-
-
-def test_doc_nll_plan_lints(spark):
-    from pipeline_calculator_v3_spark.operators.ngram_lm import kn_doc_nll
-    from tests.compare import assert_no_plan_antipatterns
-
-    df = spark.createDataFrame(PLANTED, "doc_id long, text string")
-    assert_no_plan_antipatterns(kn_doc_nll(df))
-
-
-# ---------------------------------------------------------------------------
-# property gate: kn_doc_nll against a pure-Python interpolated-KN
-# reference on random small corpora (simple space-separated words so the
-# tokenizer is trivially the reference's split()).
-# ---------------------------------------------------------------------------
-import math  # noqa: E402
-
-from hypothesis import HealthCheck, given, settings  # noqa: E402
-from hypothesis import strategies as st  # noqa: E402
-
-_WORD = st.sampled_from(["aa", "bb", "cc", "dd", "ee"])
-_DOC = st.lists(_WORD, min_size=0, max_size=12).map(" ".join)
-
-
-def _brute_kn_nll(texts, discount=0.75):
-    from collections import Counter, defaultdict
-
-    big = Counter()
-    for t in texts:
-        toks = t.split()
-        for a, b in zip(toks, toks[1:]):
-            big[(a, b)] += 1
-    if not big:
-        return {}
-    c_ctx, succ, pred = Counter(), defaultdict(set), defaultdict(set)
-    for (a, b), c in big.items():
-        c_ctx[a] += c
-        succ[a].add(b)
-        pred[b].add(a)
-    n1p_all = len(big)
-
-    def p(a, b):
-        return (
-            max(big[(a, b)] - discount, 0.0) / c_ctx[a]
-            + discount * len(succ[a]) / c_ctx[a]
-            * (len(pred[b]) / n1p_all)
-        )
-
-    out = {}
-    for i, t in enumerate(texts):
-        toks = t.split()
-        bgs = list(zip(toks, toks[1:]))
-        if bgs:
-            out[i] = (
-                len(bgs),
-                sum(-math.log(p(a, b)) for a, b in bgs) / len(bgs),
-            )
-    return out
-
-
-@settings(max_examples=10, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(st.lists(_DOC, min_size=1, max_size=10))
-def test_kn_doc_nll_matches_brute_force(spark, texts):
-    from pipeline_calculator_v3_spark.operators.ngram_lm import kn_doc_nll
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    want = _brute_kn_nll(texts)
-    got = {r.doc_id: (r.n_bigrams, r.nll_nats)
-           for r in kn_doc_nll(df).collect()}
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k][0] == want[k][0]
-        # operator rounds to 6 dp; summation order may differ at the ulp
-        assert got[k][1] == pytest.approx(want[k][1], abs=2e-6), (
-            k, texts
-        )

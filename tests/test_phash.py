@@ -202,68 +202,6 @@ def test_recursion_exact_at_any_cap(spark, skewed_hashes, cap):
     release_caches(spark)
 
 
-def test_hot_bucket_ledger(spark, skewed_hashes):
-    """The capped-keys observability ledger: over-cap groups surface with
-    their depth and matched-band path; a generous cap yields no rows."""
-    from pipeline_calculator_v3_spark.caching import release_caches
-    from pipeline_calculator_v3_spark.operators.phash import (
-        ahash_pairs_ledger,
-    )
-
-    h = spark.createDataFrame(
-        skewed_hashes,
-        "media_id long, ahash_hi long, ahash_lo long, valid boolean",
-    )
-    led = ahash_pairs_ledger(h, bucket_cap=4).collect()
-    assert led, "saturated bands must surface in the ledger"
-    depth0 = [r for r in led if r.depth == 0]
-    # band 3 (hi bits 16-31) is 0 for every valid row -> over any cap <= n
-    assert any(r.grp == "3:0" for r in depth0)
-    assert all(r.n_hashes > 4 for r in led)
-    # recursion levels appear as matched-band paths under the hot band
-    assert any("/" in r.grp and r.depth > 0 for r in led)
-    assert ahash_pairs_ledger(h, bucket_cap=1 << 30).count() == 0
-    release_caches(spark)
-
-
-def test_groups_representatives(spark, skewed_hashes, duck):
-    """ahash_groups: one row per distinct valid hash, min-id rep, member
-    count — DuckDB replays the aggregate bit-for-bit, the Hamming-0
-    membership ties out against the pair contract, and the plan carries
-    no join (the whole point: keep decisions without pair expansion)."""
-    from pipeline_calculator_v3_spark.operators.phash import ahash_groups
-
-    h = spark.createDataFrame(
-        skewed_hashes,
-        "media_id long, ahash_hi long, ahash_lo long, valid boolean",
-    )
-    got = sorted(
-        (r.ahash_hi, r.ahash_lo, r.rep_id, r.n_ids)
-        for r in ahash_groups(h).collect()
-    )
-    duck.execute("CREATE OR REPLACE TABLE _ag(m BIGINT, hi BIGINT, "
-                 "lo BIGINT, v BOOLEAN)")
-    duck.executemany("INSERT INTO _ag VALUES (?,?,?,?)", skewed_hashes)
-    want = sorted(
-        tuple(r) for r in duck.execute(
-            "SELECT hi, lo, CAST(min(m) AS BIGINT), "
-            "CAST(count(DISTINCT m) AS BIGINT) FROM _ag WHERE v "
-            "GROUP BY 1, 2"
-        ).fetchall()
-    )
-    duck.execute("DROP TABLE _ag")
-    assert got == want and len(got) == 10  # 11 distinct incl. the invalid
-    # every multi-member group's members reappear as Hamming-0 pairs and
-    # vice versa — the two surfaces agree on what "identical copy" means
-    ham0 = {
-        frozenset((r.id_a, r.id_b))
-        for r in ahash_pairs(h).where("hamming = 0").collect()
-    }
-    assert sum(n * (n - 1) // 2 for *_hash, _rep, n in got) == len(ham0)
-    plan = ahash_groups(h)._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan and "HashAggregate" in plan
-
-
 def test_malformed_blob_degrades(spark, planted_media):
     bad = spark.createDataFrame(
         [(99, bytearray(b"not a png"))], "media_id long, content binary"
@@ -283,77 +221,3 @@ def test_hash_pass_is_pure_map(planted_media):
     plan = ahash64(planted_media)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "MapInPandas" in plan
-
-
-# ---------------------------------------------------------------------------
-# dHash (difference hash) — the gradient sibling
-# ---------------------------------------------------------------------------
-DHASH_ORACLE = f"""
-WITH {_PAYLOAD_BYTES_CTE},
-dims AS (SELECT doc_id, n, frame // 8 AS w FROM m),
-cells AS (
-    SELECT d.doc_id, r.r, j.j,
-           (r.r * d.w + (j.j * d.w) // 9) AS idx
-    FROM dims d
-    CROSS JOIN (SELECT unnest(range(8)) AS r) r
-    CROSS JOIN (SELECT unnest(range(9)) AS j) j
-),
-sampled AS (
-    SELECT c.doc_id, c.r, c.j, COALESCE(b.b, 0) AS s
-    FROM cells c
-    LEFT JOIN bytes b ON b.doc_id = c.doc_id AND b.i = c.idx
-),
-bits AS (
-    SELECT l.doc_id, l.r, l.j,
-           CASE WHEN l.s > rt.s THEN 1 ELSE 0 END AS bit
-    FROM sampled l
-    JOIN sampled rt ON rt.doc_id = l.doc_id AND rt.r = l.r
-                   AND rt.j = l.j + 1
-    WHERE l.j < 8
-)
-SELECT doc_id AS media_id,
-       CAST(SUM(CASE WHEN r >= 4 THEN bit * (1::BIGINT << ((r - 4) * 8 + j))
-                ELSE 0 END) AS BIGINT) AS ahash_hi,
-       CAST(SUM(CASE WHEN r < 4 THEN bit * (1::BIGINT << (r * 8 + j))
-                ELSE 0 END) AS BIGINT) AS ahash_lo
-FROM bits GROUP BY doc_id
-"""
-
-
-def test_dhash_matches_duckdb(spark, duck, sf_dir):
-    from pipeline_calculator_v3_spark.operators.phash import dhash64
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    got = {
-        r.media_id: (r.ahash_hi, r.ahash_lo)
-        for r in dhash64(synth_png_media(docs)).collect()
-    }
-    want = {
-        int(r[0]): (int(r[1]), int(r[2]))
-        for r in duck.execute(DHASH_ORACLE).fetchall()
-    }
-    assert len(got) == len(want) > 100
-    assert got == want
-    assert all(hi >= 0 and lo >= 0 for hi, lo in got.values())
-
-
-def test_dhash_brightness_invariance(spark, planted_media):
-    """The property dHash exists for: a global brightness shift moves
-    every aHash cell relative to the mean but leaves GRADIENT signs
-    unchanged.  Build two images whose pixel rows differ by a constant
-    offset via text bytes and assert dhash-equal, ahash-different."""
-    from pipeline_calculator_v3_spark.operators.phash import dhash64
-
-    # 'abcdefghi' vs 'nopqrstuv': each char shifted by +13 — gradients
-    # identical, absolute levels differ
-    base = ("abcdefghi" * 23)[:200]
-    shifted = ("nopqrstuv" * 23)[:200]
-    docs = spark.createDataFrame(
-        [(1, base), (2, shifted)], "doc_id long, text string"
-    ).select("doc_id", "text", F.length("text").alias("n_chars"))
-    media = synth_png_media(docs)
-    d = {r.media_id: (r.ahash_hi, r.ahash_lo) for r in dhash64(media).collect()}
-    # the load-bearing assertion: the gradient fingerprint survives the
-    # shift exactly (aHash may or may not — its cells moved relative to
-    # the mean, and rank order happens to be preserved on this plant)
-    assert d[1] == d[2]

@@ -1,6 +1,6 @@
-"""operators/pq.py — product quantization + ADC scan (staged r11 for an
-r12 registry face): deterministic codebooks, the DuckDB oracle replay of
-encode and ADC top-k, compression-recall floor, and plan shape."""
+"""operators/pq.py — product quantization + IVF-PQ ADC scan (staged r11
+for an r12 registry face): deterministic codebooks, the DuckDB oracle
+replay of the IVF-PQ top-k, its recall floor, and plan shape."""
 
 from __future__ import annotations
 
@@ -8,8 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pipeline_calculator_v3_spark.operators.pq import (
-    pq_adc_topk,
-    pq_encode,
+    pq_ivf_adc_topk,
     pq_train,
 )
 
@@ -24,11 +23,6 @@ def emb(spark, sf_dir):
 @pytest.fixture(scope="module")
 def books(emb):
     return pq_train(emb, m=M, ksub=KSUB, iters=0)
-
-
-@pytest.fixture(scope="module")
-def codes(emb, books):
-    return pq_encode(emb, books)
 
 
 # The intended r12 registry oracle, shared CTE prefix: seeds -> per-
@@ -68,123 +62,6 @@ codes AS (
 """
 
 
-def test_codes_match_duckdb_oracle(duck, codes):
-    got = {
-        r.vec_id: tuple(r.codes) for r in codes.collect()
-    }
-    want: dict[int, list] = {}
-    for vid, sub, code in duck.execute(
-        f"WITH {PQ_CTES} SELECT vec_id, subspace, code FROM codes "
-        f"ORDER BY vec_id, subspace"
-    ).fetchall():
-        want.setdefault(int(vid), []).append(int(code))
-    assert got == {k: tuple(v) for k, v in want.items()}
-
-
-def test_codes_bounded(codes):
-    row = codes.select(
-        F.min(F.array_min("codes")).alias("lo"),
-        F.max(F.array_max("codes")).alias("hi"),
-        F.min(F.size("codes")).alias("m_lo"),
-        F.max(F.size("codes")).alias("m_hi"),
-    ).collect()[0]
-    assert 0 <= row.lo <= row.hi < KSUB
-    assert row.m_lo == row.m_hi == M
-
-
-def test_adc_topk_matches_duckdb_oracle(duck, emb, books, codes):
-    got = {
-        (r.qid, r.cid): (r.rank, r.approx_sqdist)
-        for r in pq_adc_topk(
-            emb.where(F.col("vec_id") < 8), codes, books, k=10
-        ).collect()
-    }
-    sql = f"""
-WITH {PQ_CTES},
-adc AS (
-    SELECT qd.vec_id AS qid, cc.vec_id AS cid,
-           SUM(qd.d ORDER BY qd.subspace) AS approx_sqdist
-    FROM codes cc
-    JOIN dists qd ON qd.subspace = cc.subspace AND qd.code = cc.code
-    WHERE qd.vec_id < 8 AND qd.vec_id <> cc.vec_id
-    GROUP BY qd.vec_id, cc.vec_id
-)
-SELECT qid, cid, approx_sqdist,
-       CAST(row_number() OVER (PARTITION BY qid
-                               ORDER BY approx_sqdist, cid) AS BIGINT) AS rank
-FROM adc
-QUALIFY rank <= 10
-"""
-    want = {
-        (int(r[0]), int(r[1])): (int(r[3]), float(r[2]))
-        for r in duck.execute(sql).fetchall()
-    }
-    assert set(got) == set(want)
-    for k in got:
-        assert got[k][0] == want[k][0], (k, got[k], want[k])
-        assert got[k][1] == pytest.approx(want[k][1], rel=1e-12), k
-
-
-def test_adc_recall_floor(spark, emb, books, codes):
-    """The compression/recall trade, priced honestly: raw ADC@10 on this
-    weakly-clustered synthetic corpus is poor (measured 0.3125 sf0.001 /
-    0.30 sf0.01 — 4-bit codes cannot rank neighbors this even), but its
-    top-100 candidate set contains ~87% of the true top-10 (0.8875 /
-    0.8625 measured), which the exact refine recovers — the production
-    PQ shape (pq_adc_refine_topk).  Both gates with margin below the
-    measured values."""
-    from pipeline_calculator_v3_spark.operators.pq import (
-        _sqdist,
-        pq_adc_refine_topk,
-    )
-
-    q = emb.where(F.col("vec_id") < 8)
-    exact = (
-        q.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-        .crossJoin(
-            F.broadcast(
-                emb.select(
-                    F.col("vec_id").alias("cid"),
-                    F.col("embedding").alias("cv"),
-                )
-            )
-        )
-        .where(F.col("qid") != F.col("cid"))
-        .select(
-            "qid", "cid",
-            _sqdist(
-                F.transform(F.col("qv"), lambda x: x.cast("double")),
-                F.transform(F.col("cv"), lambda x: x.cast("double")),
-            ).alias("d"),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.asc("d"), F.asc("cid"))
-    truth = {
-        (r.qid, r.cid)
-        for r in exact.withColumn("r", F.row_number().over(w))
-        .where(F.col("r") <= 10)
-        .collect()
-    }
-    got = {
-        (r.qid, r.cid)
-        for r in pq_adc_topk(q, codes, books, k=10).collect()
-    }
-    recall = len(truth & got) / len(truth)
-    assert recall >= 0.25, recall
-
-    refined = {
-        (r.qid, r.cid)
-        for r in pq_adc_refine_topk(
-            q, emb, codes, books, k=10, k_coarse=100
-        ).collect()
-    }
-    refined_recall = len(truth & refined) / len(truth)
-    assert refined_recall >= 0.80, refined_recall
-    assert refined_recall >= recall
-
-
 def test_train_guard(emb):
     with pytest.raises(ValueError):
         pq_train(emb, m=7)  # 64 % 7 != 0
@@ -220,18 +97,12 @@ def test_lloyd_empty_cluster_keeps_codebook_dense(spark):
     # code 1 duplicates code 0's seed subvectors, loses every tie, and
     # keeps its seed centroid verbatim
     assert got[(0, 1)] == [1.0, 2.0] and got[(1, 1)] == [3.0, 4.0]
-    # the winning cluster DID move (it absorbed both duplicate members)
-    adc = pq_adc_topk(
-        df.where(F.col("vec_id") < 2), pq_encode(df, books), books, k=3
+    # the winning cluster DID move (it absorbed both duplicate members);
+    # one list probed, so ADC scores every corpus vector
+    adc = pq_ivf_adc_topk(
+        df.where(F.col("vec_id") < 2), df, books, k=3, n_lists=1, nprobe=1
     ).collect()
     assert adc and all(r.approx_sqdist is not None for r in adc)
-
-
-def test_plan_is_broadcast_and_clean(emb, books, codes):
-    from tests.compare import assert_no_plan_antipatterns
-
-    df = pq_adc_topk(emb.where(F.col("vec_id") < 8), codes, books, k=10)
-    assert_no_plan_antipatterns(df)
 
 
 # ---------------------------------------------------------------------------
@@ -306,8 +177,6 @@ FROM refined QUALIFY rank <= 10
 
 @pytest.fixture(scope="module")
 def ivfpq(emb, books):
-    from pipeline_calculator_v3_spark.operators.pq import pq_ivf_adc_topk
-
     return pq_ivf_adc_topk(
         emb.where(F.col("vec_id") < 8), emb, books,
         k=10, k_coarse=KCOARSE, n_lists=NLISTS, nprobe=NPROBE,
@@ -330,18 +199,13 @@ def test_ivfpq_matches_duckdb_oracle(duck, ivfpq):
         assert got[key][2] == pytest.approx(want[key][2], rel=1e-12), key
 
 
-def test_ivfpq_recall_floor(emb, books, codes, ivfpq):
+def test_ivfpq_recall_floor(emb, ivfpq):
     """Probing 4/16 lists then refining the ADC top-60 must stay close to
     the full-scan refine: measured recall@10 0.8625 at sf0.001 / 0.8875
     at sf0.01 vs 0.8875 for the unpruned refine — the probe prune costs
     almost nothing here while scanning a quarter of the corpus at
     8 B/vector.  Floor with margin below both measurements."""
     q = emb.where(F.col("vec_id") < 8)
-    full = {
-        (r.qid, r.cid)
-        for r in pq_adc_topk(q, codes, books, k=10).collect()
-    }
-    assert full  # sanity: the comparison set is non-trivial
     from pipeline_calculator_v3_spark.operators.pq import _sqdist
 
     exact = (

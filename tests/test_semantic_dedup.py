@@ -122,25 +122,11 @@ def test_arrow_pair_kernel_matches_salted_join(spark):
     documented pandas->Arrow coercion — so NaN-old reads exactly NULL-new.)"""
     from pyspark.sql import functions as F
 
-    from pipeline_calculator_v3_spark.functions.vectors import dot, norm
-    from pipeline_calculator_v3_spark.operators.joins import salted_self_pairs
+    from pipeline_calculator_v3_spark.functions.vectors import norm
     from pipeline_calculator_v3_spark.operators.similarity import (
         _pairs_cosine_arrow,
+        _pairs_cosine_join,
     )
-
-    def old_pairs(labeled, thr, G):
-        pairs = salted_self_pairs(labeled, "blk", "vid", n_groups=G).where(
-            F.col("a_vid") < F.col("b_vid")
-        )
-        cos = dot(F.col("a_v"), F.col("b_v")) / F.nullif(
-            F.col("a_nrm") * F.col("b_nrm"), F.lit(0.0)
-        )
-        return pairs.select(
-            F.col("a_vid").alias("id1"),
-            F.col("b_vid").alias("id2"),
-            F.col("a_blk").alias("cluster_id"),
-            cos.alias("cos_sim"),
-        ).where(F.col("cos_sim") >= thr)
 
     def check(labeled, thr, G, tag):
         a = {
@@ -151,7 +137,7 @@ def test_arrow_pair_kernel_matches_salted_join(spark):
         b = {
             (r.id1, r.id2): (r.cluster_id,
                              None if r.cos_sim is None else r.cos_sim.hex())
-            for r in old_pairs(labeled, thr, G).collect()
+            for r in _pairs_cosine_join(labeled, thr, G).collect()
         }
         assert set(a) == set(b), (tag, set(a) ^ set(b))
         for k in a:
@@ -204,22 +190,32 @@ def test_arrow_pair_kernel_matches_salted_join(spark):
 
 
 def test_pair_kernel_dispatch_identical(spark, sf_dir):
-    """Both pair_kernel paths of semantic_dedup_pairs produce the same
-    pair set on the real corpus (and "auto" resolves by k without
-    error)."""
+    """Both pair spellings semantic_dedup_pairs dispatches between (by k)
+    produce the same pair set on the real corpus, labelled by the same
+    k-means assignment."""
+    from pyspark.sql import functions as F
+
+    from pipeline_calculator_v3_spark.functions.vectors import norm
+    from pipeline_calculator_v3_spark.operators.kmeans import kmeans_assign
     from pipeline_calculator_v3_spark.operators.similarity import (
-        semantic_dedup_pairs,
+        _pairs_cosine_arrow,
+        _pairs_cosine_join,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    got = {}
-    for kernel in ("join", "arrow"):
-        got[kernel] = {
-            (r.id1, r.id2, r.cluster_id)
-            for r in semantic_dedup_pairs(
-                emb, k=8, iters=1, min_cosine=0.1, pair_kernel=kernel
-            ).collect()
+    labeled = kmeans_assign(emb, k=8, iters=1, keep_vec=True).select(
+        "vid", "v", F.col("cid").alias("blk"), norm(F.col("v")).alias("nrm"),
+    ).cache()
+    try:
+        got = {
+            name: {(r.id1, r.id2, r.cluster_id) for r in pairs.collect()}
+            for name, pairs in (
+                ("join", _pairs_cosine_join(labeled, 0.1, 4)),
+                ("arrow", _pairs_cosine_arrow(labeled, 0.1, 4, "cluster_id")),
+            )
         }
+    finally:
+        labeled.unpersist()
     assert got["join"] == got["arrow"]
     assert len(got["join"]) > 0  # the planted corpus has near-dups
 

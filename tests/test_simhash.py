@@ -6,9 +6,6 @@ registry face) is checked against an INDEPENDENT pure-Python reference
 shingles, MSB-first bit votes, 16-bit prefix blocking, hamming <= max.
 This catches a both-engines-agree-on-the-wrong-formula drift the DuckDB
 oracle cannot (the oracle replays the same SQL spelling).
-
-The xxhash64 face (simhash64) keeps its throughput-variant contract: a
-near-duplicate must land closer than an unrelated document.
 """
 
 from __future__ import annotations
@@ -18,12 +15,7 @@ import re
 
 import pytest
 
-from pyspark.sql import functions as F
-
-from pipeline_calculator_v3_spark.operators.dedup import (
-    simhash64,
-    simhash64_md5_pairs,
-)
+from pipeline_calculator_v3_spark.operators.dedup import simhash64_md5_pairs
 
 # Fixture searched offline for block stability: 60 seeded pseudo-words;
 # changing ONE word flips only ~3 shingles, and with seed 0 / position 50
@@ -93,15 +85,3 @@ def test_md5_face_excludes_shingleless_docs(spark, docs_df):
         for i in (r.id1, r.id2)
     }
     assert 3 not in ids  # "too short" has no trigram shingles
-
-
-def test_xxhash64_face_orders_near_before_unrelated(spark, docs_df):
-    sims = {
-        r.doc_id: r.sh
-        for r in docs_df.select(
-            "doc_id", simhash64(F.col("text")).alias("sh")
-        ).collect()
-    }
-    ham = lambda a, b: bin((sims[a] ^ sims[b]) & (2**64 - 1)).count("1")
-    assert ham(0, 1) < ham(0, 2)
-    assert ham(0, 4) <= ham(0, 1)

@@ -12,10 +12,8 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from pipeline_calculator_v3_spark.functions.geodesy import (
-    US_SURVEY_MILE_M,
-    haversine_m,
-)
+from pipeline_calculator_v3_spark import US_SURVEY_MILE_M
+from pipeline_calculator_v3_spark.functions.geodesy import haversine_m
 from pipeline_calculator_v3_spark.sources.kml import (
     attrs_to_columns,
     read_pipelines,

@@ -1,5 +1,5 @@
-"""Z-order clustering: key correctness vs a Python reference, and the
-layout property the operator exists for — bbox locality in files."""
+"""Z-order clustering keys: correctness vs a Python reference, interleaving
+bounds, and NULL/NaN/Inf quarantine."""
 
 from __future__ import annotations
 
@@ -7,10 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from pipeline_calculator_v3_spark.operators.zorder import (
-    cluster_by_zorder,
-    zorder_key,
-)
+from pipeline_calculator_v3_spark.operators.zorder import zorder_key
 
 
 def _ref_zkey(lat: float, lon: float, bits: int) -> int:
@@ -56,48 +53,6 @@ def test_zorder_interleaving_bounds(spark):
     ]
     assert lo == 0
     assert hi == (1 << 16) - 1
-
-
-def test_bbox_rows_concentrate_in_few_files(spark, sf_dir, tmp_path):
-    """The point of the layout: after z-order clustering, a small-bbox
-    query's rows live in few files; round-robin layout spreads them
-    everywhere.  (With file-stat pruning manifests, 'few files' becomes
-    'few files read'.)"""
-    from pipeline_calculator_v3_spark.plans.synth import vertices_df
-
-    pts = vertices_df(spark, sf_dir).select("lat", "lon")
-    n_files = 16
-
-    rr_dir = str(tmp_path / "roundrobin")
-    pts.repartition(n_files).write.parquet(rr_dir)
-    z_dir = str(tmp_path / "zorder")
-    cluster_by_zorder(pts, "lat", "lon", n_files).write.parquet(z_dir)
-
-    # bbox around the densest corner of the synthetic corridor data
-    mid = pts.agg(
-        F.avg("lat").alias("la"), F.avg("lon").alias("lo")
-    ).collect()[0]
-    bbox = (
-        (F.col("lat").between(mid["la"] - 0.02, mid["la"] + 0.02))
-        & (F.col("lon").between(mid["lo"] - 0.02, mid["lo"] + 0.02))
-    )
-
-    def files_touched(path: str) -> int:
-        return (
-            spark.read.parquet(path)
-            .where(bbox)
-            .select(F.input_file_name())
-            .distinct()
-            .count()
-        )
-
-    rr, zz = files_touched(rr_dir), files_touched(z_dir)
-    n_rows = spark.read.parquet(z_dir).where(bbox).count()
-    assert n_rows > 0, "bbox must select something for the test to mean anything"
-    # round-robin smears the bbox across (essentially) every file
-    assert rr >= n_files // 2, (rr, zz)
-    # z-order concentrates it into a handful
-    assert zz <= max(2, rr // 4), (rr, zz)
 
 
 def test_null_and_nan_coordinates_yield_null_key(spark):
