@@ -25,8 +25,9 @@ replays every bit (tests/test_videofp.py):
   alignment;
 - skew control = the winnowing df-cap move: a frame hash present in
   more than ``hash_df_cap`` distinct videos (black frames, title cards,
-  test patterns) is excluded from pair generation — the hot key would
-  otherwise drive O(n^2) pairs through one join bucket at corpus scale.
+  test patterns) is excluded from pair generation and reported by
+  :func:`frame_hash_ledger` — the hot key would otherwise drive
+  O(n^2) pairs through one join bucket at corpus scale.
 
 Blobs are the synthetic PCV3 container (operators/multimodal.py) —
 real video codecs are outside this container's library set (SURVEY §6);
@@ -106,6 +107,35 @@ def video_frame_hashes(media: DataFrame, every_k: int = 1) -> DataFrame:
     return media.mapInPandas(gen, FRAME_HASH_SCHEMA)
 
 
+def _capped(frames: DataFrame, hash_df_cap: int) -> DataFrame:
+    if hash_df_cap < 1:
+        raise ValueError("hash_df_cap must be >= 1")
+    per_hash = frames.groupBy("fh_hi", "fh_lo").agg(
+        F.countDistinct("media_id").alias("_nv")
+    )
+    hot = per_hash.where(F.col("_nv") > hash_df_cap)
+    return frames.join(
+        F.broadcast(hot.select("fh_hi", "fh_lo")),
+        ["fh_hi", "fh_lo"],
+        "left_anti",
+    )
+
+
+def frame_hash_ledger(
+    frames: DataFrame, hash_df_cap: int = 64
+) -> DataFrame:
+    """The df-cap observability ledger: one row per frame hash excluded
+    from pair generation — (``fh_hi``, ``fh_lo``, ``n_videos`` BIGINT).
+    Empty means no hash exceeded the cap."""
+    if hash_df_cap < 1:
+        raise ValueError("hash_df_cap must be >= 1")
+    return (
+        frames.groupBy("fh_hi", "fh_lo")
+        .agg(F.countDistinct("media_id").cast("bigint").alias("n_videos"))
+        .where(F.col("n_videos") > hash_df_cap)
+    )
+
+
 def video_dup_pairs(
     frames: DataFrame,
     min_aligned: int = 3,
@@ -127,17 +157,7 @@ def video_dup_pairs(
     nothing quadratic in corpus size anywhere."""
     if min_aligned < 1:
         raise ValueError("min_aligned must be >= 1")
-    if hash_df_cap < 1:
-        raise ValueError("hash_df_cap must be >= 1")
-    per_hash = frames.groupBy("fh_hi", "fh_lo").agg(
-        F.countDistinct("media_id").alias("_nv")
-    )
-    hot = per_hash.where(F.col("_nv") > hash_df_cap)
-    cand = frames.join(
-        F.broadcast(hot.select("fh_hi", "fh_lo")),
-        ["fh_hi", "fh_lo"],
-        "left_anti",
-    )
+    cand = _capped(frames, hash_df_cap)
     a, b = cand.alias("a"), cand.alias("b")
     matches = (
         a.join(b, ["fh_hi", "fh_lo"])
@@ -172,4 +192,49 @@ def video_dup_pairs(
             (-F.col("_best._nd")).cast("bigint").alias("offset"),
         )
         .where(F.col("aligned") >= min_aligned)
+    )
+
+
+def video_exact_groups(frames: DataFrame, id_col: str = "media_id") -> DataFrame:
+    """Exact-content video groups by full frame-hash SEQUENCE digest —
+    the blind-spot closer for :func:`video_dup_pairs`'s df-cap: m > cap
+    byte-identical copies of one video push EVERY shared frame hash over
+    ``hash_df_cap``, so the pair join excludes them all and the copies
+    produce zero pairs (only the ledger hints).  Identical copies don't
+    need temporal alignment at all — their ordered frame-hash sequences
+    are equal, so ONE linear aggregate groups them: digest = md5 of the
+    frame hashes joined in frame order (array_sort over collected
+    (index, hi, lo) structs — collect_list order is partition-dependent,
+    the sort restores determinism), then a digest groupBy.
+
+    Returns one row per distinct sequence digest: ``seq_digest`` STRING,
+    ``rep_id`` BIGINT (smallest member id — the keep candidate),
+    ``n_ids`` BIGINT, ``n_frames`` BIGINT.  Near-dup (trimmed /
+    re-encoded) copies still go through video_dup_pairs.  Two hash
+    aggregates, linear in the frame table, no join anywhere."""
+    seq = frames.groupBy(id_col).agg(
+        F.md5(
+            F.concat_ws(
+                ",",
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(
+                            F.struct("frame_index", "fh_hi", "fh_lo")
+                        )
+                    ),
+                    lambda s: F.concat_ws(
+                        ":",
+                        s["frame_index"].cast("string"),
+                        s["fh_hi"].cast("string"),
+                        s["fh_lo"].cast("string"),
+                    ),
+                ),
+            )
+        ).alias("seq_digest"),
+        F.count(F.lit(1)).cast("bigint").alias("n_frames"),
+    )
+    return seq.groupBy("seq_digest").agg(
+        F.min(F.col(id_col)).cast("bigint").alias("rep_id"),
+        F.countDistinct(F.col(id_col)).cast("bigint").alias("n_ids"),
+        F.max("n_frames").cast("bigint").alias("n_frames"),
     )
