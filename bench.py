@@ -4,24 +4,36 @@
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {"q_...": sec, ...}, "sf": <sf>}
+   "queries": {"q_...": sec, ...}, "sf": <sf>, ...}
 
-Each query materializes through the noop sink — count() would let Catalyst
-prune the projections we mean to measure.
+BENCH_LOCAL_r{N}.json gets the same object plus "layers": per headline
+query, the perfbench/eventlog.py counter blocks of its build and execution
+in the pass that gave the reported minimum, folded from the session's
+event log (one job group per query, pass and phase).
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
+import shlex
+import shutil
 import sys
+import tempfile
 import time
+from contextlib import contextmanager
+from pathlib import Path
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
+from perfbench import eventlog  # noqa: E402
+from pipeline_calculator_v3_spark import release_caches  # noqa: E402
 from pipeline_calculator_v3_spark.queries import QUERIES  # noqa: E402
 from pipeline_calculator_v3_spark.session import get_spark  # noqa: E402
+from pyspark.sql import DataFrame  # noqa: E402
 
 HEADLINE = [
     "q_geodesic_length",
@@ -77,8 +89,7 @@ HEADLINE = [
     "q_bigram_lm",                # added r07 (bigram next-token tables)
     "q_hybrid_rrf",               # added r07 (BM25 + dense RRF fusion)
     "q_kmeans_embed",             # added r07 (iterative Lloyd k-means)
-    "q_stream_cdc_merge",         # added r07 (foreachBatch COW merge — the
-                                  #  cost tracked is two table rewrites)
+    "q_stream_cdc_merge",         # foreachBatch COW merge: two table rewrites
     "q_bpe_merges",               # added r07 (BPE tokenizer-training steps)
     "q_bm25_rank_xl",             # added r08 (growing-corpus retrieval twin)
     "q_kmeans_embed_xl",          # added r08 (growing-corpus clustering twin)
@@ -154,160 +165,138 @@ SCALE_TWINS = [
     "q_bm25_rank_xl",      # added r08 (VERDICT r07 #7)
     "q_kmeans_embed_xl",   # added r08 (VERDICT r07 #7)
     "q_dedup_substring_xl",  # added r08 (substring-dedup growth gate)
-    "q_dedup_semantic_xl",   # added r08 (SemDeDup growth gate; k scales
-                             #  with N so pair work stays linear)
-    "q_phash_image_dedup",        # added r13 (hot-bucket recursion gate:
-                                  #  a quadratic band bucket would blow
-                                  #  the exponent straight past 1.2)
+    "q_dedup_semantic_xl",   # k scales with N, so pair work stays linear
+    "q_phash_image_dedup",        # a quadratic hot band bucket tops 1.2
     "q_audio_fingerprint_dedup",  # added r13 (shares the capped join)
-    "q_video_fingerprint_dedup",  # added r14 (df-capped frame-hash join:
-                                  #  an uncapped hot frame would go
-                                  #  quadratic in one bucket)
+    "q_video_fingerprint_dedup",  # an uncapped hot frame goes quadratic
 ]
 SCALE_EXPONENT_MAX = 1.2
-
-# Straggler flagging (VERDICT r08 #7): co-tenancy inflates individual
-# queries 1.2-1.4x per PERF_NOTES; anything past this ratio vs its last
-# recorded min is machine-flagged in the JSON output instead of being
-# hand-adjudicated at verdict time.  Informational — co-tenant noise is
-# not a code regression, so it never fails the run.
-STRAGGLER_RATIO = 1.5
-
-
-def _repo_dir() -> str:
-    return os.path.dirname(os.path.abspath(__file__))
 
 
 def _this_round() -> int:
     """1 + the highest driver-recorded round (BENCH_r{N}.json)."""
     ns = [
         int(m.group(1))
-        for p in os.listdir(_repo_dir())
+        for p in os.listdir(REPO)
         if (m := re.match(r"BENCH_r(\d+)\.json$", p))
     ]
     return (max(ns) + 1) if ns else 1
 
 
-def _last_recorded_timings() -> dict[str, float]:
-    """Most recent per-query headline seconds across all BENCH artifacts.
-
-    Driver captures (BENCH_r{N}.json) can be tail-truncated — the head of
-    the JSON line is lost (VERDICT r07/r08 had to reconstruct tables from
-    partial data) — so unparseable files fall back to regex extraction of
-    direct "q_name": seconds pairs (scaling/recall sub-objects don't match
-    the pattern).  Later rounds override earlier; the full local record
-    (BENCH_LOCAL_r{N}.json) overrides the truncated driver capture of the
-    same round."""
-    repo = _repo_dir()
-    files = [
-        p
-        for p in os.listdir(repo)
-        if re.match(r"BENCH(_LOCAL)?_r(\d+)\.json$", p)
-    ]
-
-    def order(p: str) -> tuple[int, int]:
-        m = re.match(r"BENCH(_LOCAL)?_r(\d+)\.json$", p)
-        return (int(m.group(2)), 1 if m.group(1) else 0)
-
-    best: dict[str, float] = {}
-    for p in sorted(files, key=order):
-        try:
-            text = open(os.path.join(repo, p)).read()
-        except OSError:
-            continue
-        try:
-            obj = json.loads(text)
-        except json.JSONDecodeError:
-            obj = None
-        if isinstance(obj, dict) and isinstance(obj.get("queries"), dict):
-            qs = obj["queries"]
-        else:
-            # driver capture: {"n":..,"rc":..,"tail": "<escaped JSON
-            # fragment>"} — regex the (possibly truncated) tail string
-            if isinstance(obj, dict):
-                # json.loads already unescaped the tail fragment
-                hay = obj.get("tail", "")
-            else:
-                # a raw (non-JSON) capture file keeps the tail's quotes
-                # escaped (\"q_name\":) — unescape or the pattern below
-                # never matches and the file silently contributes nothing
-                # (advice r09); only this branch unescapes, so an escaped
-                # quote inside a parsed tail value survives (advice r10)
-                hay = text.replace('\\"', '"')
-            qs = {
-                m.group(1): float(m.group(2))
-                for m in re.finditer(
-                    r'"(q_[a-z0-9_]+)":\s*([0-9][0-9.]*)', hay
-                )
-            }
-        for k, v in qs.items():
-            if isinstance(v, (int, float)):
-                best[k] = float(v)
-    # Isolated minimums overlay (VERDICT r09 #6): in-suite numbers carry a
-    # documented 1.2-1.4x co-tenancy band, so a baseline taken from LAST
-    # round's in-suite value can hide a real regression inside the band.
-    # scripts/measure_isolated.py records each query's min-of-2 in an
-    # otherwise-idle session to BENCH_ISOLATED.json; where present, the
-    # straggler baseline is the lowest credible recorded cost.
-    iso_path = os.path.join(repo, "BENCH_ISOLATED.json")
+@contextmanager
+def event_logged():
+    """A temp dir that a JVM launched inside the block writes its event log
+    to, deleted on exit: perfbench's traced-run settings, in the format
+    perfbench/eventlog.py folds.  They are prepended to PYSPARK_SUBMIT_ARGS,
+    which keeps get_spark's configs and any submit args the caller set."""
+    log_dir = tempfile.mkdtemp(prefix="pcv3-eventlog-")
+    prev = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    confs = {"spark.eventLog.enabled": "true",
+             "spark.eventLog.compress": "false",
+             "spark.eventLog.rolling.enabled": "false",
+             "spark.eventLog.dir": Path(log_dir).as_uri()}
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        [f"--conf {shlex.quote(f'{k}={v}')}" for k, v in confs.items()]
+        + [prev])
     try:
-        iso = json.load(open(iso_path)).get("queries", {})
-    except (OSError, json.JSONDecodeError):
-        iso = {}
-    for k, v in iso.items():
-        if isinstance(v, (int, float)):
-            best[k] = min(best.get(k, float("inf")), float(v))
-    return best
+        yield log_dir
+    finally:
+        os.environ["PYSPARK_SUBMIT_ARGS"] = prev
+        shutil.rmtree(log_dir, ignore_errors=True)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
-    spark = get_spark("pcv3-bench")
-    spark.sparkContext.setLogLevel("ERROR")
+def read_log(log_dir: str) -> eventlog.EventLog:
+    """The one event log a stopped session left in ``log_dir``."""
+    (name,) = os.listdir(log_dir)
+    return eventlog.read(Path(log_dir) / name)
 
-    # Warm the JVM/readers/codegen so query 1 isn't charged session-startup
-    # cost: touch the big fact table and one windowed job.
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    spark.read.parquet(f"{sf_dir}/orders.parquet").groupBy("o_orderstatus").count().collect()
-    # window-exec codegen warmup (the flagship is a window-heavy query)
+
+def warm(spark, sf_dir: str) -> None:
+    """Pay session startup before the first query: fact-table scan, grouped
+    aggregate, window codegen, and the Python-worker fork and numpy import
+    that the first pandas-UDF job costs on every executor thread."""
+    import pandas as pd
     from pyspark.sql import Window
-    from pyspark.sql import functions as _F
-    _w = Window.partitionBy("o_orderstatus").orderBy("o_orderkey")
-    spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        _F.lag("o_totalprice").over(_w)).limit(1).collect()
-    # Python-worker fork + Arrow serializer warmup: the overlap/segmentize
-    # queries run applyInPandas kernels, and the FIRST pandas-UDF job in a
-    # session pays daemon fork + numpy import on every executor thread —
-    # session-startup cost, not query cost, so pay it here like the JVM warm.
-    import pandas as _pd
-    spark.createDataFrame(_pd.DataFrame({"g": [0, 1] * 16, "x": range(32)})) \
+    from pyspark.sql import functions as F
+
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders.groupBy("o_orderstatus").count().collect()
+    w = Window.partitionBy("o_orderstatus").orderBy("o_orderkey")
+    orders.select(F.lag("o_totalprice").over(w)).limit(1).collect()
+    spark.createDataFrame(pd.DataFrame({"g": [0, 1] * 16, "x": range(32)})) \
         .repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32"))) \
         .groupBy("g").applyInPandas(lambda p: p, "g long, x long").count()
 
-    from pipeline_calculator_v3_spark import release_caches
 
-    # Two passes, per-query MIN: the machine exhibits a roaming-straggler
-    # co-tenancy pattern (PERF_NOTES r05 — one arbitrary query per run eats
-    # a 5-20 s penalty that vanishes on re-measurement, while the rest sit
-    # in a stable band).  min-of-2 reports the code's cost, not the
-    # co-tenant's; single-pass numbers made same-code runs swing 78-116 s.
-    passes: list[dict[str, float]] = []
-    for _ in range(2):
-        run: dict[str, float] = {}
+@contextmanager
+def job_group(spark, group: str):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def build(spark, name: str, sf_dir: str, tag) -> tuple[DataFrame, float]:
+    """(frame, seconds) of building ``name`` in job group
+    ``<name>:build:<tag>``, where build-time jobs (pagerank's rounds) land."""
+    with job_group(spark, f"{name}:build:{tag}"):
+        t0 = time.perf_counter()
+        return QUERIES[name](spark, sf_dir), time.perf_counter() - t0
+
+
+def execute(spark, df: DataFrame, name: str, tag) -> float:
+    """Seconds to write ``df`` to the noop sink in job group
+    ``<name>:exec:<tag>`` (count() would let Catalyst prune projections)."""
+    with job_group(spark, f"{name}:exec:{tag}"):
+        t0 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
+
+
+def timed(spark, name: str, sf_dir: str, tag) -> tuple[float, float]:
+    """(wall, build) seconds of ``name``.  Its persists and checkpoints are
+    freed after it, untimed, so they cannot pressure later queries."""
+    df, build_s = build(spark, name, sf_dir, tag)
+    wall = round(build_s + execute(spark, df, name, tag), 3)
+    release_caches(spark)
+    return wall, build_s
+
+
+def fold_layers(log: eventlog.EventLog,
+                picks: dict[str, tuple[float, object]]) -> dict[str, dict]:
+    """Per query, the counter blocks of the run ``picks[name] = (build_s,
+    tag)``: ``{"build": {build_s, …COUNTERS}, "exec": {…COUNTERS}}``.
+    Tasks, task-s and shuffle MB do not move with host CPU steal, so they
+    compare across rounds where wall time cannot."""
+    def block(group: str) -> dict[str, float]:
+        c = eventlog.counters(log, eventlog.stages_of(log, group),
+                              eventlog.jobs_of(log, group))
+        return {k: round(v, 3) for k, v in c.items()}
+
+    return {
+        name: {"build": {"build_s": round(build_s, 3),
+                         **block(f"{name}:build:{tag}")},
+               "exec": block(f"{name}:exec:{tag}")}
+        for name, (build_s, tag) in picks.items()
+    }
+
+
+def measure(spark, sf_dir: str, sf: float) -> tuple[dict, dict]:
+    """The stdout record, and per headline query the (build_s, tag) of the
+    run that gave its reported minimum."""
+    # Per-query min of two passes: on this host one arbitrary query per
+    # pass can eat a 5-20 s co-tenancy penalty that vanishes on re-run
+    # (PERF_NOTES r05); single-pass totals of the same code swung 78-116 s.
+    runs: dict[str, list[tuple[float, float, int]]] = {n: [] for n in HEADLINE}
+    for tag in range(2):
         for name in HEADLINE:
-            fn = QUERIES[name]
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            run[name] = round(time.perf_counter() - t0, 3)
-            # free each query's persists/checkpoints between measurements
-            # (outside the timed window, same as r01/r02 numbers): without
-            # this the dedup/cluster/overlap queries accumulate pinned
-            # blocks that pressure every later query's memory
-            release_caches(spark)
-        passes.append(run)
-    timings = {name: min(p[name] for p in passes) for name in HEADLINE}
+            runs[name].append((*timed(spark, name, sf_dir, tag), tag))
+
+    def best(name: str) -> tuple[float, float, int]:
+        return min(runs[name], key=lambda r: r[0])
 
     # ANN self-certification rides along with the wall-clock numbers: a
     # future re-parameterization cannot trade recall for speed invisibly
@@ -323,54 +312,36 @@ def main() -> None:
     # Co-tenant noise bounds (PERF_NOTES): a worst-case 1.4x straggler on
     # the big side adds log10(1.4)=0.15 to an exponent — the measured
     # 0.30-0.63 band (r07) leaves 4x that margin under the 1.2 ceiling.
-    import math
-
     scaling: dict[str, dict[str, float]] = {}
+    raw_exp: dict[str, float] = {}
     small_dir = re.sub(r"sf[0-9.]+", "sf0.01", sf_dir)
     if abs(sf - 0.1) < 1e-9 and os.path.isdir(small_dir):
         small: dict[str, float] = {}
         for _ in range(2):
             for name in SCALE_TWINS:
-                fn = QUERIES[name]
-                t0 = time.perf_counter()
-                fn(spark, small_dir).write.format("noop").mode("overwrite").save()
-                dt = round(time.perf_counter() - t0, 3)
+                dt = timed(spark, name, small_dir, "small")[0]
                 small[name] = min(small.get(name, dt), dt)
-                release_caches(spark)
-        raw_exp: dict[str, float] = {}
         for name in SCALE_TWINS:
-            exp = math.log10(timings[name] / small[name])
+            exp = math.log10(best(name)[0] / small[name])
             if exp > 0.9:
-                # Suspicious exponent: the sf0.1 min came from the (long)
-                # headline suite, where late-suite session pressure can
-                # inflate BOTH passes of a min-of-2 (observed r09:
-                # q_contamination_xl 13.9 s in-suite vs 3.7 s isolated —
-                # exponent 1.02 vs 0.41).  Re-sample the big side fresh
-                # before gating — the exponent is a HARD rc gate, and a
-                # straggler must need to survive a third, late-session
-                # measurement to fail the run.  (An inflated sf0.01 side
-                # only LOWERS the exponent, so it needs no re-sample.)
-                fn = QUERIES[name]
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                fresh = round(time.perf_counter() - t0, 3)
-                release_caches(spark)
-                timings[name] = min(timings[name], fresh)
-                exp = math.log10(timings[name] / small[name])
+                # Suspicious exponent: late-suite session pressure can
+                # inflate BOTH headline passes (r09: q_contamination_xl
+                # 13.9 s in-suite vs 3.7 s isolated — exponent 1.02 vs
+                # 0.41).  The exponent is a hard rc gate, so re-sample the
+                # big side once more before gating.  (An inflated sf0.01
+                # side only LOWERS the exponent; it needs no re-sample.)
+                runs[name].append((*timed(spark, name, sf_dir, 2), 2))
+                exp = math.log10(best(name)[0] / small[name])
             raw_exp[name] = exp
             scaling[name] = {
                 "t_sf0.01": small[name],
-                "t_sf0.1": timings[name],
+                "t_sf0.1": best(name)[0],
                 "exponent": round(exp, 3),
             }
-    else:
-        raw_exp = {}
 
-    # A superlinear exponent still fails the run (nonzero exit), but only
-    # AFTER the JSON summary prints (advice r07): raising first discarded
-    # the whole round's timings and recall data over one bad twin.  The
-    # gate compares the RAW exponent, not the 3-dp display rounding —
-    # round() would silently admit exponents in (1.2, 1.2005] (review r08).
+    # A superlinear exponent fails the run (nonzero exit), but only after
+    # the records are written (advice r07).  The gate compares the RAW
+    # exponent: the 3-dp display rounding would admit (1.2, 1.2005].
     violations = [
         f"{name}: 10x-growth exponent {raw_exp[name]:.6f} exceeds "
         f"{SCALE_EXPONENT_MAX} — plan regressed superlinear "
@@ -379,64 +350,59 @@ def main() -> None:
         if raw_exp[name] > SCALE_EXPONENT_MAX
     ]
 
-    # Machine-flag roaming stragglers (VERDICT r08 #7): a min-of-2 more
-    # than STRAGGLER_RATIO over the query's last recorded min means either
-    # a real regression or a double-straggler pass — either way it needs an
-    # isolated re-measurement before the number is believed.
-    last = _last_recorded_timings()
-    suspect_stragglers = {
-        name: {"now": timings[name], "last": last[name]}
-        for name in timings
-        if name in last
-        and last[name] >= 0.05  # sub-50ms noise floor
-        and timings[name] > STRAGGLER_RATIO * last[name]
-    }
-
-    total = round(sum(timings.values()), 3)
+    timings = {name: best(name)[0] for name in HEADLINE}
     out = {
         "metric": "headline-suite wall clock",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "recall": recall,
         "scaling": scaling,
         "scaling_violations": violations,
-        "suspect_stragglers": suspect_stragglers,
         "sf": sf,
     }
+    return out, {name: best(name)[1:] for name in HEADLINE}
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else -1.0
+    with event_logged() as log_dir:
+        spark = get_spark("pcv3-bench")
+        spark.sparkContext.setLogLevel("ERROR")
+        warm(spark, sf_dir)
+        out, picks = measure(spark, sf_dir, sf)
+        spark.stop()  # flushes the event log
+        layers = fold_layers(read_log(log_dir), picks)
     print(json.dumps(out), flush=True)
-    # The driver's capture of the line above can lose its head when the
-    # tail is truncated (VERDICT r08 #4 — r07 AND r08 cross-round tables
-    # had to be reconstructed from partial data).  Persist the complete
-    # object in-repo; the driver's BENCH_r{N}.json stays authoritative for
-    # rc/gates.
-    local = os.path.join(_repo_dir(), f"BENCH_LOCAL_r{_this_round():02d}.json")
+    # The driver's capture of the line above can lose its head (VERDICT
+    # r08 #4), so the complete object, with the per-query counter blocks,
+    # is also kept in-repo; the driver's BENCH_r{N}.json stays
+    # authoritative for rc/gates.
+    local = os.path.join(REPO, f"BENCH_LOCAL_r{_this_round():02d}.json")
     with open(local, "w") as f:
-        json.dump(out, f, indent=1)
+        json.dump({**out, "layers": layers}, f, indent=1)
         f.write("\n")
-    # Truncation-proof trailer (VERDICT r14 #1/#9, additions-only): a
-    # fixed-size line carrying the totals a 2000-char tail capture can
-    # never lose — BENCH_r13's summary line lost its HEAD to the capture,
-    # zeroing the whole round-over-round comparison (prev_bench_ok:
-    # false).  Deliberately NOT a bare JSON line and NOT the contract
-    # keys ("metric"/"value"/"queries"), so no driver-side line scanner
-    # can mistake it for the one-line summary above.
+    # Truncation-proof trailer (VERDICT r14 #1/#9): a fixed-size line with
+    # the totals a 2000-char tail capture cannot lose.  Deliberately NOT a
+    # bare JSON line and NOT the contract keys, so no driver-side line
+    # scanner can mistake it for the one-line summary above.
     print(
         "BENCH_SUMMARY "
         + json.dumps(
             {
-                "bench_total_sec": total,
-                "n_queries": len(timings),
+                "bench_total_sec": out["value"],
+                "n_queries": len(out["queries"]),
                 "sf": sf,
-                "scaling_violations": len(violations),
+                "scaling_violations": len(out["scaling_violations"]),
                 "full_record": os.path.basename(local),
             }
         ),
         flush=True,
     )
-    spark.stop()
-    if violations:
-        raise AssertionError("; ".join(violations))
+    if out["scaling_violations"]:
+        raise AssertionError("; ".join(out["scaling_violations"]))
 
 
 if __name__ == "__main__":

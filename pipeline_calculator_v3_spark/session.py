@@ -51,23 +51,17 @@ def get_spark(app_name: str = "pipeline_calculator_v3_spark",
         # With parallelismFirst (default on) the coalesce target is
         # max(stageBytes / defaultParallelism, THIS), so on a CPU-heavy
         # stage whose bytes are small — synthesized-text fan-outs,
-        # per-row kernels after a keyed aggregate — the 1m floor is what
-        # collapses the stage to 2-3 tasks and idles the rest of the
-        # cluster (the r14 chunk/pack failure mode, fixed locally there;
-        # this is the session-wide lever, VERDICT r14 #5).  256k chosen
-        # by a 3-point registry-wide sweep (r15, isolated min-of-2):
-        # 64k captured the most win (chunk/pack xl 0.42x) but REALLY
-        # regressed small-shuffle queries 1.2-1.7x (bm25, embedding
-        # pairs, dsir — extra tiny tasks); 256k keeps most of the win
-        # (chunk_xl 4.59 -> 2.46 s, ingest 11.0 -> 9.9 s) with zero
-        # measured regression.  A bytes-per-partition floor, not a core
-        # count — the parallelismFirst term dominates at real data
-        # volumes, so production behavior only changes on the same
-        # CPU-heavy-small-bytes stages this targets.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "256k"),
-        )
+        # per-row kernels after a keyed aggregate — a 1m floor collapses
+        # the stage to 2-3 tasks and idles the rest of the cluster.  256k
+        # came from a 3-point registry-wide sweep (r15, isolated
+        # min-of-2): 64k won most (chunk/pack xl 0.42x) but slowed
+        # small-shuffle queries 1.2-1.7x (bm25, embedding pairs, dsir:
+        # extra tiny tasks); 256k kept most of the win (chunk_xl 4.59 ->
+        # 2.46 s, ingest 11.0 -> 9.9 s) with no measured regression.  At
+        # real data volumes the parallelismFirst term dominates, so only
+        # these CPU-heavy small-bytes stages change.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+                "256k")
         # Let AQE coalesce cached plans too.  Spark's default (false) keeps
         # a persisted frame at spark.sql.shuffle.partitions so its readers
         # see a fixed output partitioning; the bytes-based rule above then
@@ -99,11 +93,7 @@ def get_spark(app_name: str = "pipeline_calculator_v3_spark",
         # 30 min — longer than the entire bench; 2 min bounds the garbage
         # window at negligible GC cost.
         .config("spark.cleaner.periodicGC.interval", "2min")
-        # UI off by default (driver/bench runs); profiling scripts flip it
-        # on to scrape per-stage metrics from the REST API
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI") else "false",
-        )
+        # Per-stage metrics come from the event log (bench.py), not the UI.
+        .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

@@ -1,138 +1,83 @@
 #!/usr/bin/env python3
-"""Per-query profiler (optimization-round instrumentation): run named
-queries bench-style (noop sink, bench warmup, release_caches between) in a
-UI-enabled session and report WHERE the time goes — per-job wall clock and
-per-stage task time / shuffle bytes / input bytes scraped from the live
-REST API — plus the formatted physical plan.
+"""Per-query profiler: build each named query once in an event-logged,
+bench-style session (bench.py's warmup, job groups and noop sink), then
+print its wall, build and exec seconds, the counter block of each phase,
+the top stages by task-s with the plan nodes they ran, and the formatted
+plan of the frame that ran (to <plans-dir>/<query>_<tag>.txt if given).
 
 Usage:
     python scripts/profile_query.py q_a q_b ...
     python scripts/profile_query.py --plans-dir plans/r14 --tag before q_a
-
-The plan dump goes to <plans-dir>/<query>_<tag>.txt when --plans-dir is
-given (the deliverable contract for optimization rounds), else stdout.
 """
 
 from __future__ import annotations
 
-import json
+import argparse
 import os
 import sys
-import time
-import urllib.request
+from pathlib import Path
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-
-def _rest(app_base: str, path: str):
-    with urllib.request.urlopen(app_base + path, timeout=10) as r:
-        return json.loads(r.read())
+import bench  # noqa: E402
+from pipeline_calculator_v3_spark import release_caches  # noqa: E402
+from pipeline_calculator_v3_spark.queries import QUERIES  # noqa: E402
+from pipeline_calculator_v3_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    plans_dir = None
-    tag = "before"
-    names: list[str] = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--plans-dir":
-            plans_dir = args[i + 1]
-            i += 2
-        elif args[i] == "--tag":
-            tag = args[i + 1]
-            i += 2
-        else:
-            names.append(args[i])
-            i += 1
-
-    from pipeline_calculator_v3_spark import release_caches
-    from pipeline_calculator_v3_spark.queries import QUERIES
-    from pipeline_calculator_v3_spark.session import get_spark
-
-    unknown = [q for q in names if q not in QUERIES]
-    if unknown or not names:
-        sys.exit(f"unknown or empty query list: {unknown or names}")
+    ap = argparse.ArgumentParser(description="Profile registry queries.")
+    ap.add_argument("names", nargs="+")
+    ap.add_argument("--plans-dir")
+    ap.add_argument("--tag", default="before")
+    args = ap.parse_args()
+    unknown = [q for q in args.names if q not in QUERIES]
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ["SPARK_GRAFT_UI"] = "1"  # session.py honors this for profiling
-    spark = get_spark("pcv3-profile")
-    spark.sparkContext.setLogLevel("ERROR")
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    base = f"{ui}/api/v1/applications/{app_id}" if ui else None
+    runs = {}
+    with bench.event_logged() as log_dir:
+        spark = get_spark("pcv3-profile")
+        spark.sparkContext.setLogLevel("ERROR")
+        bench.warm(spark, sf_dir)
+        formatted = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
+            .fromString("formatted")
+        for name in args.names:
+            df, build_s = bench.build(spark, name, sf_dir, 0)
+            plan = df._jdf.queryExecution().explainString(formatted)
+            exec_s = bench.execute(spark, df, name, 0)
+            release_caches(spark)
+            runs[name] = (build_s, exec_s, plan)
+        spark.stop()  # flushes the event log
+        log = bench.read_log(log_dir)
+    layers = bench.fold_layers(
+        log, {name: (r[0], 0) for name, r in runs.items()})
 
-    # bench.py warmup, in effect: fact scan, grouped agg, window codegen,
-    # pandas-UDF daemon fork
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    spark.read.parquet(f"{sf_dir}/orders.parquet").groupBy(
-        "o_orderstatus").count().collect()
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-    _w = Window.partitionBy("o_orderstatus").orderBy("o_orderkey")
-    spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        F.lag("o_totalprice").over(_w)).limit(1).collect()
-    import pandas as _pd
-    spark.createDataFrame(_pd.DataFrame({"g": [0, 1] * 16, "x": range(32)})) \
-        .repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32"))) \
-        .groupBy("g").applyInPandas(lambda p: p, "g long, x long").count()
-
-    for name in names:
-        fn = QUERIES[name]
-        # ---- plan dump (lazy; planning cost is part of the timed run) ----
-        df = fn(spark, sf_dir)
-        formatted = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"))
-        if plans_dir:
-            os.makedirs(plans_dir, exist_ok=True)
-            with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as f:
-                f.write(formatted)
-        release_caches(spark)
-
-        jobs_before = {j["jobId"] for j in _rest(base, "/jobs")} if base else set()
-        spark.sparkContext.setJobDescription(f"profile:{name}")
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-        spark.sparkContext.setJobDescription(None)
-        release_caches(spark)
-
-        print(f"\n=== {name}: wall {wall:.3f}s ===")
-        if not base:
-            continue
-        jobs = [j for j in _rest(base, "/jobs")
-                if j["jobId"] not in jobs_before]
-        jobs.sort(key=lambda j: j["jobId"])
-        stage_rows = []
-        for j in jobs:
-            for sid in j.get("stageIds", []):
-                try:
-                    sts = _rest(base, f"/stages/{sid}")
-                except Exception:
-                    continue
-                for st in sts:
-                    if st.get("status") == "SKIPPED":
-                        continue
-                    stage_rows.append((
-                        j["jobId"], sid,
-                        st.get("executorRunTime", 0) / 1000.0,
-                        st.get("inputBytes", 0) / 1e6,
-                        st.get("shuffleReadBytes", 0) / 1e6,
-                        st.get("shuffleWriteBytes", 0) / 1e6,
-                        st.get("numTasks", 0),
-                        (st.get("name") or "")[:80],
-                    ))
-        print(f"jobs: {len(jobs)}, stages(run): {len(stage_rows)}, "
-              f"total task-time "
-              f"{sum(r[2] for r in stage_rows):.1f}s")
-        stage_rows.sort(key=lambda r: -r[2])
-        print("  job stage  task-s  in-MB  shR-MB  shW-MB  #t  name")
-        for r in stage_rows[:14]:
-            print(f"  {r[0]:>3} {r[1]:>5} {r[2]:7.2f} {r[3]:6.1f} "
-                  f"{r[4]:7.2f} {r[5]:7.2f} {r[6]:>3}  {r[7]}")
-    spark.stop()
+    for name, (build_s, exec_s, plan) in runs.items():
+        print(f"\n=== {name}: wall {build_s + exec_s:.3f}s "
+              f"(build {build_s:.3f}s, exec {exec_s:.3f}s) ===")
+        for phase, block in layers[name].items():
+            print(f"{phase:>6}: "
+                  + "  ".join(f"{k} {v:g}" for k, v in block.items()))
+        groups = {f"{name}:build:0": "build", f"{name}:exec:0": "exec"}
+        stages = sorted(
+            ((sid, st) for sid, st in log.stages.items()
+             if st.tasks and st.group in groups),
+            key=lambda s: -s[1].run_ms,
+        )
+        print("  stage  phase  task-s  tasks  shuffle-MB  nodes")
+        for sid, st in stages[:10]:
+            nodes = ", ".join(dict.fromkeys(n.name for n in log.nodes_run(st)))
+            print(f"  {sid:>5} {groups[st.group]:>6} {st.run_ms / 1e3:7.2f} "
+                  f"{st.tasks:>6} {st.shuffle_bytes / (1 << 20):11.2f}  "
+                  f"{nodes}")
+        if args.plans_dir:
+            os.makedirs(args.plans_dir, exist_ok=True)
+            Path(args.plans_dir, f"{name}_{args.tag}.txt").write_text(plan)
+        else:
+            print(plan)
 
 
 if __name__ == "__main__":

@@ -1,0 +1,72 @@
+"""bench.py's per-query record: the event-log fold that writes the
+"layers" entry of BENCH_LOCAL_r{N}.json (no Spark session needed)."""
+
+from __future__ import annotations
+
+import json
+
+import bench
+from perfbench import eventlog
+
+
+def _job(job_id, group, stages):
+    return {"Event": "SparkListenerJobStart", "Job ID": job_id,
+            "Stage IDs": stages, "Properties": {"spark.jobGroup.id": group}}
+
+
+def _stage(kind, sid, t):
+    return {"Event": f"SparkListenerStage{kind}",
+            "Stage Info": {"Stage ID": sid, "Submission Time": t,
+                           "Completion Time": t + 50}}
+
+
+def _task(sid, run_ms, shuffle_bytes=0, ok=True):
+    return {"Event": "SparkListenerTaskEnd", "Stage ID": sid,
+            "Task Info": {"Launch Time": 1000, "Accumulables": []},
+            "Task End Reason": {"Reason": "Success" if ok else "Failed"},
+            "Task Metrics": {"Executor Run Time": run_ms, "JVM GC Time": 0,
+                             "Shuffle Write Metrics":
+                                 {"Shuffle Bytes Written": shuffle_bytes}}}
+
+
+def _log(tmp_path):
+    # q_a: pass 0 picked; q_b: pass 1 picked, its pass-0 exec job must
+    # not leak into the record
+    events = [
+        _job(0, "q_a:build:0", [0]), _stage("Submitted", 0, 1000),
+        _task(0, 100), _task(0, 100), _stage("Completed", 0, 1000),
+        _job(1, "q_a:exec:0", [1]), _stage("Submitted", 1, 1000),
+        *[_task(1, 200, 1 << 20) for _ in range(3)],
+        _stage("Completed", 1, 1000),
+        _job(2, "q_b:exec:0", [2]), _stage("Submitted", 2, 1000),
+        *[_task(2, 300) for _ in range(7)], _stage("Completed", 2, 1000),
+        _job(3, "q_b:build:1", [3]), _stage("Submitted", 3, 1000),
+        _task(3, 50), _stage("Completed", 3, 1000),
+        _job(4, "q_b:exec:1", [4, 5]),
+        _stage("Submitted", 4, 1000), *[_task(4, 10) for _ in range(4)],
+        _stage("Completed", 4, 1000),
+        _stage("Submitted", 5, 1000), _task(5, 10), _task(5, 10, ok=False),
+        _stage("Completed", 5, 1000),
+    ]
+    (tmp_path / "local-1").write_text(
+        "".join(json.dumps(e) + "\n" for e in events))
+    return bench.read_log(str(tmp_path))
+
+
+def test_fold_gives_build_and_exec_blocks_per_query(tmp_path):
+    layers = bench.fold_layers(_log(tmp_path),
+                               {"q_a": (0.5, 0), "q_b": (0.25, 1)})
+    assert set(layers) == {"q_a", "q_b"}
+    for rec in layers.values():
+        assert set(rec) == {"build", "exec"}
+        assert set(rec["build"]) == {"build_s", *eventlog.COUNTERS}
+        assert set(rec["exec"]) == set(eventlog.COUNTERS)
+    a, b = layers["q_a"], layers["q_b"]
+    assert (a["build"]["build_s"], a["build"]["jobs"], a["build"]["tasks"],
+            a["build"]["task_s"]) == (0.5, 1, 2, 0.2)
+    assert (a["exec"]["jobs"], a["exec"]["tasks"], a["exec"]["task_s"],
+            a["exec"]["shuffle_mb"]) == (1, 3, 0.6, 3.0)
+    assert (b["build"]["build_s"], b["build"]["jobs"],
+            b["build"]["tasks"]) == (0.25, 1, 1)
+    assert (b["exec"]["jobs"], b["exec"]["tasks"],
+            b["exec"]["failed_tasks"]) == (1, 6, 1)

@@ -1,15 +1,6 @@
 """Oracle-differential tests: every registry query with an oracle must match
-DuckDB on the shared tables (driver contract, CORRECTNESS_r{N}.json).
-
-Round-robin sharding (VERDICT r14 #3): the full 197-query parity replay
-grew past the driver's pytest time budget (r14: the run was cut off at
-~62% with zero failures — a gate that cannot finish protects nothing).
-Each round now runs a deterministic HALF of the parity matrix — shard =
-md5(name) % 2 selected by the round counter (BENCH_r{N}.json count, the
-bench.py convention) — so consecutive rounds cover every query with no
-assertion weakened, only spread.  ``TEST_PARITY_SHARD=all`` runs the
-full matrix (what this repo's own pre-commit gating uses);
-``TEST_PARITY_SHARD=0|1`` pins a shard."""
+DuckDB on the shared tables (driver contract, CORRECTNESS_r{N}.json), and
+every query without one must run.  Every run checks the full matrix."""
 
 from __future__ import annotations
 
@@ -23,7 +14,6 @@ from .compare import (
     assert_no_plan_antipatterns,
     assert_scalar_output_schema,
 )
-from .sharding import skip_unless_shard as _skip_out_of_shard
 
 ORACLE_NAMES = sorted(ORACLE_SQL)
 ROWS_ONLY_NAMES = sorted(set(QUERIES) - set(ORACLE_SQL))
@@ -31,7 +21,6 @@ ROWS_ONLY_NAMES = sorted(set(QUERIES) - set(ORACLE_SQL))
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)
 def test_oracle_parity(name, spark, duck, sf_dir):
-    _skip_out_of_shard(name)
     df = QUERIES[name](spark, sf_dir)
     assert_no_plan_antipatterns(df)
     assert_scalar_output_schema(df, name)
@@ -45,7 +34,6 @@ def test_oracle_parity(name, spark, duck, sf_dir):
 
 @pytest.mark.parametrize("name", ROWS_ONLY_NAMES)
 def test_rows_only_runs(name, spark, sf_dir):
-    _skip_out_of_shard(name)
     df = QUERIES[name](spark, sf_dir)
     assert_no_plan_antipatterns(df)
     assert df.count() >= 0

@@ -159,31 +159,41 @@ def _leaves(v):
         yield v
 
 
-def test_results_stable_across_shuffle_partitions(spark, sf_dir):
-    """The CLI plan gives the same lengths, section set, per-pipeline
-    rollup, effective length and summary at 8 and at 32 shuffle
-    partitions (floats to 1e-9 relative: partial sums may reorder), and
-    the sections in the same op-19 order (ties broken by key)."""
+def _at_shuffle_partitions(spark, collect):
+    """``collect()`` at 8 and at 32 shuffle partitions, caches released
+    after each."""
     from pipeline_calculator_v3_spark import release_caches
-    from pipeline_calculator_v3_spark.plans import synth
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     runs = []
     try:
         for n in (8, 32):
             spark.conf.set("spark.sql.shuffle.partitions", str(n))
-            res = analyze_pipelines(synth.pipelines_df(spark, sf_dir))
-            runs.append({
-                name: {
-                    tuple(r[k] for k in key): r.asDict(recursive=True)
-                    for r in res[name].collect()
-                }
-                for name, key in _FRAME_KEYS.items()
-            })
+            runs.append(collect())
             release_caches(spark)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    a, b = runs
+    return runs
+
+
+def test_results_stable_across_shuffle_partitions(spark, sf_dir):
+    """The CLI plan gives the same lengths, section set, per-pipeline
+    rollup, effective length and summary at 8 and at 32 shuffle
+    partitions (floats to 1e-9 relative: partial sums may reorder), and
+    the sections in the same op-19 order (ties broken by key)."""
+    from pipeline_calculator_v3_spark.plans import synth
+
+    def collect():
+        res = analyze_pipelines(synth.pipelines_df(spark, sf_dir))
+        return {
+            name: {
+                tuple(r[k] for k in key): r.asDict(recursive=True)
+                for r in res[name].collect()
+            }
+            for name, key in _FRAME_KEYS.items()
+        }
+
+    a, b = _at_shuffle_partitions(spark, collect)
     assert a["sections"] and a["per_pipeline_overlap"]
     # dicts keep collect order: the op-19 order itself must match
     assert list(a["sections"]) == list(b["sections"])
@@ -197,3 +207,15 @@ def test_results_stable_across_shuffle_partitions(spark, sf_dir):
                     assert y == pytest.approx(x, rel=1e-9, abs=1e-9), (name, key)
                 else:
                     assert x == y, (name, key)
+
+
+def test_pagerank_stable_across_shuffle_partitions(spark, sf_dir):
+    """q_graph_pagerank returns the same (id, rank) rows in the same order
+    at 8 and at 32 shuffle partitions: partial-sum reordering stays far
+    below the 6-dp output's half-step."""
+    from pipeline_calculator_v3_spark.queries import QUERIES
+
+    a, b = _at_shuffle_partitions(
+        spark, lambda: [tuple(r) for r in
+                        QUERIES["q_graph_pagerank"](spark, sf_dir).collect()])
+    assert a and a == b

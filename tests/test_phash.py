@@ -179,14 +179,6 @@ def test_recursion_exact_at_any_cap(spark, skewed_hashes, cap):
     """The hot-bucket recursion is EXACT, not best-effort: with every
     group over-cap (cap=1 forces recursion to the structural 2^3 floor)
     the pair set equals brute force at Hamming <= 3."""
-    from .sharding import skip_unless_shard
-
-    if cap in (1, 2):
-        # the two deep-recursion params cost ~3 min EACH — the suite's
-        # single biggest line items; round-robin one per round (same
-        # full-coverage-across-2-rounds rule as the parity matrix), the
-        # cheap cap=2^30 no-recursion param runs every round
-        skip_unless_shard(f"phash_recursion_cap_{cap}")
     from pipeline_calculator_v3_spark.caching import release_caches
 
     h = spark.createDataFrame(
