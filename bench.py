@@ -211,6 +211,20 @@ def read_log(log_dir: str) -> eventlog.EventLog:
     return eventlog.read(Path(log_dir) / name)
 
 
+def job_starts(log_dir: str) -> list[int | None]:
+    """Submission time (epoch ms) of every job in ``log_dir``'s event log,
+    in log order, which is the order of ``EventLog.jobs``."""
+    (name,) = os.listdir(log_dir)
+    starts = []
+    with open(Path(log_dir) / name, encoding="utf-8") as f:
+        for line in f:
+            if '"SparkListenerJobStart"' in line:
+                e = json.loads(line)
+                if e["Event"] == "SparkListenerJobStart":
+                    starts.append(e.get("Submission Time"))
+    return starts
+
+
 def warm(spark, sf_dir: str) -> None:
     """Pay session startup before the first query: fact-table scan, grouped
     aggregate, window codegen, and the Python-worker fork and numpy import
@@ -230,50 +244,81 @@ def warm(spark, sf_dir: str) -> None:
 
 
 @contextmanager
-def job_group(spark, group: str):
+def job_group(spark, group: str, spans: dict[str, tuple[int, int]]):
+    """Run the block's jobs in ``group``; ``spans[group]`` gets the block's
+    (start, end) epoch ms, the event log's clock."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
+    start = int(time.time() * 1000)
     try:
         yield
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+        spans[group] = (start, int(time.time() * 1000))
 
 
-def build(spark, name: str, sf_dir: str, tag) -> tuple[DataFrame, float]:
+def build(spark, name: str, sf_dir: str, tag,
+          spans: dict) -> tuple[DataFrame, float]:
     """(frame, seconds) of building ``name`` in job group
     ``<name>:build:<tag>``, where build-time jobs (pagerank's rounds) land."""
-    with job_group(spark, f"{name}:build:{tag}"):
+    with job_group(spark, f"{name}:build:{tag}", spans):
         t0 = time.perf_counter()
         return QUERIES[name](spark, sf_dir), time.perf_counter() - t0
 
 
-def execute(spark, df: DataFrame, name: str, tag) -> float:
+def execute(spark, df: DataFrame, name: str, tag, spans: dict) -> float:
     """Seconds to write ``df`` to the noop sink in job group
     ``<name>:exec:<tag>`` (count() would let Catalyst prune projections)."""
-    with job_group(spark, f"{name}:exec:{tag}"):
+    with job_group(spark, f"{name}:exec:{tag}", spans):
         t0 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
 
 
-def timed(spark, name: str, sf_dir: str, tag) -> tuple[float, float]:
+def timed(spark, name: str, sf_dir: str, tag,
+          spans: dict) -> tuple[float, float]:
     """(wall, build) seconds of ``name``.  Its persists and checkpoints are
     freed after it, untimed, so they cannot pressure later queries."""
-    df, build_s = build(spark, name, sf_dir, tag)
-    wall = round(build_s + execute(spark, df, name, tag), 3)
+    df, build_s = build(spark, name, sf_dir, tag, spans)
+    wall = round(build_s + execute(spark, df, name, tag, spans), 3)
     release_caches(spark)
     return wall, build_s
 
 
 def fold_layers(log: eventlog.EventLog,
-                picks: dict[str, tuple[float, object]]) -> dict[str, dict]:
+                picks: dict[str, tuple[float, object]],
+                spans: dict[str, tuple[int, int]] | None = None,
+                starts: list[int | None] = ()) -> dict[str, dict]:
     """Per query, the counter blocks of the run ``picks[name] = (build_s,
     tag)``: ``{"build": {build_s, …COUNTERS}, "exec": {…COUNTERS}}``.
     Tasks, task-s and shuffle MB do not move with host CPU steal, so they
-    compare across rounds where wall time cannot."""
+    compare across rounds where wall time cannot.
+
+    A job whose group is not a span's (a streaming query's micro-batches
+    run under the query's run id) counts in the span whose ``spans``
+    window holds its submission time; ``starts`` gives each job's, in
+    ``log.jobs`` order."""
+    spans = spans or {}
+    adopted: dict[str, dict[int, eventlog.Stage]] = {g: {} for g in spans}
+    adopted_jobs = dict.fromkeys(spans, 0)
+    for (group, sids), t in zip(log.jobs, starts):
+        if group in spans or t is None:
+            continue
+        for span, (a, b) in spans.items():
+            if a <= t <= b:
+                adopted_jobs[span] += 1
+                adopted[span].update(
+                    (sid, log.stages[sid]) for sid in sids
+                    if sid in log.stages and log.stages[sid].group == group
+                    and log.stages[sid].tasks)
+                break
+
     def block(group: str) -> dict[str, float]:
-        c = eventlog.counters(log, eventlog.stages_of(log, group),
-                              eventlog.jobs_of(log, group))
+        c = eventlog.counters(
+            log,
+            eventlog.stages_of(log, group)
+            + list(adopted.get(group, {}).values()),
+            eventlog.jobs_of(log, group) + adopted_jobs.get(group, 0))
         return {k: round(v, 3) for k, v in c.items()}
 
     return {
@@ -284,16 +329,17 @@ def fold_layers(log: eventlog.EventLog,
     }
 
 
-def measure(spark, sf_dir: str, sf: float) -> tuple[dict, dict]:
-    """The stdout record, and per headline query the (build_s, tag) of the
-    run that gave its reported minimum."""
+def measure(spark, sf_dir: str, sf: float) -> tuple[dict, dict, dict]:
+    """The stdout record, per headline query the (build_s, tag) of the
+    run that gave its reported minimum, and every job group's span."""
+    spans: dict[str, tuple[int, int]] = {}
     # Per-query min of two passes: on this host one arbitrary query per
     # pass can eat a 5-20 s co-tenancy penalty that vanishes on re-run
     # (PERF_NOTES r05); single-pass totals of the same code swung 78-116 s.
     runs: dict[str, list[tuple[float, float, int]]] = {n: [] for n in HEADLINE}
     for tag in range(2):
         for name in HEADLINE:
-            runs[name].append((*timed(spark, name, sf_dir, tag), tag))
+            runs[name].append((*timed(spark, name, sf_dir, tag, spans), tag))
 
     def best(name: str) -> tuple[float, float, int]:
         return min(runs[name], key=lambda r: r[0])
@@ -319,7 +365,7 @@ def measure(spark, sf_dir: str, sf: float) -> tuple[dict, dict]:
         small: dict[str, float] = {}
         for _ in range(2):
             for name in SCALE_TWINS:
-                dt = timed(spark, name, small_dir, "small")[0]
+                dt = timed(spark, name, small_dir, "small", spans)[0]
                 small[name] = min(small.get(name, dt), dt)
         for name in SCALE_TWINS:
             exp = math.log10(best(name)[0] / small[name])
@@ -330,7 +376,7 @@ def measure(spark, sf_dir: str, sf: float) -> tuple[dict, dict]:
                 # 0.41).  The exponent is a hard rc gate, so re-sample the
                 # big side once more before gating.  (An inflated sf0.01
                 # side only LOWERS the exponent; it needs no re-sample.)
-                runs[name].append((*timed(spark, name, sf_dir, 2), 2))
+                runs[name].append((*timed(spark, name, sf_dir, 2, spans), 2))
                 exp = math.log10(best(name)[0] / small[name])
             raw_exp[name] = exp
             scaling[name] = {
@@ -361,7 +407,7 @@ def measure(spark, sf_dir: str, sf: float) -> tuple[dict, dict]:
         "scaling_violations": violations,
         "sf": sf,
     }
-    return out, {name: best(name)[1:] for name in HEADLINE}
+    return out, {name: best(name)[1:] for name in HEADLINE}, spans
 
 
 def main() -> None:
@@ -372,9 +418,10 @@ def main() -> None:
         spark = get_spark("pcv3-bench")
         spark.sparkContext.setLogLevel("ERROR")
         warm(spark, sf_dir)
-        out, picks = measure(spark, sf_dir, sf)
+        out, picks, spans = measure(spark, sf_dir, sf)
         spark.stop()  # flushes the event log
-        layers = fold_layers(read_log(log_dir), picks)
+        layers = fold_layers(read_log(log_dir), picks, spans,
+                             job_starts(log_dir))
     print(json.dumps(out), flush=True)
     # The driver's capture of the line above can lose its head (VERDICT
     # r08 #4), so the complete object, with the per-query counter blocks,

@@ -161,22 +161,33 @@ def _analyze(args: argparse.Namespace) -> int:
             angular_tolerance_deg=args.angular_tolerance,
         )
 
-        # ops 27-28: the GUI's display tables on stdout
+        # ops 27-28: the GUI's display tables on stdout.  Each small result
+        # table is collected once, here or for the exports below, and the
+        # stdout, JSON, TXT and KML writers all read those rows.  With
+        # --distributed-json the sections table may be corpus-sized: it is
+        # never collected whole (stdout takes its first rows, the KML
+        # export streams it).
+        rows = {"totals": results["totals"].collect()}
         # zero valid pipelines leaves the SUM aggregates NULL (the PERMISSIVE
         # reader returns an empty frame instead of raising) — report zeros,
         # the write_txt_summary rule
-        t = results["totals"].collect()[0]
+        t = rows["totals"][0]
         print(f"pipelines: {t.n_pipelines}  total: {t.total_m or 0.0:,.1f} m "
               f"({t.total_mi or 0.0:.4f} US survey mi)")
         sections = results["sections"]
-        shown = sections.drop("oriented_polygon", "corridor_polygon").limit(
-            args.top
-        )
-        for r in shown.collect():
+        if args.distributed_json:
+            shown = sections.drop("oriented_polygon", "corridor_polygon").limit(
+                args.top
+            ).collect()
+        else:
+            rows["sections"] = sections.collect()
+            shown = rows["sections"][: args.top]
+        for r in shown:
             print(f"  section p{r.p1}<->p{r.p2}#{r.section}: "
                   f"{r.bundled_length_mi:.4f} mi over {r.n_hits} stations, "
                   f"avg sep {r.average_separation:.2f} m")
-        s = results["summary"].collect()[0]
+        rows["summary"] = results["summary"].collect()
+        s = rows["summary"][0]
         print(f"effective: {s.effective_m or 0.0:,.1f} m "
               f"of {s.total_m or 0.0:,.1f} m "
               f"(savings {s.savings_pct or 0.0:.1f}%)")
@@ -186,17 +197,21 @@ def _analyze(args: argparse.Namespace) -> int:
         os.makedirs(out, exist_ok=True)
         write_csv(results, out, single_file=args.single_file)
         if args.distributed_json:
-            write_json_distributed(results, os.path.join(out, "json"))
+            write_json_distributed({**results, "summary": rows["summary"]},
+                                   os.path.join(out, "json"))
         else:
-            write_json(results, os.path.join(out, "analysis.json"))
-        write_txt_summary(results, os.path.join(out, "summary.txt"))
+            for name in ("lengths", "per_pipeline_overlap"):
+                rows[name] = results[name].collect()
+            write_json(rows, os.path.join(out, "analysis.json"))
+        write_txt_summary(rows, os.path.join(out, "summary.txt"))
         if not args.no_kml:
             kml_dir = os.path.join(out, "corridors")
             os.makedirs(kml_dir, exist_ok=True)
             # toLocalIterator streams one partition at a time into this
-            # process — a corpus-scale sections table (the case
-            # --distributed-json exists for) must not be collected wholesale
-            for r in sections.toLocalIterator():
+            # process
+            section_rows = (rows["sections"] if "sections" in rows
+                            else sections.toLocalIterator())
+            for r in section_rows:
                 write_corridor_kml(
                     r,
                     os.path.join(

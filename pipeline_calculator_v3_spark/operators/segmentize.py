@@ -3,8 +3,8 @@
 
 1 polyline -> N segment rows (UDTF shape).  Pure-geometry inner loop with
 per-vertex state (accumulated arc length, interpolated cut points), so it
-runs as a vectorized-per-group ``applyInPandas`` kernel: numpy math, Arrow
-batch transfer, no row-at-a-time Python.
+runs as a ``mapInArrow`` kernel over the pipelines' geometry arrays: numpy
+math per polyline, Arrow batch transfer, no row-at-a-time Python.
 
 Semantics relative to the reference (documented precisely, review r12):
 - cut the polyline every ``segment_length`` meters of accumulated arc
@@ -27,14 +27,15 @@ Semantics relative to the reference (documented precisely, review r12):
 - the sub-segment tail remainder is dropped here and accounted separately by
   the effective-length tails (src/pipeline_calculator_v3.py:839-845)
 
-Scale: groups are single pipelines (thousands of vertices at most), so group
-skew is bounded; the shuffle key is pipeline_id.
+Scale: one polyline is one row (thousands of vertices at most), so the
+kernel needs no shuffle: segments keep the input's partitioning.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..functions.geodesy import EARTH_RADIUS_M
@@ -43,6 +44,11 @@ SEGMENT_SCHEMA = (
     "pipeline_id bigint, seg_index bigint, mid_lon double, mid_lat double, "
     "bearing double, length double"
 )
+_SEGMENT_ARROW = pa.schema([
+    ("pipeline_id", pa.int64()), ("seg_index", pa.int64()),
+    ("mid_lon", pa.float64()), ("mid_lat", pa.float64()),
+    ("bearing", pa.float64()), ("length", pa.float64()),
+])
 
 
 def _haversine_np(lat1, lon1, lat2, lon2):
@@ -103,12 +109,42 @@ def _segment_group(pdf: pd.DataFrame, segment_length: float) -> pd.DataFrame:
     )
 
 
-def segmentize(vertices: DataFrame, segment_length: float = 5.0) -> DataFrame:
-    """(pipeline_id, pos, lon, lat) -> segment table
+def _segment_batches(batches, segment_length: float):
+    """Arrow batches of (pipeline_id, geometry) -> segment batches: each
+    polyline goes through ``_segment_group`` as its (pos, lon, lat) table.
+    A NULL or empty geometry yields nothing; a NULL point is NaN."""
+    for batch in batches:
+        frames = []
+        for pid, geom in zip(batch.column("pipeline_id").to_pylist(),
+                             batch.column("geometry")):
+            pts = geom.values
+            if pts is None or len(pts) == 0:
+                continue
+            xy = {f.name: a.to_numpy(zero_copy_only=False)
+                  for f, a in zip(pts.type, pts.flatten())}
+            out = _segment_group(
+                pd.DataFrame({
+                    "pipeline_id": pid, "pos": np.arange(len(pts)),
+                    "lon": xy["lon"], "lat": xy["lat"],
+                }),
+                segment_length,
+            )
+            if len(out):
+                frames.append(out)
+        if frames:
+            yield pa.RecordBatch.from_pandas(
+                pd.concat(frames, ignore_index=True),
+                schema=_SEGMENT_ARROW, preserve_index=False,
+            )
+
+
+def segmentize(pipelines: DataFrame, segment_length: float = 5.0) -> DataFrame:
+    """(pipeline_id, geometry ARRAY<STRUCT<lon, lat>>) -> segment table
     (pipeline_id, seg_index, mid_lon, mid_lat, bearing, length)."""
     from ..shipping import ensure_pkg_shipped
 
-    ensure_pkg_shipped(vertices.sparkSession)
-    return vertices.groupBy("pipeline_id").applyInPandas(
-        lambda pdf: _segment_group(pdf, segment_length), SEGMENT_SCHEMA
+    ensure_pkg_shipped(pipelines.sparkSession)
+    return pipelines.select("pipeline_id", "geometry").mapInArrow(
+        lambda batches: _segment_batches(batches, segment_length),
+        SEGMENT_SCHEMA,
     )

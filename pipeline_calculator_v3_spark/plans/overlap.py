@@ -7,21 +7,21 @@ reference's result envelope (:885-897).
 
 DAG (SURVEY.md §3), named by the stage functions below:
 
-    pipelines -> vertices -> lengths (cached)
-                    \\-> segmentize -> segments (cached: 3 downstream uses)
-                          -> distance_self_join -> pairs (cached)
-                               |-> sessionize -> bundled_hits (cached)
-                               |      |-> section_stats + corridor_polygons
-                               |      |     -> sections (cached, sorted)
-                               |      \\-> bundled_rollup -> per_pipeline_overlap
-                               \\-> segment_effective (+ lengths) -> effective
-                                      -> overlap_summary -> summary
+    pipelines -> lengths (cached; one array fold per pipeline)
+              \\-> segmentize -> segments (cached: 3 downstream uses)
+                    -> distance_self_join -> pairs (cached)
+                         |-> sessionize -> bundled_hits (cached)
+                         |      |-> section_stats + corridor_polygons
+                         |      |     -> sections (cached, sorted)
+                         |      \\-> bundled_rollup -> per_pipeline_overlap
+                         \\-> segment_effective (+ lengths) -> effective
+                                -> overlap_summary -> summary
 
 The two cached result frames are the ones every consumer re-reads:
 ``lengths`` feeds ``totals``, ``effective`` (hence ``summary``) and the
 pipelines table of the CSV, JSON and TXT sinks; ``sections`` feeds the CLI's
 stdout top-k, the CSV overlaps table, the JSON envelope and the corridor
-KML files.  Uncached, each of those reads would re-run the hop window or
+KML files.  Uncached, each of those reads would re-run the length fold or
 the corridor kernel.  Like every ``persist_tracked`` frame they are laid
 out by AQE from their measured bytes (``session.get_spark``).
 
@@ -36,7 +36,7 @@ the explicit-DAG equivalent (SURVEY.md §7 'hard parts').
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import (
@@ -61,6 +61,26 @@ def _clamp_params(detection_range, min_parallel, segment_length, angular_tol):
         max(min_parallel, 10.0),
         max(segment_length, 1.0),
         min(max(angular_tol, 1.0), 90.0),
+    )
+
+
+def polyline_length_m(geometry: Column) -> Column:
+    """Summed haversine hops of an ``ARRAY<STRUCT<lon, lat>>`` polyline, in
+    vertex order, as one array fold: 0.0 for a single vertex, and a hop
+    with a NULL end is skipped, as SUM skips it."""
+
+    def hop(acc: Column, pt: Column) -> Column:
+        h = haversine_m(acc.prev.lat, acc.prev.lon, pt.lat, pt.lon)
+        return F.struct(
+            pt.alias("prev"),
+            F.when(h.isNull(), acc.m).otherwise(acc.m + h).alias("m"),
+        )
+
+    return F.aggregate(
+        F.slice(geometry, 2, F.size(geometry)),
+        F.struct(F.get(geometry, 0).alias("prev"), F.lit(0.0).alias("m")),
+        hop,
+        lambda acc: acc.m,
     )
 
 
@@ -214,31 +234,16 @@ def analyze_pipelines(
             detection_range_m, min_parallel_m, segment_length_m, angular_tolerance_deg
         )
     )
-    spark = pipelines.sparkSession
-
-    # vertices: posexplode of the geometry column
-    vertices = pipelines.select(
-        "pipeline_id",
-        F.posexplode("geometry").alias("pos", "pt"),
-    ).select("pipeline_id", "pos", F.col("pt.lon").alias("lon"), F.col("pt.lat").alias("lat"))
-
-    # ops 8-10: per-pipeline geodesic length + totals
-    w = Window.partitionBy("pipeline_id").orderBy("pos")
-    hops = vertices.select(
-        "pipeline_id",
-        haversine_m(
-            F.lag("lat").over(w), F.lag("lon").over(w), F.col("lat"), F.col("lon")
-        ).alias("hop_m"),
-    )
-    # persisted: re-read by totals, effective and every sink (module docstring)
+    # ops 8-10: per-pipeline geodesic length + totals.  Pipelines with
+    # NULL or empty geometry have no length row; a 1-vertex pipeline is
+    # 0.0 m long.  Persisted: re-read by totals, effective and every sink
+    # (module docstring).
     lengths = persist_tracked(
-        hops.groupBy("pipeline_id")
-        .agg(F.coalesce(F.sum("hop_m"), F.lit(0.0)).alias("length_m"))
-        .join(pipelines.select("pipeline_id", "name"), "pipeline_id")
-        .select(
-            "pipeline_id", "name", "length_m",
-            (F.col("length_m") / US_SURVEY_MILE_M).alias("length_mi"),
+        pipelines.where(F.size("geometry") > 0).select(
+            "pipeline_id", "name",
+            polyline_length_m(F.col("geometry")).alias("length_m"),
         )
+        .withColumn("length_mi", F.col("length_m") / US_SURVEY_MILE_M)
     )
     totals = lengths.agg(
         F.sum("length_m").alias("total_m"),
@@ -248,10 +253,10 @@ def analyze_pipelines(
 
     # op 11: 5 m segments — persisted: reused by ops 12, 18 and 21.
     # MEMORY_AND_DISK_DESER (== DataFrame cache()): corpus-scale segment
-    # state spills to disk instead of evicting and re-running the pandas-UDF
+    # state spills to disk instead of evicting and re-running the Arrow
     # resampler; deserialized storage keeps re-reads cheap.  Tracked so
     # release_caches() frees it once the result envelope is materialized.
-    segments = persist_tracked(segmentize(vertices, segment_length_m))
+    segments = persist_tracked(segmentize(pipelines, segment_length_m))
 
     # op 12: distance + bearing self-join — persisted: BOTH the
     # sessionization branch and the op-21 neighbor branch consume it, and

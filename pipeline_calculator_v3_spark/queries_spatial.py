@@ -212,10 +212,10 @@ def q_effective_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("q_segmentize")  # rows-only: UDTF resampler, oracle impractical
 def q_segmentize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Op 11: pandas-UDF polyline resampler over the synthetic vertex table
-    (rows-only check; unit-tested against closed-form geometry in
-    tests/test_segmentize.py)."""
-    return segmentize(synth.vertices_df(spark, sf_dir), SEGMENT_LENGTH_M)
+    """Op 11: Arrow polyline resampler over the synthetic pipelines'
+    geometry arrays (rows-only check; unit-tested against closed-form
+    geometry in tests/test_segmentize.py)."""
+    return segmentize(synth.pipelines_df(spark, sf_dir), SEGMENT_LENGTH_M)
 
 
 def _segments_xl(spark: SparkSession, sf_dir: str):

@@ -14,6 +14,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+from . import worker_daemon
+
 
 @contextmanager
 def scoped_conf(spark: SparkSession, key: str, value: str):
@@ -96,4 +98,17 @@ def get_spark(app_name: str = "pipeline_calculator_v3_spark",
         # Per-stage metrics come from the event log (bench.py), not the UI.
         .config("spark.ui.enabled", "false")
     )
+    # Local workers fork from the engine's daemon (worker_daemon.py: numpy,
+    # pandas and pyarrow preloaded, no per-task re-read of pyspark.zip).
+    # The daemon starts before any addPyFile reaches it, so the directory
+    # holding this package goes on the workers' PYTHONPATH; an executor
+    # elsewhere cannot be assumed to have that path, so it keeps Spark's
+    # own daemon.
+    pkg_parent = os.path.dirname(
+        os.path.dirname(os.path.abspath(worker_daemon.__file__)))
+    if master.startswith("local") and os.path.isdir(pkg_parent):
+        builder = (
+            builder.config("spark.python.daemon.module", worker_daemon.__name__)
+            .config("spark.executorEnv.PYTHONPATH", pkg_parent)
+        )
     return builder.getOrCreate()

@@ -3,7 +3,9 @@
 
 The reference exports via pandas/json on the collected results; these sinks
 mirror that for single-file parity (small summaries) and use distributed
-``df.write`` where the data may be large.
+``df.write`` where the data may be large.  The driver-side writers take a
+result table as a DataFrame, which they collect, or as its already
+collected rows, so a caller that prints a table too collects it once.
 """
 
 from __future__ import annotations
@@ -38,6 +40,12 @@ _KML_DOC = """<?xml version="1.0" encoding="UTF-8"?>
 """
 
 
+def _rows(table: DataFrame | list) -> list:
+    """A result table's rows: collected rows pass through, a DataFrame is
+    collected."""
+    return table if isinstance(table, list) else table.collect()
+
+
 def write_csv(
     results: dict[str, DataFrame], out_dir: str, single_file: bool = False
 ) -> None:
@@ -70,7 +78,8 @@ def write_csv_distributed(df: DataFrame, out_dir: str) -> None:
     df.write.mode("overwrite").option("header", True).csv(out_dir)
 
 
-def write_json_distributed(results: dict[str, DataFrame], out_dir: str) -> None:
+def write_json_distributed(results: dict[str, DataFrame | list],
+                           out_dir: str) -> None:
     """Op 24 scale path: the potentially-large tables (sections, per-pipeline
     rollups, lengths) go out as parallel JSON-lines part files via
     ``df.write.json`` — no driver collect, any table size.  Only the
@@ -82,12 +91,12 @@ def write_json_distributed(results: dict[str, DataFrame], out_dir: str) -> None:
     os.makedirs(out_dir, exist_ok=True)
     for name in ("lengths", "sections", "per_pipeline_overlap", "effective"):
         results[name].write.mode("overwrite").json(os.path.join(out_dir, name))
-    summary = [r.asDict() for r in results["summary"].collect()]
+    summary = [r.asDict() for r in _rows(results["summary"])]
     with open(os.path.join(out_dir, "summary.json"), "w") as f:
         json.dump(summary, f, default=str, indent=2)
 
 
-def write_json(results: dict[str, DataFrame], path: str) -> None:
+def write_json(results: dict[str, DataFrame | list], path: str) -> None:
     """Op 24: whole result envelope as one JSON file (:1672-1675).
 
     Driver-side collect by design — single-file envelope parity with the
@@ -95,15 +104,14 @@ def write_json(results: dict[str, DataFrame], path: str) -> None:
     :func:`write_json_distributed` when the section/rollup tables may be
     large (collecting them here would be a driver OOM at scale)."""
     envelope = {
-        "pipelines": [r.asDict() for r in results["lengths"].collect()],
-        "summary": [r.asDict() for r in results["summary"].collect()],
+        "pipelines": [r.asDict() for r in _rows(results["lengths"])],
+        "summary": [r.asDict() for r in _rows(results["summary"])],
         "overlap_analysis": {
             "bundled_sections": [
-                r.asDict(recursive=True)
-                for r in results["sections"].collect()
+                r.asDict(recursive=True) for r in _rows(results["sections"])
             ],
             "per_pipeline": [
-                r.asDict() for r in results["per_pipeline_overlap"].collect()
+                r.asDict() for r in _rows(results["per_pipeline_overlap"])
             ],
         },
     }
@@ -111,7 +119,8 @@ def write_json(results: dict[str, DataFrame], path: str) -> None:
         json.dump(envelope, f, default=str, indent=2)
 
 
-def write_txt_summary(results: dict[str, DataFrame], path: str) -> None:
+def write_txt_summary(results: dict[str, DataFrame | list],
+                      path: str) -> None:
     """Op 25: 4-line totals report (:1689-1696).
 
     Zero valid pipelines leaves the SUM aggregates NULL (SQL semantics);
@@ -119,8 +128,8 @@ def write_txt_summary(results: dict[str, DataFrame], path: str) -> None:
     r12 — the reference raises 'No valid features found' much earlier, at
     parse time, a path our PERMISSIVE multi-file reader deliberately
     does not take)."""
-    t = results["totals"].collect()[0]
-    s = results["summary"].collect()[0]
+    t = _rows(results["totals"])[0]
+    s = _rows(results["summary"])[0]
     lines = [
         f"Total pipelines: {t.n_pipelines}",
         f"Total length (m): {t.total_m or 0.0:.2f}",

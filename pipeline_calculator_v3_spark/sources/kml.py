@@ -352,7 +352,11 @@ def read_pipelines(spark: SparkSession, paths: str | list[str]) -> DataFrame:
             "_global_id", (F.row_number().over(w) - 1).cast("bigint")
         )
     )
-    return (
+    # persisted too: the overlap plan reads the pipelines for lengths and
+    # for segments, and unpersisted each read would re-run the distinct,
+    # the window and the broadcast join.  ``parsed`` stays cached for the
+    # two re-key branches.
+    return persist_tracked(
         parsed.join(F.broadcast(keys), ["file", "pipeline_id"])
         .drop("pipeline_id")
         .withColumnRenamed("_global_id", "pipeline_id")

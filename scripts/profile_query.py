@@ -37,7 +37,7 @@ def main() -> None:
         sys.exit(f"unknown queries: {unknown}")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    runs = {}
+    runs, spans = {}, {}
     with bench.event_logged() as log_dir:
         spark = get_spark("pcv3-profile")
         spark.sparkContext.setLogLevel("ERROR")
@@ -45,15 +45,16 @@ def main() -> None:
         formatted = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
             .fromString("formatted")
         for name in args.names:
-            df, build_s = bench.build(spark, name, sf_dir, 0)
+            df, build_s = bench.build(spark, name, sf_dir, 0, spans)
             plan = df._jdf.queryExecution().explainString(formatted)
-            exec_s = bench.execute(spark, df, name, 0)
+            exec_s = bench.execute(spark, df, name, 0, spans)
             release_caches(spark)
             runs[name] = (build_s, exec_s, plan)
         spark.stop()  # flushes the event log
         log = bench.read_log(log_dir)
+        starts = bench.job_starts(log_dir)
     layers = bench.fold_layers(
-        log, {name: (r[0], 0) for name, r in runs.items()})
+        log, {name: (r[0], 0) for name, r in runs.items()}, spans, starts)
 
     for name, (build_s, exec_s, plan) in runs.items():
         print(f"\n=== {name}: wall {build_s + exec_s:.3f}s "

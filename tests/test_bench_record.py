@@ -9,9 +9,10 @@ import bench
 from perfbench import eventlog
 
 
-def _job(job_id, group, stages):
+def _job(job_id, group, stages, submitted=1000):
     return {"Event": "SparkListenerJobStart", "Job ID": job_id,
-            "Stage IDs": stages, "Properties": {"spark.jobGroup.id": group}}
+            "Submission Time": submitted, "Stage IDs": stages,
+            "Properties": {"spark.jobGroup.id": group}}
 
 
 def _stage(kind, sid, t):
@@ -70,3 +71,36 @@ def test_fold_gives_build_and_exec_blocks_per_query(tmp_path):
             b["build"]["tasks"]) == (0.25, 1, 1)
     assert (b["exec"]["jobs"], b["exec"]["tasks"],
             b["exec"]["failed_tasks"]) == (1, 6, 1)
+
+
+def test_streaming_jobs_count_in_the_span_they_ran_in(tmp_path):
+    """Micro-batch jobs run under the stream's own run-id group: each one
+    counts in the span whose window holds its submission time, and one
+    submitted outside every span counts nowhere."""
+    run = "5b3c2f0e-run-id"
+    events = [
+        _job(0, "q_s:build:0", [0], submitted=1000),
+        _stage("Submitted", 0, 1000), _task(0, 100),
+        _stage("Completed", 0, 1000),
+        _job(1, run, [1], submitted=1500),
+        _stage("Submitted", 1, 1500), *[_task(1, 200) for _ in range(3)],
+        _stage("Completed", 1, 1500),
+        _job(2, run, [2], submitted=3100),
+        _stage("Submitted", 2, 3100), _task(2, 400),
+        _stage("Completed", 2, 3100),
+        _job(3, "q_s:exec:0", [3], submitted=3000),
+        _stage("Submitted", 3, 3000), _task(3, 50),
+        _stage("Completed", 3, 3000),
+        _job(4, run, [4], submitted=9000),
+        _stage("Submitted", 4, 9000), _task(4, 700),
+        _stage("Completed", 4, 9000),
+    ]
+    (tmp_path / "local-1").write_text(
+        "".join(json.dumps(e) + "\n" for e in events))
+    spans = {"q_s:build:0": (900, 2000), "q_s:exec:0": (2900, 3500)}
+    layers = bench.fold_layers(bench.read_log(str(tmp_path)),
+                               {"q_s": (1.1, 0)}, spans,
+                               bench.job_starts(str(tmp_path)))
+    build, exe = layers["q_s"]["build"], layers["q_s"]["exec"]
+    assert (build["jobs"], build["tasks"], build["task_s"]) == (2, 4, 0.7)
+    assert (exe["jobs"], exe["tasks"], exe["task_s"]) == (2, 2, 0.45)

@@ -177,6 +177,66 @@ def test_distributed_exports_and_multi_input(spark, tmp_path):
     assert names == {"West", "East", "North", "South"}
 
 
+_SMALL_FRAMES = ("totals", "summary", "sections", "lengths",
+                 "per_pipeline_overlap")
+
+
+def _spied_analyze(monkeypatch, argv):
+    """Run ``main(argv)`` recording every collect / toLocalIterator /
+    toPandas call, and the result frames ``analyze_pipelines`` returned.
+    The spy sits on the classic DataFrame: in Spark 4 the actions are
+    defined there, not on ``pyspark.sql.DataFrame``."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    import pipeline_calculator_v3_spark.plans.overlap as overlap
+
+    calls = []
+    for action in ("collect", "toLocalIterator", "toPandas"):
+        def spy(self, *args, _real=getattr(ClassicDataFrame, action),
+                _action=action, **kwargs):
+            calls.append((_action, self))
+            return _real(self, *args, **kwargs)
+
+        monkeypatch.setattr(ClassicDataFrame, action, spy)
+    results = {}
+
+    def analyze(*args, _real=overlap.analyze_pipelines, **kwargs):
+        results.update(_real(*args, **kwargs))
+        return results
+
+    monkeypatch.setattr(overlap, "analyze_pipelines", analyze)
+    assert main(argv) == 0
+    return calls, results
+
+
+def test_default_mode_collects_each_result_once(spark, tmp_path, monkeypatch):
+    """Envelope-JSON mode: stdout, JSON, TXT and KML are written from one
+    collect of each small result frame."""
+    src = tmp_path / "pair.kml"
+    src.write_text(_KML)
+    calls, results = _spied_analyze(
+        monkeypatch, ["analyze", str(src), "--out-dir", str(tmp_path / "out")])
+    for name in _SMALL_FRAMES:
+        reads = [a for a, df in calls if df is results[name]]
+        assert len(reads) <= 1, (name, reads)
+    assert len(os.listdir(tmp_path / "out" / "corridors")) == 1
+
+
+def test_distributed_json_never_collects_sections(spark, tmp_path,
+                                                  monkeypatch):
+    """--distributed-json: stdout takes the first rows and the KML export
+    streams, so the sections table is never collected whole."""
+    src = tmp_path / "pair.kml"
+    src.write_text(_KML)
+    calls, results = _spied_analyze(monkeypatch, [
+        "analyze", str(src), "--out-dir", str(tmp_path / "out"),
+        "--distributed-json",
+    ])
+    sections = [a for a, df in calls if df is results["sections"]]
+    assert sections == ["toLocalIterator"]
+    assert len(os.listdir(tmp_path / "out" / "corridors")) == 1
+
+
 def test_query_subcommand(spark, tmp_path, capsys):
     rc = main([
         "query", "q_tpch_q6_forecast_revenue",

@@ -55,6 +55,53 @@ def test_g1_lengths_and_no_overlap(g1):
     assert s.savings_m == 0.0
 
 
+def _window_lengths(pipelines):
+    """The previous production spelling of ``lengths``, kept as the
+    reference: explode to vertices, lag window, summed hops, joined back
+    to the names."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from pipeline_calculator_v3_spark.functions.geodesy import haversine_m
+
+    v = pipelines.select(
+        "pipeline_id", F.posexplode("geometry").alias("pos", "pt")
+    ).select("pipeline_id", "pos", "pt.lon", "pt.lat")
+    w = Window.partitionBy("pipeline_id").orderBy("pos")
+    hops = v.select("pipeline_id", haversine_m(
+        F.lag("lat").over(w), F.lag("lon").over(w), F.col("lat"), F.col("lon")
+    ).alias("hop_m"))
+    return (
+        hops.groupBy("pipeline_id")
+        .agg(F.coalesce(F.sum("hop_m"), F.lit(0.0)).alias("length_m"))
+        .join(pipelines.select("pipeline_id", "name"), "pipeline_id")
+    )
+
+
+def test_lengths_edge_geometry_and_window_reference(spark, sf_dir):
+    """NULL and empty geometry have no length row, a 1-vertex pipeline is
+    0.0 m, and on the synthetic pipelines every length equals the window
+    spelling's to the bit (hops summed in vertex order on both sides)."""
+    from pipeline_calculator_v3_spark.plans import synth
+
+    edge = _pipes(spark, [
+        (9001, "null", None),
+        (9002, "empty", []),
+        (9003, "point", [{"lon": 1.0, "lat": 2.0}]),
+        (9004, "line", line(10.0, 45.0, 12.0)),
+    ])
+    pipes = synth.pipelines_df(spark, sf_dir).unionByName(edge)
+    got = analyze_pipelines(pipes)["lengths"]
+    rows = {r.pipeline_id: (r.name, r.length_m, r.length_mi)
+            for r in got.collect()}
+    assert 9001 not in rows and 9002 not in rows
+    assert rows[9003] == ("point", 0.0, 0.0)
+    assert rows[9004][1] == pytest.approx(12.0)
+    want = {r.pipeline_id: (r.name, r.length_m)
+            for r in _window_lengths(pipes).collect()}
+    assert {k: v[:2] for k, v in rows.items()} == want
+
+
 @pytest.fixture(scope="module")
 def g2(spark):
     # G2: two parallel lines 10 m apart, 400 m long -> one bundled section
