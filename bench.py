@@ -211,20 +211,6 @@ def read_log(log_dir: str) -> eventlog.EventLog:
     return eventlog.read(Path(log_dir) / name)
 
 
-def job_starts(log_dir: str) -> list[int | None]:
-    """Submission time (epoch ms) of every job in ``log_dir``'s event log,
-    in log order, which is the order of ``EventLog.jobs``."""
-    (name,) = os.listdir(log_dir)
-    starts = []
-    with open(Path(log_dir) / name, encoding="utf-8") as f:
-        for line in f:
-            if '"SparkListenerJobStart"' in line:
-                e = json.loads(line)
-                if e["Event"] == "SparkListenerJobStart":
-                    starts.append(e.get("Submission Time"))
-    return starts
-
-
 def warm(spark, sf_dir: str) -> None:
     """Pay session startup before the first query: fact-table scan, grouped
     aggregate, window codegen, and the Python-worker fork and numpy import
@@ -287,8 +273,7 @@ def timed(spark, name: str, sf_dir: str, tag,
 
 def fold_layers(log: eventlog.EventLog,
                 picks: dict[str, tuple[float, object]],
-                spans: dict[str, tuple[int, int]] | None = None,
-                starts: list[int | None] = ()) -> dict[str, dict]:
+                spans: dict[str, tuple[int, int]]) -> dict[str, dict]:
     """Per query, the counter blocks of the run ``picks[name] = (build_s,
     tag)``: ``{"build": {build_s, …COUNTERS}, "exec": {…COUNTERS}}``.
     Tasks, task-s and shuffle MB do not move with host CPU steal, so they
@@ -296,14 +281,18 @@ def fold_layers(log: eventlog.EventLog,
 
     A job whose group is not a span's (a streaming query's micro-batches
     run under the query's run id) counts in the span whose ``spans``
-    window holds its submission time; ``starts`` gives each job's, in
-    ``log.jobs`` order."""
-    spans = spans or {}
+    window holds its submission time, the earliest submission of its
+    stages."""
     adopted: dict[str, dict[int, eventlog.Stage]] = {g: {} for g in spans}
     adopted_jobs = dict.fromkeys(spans, 0)
-    for (group, sids), t in zip(log.jobs, starts):
-        if group in spans or t is None:
+    for group, sids in log.jobs:
+        if group in spans:
             continue
+        stages = [log.stages[sid] for sid in sids if sid in log.stages]
+        submits = [st.submit_ms for st in stages if st.submit_ms is not None]
+        if not submits:
+            continue
+        t = min(submits)
         for span, (a, b) in spans.items():
             if a <= t <= b:
                 adopted_jobs[span] += 1
@@ -420,8 +409,7 @@ def main() -> None:
         warm(spark, sf_dir)
         out, picks, spans = measure(spark, sf_dir, sf)
         spark.stop()  # flushes the event log
-        layers = fold_layers(read_log(log_dir), picks, spans,
-                             job_starts(log_dir))
+        layers = fold_layers(read_log(log_dir), picks, spans)
     print(json.dumps(out), flush=True)
     # The driver's capture of the line above can lose its head (VERDICT
     # r08 #4), so the complete object, with the per-query counter blocks,

@@ -28,7 +28,10 @@ Semantics relative to the reference (documented precisely, review r12):
   the effective-length tails (src/pipeline_calculator_v3.py:839-845)
 
 Scale: one polyline is one row (thousands of vertices at most), so the
-kernel needs no shuffle: segments keep the input's partitioning.
+kernel needs no shuffle: segments keep the input's partitioning, and the
+kernel runs in as many tasks as the input has partitions.  That is why
+``read_pipelines`` spreads a parse with fewer partitions than the session
+has cores (a single KMZ is one partition) before it caches it.
 """
 
 from __future__ import annotations

@@ -84,6 +84,11 @@ polar_segments AS (
     FROM pseg_base
 )"""
 
+# Vertex ``pos`` of polyline ``pid``, written once for the oracle CTE,
+# ``vertices_df`` and ``pipelines_df``.
+VERT_LON = f"{LON0} + pid * {DLON} + sin(pos / 40.0) * 0.00001 * (1 + pid)"
+VERT_LAT = f"{LAT0} + pos * {DLAT}"
+
 VERTICES_CTE = f"""
 vert_base AS (
     SELECT (o_orderkey % 32) AS pid,
@@ -94,8 +99,8 @@ vert_base AS (
 vertices AS (
     SELECT CAST(pid AS BIGINT) AS pipeline_id,
            CAST(pos AS BIGINT) AS pos,
-           {LON0} + pid * {DLON} + sin(pos / 40.0) * 0.00001 * (1 + pid) AS lon,
-           {LAT0} + pos * {DLAT} AS lat
+           {VERT_LON} AS lon,
+           {VERT_LAT} AS lat
     FROM vert_base
 )"""
 
@@ -153,8 +158,8 @@ def vertices_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             "CAST(pid AS BIGINT) AS pipeline_id",
             "CAST(pos AS BIGINT) AS pos",
-            f"{LON0} + pid * {DLON} + sin(pos / 40.0) * 0.00001 * (1 + pid) AS lon",
-            f"{LAT0} + pos * {DLAT} AS lat",
+            f"{VERT_LON} AS lon",
+            f"{VERT_LAT} AS lat",
         )
     )
 
@@ -162,20 +167,27 @@ def vertices_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pipelines_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1-shaped table (FIXTURES.md §B): one row per pipeline with
     geometry ARRAY<STRUCT<lon,lat>> — input for the end-to-end overlap plan
-    and the segmentize UDTF (src/pipeline_calculator_v3.py:116-121)."""
-    v = vertices_df(spark, sf_dir)
+    and the segmentize UDTF (src/pipeline_calculator_v3.py:116-121).
+
+    A polyline's vertices are the ``vertices`` closed form at pos 0..n-1,
+    n its row count, so the array is built in order from the count alone:
+    the same values as collecting ``vertices_df`` and sorting by pos, with
+    no window, collect or sort.
+
+    The 32 counts are a few hundred bytes, so AQE would coalesce them into
+    one partition, and the arrays built from them, the lengths fold, the
+    segment kernel and every stage reading those partitions would run in
+    one task.  They are dealt round-robin over the session's cores
+    first."""
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     return (
-        v.groupBy("pipeline_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("pos", "lon", "lat"))
-            ).alias("_verts")
-        )
-        .select(
-            "pipeline_id",
-            F.concat(F.lit("Item_"), F.col("pipeline_id")).alias("name"),
-            F.transform(
-                "_verts", lambda s: F.struct(s.lon.alias("lon"), s.lat.alias("lat"))
-            ).alias("geometry"),
+        orders.groupBy((F.col("o_orderkey") % 32).alias("pid"))
+        .agg(F.count(F.lit(1)).cast("int").alias("n"))
+        .repartition(spark.sparkContext.defaultParallelism)
+        .selectExpr(
+            "CAST(pid AS BIGINT) AS pipeline_id",
+            "concat('Item_', CAST(pid AS BIGINT)) AS name",
+            "transform(sequence(0, n - 1), pos -> named_struct("
+            f"'lon', {VERT_LON}, 'lat', {VERT_LAT})) AS geometry",
         )
     )

@@ -101,9 +101,10 @@ def get_spark(app_name: str = "pipeline_calculator_v3_spark",
     # Local workers fork from the engine's daemon (worker_daemon.py: numpy,
     # pandas and pyarrow preloaded, no per-task re-read of pyspark.zip).
     # The daemon starts before any addPyFile reaches it, so the directory
-    # holding this package goes on the workers' PYTHONPATH; an executor
+    # holding this package goes on the workers' PYTHONPATH, and
+    # ensure_pkg_shipped ships no zip to these sessions.  An executor
     # elsewhere cannot be assumed to have that path, so it keeps Spark's
-    # own daemon.
+    # own daemon and gets the zip.
     pkg_parent = os.path.dirname(
         os.path.dirname(os.path.abspath(worker_daemon.__file__)))
     if master.startswith("local") and os.path.isdir(pkg_parent):

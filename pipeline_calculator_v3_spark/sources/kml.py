@@ -326,37 +326,48 @@ def read_pipelines(spark: SparkSession, paths: str | list[str]) -> DataFrame:
                 columns=["file", "pipeline_id", "objectid", "name", "attrs", "geometry"],
             )
 
-    # persist: the mapInPandas parse feeds BOTH the key projection below
-    # and the re-key join — unpersisted, every file parsed twice
-    # (advice r07).
-    parsed = persist_tracked(
-        _read_binary(spark, paths).mapInPandas(gen, PIPELINES_SCHEMA)
-    )
+    # One task parses one file, so a single large survey would run the
+    # lengths fold and the segment kernel downstream in one task.  A parse
+    # with fewer partitions than the session's parallelism is hashed out
+    # by pipeline before it is cached; AQE sizes the partitions by bytes,
+    # as it did the vertex shuffle segmentize once ran, so a small input
+    # stays one partition.  Sorted within partitions, that partition keeps
+    # the file's order, so the float sums downstream add in the same order
+    # as without the shuffle.  Persisted once, the only cached copy of the
+    # geometry: the overlap plan reads the pipelines for lengths and for
+    # segments.
+    raw = _read_binary(spark, paths)
+    parsed = raw.mapInPandas(gen, PIPELINES_SCHEMA)
+    if parsed.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
+        parsed = parsed.repartition("file", "pipeline_id").sortWithinPartitions(
+            "file", "pipeline_id")
+    parsed = persist_tracked(parsed)
     # pipeline_id is 0-based PER FILE (reference :117); across a multi-file
     # glob the ids would collide and downstream per-pipeline grouping would
-    # merge unrelated polylines (review r06).  Re-key deterministically
-    # over (file, local id); single-file inputs keep their ids verbatim
-    # (orderBy(file, id) == orderBy(id) there, and the local ids are
-    # already dense 0-based).  The unpartitioned row_number window runs
-    # over the LIGHTWEIGHT key pairs only — 16 bytes x |pipelines| through
-    # the single-partition funnel, never the geometry polyline arrays
-    # (advice r06: windowing `parsed` directly would drag every vertex
-    # through one task) — and the dense ids broadcast-join back.
+    # merge unrelated polylines (review r06).  A single file keeps its ids
+    # verbatim: they are already dense and 0-based, which is what the
+    # re-key below would give them.
+    if len(raw.inputFiles()) <= 1:
+        return parsed
+    # Re-key deterministically over (file, local id).  The unpartitioned
+    # row_number window runs over the LIGHTWEIGHT key pairs only — 16
+    # bytes x |pipelines| through the single-partition funnel, never the
+    # geometry polyline arrays (advice r06: windowing `parsed` directly
+    # would drag every vertex through one task) — and the dense ids
+    # broadcast-join back.  The keys are persisted, so each read of the
+    # result re-runs only the broadcast of the cached keys, not the
+    # distinct and the window.
     from pyspark.sql import Window
 
     w = Window.orderBy("file", "pipeline_id")
-    keys = (
+    keys = persist_tracked(
         parsed.select("file", "pipeline_id")
         .distinct()
         .withColumn(
             "_global_id", (F.row_number().over(w) - 1).cast("bigint")
         )
     )
-    # persisted too: the overlap plan reads the pipelines for lengths and
-    # for segments, and unpersisted each read would re-run the distinct,
-    # the window and the broadcast join.  ``parsed`` stays cached for the
-    # two re-key branches.
-    return persist_tracked(
+    return (
         parsed.join(F.broadcast(keys), ["file", "pipeline_id"])
         .drop("pipeline_id")
         .withColumnRenamed("_global_id", "pipeline_id")

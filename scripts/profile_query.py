@@ -52,9 +52,8 @@ def main() -> None:
             runs[name] = (build_s, exec_s, plan)
         spark.stop()  # flushes the event log
         log = bench.read_log(log_dir)
-        starts = bench.job_starts(log_dir)
     layers = bench.fold_layers(
-        log, {name: (r[0], 0) for name, r in runs.items()}, spans, starts)
+        log, {name: (r[0], 0) for name, r in runs.items()}, spans)
 
     for name, (build_s, exec_s, plan) in runs.items():
         print(f"\n=== {name}: wall {build_s + exec_s:.3f}s "

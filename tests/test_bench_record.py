@@ -9,10 +9,9 @@ import bench
 from perfbench import eventlog
 
 
-def _job(job_id, group, stages, submitted=1000):
+def _job(job_id, group, stages):
     return {"Event": "SparkListenerJobStart", "Job ID": job_id,
-            "Submission Time": submitted, "Stage IDs": stages,
-            "Properties": {"spark.jobGroup.id": group}}
+            "Stage IDs": stages, "Properties": {"spark.jobGroup.id": group}}
 
 
 def _stage(kind, sid, t):
@@ -56,7 +55,7 @@ def _log(tmp_path):
 
 def test_fold_gives_build_and_exec_blocks_per_query(tmp_path):
     layers = bench.fold_layers(_log(tmp_path),
-                               {"q_a": (0.5, 0), "q_b": (0.25, 1)})
+                               {"q_a": (0.5, 0), "q_b": (0.25, 1)}, {})
     assert set(layers) == {"q_a", "q_b"}
     for rec in layers.values():
         assert set(rec) == {"build", "exec"}
@@ -79,19 +78,19 @@ def test_streaming_jobs_count_in_the_span_they_ran_in(tmp_path):
     submitted outside every span counts nowhere."""
     run = "5b3c2f0e-run-id"
     events = [
-        _job(0, "q_s:build:0", [0], submitted=1000),
+        _job(0, "q_s:build:0", [0]),
         _stage("Submitted", 0, 1000), _task(0, 100),
         _stage("Completed", 0, 1000),
-        _job(1, run, [1], submitted=1500),
+        _job(1, run, [1]),
         _stage("Submitted", 1, 1500), *[_task(1, 200) for _ in range(3)],
         _stage("Completed", 1, 1500),
-        _job(2, run, [2], submitted=3100),
+        _job(2, run, [2]),
         _stage("Submitted", 2, 3100), _task(2, 400),
         _stage("Completed", 2, 3100),
-        _job(3, "q_s:exec:0", [3], submitted=3000),
+        _job(3, "q_s:exec:0", [3]),
         _stage("Submitted", 3, 3000), _task(3, 50),
         _stage("Completed", 3, 3000),
-        _job(4, run, [4], submitted=9000),
+        _job(4, run, [4]),
         _stage("Submitted", 4, 9000), _task(4, 700),
         _stage("Completed", 4, 9000),
     ]
@@ -99,8 +98,7 @@ def test_streaming_jobs_count_in_the_span_they_ran_in(tmp_path):
         "".join(json.dumps(e) + "\n" for e in events))
     spans = {"q_s:build:0": (900, 2000), "q_s:exec:0": (2900, 3500)}
     layers = bench.fold_layers(bench.read_log(str(tmp_path)),
-                               {"q_s": (1.1, 0)}, spans,
-                               bench.job_starts(str(tmp_path)))
+                               {"q_s": (1.1, 0)}, spans)
     build, exe = layers["q_s"]["build"], layers["q_s"]["exec"]
     assert (build["jobs"], build["tasks"], build["task_s"]) == (2, 4, 0.7)
     assert (exe["jobs"], exe["tasks"], exe["task_s"]) == (2, 2, 0.45)

@@ -128,6 +128,45 @@ def test_multi_file_pipeline_ids_unique(spark, tmp_path):
     assert sorted(ids) == list(range(90))
 
 
+def _lines_kml(names, n_vertices=2):
+    marks = "".join(
+        f"<Placemark><name>{n}</name><LineString><coordinates>"
+        + " ".join(f"-100.{i},{40 + k * 1e-4:.4f}" for k in range(n_vertices))
+        + "</coordinates></LineString></Placemark>"
+        for i, n in enumerate(names)
+    )
+    return ('<?xml version="1.0"?><kml xmlns="http://www.opengis.net/kml/2.2">'
+            f"<Document>{marks}</Document></kml>")
+
+
+def test_multi_file_ids_dense_in_file_order(spark, tmp_path):
+    """Per-file ids re-keyed to dense global ids in (file, local id)
+    order, without the reference KMZ."""
+    d = tmp_path / "glob"
+    d.mkdir()
+    (d / "a.kml").write_text(_lines_kml(["a0", "a1"]))
+    (d / "b.kml").write_text(_lines_kml(["b0"]))
+    rows = read_pipelines(spark, str(d)).select("pipeline_id", "name").collect()
+    assert sorted((r.pipeline_id, r.name) for r in rows) == [
+        (0, "a0"), (1, "a1"), (2, "b0")]
+
+
+def test_single_file_spread_with_ids_kept(spark, tmp_path):
+    """One file is one parse task; pipelines holding more geometry than
+    one AQE partition are spread by pipeline before they are cached (the
+    lengths fold and the segment kernel run per partition), and keep their
+    file's ids.  The 3 MB file shuffles to about 6 partitions at the
+    session's 256k floor; a quarter of it stays in one."""
+    f = tmp_path / "one.kml"
+    names = [f"p{i}" for i in range(32)]
+    f.write_text(_lines_kml(names, n_vertices=6000))
+    pipes = read_pipelines(spark, str(f))
+    assert pipes.rdd.getNumPartitions() > 1
+    rows = pipes.select("pipeline_id", "name").collect()
+    assert sorted((r.pipeline_id, r.name) for r in rows) == list(
+        enumerate(names))
+
+
 def test_unparseable_attr_value_is_null_not_fatal(spark, tmp_path):
     """Review r06 (live-reproduced): under Spark 4's default ANSI mode a
     plain cast on 'N/A' in a double field killed the job; try_cast yields
