@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import SEGMENT_LENGTH_M
+from ..sql import read_table
 
 # Segment-field constants (shared with the SQL text below).
 N_PIPES = 8
@@ -110,7 +111,7 @@ def segments_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus segmentize's ``length`` column: every synthetic segment is one
     literal ``SEGMENT_LENGTH_M`` long, so the op-21 stage of
     plans/overlap.py runs on this field unchanged."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     base = (
         orders.where(F.col("o_orderkey") < SEG_KEY_CAP)
         .select((F.col("o_orderkey") % N_PIPES).alias("pid"), "o_orderkey")
@@ -131,7 +132,7 @@ def segments_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 def polar_segments_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of the ``polar_segments`` CTE (same formulas, same
     values) — the 85-deg-boundary-crossing ladder for the polar-cap path."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     base = (
         orders.where(F.col("o_orderkey") < SEG_KEY_CAP)
         .select((F.col("o_orderkey") % N_PIPES).alias("pid"), "o_orderkey")
@@ -150,7 +151,7 @@ def polar_segments_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def vertices_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of the ``vertices`` CTE."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     base = orders.select((F.col("o_orderkey") % 32).alias("pid"), "o_orderkey")
     w = Window.partitionBy("pid").orderBy("o_orderkey")
     return (
@@ -179,7 +180,7 @@ def pipelines_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment kernel and every stage reading those partitions would run in
     one task.  They are dealt round-robin over the session's cores
     first."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return (
         orders.groupBy((F.col("o_orderkey") % 32).alias("pid"))
         .agg(F.count(F.lit(1)).cast("int").alias("n"))

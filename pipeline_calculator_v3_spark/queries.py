@@ -20,6 +20,7 @@ from . import US_SURVEY_MILE_M
 from .functions import timeutil
 from .functions.geodesy import haversine_sql
 from .plans import synth
+from .sql import read_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
@@ -34,21 +35,9 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+# Every fixture-table read goes through sql.read_table's declared schema.
+t = read_table
 
-
-
-
-# The events table's fixed schema.  The parquet stores ts as
-# TIMESTAMP(MICROS, isAdjustedToUTC=false) — i.e. a wall-clock timestamp,
-# Spark's TIMESTAMP_NTZ — verified against all three SF dirs via DuckDB
-# parquet_schema (r04; FIXTURES.md).  Shared by batch (events_t) and
-# streaming (streaming/windows.py, streaming/stateful.py) readers.
-EVENTS_SCHEMA = (
-    "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
-    "value double, props string"
-)
 
 # Timezone-independent epoch-micros from the NTZ ts column (see
 # functions/timeutil.py for why unix_micros is wrong here).
@@ -66,12 +55,14 @@ def events_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering and gap arithmetic; ``ts`` itself feeds
     window()/session_window().
 
-    The explicit schema is still the right pattern at 100 TB (no inference
-    job over a million files, no session-conf mutation) — it just has to
-    state the type the footer actually declares.
+    The explicit schema (``sql.SCHEMAS["events"]``) is still the right
+    pattern at 100 TB (no inference job over a million files, no
+    session-conf mutation) — it just has to state the type the footer
+    actually declares.
     """
-    df = spark.read.schema(EVENTS_SCHEMA).parquet(f"{sf_dir}/events.parquet")
-    return df.withColumn("ts_us", F.expr(EPOCH_US_EXPR))
+    return read_table(spark, sf_dir, "events").withColumn(
+        "ts_us", F.expr(EPOCH_US_EXPR)
+    )
 
 
 # ---------------------------------------------------------------------------

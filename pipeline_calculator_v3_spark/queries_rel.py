@@ -230,13 +230,14 @@ GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
 )
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
-        f"""
+        """
         SELECT l_returnflag, l_linestatus,
                SUM(l_extendedprice) AS sum_price,
                CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS BIGINT) AS gid
-        FROM parquet.`{sf_dir}/lineitem.parquet`
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
+        """,
+        lineitem=t(spark, sf_dir, "lineitem"),
     )
 
 

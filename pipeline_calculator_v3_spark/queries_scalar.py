@@ -170,7 +170,7 @@ def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reads via events_t: the shared explicit-schema reader is the single
     place that knows the events timestamp encoding (TIMESTAMP(MICROS) ntz —
-    see queries.EVENTS_SCHEMA), so unit bugs can't fork per query."""
+    see sql.SCHEMAS["events"]), so unit bugs can't fork per query."""
     ev = events_t(spark, sf_dir)
     m = F.from_json("props", "map<string,bigint>")
     return ev.select(

@@ -32,7 +32,7 @@ from .plans.overlap import (
     sessionize,
 )
 from .caching import persist_tracked
-from .queries import query
+from .queries import query, t
 
 _PAIR_DIST = haversine_sql("a.mid_lat", "a.mid_lon", "b.mid_lat", "b.mid_lon")
 
@@ -228,7 +228,7 @@ def _segments_xl(spark: SparkSession, sf_dir: str):
     residue class ``pid = o_orderkey % 64`` the quotient enumerates stations
     densely — same field, zero shuffles.  The previous 64-partition window
     put ~2.3 M rows through single window tasks at sf1 (VERDICT r02 #9)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = t(spark, sf_dir, "orders")
     return orders.selectExpr(
         "CAST(o_orderkey % 64 AS BIGINT) AS pipeline_id",
         "CAST(o_orderkey DIV 64 AS BIGINT) AS seg_index",
@@ -338,7 +338,6 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the key is pure scan-side bit arithmetic inside
     whole-stage codegen (no UDF); the rollup is one hash aggregate with
     map-side combine on a bounded key domain (<= 1024 tiles)."""
-    from .queries import t
     from .operators.zorder import zorder_key
 
     o = t(spark, sf_dir, "orders")
@@ -435,7 +434,6 @@ def q_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     lost to pruning — min/max are true bounds) and the actual skip
     (surviving tiles << 1024) are gated in tests/test_zorder_prune.py."""
     from .operators.zorder import zorder_key
-    from .queries import t
 
     o = t(spark, sf_dir, "orders")
     pts = o.select(
@@ -535,7 +533,6 @@ def q_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits where the nested-expression spelling is exponential); the
     rollup is one hash aggregate on a <= 1024-tile key domain."""
     from .operators.hilbert import with_hilbert_key
-    from .queries import t
 
     o = t(spark, sf_dir, "orders")
     pts = o.select(

@@ -707,16 +707,17 @@ def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for i in (1, 2)
             ]:
                 f.result()
+        updates_schema = "doc_id bigint, text string, gen bigint"
         ingest_stream_dedup(
             spark,
             updates_dir + "/g*.parquet",
-            "doc_id bigint, text string, gen bigint",
+            updates_schema,
             base,
             os.path.join(work, "corpus"),
             min_jaccard=0.5,
         )
-        out = read_admitted(spark, os.path.join(work, "corpus")).select(
-            "doc_id", "gen"
+        out = read_admitted(
+            spark, os.path.join(work, "corpus"), updates_schema
         )
         # materialize before the temp dirs are deleted — a registry-face
         # artifact only: the PRODUCTION path is the on-disk corpus/index

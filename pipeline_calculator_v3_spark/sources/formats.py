@@ -28,7 +28,7 @@ def write_orc(df: DataFrame, path: str, partition_by: list[str] | None = None) -
 
 def read_orc(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
     """ORC scan; pass ``schema`` to skip footer inference (the explicit-schema
-    rule that matters at millions of files — see queries.EVENTS_SCHEMA)."""
+    rule that matters at millions of files — see sql.SCHEMAS["events"])."""
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
@@ -103,7 +103,7 @@ def read_jsonl(
     Two non-negotiables at 100 TB, both encoded here:
     - explicit schema: json schema inference is a full extra pass over the
       data (and nondeterministic under sampling); a corpus reader states its
-      contract up front (same rule as queries.EVENTS_SCHEMA).
+      contract up front (same rule as sql.SCHEMAS["events"]).
     - PERMISSIVE + corrupt-record column: a million-file crawl always
       contains malformed lines; failing the job (FAILFAST) or silently
       dropping (DROPMALFORMED) both lose information — landing bad lines in
@@ -222,7 +222,7 @@ def read_parquet_evolving(
     - ``schema='...'`` (DDL string): the caller states the CURRENT contract
       up front; no footer sweep, old files null-fill the missing columns.
       This is the production path (same explicit-schema rule as
-      queries.EVENTS_SCHEMA / read_jsonl) — mergeSchema is for the
+      sql.SCHEMAS["events"] / read_jsonl) — mergeSchema is for the
       exploratory "what is actually in this directory" pass.
 
     Either way the engine-level guarantee is the same: adding a column is

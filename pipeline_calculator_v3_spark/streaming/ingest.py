@@ -210,11 +210,14 @@ def _admit_batch_body(
     pinned.append(with_bands)
     # read ONLY generations b0..b{batch_id}: the seed plus every COMMITTED
     # earlier batch — never this batch's own (possibly partially written)
-    # b{batch_id+1} generation (see _gen_paths)
-    idx_bands = spark.read.parquet(
+    # b{batch_id+1} generation (see _gen_paths).  Every generation was
+    # written by _write_index from frames of this batch's shape, so their
+    # schemas are stated rather than inferred: inference is one footer job
+    # per read per micro-batch
+    idx_bands = spark.read.schema(with_bands.schema).parquet(
         *_gen_paths(os.path.join(work_dir, "index", "bands"), batch_id)
     )
-    idx_sh = spark.read.parquet(
+    idx_sh = spark.read.schema(staged.select("id", "sh").schema).parquet(
         *_gen_paths(os.path.join(work_dir, "index", "shingles"), batch_id)
     )
     cand = (
@@ -279,7 +282,8 @@ def ingest_stream_dedup(
     file under ``updates_dir`` through the near-dup admission gate, one
     micro-batch per file, and block until the stream drains.
 
-    ``base_docs`` and the update files must carry (doc_id, text, gen)."""
+    ``base_docs`` and the update files must carry (doc_id, text, gen),
+    with the same types in both."""
     ensure_pkg_shipped(spark)
     # NULL-id seed docs are as untrackable as NULL-id batch docs (the
     # admit_batch rule) — an index row with id NULL never equi-joins
@@ -329,9 +333,16 @@ def ingest_stream_dedup(
         q.stop()
 
 
-def read_admitted(spark: SparkSession, work_dir: str) -> DataFrame:
+def read_admitted(
+    spark: SparkSession, work_dir: str, schema: str
+) -> DataFrame:
     """The admitted corpus membership table (doc_id, gen) — the fold's
-    final state."""
-    return spark.read.option("recursiveFileLookup", "true").parquet(
-        os.path.join(work_dir, "accepted")
+    final state — read with ``schema``, the types it was written with
+    (the stream's ``updates_schema`` serves: its other columns are
+    dropped), so the read runs no schema-inference job."""
+    return (
+        spark.read.schema(schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(os.path.join(work_dir, "accepted"))
+        .select("doc_id", "gen")
     )

@@ -81,7 +81,7 @@ def run_stateful_to_memory(spark, events_dir: str, name: str,
     writer instead (tests/test_stateful_streaming.py::
     test_stateful_restart...).
 
-    Shares queries.EVENTS_SCHEMA (native TIMESTAMP_NTZ) so batch and
+    Shares sql.SCHEMAS["events"] (native TIMESTAMP_NTZ) so batch and
     streaming readers agree on the timestamp unit — zero session mutation,
     so async micro-batches can't race a conf restore."""
     from pyspark.sql import functions as F

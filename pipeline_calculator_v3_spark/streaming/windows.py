@@ -78,9 +78,9 @@ def raw_event_stream(spark, events_dir: str,
     it inline, re-opening the r03 timestamp-unit regression class the
     schema sharing exists to prevent).  Keeps native TIMESTAMP_NTZ — the
     watermark conversion is stream_events' own concern."""
-    from ..queries import EVENTS_SCHEMA
+    from ..sql import SCHEMAS
 
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
+    reader = spark.readStream.schema(SCHEMAS["events"])
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(events_dir)
@@ -91,7 +91,7 @@ def stream_events(spark, events_dir: str, watermark: str = "30 minutes",
     """readStream twin of queries.events_t: native TIMESTAMP_NTZ read +
     epoch-µs column + watermark for state eviction.
 
-    Shares queries.EVENTS_SCHEMA so the batch and streaming readers can
+    Shares sql.SCHEMAS["events"] so the batch and streaming readers can
     never disagree on the timestamp unit again (the r03 regression was
     exactly such a disagreement with the physical data: an explicit bigint
     schema assuming nanos over a MICROS file)."""

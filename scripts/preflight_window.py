@@ -26,10 +26,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
 WINDOW = 50
 
 
@@ -45,6 +41,7 @@ def main() -> None:
 
     from pipeline_calculator_v3_spark.queries import ORACLE_SQL, QUERIES
     from pipeline_calculator_v3_spark.session import get_spark
+    from pipeline_calculator_v3_spark.sql import TABLES
 
     spark = get_spark("pcv3-preflight")
     spark.sparkContext.setLogLevel("ERROR")

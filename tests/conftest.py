@@ -9,11 +9,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pipeline_calculator_v3_spark.session import get_spark  # noqa: E402
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from pipeline_calculator_v3_spark.sql import TABLES  # noqa: E402
 
 SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 

@@ -65,7 +65,7 @@ def ingest_run(spark, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def admitted(spark, ingest_run):
-    rows = read_admitted(spark, ingest_run).collect()
+    rows = read_admitted(spark, ingest_run, DOC_SCHEMA).collect()
     return {r.doc_id: r.gen for r in rows}
 
 
@@ -101,7 +101,7 @@ def test_redelivery_is_idempotent(spark, ingest_run, admitted):
     gen2 = spark.createDataFrame(GEN2_ROWS, DOC_SCHEMA)
     # redeliver the SECOND micro-batch (batch_id=1, which wrote b2)
     admit_batch(spark, gen2, 1, ingest_run, min_jaccard=0.5)
-    rows = read_admitted(spark, ingest_run).collect()
+    rows = read_admitted(spark, ingest_run, DOC_SCHEMA).collect()
     assert {r.doc_id: r.gen for r in rows} == {1: 0, 11: 1, 21: 2}
     assert _index_rows(spark, ingest_run) == (before_bands, before_sh)
 
@@ -164,7 +164,10 @@ def test_short_docs_cannot_be_readmitted(spark, tmp_path_factory):
         "doc_id bigint, text string, gen bigint",
         base, corpus, min_jaccard=0.5,
     )
-    rows = {r.doc_id: r.gen for r in read_admitted(spark, corpus).collect()}
+    rows = {
+        r.doc_id: r.gen
+        for r in read_admitted(spark, corpus, DOC_SCHEMA).collect()
+    }
     assert rows == {1: 0, 11: 1, 21: 2}
 
 
@@ -198,7 +201,10 @@ def test_null_text_docs_dedupe_like_empty(spark, tmp_path_factory):
         "doc_id bigint, text string, gen bigint",
         base, corpus, min_jaccard=0.5,
     )
-    rows = {r.doc_id: r.gen for r in read_admitted(spark, corpus).collect()}
+    rows = {
+        r.doc_id: r.gen
+        for r in read_admitted(spark, corpus, DOC_SCHEMA).collect()
+    }
     assert rows == {1: 0, 10: 1, 22: 2}
     # and the index holds no NULL band keys / NULL shingle elements
     bands = spark.read.parquet(os.path.join(corpus, "index", "bands", "*"))
@@ -243,11 +249,17 @@ def test_null_id_docs_are_never_admitted(spark, tmp_path_factory):
         "doc_id bigint, text string, gen bigint",
         base, corpus, min_jaccard=0.5,
     )
-    rows = {r.doc_id: r.gen for r in read_admitted(spark, corpus).collect()}
+    rows = {
+        r.doc_id: r.gen
+        for r in read_admitted(spark, corpus, DOC_SCHEMA).collect()
+    }
     assert rows == {1: 0, 10: 1}
     # redelivery of the same batch admits nothing new (idempotent)
     admit_batch(spark, batch, 0, corpus, min_jaccard=0.5)
-    rows2 = {r.doc_id: r.gen for r in read_admitted(spark, corpus).collect()}
+    rows2 = {
+        r.doc_id: r.gen
+        for r in read_admitted(spark, corpus, DOC_SCHEMA).collect()
+    }
     assert rows2 == rows
 
 
