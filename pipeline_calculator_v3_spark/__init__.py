@@ -34,8 +34,8 @@ ANGULAR_TOLERANCE_DEG = 15.0       # src/pipeline_calculator_v3.py:41
 SESSION_GAP_SEGMENTS = 2
 
 
-def release_caches(spark=None, blocking=False):
+def release_caches(spark):
     """Free every cache/checkpoint the engine pinned (see ``caching``)."""
     from .caching import release_caches as _release
 
-    _release(spark, blocking)
+    _release(spark)

@@ -7,9 +7,8 @@ Two kinds of pinned executor state exist in the engine:
   ``DataFrame.unpersist`` — but only if someone remembers the handle.
 - ``DataFrame.localCheckpoint`` (connected-components lineage cuts): its
   backing blocks belong to an *internal* RDD that ``df.unpersist()`` /
-  ``df.rdd.unpersist()`` cannot reach; the only handle is the RDD id in
-  ``SparkContext.getPersistentRDDs`` (measured: the id delta around the
-  checkpoint call identifies exactly the new blocks).
+  ``df.rdd.unpersist()`` cannot reach; the only handle is that RDD's id,
+  which the checkpointed frame's plan exposes as a ``LogicalRDD``.
 
 A tracked cache is sized by AQE from its measured bytes, like any other
 shuffle: ``get_spark`` sets ``canChangeCachedPlanOutputPartitioning`` so
@@ -41,40 +40,28 @@ _TRACKED_DFS: list[DataFrame] = []
 _TRACKED_IDS: list[int] = []
 
 
-def persist_tracked(
-    df: DataFrame,
-    level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER,
-) -> DataFrame:
-    """``df.persist(level)`` + register the handle for ``release_caches``."""
-    df.persist(level)
+def persist_tracked(df: DataFrame) -> DataFrame:
+    """``df.persist(MEMORY_AND_DISK_DESER)`` + register the handle for
+    ``release_caches``."""
+    df.persist(StorageLevel.MEMORY_AND_DISK_DESER)
     with _REG_LOCK:
         _TRACKED_DFS.append(df)
     return df
 
 
-def unpersist_tracked(df: DataFrame, blocking: bool = False) -> None:
+def unpersist_tracked(df: DataFrame) -> None:
     """``df.unpersist()`` + DEREGISTER the handle.  Batch-scoped callers
     (the streaming ingest loop) must use this instead of a bare
     ``df.unpersist()``: unpersist alone frees the executor blocks but the
     module-global registry keeps the driver-side DataFrame object (plus
     its JVM plan references) alive forever — 4 dead handles per
     micro-batch on a continuous stream (review r11)."""
-    df.unpersist(blocking)
+    df.unpersist()
     with _REG_LOCK:
         for i, tracked in enumerate(_TRACKED_DFS):
             if tracked is df:
                 del _TRACKED_DFS[i]
                 break
-
-
-def _persistent_ids(spark: SparkSession) -> set[int]:
-    # ONE py4j round-trip: iterating the java keySet element-wise costs 2
-    # JVM calls per id, and this runs twice per localCheckpoint — measured
-    # +25% warm wall-clock on the connected-components loop (~30 checkpoints
-    # x ~10 ids).  java.util.AbstractCollection.toString is "[1, 3, 7]".
-    s = spark.sparkContext._jsc.getPersistentRDDs().keySet().toString()
-    s = s.strip("[]").strip()
-    return {int(x) for x in s.split(",")} if s else set()
 
 
 def local_checkpoint_tracked(
@@ -86,23 +73,17 @@ def local_checkpoint_tracked(
     manages the lifetime itself (the connected-components loop frees each
     round's checkpoint as soon as the next round supersedes it).
 
-    The id comes straight off the checkpointed frame's LogicalRDD (one py4j
-    call) — diffing ``getPersistentRDDs`` before/after costs measurable
-    driver time in checkpoint-per-round loops; the diff remains only as the
-    fallback for plan shapes that don't expose the RDD.
+    The id comes straight off the checkpointed frame's ``LogicalRDD`` (one
+    py4j call); tests/test_caching.py checks it is exactly the RDD the
+    checkpoint added to ``getPersistentRDDs``.
     """
-    spark = df.sparkSession
-    before = _persistent_ids(spark)  # single toString round-trip
     out = df.localCheckpoint(eager=True)
-    try:
-        new = {out._jdf.queryExecution().analyzed().rdd().id()}
-    except Exception:
-        new = _persistent_ids(spark) - before
+    rdd_id = out._jdf.queryExecution().analyzed().rdd().id()
     if ids_sink is not None:
-        ids_sink.extend(new)
+        ids_sink.append(rdd_id)
     else:
         with _REG_LOCK:
-            _TRACKED_IDS.extend(new)
+            _TRACKED_IDS.append(rdd_id)
     return out
 
 
@@ -112,17 +93,17 @@ def track_ids(ids: list[int]) -> None:
         _TRACKED_IDS.extend(ids)
 
 
-def unpersist_ids(spark: SparkSession, ids: list[int], blocking: bool = False) -> None:
+def unpersist_ids(spark: SparkSession, ids: list[int]) -> None:
     """Drop the cached blocks of specific RDD ids (localCheckpoint storage).
 
     ``SparkContext.unpersistRDD`` is Scala package-private, which compiles
     to a public JVM method — one py4j call per id, no jmap round-trips."""
     jsc = spark.sparkContext._jsc.sc()
     for i in ids:
-        jsc.unpersistRDD(i, blocking)
+        jsc.unpersistRDD(i, False)  # non-blocking
 
 
-def release_caches(spark: SparkSession | None = None, blocking: bool = False) -> None:
+def release_caches(spark: SparkSession) -> None:
     """Unpersist every cache/checkpoint the package registered.
 
     Safe to call repeatedly; only call after the final materialization of the
@@ -133,24 +114,17 @@ def release_caches(spark: SparkSession | None = None, blocking: bool = False) ->
         dfs, _TRACKED_DFS = _TRACKED_DFS, []
     for df in dfs:
         try:
-            df.unpersist(blocking)
+            df.unpersist()
         except Exception:
             pass  # session already stopped — nothing to release
-    if spark is None:
-        spark = SparkSession.getActiveSession()
-    if spark is not None:
-        # swap the ids list out under the lock, like _TRACKED_DFS above:
-        # an id appended between an unlocked read and an unlocked rebind
-        # would be silently dropped — a leaked checkpoint block, the exact
-        # leak class this registry exists to close (review r12)
-        with _REG_LOCK:
-            ids, _TRACKED_IDS = _TRACKED_IDS, []
-        if ids:
-            try:
-                unpersist_ids(spark, ids, blocking)
-            except Exception:
-                pass
-    # no active session on THIS thread (getActiveSession is thread-local):
-    # keep the checkpoint ids tracked so a later call from a session-owning
-    # thread can still reclaim the blocks — clearing here would orphan them
-    # for the life of the executors (review r06)
+    # swap the ids list out under the lock, like _TRACKED_DFS above: an id
+    # appended between an unlocked read and an unlocked rebind would be
+    # silently dropped — a leaked checkpoint block, the exact leak class
+    # this registry exists to close (review r12)
+    with _REG_LOCK:
+        ids, _TRACKED_IDS = _TRACKED_IDS, []
+    if ids:
+        try:
+            unpersist_ids(spark, ids)
+        except Exception:
+            pass

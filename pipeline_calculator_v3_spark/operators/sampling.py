@@ -148,47 +148,3 @@ def sample_k_per_key(
         .filter(F.col("_rn") <= k)
         .drop("_rn")
     )
-
-
-def split_leakage_audit(
-    df: DataFrame, group_col: str, split_col: str
-) -> DataFrame:
-    """Cross-split leakage profile: does any GROUP straddle two splits?
-
-    Near-duplicate documents leak evaluation signal when cluster members
-    land on both sides of a train/test split — the fix is assigning the
-    split from the GROUP key (``split_assign`` over the cluster id or
-    dedup representative: a pure hash of the key gives every member the
-    same verdict by construction), and this audit is the proof.  Returns
-    one row per distinct splits-touched count: ``n_splits`` BIGINT,
-    ``n_groups`` BIGINT, ``n_rows`` BIGINT, ``leaky`` BOOLEAN
-    (n_splits > 1) — all-zero leaky rows certify the split; any other
-    outcome localizes how much of the corpus re-keys row-wise.
-
-    NULL groups form one class per SQL grouping (singleton docs carrying
-    a NULL cluster id should be given their OWN id — doc_id — upstream,
-    else this audit treats them as one giant group); NULL splits count
-    as a distinct verdict only through count-distinct's non-NULL rule.
-
-    Scale shape: the k_anonymity_audit exchange family — one hash
-    aggregate on the group key (map-side partials absorb hot clusters)
-    and a <= |distinct n_splits| rollup; nothing row-sized crosses a
-    second exchange.  ANSI-replayable verbatim (tests/test_sampling.py;
-    staged r14 for an r15 face over documents x minhash clusters)."""
-    groups = df.groupBy(group_col).agg(
-        F.countDistinct(split_col).alias("n_splits"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-    return (
-        groups.groupBy("n_splits")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_groups"),
-            F.sum("n_rows").cast("bigint").alias("n_rows"),
-        )
-        .select(
-            F.col("n_splits").cast("bigint").alias("n_splits"),
-            "n_groups", "n_rows",
-            (F.col("n_splits") > 1).alias("leaky"),
-        )
-        .orderBy("n_splits")
-    )

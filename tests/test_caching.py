@@ -6,13 +6,20 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from pipeline_calculator_v3_spark import release_caches
-from pipeline_calculator_v3_spark.caching import _persistent_ids, persist_tracked
+from pipeline_calculator_v3_spark.caching import (
+    local_checkpoint_tracked,
+    persist_tracked,
+    unpersist_ids,
+)
 from pipeline_calculator_v3_spark.functions.geodesy import EARTH_RADIUS_M
 from pipeline_calculator_v3_spark.plans.overlap import analyze_pipelines
 from pipeline_calculator_v3_spark.queries import QUERIES, events_t
+
+from .conftest import persistent_ids
 
 DEG_PER_M_LAT = 180.0 / (math.pi * EARTH_RADIUS_M)
 T1_SCHEMA = (
@@ -26,9 +33,9 @@ def test_dedup_clusters_releases_everything(spark, sf_dir):
     df = QUERIES["q_dedup_clusters"](spark, sf_dir)
     n = df.count()  # final materialization
     assert n > 0
-    assert _persistent_ids(spark), "expected pinned state before release"
+    assert persistent_ids(spark), "expected pinned state before release"
     release_caches(spark)
-    assert _persistent_ids(spark) == set(), "dangling cached RDDs after release"
+    assert persistent_ids(spark) == set(), "dangling cached RDDs after release"
 
 
 def test_overlap_e2e_releases_everything(spark):
@@ -50,9 +57,9 @@ def test_overlap_e2e_releases_everything(spark):
     for name in ("lengths", "totals", "sections", "per_pipeline_overlap",
                  "effective", "summary"):
         results[name].collect()
-    assert _persistent_ids(spark), "expected pinned segments/hits before release"
+    assert persistent_ids(spark), "expected pinned segments/hits before release"
     release_caches(spark)
-    assert _persistent_ids(spark) == set(), "dangling cached RDDs after release"
+    assert persistent_ids(spark) == set(), "dangling cached RDDs after release"
 
 
 def test_tracked_cache_is_sized_from_measured_bytes(spark):
@@ -80,11 +87,66 @@ def test_tracked_cache_is_sized_from_measured_bytes(spark):
         release_caches(spark)
 
 
+def _persisted(spark, pinned):
+    df = spark.range(0, 50).withColumn("sq", F.col("id") * F.col("id"))
+    df.persist()
+    df.count()  # its own cache RDD exists before the checkpoint
+    pinned.append(df.unpersist)
+    return df
+
+
+def _checkpointed(spark, pinned):
+    ids = []
+    df = local_checkpoint_tracked(spark.range(0, 40), ids_sink=ids)
+    pinned.append(lambda: unpersist_ids(spark, ids))
+    return df
+
+
+# each plan shape a localCheckpoint sees; a builder appends to `pinned`
+# whatever it pinned itself, so the test can free it
+_CHECKPOINT_INPUTS = {
+    "range": lambda spark, pinned: spark.range(0, 100),
+    "empty_range": lambda spark, pinned: spark.range(0),
+    "join": lambda spark, pinned: spark.range(0, 60).join(
+        spark.range(0, 60, 3).withColumnRenamed("id", "k"),
+        F.col("id") == F.col("k"),
+    ),
+    "aggregate": lambda spark, pinned: spark.range(0, 200)
+    .groupBy((F.col("id") % 7).alias("g"))
+    .agg(F.count(F.lit(1)).alias("n")),
+    "rows": lambda spark, pinned: spark.createDataFrame(
+        [(1, "a"), (2, "b")], "k int, v string"
+    ),
+    "persisted": _persisted,
+    "checkpoint_of_checkpoint": _checkpointed,
+}
+
+
+@pytest.mark.parametrize("shape", list(_CHECKPOINT_INPUTS))
+def test_local_checkpoint_records_exactly_its_new_rdd(spark, shape):
+    """The id read off the checkpointed frame's plan is the one RDD the
+    checkpoint adds to getPersistentRDDs, and freeing it frees the blocks."""
+    pinned = []
+    try:
+        df = _CHECKPOINT_INPUTS[shape](spark, pinned)
+        before = persistent_ids(spark)
+        ids = []
+        out = local_checkpoint_tracked(df, ids_sink=ids)
+        assert len(ids) == 1
+        assert set(ids) == persistent_ids(spark) - before
+        assert out.count() == df.count()
+        unpersist_ids(spark, ids)
+        assert persistent_ids(spark) == before
+    finally:
+        for free in pinned:
+            free()
+
+
 def test_minhash_releases_staged(spark, sf_dir):
     release_caches(spark)
     QUERIES["q_dedup_minhash"](spark, sf_dir).count()
     release_caches(spark)
-    assert _persistent_ids(spark) == set()
+    assert persistent_ids(spark) == set()
 
 
 def test_events_ts_unit(spark, sf_dir):

@@ -126,7 +126,8 @@ def test_analyze_leaves_no_cache(spark, tmp_path, sink_fails):
     The failing case points --out-dir at a regular file, so the export
     step raises after the stdout tables have materialized the caches."""
     from pipeline_calculator_v3_spark import release_caches
-    from pipeline_calculator_v3_spark.caching import _persistent_ids
+
+    from .conftest import persistent_ids
 
     release_caches(spark)
     src = tmp_path / "pair.kml"
@@ -139,7 +140,7 @@ def test_analyze_leaves_no_cache(spark, tmp_path, sink_fails):
             main(argv)
     else:
         assert main(argv) == 0
-    assert _persistent_ids(spark) == set()
+    assert persistent_ids(spark) == set()
 
 
 def test_distributed_exports_and_multi_input(spark, tmp_path):

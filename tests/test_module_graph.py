@@ -1,10 +1,12 @@
-"""Every package module is reachable through an import from production code.
+"""Every package module and top-level def is reachable from production code.
 
-A module that only tests import is dead weight the engine still carries:
-this parses the package with ``ast`` (no Spark, no imports executed) and
-requires each module under ``pipeline_calculator_v3_spark/`` — package
-``__init__`` files and ``__main__`` aside — to be imported by another
-package module or by ``__spark_entry__.py``."""
+A module or def that only tests use is dead weight the engine still
+carries: this parses the package with ``ast`` (no Spark, no imports
+executed).  Each module under ``pipeline_calculator_v3_spark/`` — package
+``__init__`` files and ``__main__`` aside — must be imported by another
+package module or by ``__spark_entry__.py``, and each undecorated
+top-level def or class must be named somewhere in those files outside its
+own body."""
 
 from __future__ import annotations
 
@@ -13,6 +15,27 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PKG = "pipeline_calculator_v3_spark"
+
+
+# Top-level defs kept without a production use, each with its reason.
+# A helper only an exempt def names (streaming.joins._run_pairs_to_memory)
+# passes the one-pass check and needs no entry.
+EXEMPT_DEFS = {
+    "sources.kml.read_placemarks":
+        "the reference's T2 placemark source contract",
+    "sources.kml.schema_fields":
+        "the reference's T2 ExtendedData schema contract",
+    "sources.kml.attrs_to_columns":
+        "the reference's T2 ExtendedData column contract",
+    "operators.multimodal.pack_blob":
+        "tests build the PCV3 blobs the production decoders read with it",
+    "streaming.joins.run_stream_join_to_memory":
+        "drives the interval join as a real stream-stream join",
+    "streaming.joins.run_stream_outer_join_to_memory":
+        "drives the outer interval join as a real stream-stream join",
+    "streaming.windows.run_stream_to_memory":
+        "drives a windowed transform over the event stream",
+}
 
 
 def _package_modules() -> dict[str, Path]:
@@ -62,3 +85,45 @@ def test_no_module_is_imported_only_by_tests():
         and name not in imported
     )
     assert not orphans, f"modules no production code imports: {orphans}"
+
+
+def _identifier(node: ast.AST) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    if isinstance(node, ast.alias):
+        return node.name.rsplit(".", 1)[-1]
+    return None
+
+
+def test_no_top_level_def_is_used_only_by_tests():
+    """One pass, no transitive walk: a def that only another unreached def
+    names passes here, and fails once that def is deleted."""
+    mods = _package_modules()
+    files = dict(mods)
+    files["__spark_entry__"] = ROOT / "__spark_entry__.py"
+    defs = set()
+    users: dict[str, set] = {}  # name -> owning top-level def, or None
+    for name, path in files.items():
+        for stmt in ast.parse(path.read_text(), str(path)).body:
+            owner = None
+            if isinstance(
+                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                owner = (name, stmt.name)
+                if name in mods and not stmt.decorator_list:
+                    defs.add(owner)
+            for node in ast.walk(stmt):
+                ident = _identifier(node)
+                if ident:
+                    users.setdefault(ident, set()).add(owner)
+    unused = {
+        f"{mod.removeprefix(PKG + '.')}.{name}"
+        for mod, name in defs
+        if not users.get(name, set()) - {(mod, name)}
+    }
+    stray = sorted(unused - EXEMPT_DEFS.keys())
+    assert not stray, f"top-level defs no production code uses: {stray}"
+    stale = sorted(EXEMPT_DEFS.keys() - unused)
+    assert not stale, f"exempt defs that gained a production use or are gone: {stale}"

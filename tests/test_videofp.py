@@ -1,7 +1,7 @@
 """operators/videofp.py — video fingerprint near-dup (staged r13 for an
 r14 registry face): planted trimmed-copy recovery with temporal
-alignment, the stock-frame false-pair rejection, the df-cap ledger, the
-DuckDB full replay over the synth corpus, and the pure-map plan gate."""
+alignment, the stock-frame false-pair rejection, the df-cap exclusion,
+the DuckDB full replay over the synth corpus, and the pure-map plan gate."""
 
 from __future__ import annotations
 
@@ -14,7 +14,6 @@ from pipeline_calculator_v3_spark.operators.multimodal import (
     synth_media,
 )
 from pipeline_calculator_v3_spark.operators.videofp import (
-    frame_hash_ledger,
     video_dup_pairs,
     video_frame_hashes,
 )
@@ -110,7 +109,7 @@ def test_repeated_frame_votes_once_per_delta(spark):
     assert [(r.id_a, r.id_b, r.aligned) for r in got] == [(1, 2, 1)]
 
 
-def test_df_cap_excludes_hot_hash_and_ledger_reports(spark):
+def test_df_cap_excludes_hot_hash(spark):
     f = [_frame(i) for i in range(6)]
     black = bytes(FRAME)
     # black frame in EVERY video; videos 1/2 also share 3 real frames
@@ -122,8 +121,6 @@ def test_df_cap_excludes_hot_hash_and_ledger_reports(spark):
     ]
     media = spark.createDataFrame(rows, "media_id long, content binary")
     frames = video_frame_hashes(media)
-    led = frame_hash_ledger(frames, hash_df_cap=3).collect()
-    assert len(led) == 1 and led[0].n_videos == 4
     pairs = {
         (r.id_a, r.id_b): (r.aligned, r.offset)
         for r in video_dup_pairs(
@@ -133,7 +130,6 @@ def test_df_cap_excludes_hot_hash_and_ledger_reports(spark):
     # the capped black frame no longer links 3/4 to anything; 1/2 still
     # pair on their three real frames (the black frame does NOT count)
     assert pairs == {(1, 2): (3, 0)}
-    assert frame_hash_ledger(frames, hash_df_cap=64).count() == 0
 
 
 def test_matches_duckdb_replay(spark, duck, sf_dir):
@@ -250,107 +246,3 @@ def test_frame_hash_pass_is_pure_map(planted):
     )
     assert "Exchange" not in plan
     assert "MapInPandas" in plan
-
-
-# ---------------------------------------------------------------------------
-# video_exact_groups — the df-cap blind-spot closer (staged r14).
-# ---------------------------------------------------------------------------
-EXACT_GROUPS_ORACLE = """
-WITH seq AS (
-    SELECT media_id,
-           md5(string_agg(
-               CAST(frame_index AS STRING) || ':' ||
-               CAST(fh_hi AS STRING) || ':' || CAST(fh_lo AS STRING),
-               ',' ORDER BY frame_index)) AS seq_digest,
-           CAST(count(*) AS BIGINT) AS n_frames
-    FROM frames GROUP BY media_id
-)
-SELECT seq_digest, CAST(min(media_id) AS BIGINT) AS rep_id,
-       CAST(count(DISTINCT media_id) AS BIGINT) AS n_ids,
-       CAST(max(n_frames) AS BIGINT) AS n_frames
-FROM seq GROUP BY seq_digest
-"""
-
-
-def _planted_frames(spark, n_copies: int):
-    """n_copies identical 3-frame videos + one distinct video."""
-    rows = []
-    for vid in range(n_copies):
-        for fi, (hi, lo) in enumerate([(11, 22), (33, 44), (55, 66)]):
-            rows.append((vid, fi, hi, lo))
-    rows += [(999, 0, 7, 8), (999, 1, 9, 10)]
-    return spark.createDataFrame(
-        rows, "media_id long, frame_index long, fh_hi long, fh_lo long"
-    )
-
-
-def test_exact_groups_collapse_identical_sequences(spark):
-    from pipeline_calculator_v3_spark.operators.videofp import (
-        video_exact_groups,
-    )
-
-    frames = _planted_frames(spark, n_copies=5)
-    got = {r.rep_id: (r.n_ids, r.n_frames)
-           for r in video_exact_groups(frames).collect()}
-    assert got == {0: (5, 3), 999: (1, 2)}
-
-
-def test_exact_groups_order_and_partitioning_invariant(spark):
-    from pipeline_calculator_v3_spark.operators.videofp import (
-        video_exact_groups,
-    )
-
-    frames = _planted_frames(spark, n_copies=4)
-    a = {(r.seq_digest, r.rep_id) for r in
-         video_exact_groups(frames).collect()}
-    b = {(r.seq_digest, r.rep_id) for r in
-         video_exact_groups(
-             frames.orderBy(F.desc("frame_index")).repartition(7)
-         ).collect()}
-    assert a == b
-
-
-def test_exact_groups_catch_what_the_df_cap_hides(spark):
-    """m copies > hash_df_cap: every shared frame hash is capped, so
-    video_dup_pairs reports NOTHING for the copy set — the documented
-    blind spot — while the sequence digest still collapses it."""
-    from pipeline_calculator_v3_spark.operators.videofp import (
-        video_dup_pairs,
-        video_exact_groups,
-    )
-
-    frames = _planted_frames(spark, n_copies=6)
-    pairs = video_dup_pairs(frames, min_aligned=2, hash_df_cap=4)
-    assert pairs.count() == 0
-    groups = {r.rep_id: r.n_ids
-              for r in video_exact_groups(frames).collect()}
-    assert groups[0] == 6
-
-
-def test_exact_groups_different_order_different_digest(spark):
-    from pipeline_calculator_v3_spark.operators.videofp import (
-        video_exact_groups,
-    )
-
-    rows = [
-        (1, 0, 11, 22), (1, 1, 33, 44),
-        (2, 0, 33, 44), (2, 1, 11, 22),   # same frames, swapped order
-    ]
-    frames = spark.createDataFrame(
-        rows, "media_id long, frame_index long, fh_hi long, fh_lo long"
-    )
-    assert video_exact_groups(frames).count() == 2
-
-
-def test_exact_groups_duckdb_replay(spark, duck):
-    from pipeline_calculator_v3_spark.operators.videofp import (
-        video_exact_groups,
-    )
-
-    frames = _planted_frames(spark, n_copies=3)
-    duck.register("frames", frames.toPandas())
-    got = {(r.seq_digest, r.rep_id, r.n_ids, r.n_frames)
-           for r in video_exact_groups(frames).collect()}
-    want = {tuple(r) for r in duck.execute(EXACT_GROUPS_ORACLE).fetchall()}
-    duck.unregister("frames")
-    assert got == want and len(got) == 2
