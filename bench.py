@@ -9,7 +9,8 @@ Prints ONE JSON line:
 BENCH_LOCAL_r{N}.json gets the same object plus "layers": per headline
 query, the perfbench/eventlog.py counter blocks of its build and execution
 in the pass that gave the reported minimum, folded from the session's
-event log (one job group per query, pass and phase).
+event log (one job group per query, pass and phase), each with the codegen
+compiles the JVM made in that phase.
 """
 
 from __future__ import annotations
@@ -229,18 +230,28 @@ def warm(spark, sf_dir: str) -> None:
         .groupBy("g").applyInPandas(lambda p: p, "g long, x long").count()
 
 
+def codegen_compiles(spark) -> int:
+    """Janino compiles so far in the driver JVM: one per generated class
+    that missed Spark's codegen cache (local executors share the JVM)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 @contextmanager
-def job_group(spark, group: str, spans: dict[str, tuple[int, int]]):
+def job_group(spark, group: str, spans: dict[str, tuple[int, int, int]]):
     """Run the block's jobs in ``group``; ``spans[group]`` gets the block's
-    (start, end) epoch ms, the event log's clock."""
+    (start, end) epoch ms, the event log's clock, and the codegen compiles
+    it made."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
+    compiles = codegen_compiles(spark)
     start = int(time.time() * 1000)
     try:
         yield
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-        spans[group] = (start, int(time.time() * 1000))
+        spans[group] = (start, int(time.time() * 1000),
+                        codegen_compiles(spark) - compiles)
 
 
 def build(spark, name: str, sf_dir: str, tag,
@@ -273,11 +284,12 @@ def timed(spark, name: str, sf_dir: str, tag,
 
 def fold_layers(log: eventlog.EventLog,
                 picks: dict[str, tuple[float, object]],
-                spans: dict[str, tuple[int, int]]) -> dict[str, dict]:
+                spans: dict[str, tuple[int, int, int]]) -> dict[str, dict]:
     """Per query, the counter blocks of the run ``picks[name] = (build_s,
-    tag)``: ``{"build": {build_s, …COUNTERS}, "exec": {…COUNTERS}}``.
-    Tasks, task-s and shuffle MB do not move with host CPU steal, so they
-    compare across rounds where wall time cannot.
+    tag)``: ``{"build": {build_s, …COUNTERS, codegen_compiles}, "exec":
+    {…COUNTERS, codegen_compiles}}``.  Tasks, task-s, shuffle MB and
+    codegen compiles do not move with host CPU steal, so they compare
+    across rounds where wall time cannot.
 
     A job whose group is not a span's (a streaming query's micro-batches
     run under the query's run id) counts in the span whose ``spans``
@@ -293,7 +305,7 @@ def fold_layers(log: eventlog.EventLog,
         if not submits:
             continue
         t = min(submits)
-        for span, (a, b) in spans.items():
+        for span, (a, b, _) in spans.items():
             if a <= t <= b:
                 adopted_jobs[span] += 1
                 adopted[span].update(
@@ -308,7 +320,8 @@ def fold_layers(log: eventlog.EventLog,
             eventlog.stages_of(log, group)
             + list(adopted.get(group, {}).values()),
             eventlog.jobs_of(log, group) + adopted_jobs.get(group, 0))
-        return {k: round(v, 3) for k, v in c.items()}
+        return {**{k: round(v, 3) for k, v in c.items()},
+                "codegen_compiles": spans[group][2]}
 
     return {
         name: {"build": {"build_s": round(build_s, 3),
@@ -321,7 +334,7 @@ def fold_layers(log: eventlog.EventLog,
 def measure(spark, sf_dir: str, sf: float) -> tuple[dict, dict, dict]:
     """The stdout record, per headline query the (build_s, tag) of the
     run that gave its reported minimum, and every job group's span."""
-    spans: dict[str, tuple[int, int]] = {}
+    spans: dict[str, tuple[int, int, int]] = {}
     # Per-query min of two passes: on this host one arbitrary query per
     # pass can eat a 5-20 s co-tenancy penalty that vanishes on re-run
     # (PERF_NOTES r05); single-pass totals of the same code swung 78-116 s.

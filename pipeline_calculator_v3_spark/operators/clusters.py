@@ -124,14 +124,15 @@ def connected_components(
             ids_sink=new_ids,
         )
         # convergence check every 2nd round (and on the last): halves the
-        # driver count() actions on still-converging graphs
+        # driver count() actions on still-converging graphs.  A plain
+        # count, not limit(1): Spark names a codegen'd limit's counter from
+        # a JVM-wide sequence, so each limit plan compiles new classes.
         converged = False
         if i % 2 == 1 or i == max_iter - 1:
             changed = (
                 new_labels.alias("n")
                 .join(labels.alias("o"), "id")
                 .where(F.col("n.component") != F.col("o.component"))
-                .limit(1)
                 .count()
             )
             converged = changed == 0

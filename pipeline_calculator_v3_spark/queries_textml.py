@@ -2769,16 +2769,18 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         vocab.select("tok", "tf", _bpe_chars("tok").alias("syms"))
     )
     # each step's winner rides along as constant merge_pair/merge_weight
-    # columns, so a limit(1) off the persisted frame recovers it without
-    # re-running the pair aggregate
+    # columns, so a distinct() off the persisted frame recovers it without
+    # re-running the pair aggregate (not limit(1): a codegen'd limit's
+    # counter is named from a JVM-wide sequence, so every run of a limit
+    # plan compiles new classes)
     s1 = persist_tracked(_bpe_step(v0, "syms", "tf"))
     b1 = s1.select(
         F.col("merge_pair").alias("pair"), F.col("merge_weight").alias("weight")
-    ).limit(1)
+    ).distinct()
     s2 = persist_tracked(_bpe_step(s1.select("tok", "tf", "syms"), "syms", "tf"))
     b2 = s2.select(
         F.col("merge_pair").alias("pair"), F.col("merge_weight").alias("weight")
-    ).limit(1)
+    ).distinct()
     v2 = s2
     rest = (
         v2.select(F.explode(_bpe_pairs(F.col("syms"))).alias("pair"), "tf")

@@ -75,6 +75,24 @@ def get_spark(app_name: str = "pipeline_calculator_v3_spark",
         .config(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
         )
+        # Compiled generated classes live in a JVM-wide LRU cache of this
+        # many entries (Spark default 100).  One pass generates ~115
+        # distinct classes on perfbench survey, ~160 on star and
+        # 1,800-2,100 on bench.py's 112-query headline suite at sf0.01, so
+        # at 100 every class is evicted before its next use and each warm
+        # pass re-runs Janino on nearly all of its code (survey 106, star
+        # 155, headline ~3,370 compiles per warm pass; Spark 4.1.2, 4
+        # cores).  4096 holds the headline cycle with room; the cost is
+        # ~14-16 MB more driver Metaspace after a headline pass.  A static
+        # conf: a session that already exists (a harness's own) keeps its
+        # value.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # The cache is keyed by source text, and a class name carries its
+        # whole-stage id, which AQE numbers in the order it plans stages:
+        # the same stage can be numbered differently on the next run (30-80
+        # headline recompiles per warm pass).  Unnumbered names keep the
+        # key stable; the plan still prints the ids.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow batches for every pandas UDF / toPandas boundary.

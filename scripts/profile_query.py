@@ -1,9 +1,10 @@
 #!/usr/bin/env python3
 """Per-query profiler: build each named query once in an event-logged,
 bench-style session (bench.py's warmup, job groups and noop sink), then
-print its wall, build and exec seconds, the counter block of each phase,
-the top stages by task-s with the plan nodes they ran, and the formatted
-plan of the frame that ran (to <plans-dir>/<query>_<tag>.txt if given).
+print its wall, build and exec seconds, the counter block of each phase
+(with the codegen compiles the phase made), the top stages by task-s with
+the plan nodes they ran, and the formatted plan of the frame that ran (to
+<plans-dir>/<query>_<tag>.txt if given).
 
 Usage:
     python scripts/profile_query.py q_a q_b ...

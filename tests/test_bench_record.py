@@ -53,14 +53,22 @@ def _log(tmp_path):
     return bench.read_log(str(tmp_path))
 
 
+# (start, end, codegen compiles) per job group; the windows hold no
+# stage's submission time, so they adopt no job
+SPANS = {"q_a:build:0": (0, 1, 3), "q_a:exec:0": (2, 3, 40),
+         "q_b:exec:0": (4, 5, 7), "q_b:build:1": (6, 7, 0),
+         "q_b:exec:1": (8, 9, 2)}
+
+
 def test_fold_gives_build_and_exec_blocks_per_query(tmp_path):
     layers = bench.fold_layers(_log(tmp_path),
-                               {"q_a": (0.5, 0), "q_b": (0.25, 1)}, {})
+                               {"q_a": (0.5, 0), "q_b": (0.25, 1)}, SPANS)
     assert set(layers) == {"q_a", "q_b"}
     for rec in layers.values():
         assert set(rec) == {"build", "exec"}
-        assert set(rec["build"]) == {"build_s", *eventlog.COUNTERS}
-        assert set(rec["exec"]) == set(eventlog.COUNTERS)
+        assert set(rec["build"]) == {"build_s", *eventlog.COUNTERS,
+                                     "codegen_compiles"}
+        assert set(rec["exec"]) == {*eventlog.COUNTERS, "codegen_compiles"}
     a, b = layers["q_a"], layers["q_b"]
     assert (a["build"]["build_s"], a["build"]["jobs"], a["build"]["tasks"],
             a["build"]["task_s"]) == (0.5, 1, 2, 0.2)
@@ -70,6 +78,17 @@ def test_fold_gives_build_and_exec_blocks_per_query(tmp_path):
             b["build"]["tasks"]) == (0.25, 1, 1)
     assert (b["exec"]["jobs"], b["exec"]["tasks"],
             b["exec"]["failed_tasks"]) == (1, 6, 1)
+
+
+def test_each_phase_carries_its_own_codegen_compiles(tmp_path):
+    """A phase's count is the JVM compile delta of its own span: the
+    picked pass's, never the other pass's or the other phase's."""
+    layers = bench.fold_layers(_log(tmp_path),
+                               {"q_a": (0.5, 0), "q_b": (0.25, 1)}, SPANS)
+    assert {(q, phase): rec[phase]["codegen_compiles"]
+            for q, rec in layers.items() for phase in rec} == {
+        ("q_a", "build"): 3, ("q_a", "exec"): 40,
+        ("q_b", "build"): 0, ("q_b", "exec"): 2}
 
 
 def test_streaming_jobs_count_in_the_span_they_ran_in(tmp_path):
@@ -96,7 +115,7 @@ def test_streaming_jobs_count_in_the_span_they_ran_in(tmp_path):
     ]
     (tmp_path / "local-1").write_text(
         "".join(json.dumps(e) + "\n" for e in events))
-    spans = {"q_s:build:0": (900, 2000), "q_s:exec:0": (2900, 3500)}
+    spans = {"q_s:build:0": (900, 2000, 0), "q_s:exec:0": (2900, 3500, 0)}
     layers = bench.fold_layers(bench.read_log(str(tmp_path)),
                                {"q_s": (1.1, 0)}, spans)
     build, exe = layers["q_s"]["build"], layers["q_s"]["exec"]
