@@ -10,7 +10,8 @@ BENCH_LOCAL_r{N}.json gets the same object plus "layers": per headline
 query, the perfbench/eventlog.py counter blocks of its build and execution
 in the pass that gave the reported minimum, folded from the session's
 event log (one job group per query, pass and phase), each with the codegen
-compiles the JVM made in that phase.
+compiles the JVM made in that phase, and "jvm": the driver JVM's class
+archive state, classes loaded and JIT milliseconds, read after the warmup.
 """
 
 from __future__ import annotations
@@ -237,6 +238,35 @@ def codegen_compiles(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
+def class_archive_state(use_shared_spaces: str, shared_archive_file: str,
+                        archive_classes_at_exit: str) -> str:
+    """What the driver JVM does with session.py's class archive, from the
+    values of its HotSpot options of those names: "dumping" it at exit,
+    "mapped" (the JVM rejects a stale archive by turning UseSharedSpaces
+    off), or "off"."""
+    if archive_classes_at_exit:
+        return "dumping"
+    if use_shared_spaces == "true" and shared_archive_file:
+        return "mapped"
+    return "off"
+
+
+def jvm_record(spark) -> dict:
+    """The driver JVM's class archive state, the classes it has loaded and
+    the milliseconds its JIT compilers have run so far."""
+    jvm = spark._jvm
+    mf = jvm.java.lang.management.ManagementFactory
+    hotspot = mf.getPlatformMXBean(jvm.java.lang.Class.forName(
+        "com.sun.management.HotSpotDiagnosticMXBean"))
+    return {
+        "class_archive": class_archive_state(*(
+            hotspot.getVMOption(name).getValue() for name in
+            ("UseSharedSpaces", "SharedArchiveFile", "ArchiveClassesAtExit"))),
+        "classes_loaded": mf.getClassLoadingMXBean().getTotalLoadedClassCount(),
+        "jit_ms": mf.getCompilationMXBean().getTotalCompilationTime(),
+    }
+
+
 @contextmanager
 def job_group(spark, group: str, spans: dict[str, tuple[int, int, int]]):
     """Run the block's jobs in ``group``; ``spans[group]`` gets the block's
@@ -420,6 +450,7 @@ def main() -> None:
         spark = get_spark("pcv3-bench")
         spark.sparkContext.setLogLevel("ERROR")
         warm(spark, sf_dir)
+        jvm = jvm_record(spark)
         out, picks, spans = measure(spark, sf_dir, sf)
         spark.stop()  # flushes the event log
         layers = fold_layers(read_log(log_dir), picks, spans)
@@ -430,7 +461,7 @@ def main() -> None:
     # authoritative for rc/gates.
     local = os.path.join(REPO, f"BENCH_LOCAL_r{_this_round():02d}.json")
     with open(local, "w") as f:
-        json.dump({**out, "layers": layers}, f, indent=1)
+        json.dump({**out, "jvm": jvm, "layers": layers}, f, indent=1)
         f.write("\n")
     # Truncation-proof trailer (VERDICT r14 #1/#9): a fixed-size line with
     # the totals a 2000-char tail capture cannot lose.  Deliberately NOT a

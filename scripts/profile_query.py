@@ -1,8 +1,10 @@
 #!/usr/bin/env python3
 """Per-query profiler: build each named query once in an event-logged,
 bench-style session (bench.py's warmup, job groups and noop sink), then
-print its wall, build and exec seconds, the counter block of each phase
-(with the codegen compiles the phase made), the top stages by task-s with
+print the driver JVM's line (bench.jvm_record: class archive state,
+classes loaded, JIT ms after the warmup) and, per query, its wall, build
+and exec seconds, the counter block of each phase (with the codegen
+compiles the phase made), the top stages by task-s with
 the plan nodes they ran, and the formatted plan of the frame that ran (to
 <plans-dir>/<query>_<tag>.txt if given).
 
@@ -43,6 +45,7 @@ def main() -> None:
         spark = get_spark("pcv3-profile")
         spark.sparkContext.setLogLevel("ERROR")
         bench.warm(spark, sf_dir)
+        jvm = bench.jvm_record(spark)
         formatted = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
             .fromString("formatted")
         for name in args.names:
@@ -56,6 +59,7 @@ def main() -> None:
     layers = bench.fold_layers(
         log, {name: (r[0], 0) for name, r in runs.items()}, spans)
 
+    print("jvm: " + "  ".join(f"{k} {v}" for k, v in jvm.items()))
     for name, (build_s, exec_s, plan) in runs.items():
         print(f"\n=== {name}: wall {build_s + exec_s:.3f}s "
               f"(build {build_s:.3f}s, exec {exec_s:.3f}s) ===")

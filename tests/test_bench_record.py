@@ -121,3 +121,16 @@ def test_streaming_jobs_count_in_the_span_they_ran_in(tmp_path):
     build, exe = layers["q_s"]["build"], layers["q_s"]["exec"]
     assert (build["jobs"], build["tasks"], build["task_s"]) == (2, 4, 0.7)
     assert (exe["jobs"], exe["tasks"], exe["task_s"]) == (2, 2, 0.45)
+
+
+def test_class_archive_state_from_hotspot_options():
+    """The "jvm" record's class_archive, from the HotSpot option values
+    UseSharedSpaces, SharedArchiveFile and ArchiveClassesAtExit."""
+    state = bench.class_archive_state
+    assert state("true", "", "/c/k.123.jsa") == "dumping"
+    assert state("true", "/c/k.jsa", "") == "mapped"
+    # a stale or rejected archive: the JVM turns sharing off
+    assert state("false", "/c/k.jsa", "") == "off"
+    # only the JDK's own base archive, or no sharing at all
+    assert state("true", "", "") == "off"
+    assert state("false", "", "") == "off"
