@@ -1,8 +1,9 @@
 """session.get_spark's class-data-sharing archive: the first launch dumps
 the driver JVM's classes to a per-process file at exit, the next one
 publishes that file and maps it, an incomplete file is never mapped, a conf
-dir with real settings launches as before, a caller's driver options still
-reach the JVM, and a dumping CLI run prints no JVM log line.
+dir with real settings launches as before, the launch's own and a caller's
+driver options reach the JVM, and a dumping CLI run prints no JVM log
+line.
 
 Each case starts its drivers as subprocesses with their own
 XDG_CACHE_HOME, so the archive under test is never the user's own."""
@@ -127,6 +128,7 @@ def test_first_launch_dumps_and_the_next_maps(tmp_path):
     assert _state(second) == "mapped"
     assert caller in second["args"]
     assert f"-XX:SharedArchiveFile={final}" in second["args"]
+    assert "-XX:GCLockerRetryAllocationCount=100" in second["args"]
     assert second["rows"] == first["rows"]
     # published, and the stray pid files are gone
     assert _header(final) == session._CDS_MAGIC
