@@ -225,7 +225,7 @@ def _analyze(args: argparse.Namespace) -> int:
 
 
 def _query(args: argparse.Namespace) -> int:
-    from .caching import release_caches
+    from .caching import persist_tracked, release_caches
     from .queries import QUERIES
     from .session import get_spark
 
@@ -249,9 +249,8 @@ def _query(args: argparse.Namespace) -> int:
         return 0
     # the write/show/count fan-out would otherwise execute the query up
     # to three times (advice r10) — persist once, release at the end
-    fanout = int(bool(args.out)) + int(args.limit > 0) + 1
-    if fanout > 1:
-        df = df.persist()
+    if args.out or args.limit > 0:
+        df = persist_tracked(df)
     try:
         if args.out:
             df.write.mode("overwrite").parquet(args.out)
@@ -260,11 +259,10 @@ def _query(args: argparse.Namespace) -> int:
             df.show(args.limit, truncate=False)
         print(f"rows: {df.count()}")
     finally:
-        if fanout > 1:
-            df.unpersist()
-        # registry queries persist_tracked their internals; nothing this
-        # package pins may outlive the query (caching.py contract — the
-        # _analyze path already released, review r12)
+        # frees the fan-out persist and whatever the registry query pinned
+        # internally; nothing this package pins may outlive the query
+        # (caching.py contract — the _analyze path already released, review
+        # r12)
         release_caches(spark)
     return 0
 

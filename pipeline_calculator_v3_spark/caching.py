@@ -1,14 +1,21 @@
 """Cache/checkpoint lifecycle tracking — nothing this package persists may
 outlive the query that needed it.
 
-Two kinds of pinned executor state exist in the engine:
+The registry holds one kind of entry: a pinned DataFrame.  It is pinned
+one of two ways:
 
-- ``DataFrame.persist`` (dedup staging, overlap segments/hits): released by
-  ``DataFrame.unpersist`` — but only if someone remembers the handle.
-- ``DataFrame.localCheckpoint`` (connected-components lineage cuts): its
-  backing blocks belong to an *internal* RDD that ``df.unpersist()`` /
-  ``df.rdd.unpersist()`` cannot reach; the only handle is that RDD's id,
-  which the checkpointed frame's plan exposes as a ``LogicalRDD``.
+- ``persist_tracked`` (dedup staging, overlap segments/hits): freed by
+  ``DataFrame.unpersist``.
+- ``local_checkpoint_tracked`` (the lineage cuts of connected components,
+  PageRank and the pHash recursion): its blocks belong to an *internal*
+  RDD that ``df.unpersist()`` / ``df.rdd.unpersist()`` cannot reach.  The
+  only handle is that RDD's id, which the checkpointed frame's plan
+  exposes as a ``LogicalRDD``; it is read once, at checkpoint time, and
+  kept with the frame.
+
+``unpersist_tracked(df)`` frees one pinned frame, either kind, and drops
+it from the registry: an iterative operator frees each superseded round
+this way.  ``release_caches(spark)`` frees whatever is still registered.
 
 A tracked cache is sized by AQE from its measured bytes, like any other
 shuffle: ``get_spark`` sets ``canChangeCachedPlanOutputPartitioning`` so
@@ -16,8 +23,7 @@ the cached plan may coalesce below ``spark.sql.shuffle.partitions`` (a tiny
 cache is one or two partitions, not 32), and every plan that reads the
 cache inherits that layout.
 
-Operators register everything they pin here; ``release_caches(spark)``
-frees it all.  Call it strictly AFTER the final materialization of a
+Call ``release_caches`` strictly AFTER the final materialization of a
 query's result — a localCheckpoint's lineage is cut, so once its blocks
 are dropped the checkpointed frame is unreadable (CHECKPOINT_RDD_BLOCK_ID_
 NOT_FOUND), it does not recompute.  bench.py releases between queries;
@@ -26,105 +32,85 @@ long-lived apps should release per analysis run.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
-import threading
-
-# guards the registry lists: an unsynchronized enumerate-then-del could
-# delete the WRONG handle when another thread mutates the list between
-# the find and the del (review r12)
+# guards the registry: an unsynchronized enumerate-then-del could delete
+# the WRONG entry when another thread mutates the list between the find
+# and the del (review r12)
 _REG_LOCK = threading.Lock()
 
-_TRACKED_DFS: list[DataFrame] = []
-_TRACKED_IDS: list[int] = []
+# (frame, RDD id of its localCheckpoint, or None for a persisted frame)
+_PINNED: list[tuple[DataFrame, int | None]] = []
 
 
-def persist_tracked(df: DataFrame) -> DataFrame:
-    """``df.persist(MEMORY_AND_DISK_DESER)`` + register the handle for
-    ``release_caches``."""
-    df.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+def _pin(df: DataFrame, rdd_id: int | None) -> DataFrame:
     with _REG_LOCK:
-        _TRACKED_DFS.append(df)
+        _PINNED.append((df, rdd_id))
     return df
 
 
-def unpersist_tracked(df: DataFrame) -> None:
-    """``df.unpersist()`` + DEREGISTER the handle.  Batch-scoped callers
-    (the streaming ingest loop) must use this instead of a bare
-    ``df.unpersist()``: unpersist alone frees the executor blocks but the
-    module-global registry keeps the driver-side DataFrame object (plus
-    its JVM plan references) alive forever — 4 dead handles per
-    micro-batch on a continuous stream (review r11)."""
-    df.unpersist()
-    with _REG_LOCK:
-        for i, tracked in enumerate(_TRACKED_DFS):
-            if tracked is df:
-                del _TRACKED_DFS[i]
-                break
-
-
-def local_checkpoint_tracked(
-    df: DataFrame, ids_sink: list[int] | None = None
-) -> DataFrame:
-    """Eager localCheckpoint whose blocks ``release_caches`` can free.
-
-    The new RDD id is recorded globally, or into ``ids_sink`` when the caller
-    manages the lifetime itself (the connected-components loop frees each
-    round's checkpoint as soon as the next round supersedes it).
-
-    The id comes straight off the checkpointed frame's ``LogicalRDD`` (one
-    py4j call); tests/test_caching.py checks it is exactly the RDD the
-    checkpoint added to ``getPersistentRDDs``.
-    """
-    out = df.localCheckpoint(eager=True)
-    rdd_id = out._jdf.queryExecution().analyzed().rdd().id()
-    if ids_sink is not None:
-        ids_sink.append(rdd_id)
+def _free(spark: SparkSession, df: DataFrame, rdd_id: int | None) -> None:
+    if rdd_id is None:
+        df.unpersist()
     else:
-        with _REG_LOCK:
-            _TRACKED_IDS.append(rdd_id)
-    return out
+        # SparkContext.unpersistRDD is Scala package-private, which
+        # compiles to a public JVM method: one py4j call, non-blocking
+        spark.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)
 
 
-def track_ids(ids: list[int]) -> None:
-    """Hand caller-managed checkpoint ids over to ``release_caches``."""
+def persist_tracked(df: DataFrame) -> DataFrame:
+    """``df.persist(MEMORY_AND_DISK_DESER)`` + register the frame."""
+    df.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    return _pin(df, None)
+
+
+def local_checkpoint_tracked(df: DataFrame) -> DataFrame:
+    """Eager localCheckpoint, registered so ``unpersist_tracked`` or
+    ``release_caches`` can free its blocks.
+
+    The RDD id comes straight off the checkpointed frame's ``LogicalRDD``
+    (one py4j call); tests/test_caching.py checks it is exactly the RDD the
+    checkpoint added to ``getPersistentRDDs``."""
+    out = df.localCheckpoint(eager=True)
+    return _pin(out, out._jdf.queryExecution().analyzed().rdd().id())
+
+
+def unpersist_tracked(df: DataFrame) -> None:
+    """Free one pinned frame and DEREGISTER it.  Batch-scoped callers (the
+    streaming ingest loop, the iterative operators' superseded rounds) must
+    use this instead of a bare ``df.unpersist()``: unpersist alone frees
+    the executor blocks but the module-global registry keeps the
+    driver-side DataFrame object (plus its JVM plan references) alive
+    forever — 4 dead handles per micro-batch on a continuous stream
+    (review r11) — and cannot reach a checkpoint's blocks at all."""
+    rdd_id = None
     with _REG_LOCK:
-        _TRACKED_IDS.extend(ids)
-
-
-def unpersist_ids(spark: SparkSession, ids: list[int]) -> None:
-    """Drop the cached blocks of specific RDD ids (localCheckpoint storage).
-
-    ``SparkContext.unpersistRDD`` is Scala package-private, which compiles
-    to a public JVM method — one py4j call per id, no jmap round-trips."""
-    jsc = spark.sparkContext._jsc.sc()
-    for i in ids:
-        jsc.unpersistRDD(i, False)  # non-blocking
+        for i, (tracked, tracked_id) in enumerate(_PINNED):
+            if tracked is df:
+                rdd_id = tracked_id
+                del _PINNED[i]
+                break
+    _free(df.sparkSession, df, rdd_id)
 
 
 def release_caches(spark: SparkSession) -> None:
-    """Unpersist every cache/checkpoint the package registered.
+    """Free every frame still registered.
 
     Safe to call repeatedly; only call after the final materialization of the
     DataFrames built on those caches (checkpointed frames do NOT recompute).
     """
-    global _TRACKED_DFS, _TRACKED_IDS
+    global _PINNED
+    # swap the list out under the lock: a frame registered between an
+    # unlocked read and an unlocked rebind would be silently dropped — a
+    # leaked block, the exact leak class this registry exists to close
+    # (review r12)
     with _REG_LOCK:
-        dfs, _TRACKED_DFS = _TRACKED_DFS, []
-    for df in dfs:
+        pinned, _PINNED = _PINNED, []
+    for df, rdd_id in pinned:
         try:
-            df.unpersist()
+            _free(spark, df, rdd_id)
         except Exception:
             pass  # session already stopped — nothing to release
-    # swap the ids list out under the lock, like _TRACKED_DFS above: an id
-    # appended between an unlocked read and an unlocked rebind would be
-    # silently dropped — a leaked checkpoint block, the exact leak class
-    # this registry exists to close (review r12)
-    with _REG_LOCK:
-        ids, _TRACKED_IDS = _TRACKED_IDS, []
-    if ids:
-        try:
-            unpersist_ids(spark, ids)
-        except Exception:
-            pass

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..caching import local_checkpoint_tracked, track_ids, unpersist_ids
+from ..caching import local_checkpoint_tracked, unpersist_tracked
 
 
 def connected_components(
@@ -36,11 +36,14 @@ def connected_components(
     Converges in O(log diameter) rounds via pointer-jumping; pass ``stats``
     to receive ``{"rounds": n}`` back for round-budget assertions.
 
-    Checkpoint lifecycle: each round's labels checkpoint is freed as soon as
-    the next round supersedes it (peak pinned state = 2 label tables + the
-    edge table, not O(rounds)); the edge checkpoint is freed on return.  The
-    FINAL labels checkpoint backs the returned frame, so it stays pinned
-    until the caller materializes and calls ``caching.release_caches``."""
+    Checkpoint lifecycle: every checkpoint is registered with ``caching``
+    and freed through it.  Each round's labels checkpoint is freed
+    (``unpersist_tracked``) as soon as the next round supersedes it (peak
+    pinned state = 2 label tables + the edge table, not O(rounds)); the
+    input-edge checkpoint is freed once the symmetric edge table is built,
+    and that table on return.  The FINAL labels checkpoint backs the
+    returned frame, so it stays registered until the caller materializes
+    and calls ``caching.release_caches``."""
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     converged = False
@@ -50,10 +53,8 @@ def connected_components(
     # within-cluster cosine) pair plan would execute twice inside the sym
     # checkpoint job (measured 2x the whole pair stage on the SemDeDup
     # twin, r08)
-    e_ids: list[int] = []
     e0 = local_checkpoint_tracked(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
-        ids_sink=e_ids,
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     )
     # Pin ONE hash-partitioning family across all rounds (the pagerank
     # move, guide §2.4): sym by its join side ``b``, labels by ``id``,
@@ -67,7 +68,6 @@ def connected_components(
     # round, trading that one vertex-scale exchange for the two
     # labels-side exchanges it removes.
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym_ids: list[int] = []
     sym = local_checkpoint_tracked(
         e0.unionAll(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
@@ -76,17 +76,14 @@ def connected_components(
         # checkpoint preserves ordering, so every round's sym-side SMJ
         # sort collapses to a no-op instead of re-sorting the edge-scale
         # table per pointer-jump round (VERDICT r14 #8)
-        .sortWithinPartitions("b"),
-        ids_sink=sym_ids,
+        .sortWithinPartitions("b")
     )
-    unpersist_ids(spark, e_ids)
-    labels_ids: list[int] = []
+    unpersist_tracked(e0)
     labels = local_checkpoint_tracked(
         sym.select(F.col("a").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
-        .repartition(n_parts, "id"),
-        ids_sink=labels_ids,
+        .repartition(n_parts, "id")
     )
     rounds = 0
     for i in range(max_iter):
@@ -108,7 +105,6 @@ def connected_components(
         lmap = cand.select(
             F.col("id").alias("lid"), F.col("component").alias("lcomp")
         )
-        new_ids: list[int] = []
         new_labels = local_checkpoint_tracked(
             cand.join(lmap, cand.component == lmap.lid, "left")
             .select(
@@ -120,8 +116,7 @@ def connected_components(
             # re-pin (id, P): the jump join re-keyed by component, so the
             # next round's joins (and the convergence diff) would re-shuffle
             # both label tables without this
-            .repartition(n_parts, "id"),
-            ids_sink=new_ids,
+            .repartition(n_parts, "id")
         )
         # convergence check every 2nd round (and on the last): halves the
         # driver count() actions on still-converging graphs.  A plain
@@ -138,22 +133,21 @@ def connected_components(
             converged = changed == 0
         # new_labels is fully materialized (eager) and the convergence join
         # above was the old checkpoint's last read — free it now
-        unpersist_ids(spark, labels_ids)
-        labels, labels_ids = new_labels, new_ids
+        unpersist_tracked(labels)
+        labels = new_labels
         if converged:
             break
-    unpersist_ids(spark, sym_ids)
+    unpersist_tracked(sym)
     if not converged:
         # raise, don't guess (review r06): exhausted iterations mean labels
         # are still propagating — returning them would silently keep
         # multiple survivors per cluster, a partition-dependent wrong answer
-        unpersist_ids(spark, labels_ids)
+        unpersist_tracked(labels)
         raise RuntimeError(
             f"connected_components did not converge within max_iter="
             f"{max_iter} rounds — raise max_iter (label propagation needs "
             f"O(log diameter) pointer-jumping rounds)"
         )
-    track_ids(labels_ids)  # final labels: freed by release_caches()
     if stats is not None:
         stats["rounds"] = rounds
     return labels

@@ -36,7 +36,6 @@ def dense_ids(
     df: DataFrame,
     order_by: list[str],
     id_col: str = "rid",
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """``df`` + a dense BIGINT ``id_col`` in [0, N) ordered by
     ``order_by`` — semantics of a global row_number, physical plan of a
@@ -50,9 +49,7 @@ def dense_ids(
         # contract as interval_bin_join and sample_k_per_key)
         raise ValueError("'_pid' and '_off' are reserved by dense_ids")
     spark = df.sparkSession
-    parts = n_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     from ..caching import persist_tracked
 
     ranged = df.repartitionByRange(parts, *[F.col(c) for c in order_by])

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..caching import local_checkpoint_tracked, track_ids, unpersist_ids
+from ..caching import local_checkpoint_tracked, unpersist_tracked
 
 _SIZE_SUFFIX = {
     "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20, "mb": 1 << 20,
@@ -67,7 +67,6 @@ def pagerank(
     # build time and carry it inside the ranks frame, so the per-round
     # dangling-mass term collapses from a distinct + anti-join exchange
     # (the r05 shape) into a bare single-row aggregate over ranks.
-    vertices_ids: list[int] = []
     vertices = local_checkpoint_tracked(
         e.select(F.col("src").alias("id"))
         .unionAll(e.select(F.col("dst").alias("id")))
@@ -78,8 +77,7 @@ def pagerank(
             "id",
             "left",
         )
-        .select("id", (~F.coalesce(F.col("has_out"), F.lit(False))).alias("dangling")),
-        ids_sink=vertices_ids,
+        .select("id", (~F.coalesce(F.col("has_out"), F.lit(False))).alias("dangling"))
     )
     n = vertices.count()
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
@@ -114,20 +112,16 @@ def pagerank(
             -(-n // 65536),
         ),
     )
-    links_ids: list[int] = []
     links = local_checkpoint_tracked(
         e.join(out_deg, "src")
         .select("src", "dst", "deg")
         .repartition(n_parts, "src")
-        .sortWithinPartitions("src"),
-        ids_sink=links_ids,
+        .sortWithinPartitions("src")
     )
-    ranks_ids: list[int] = []
     ranks = local_checkpoint_tracked(
         vertices.withColumn("rank", F.lit(1.0))
         .repartition(n_parts, "id")
-        .sortWithinPartitions("id"),
-        ids_sink=ranks_ids,
+        .sortWithinPartitions("id")
     )
     # Deliberate join strategy for the per-round rank flow (guide §3.1):
     # the checkpointed sides carry no size statistics (LogicalRDD), so the
@@ -166,7 +160,6 @@ def pagerank(
                 F.sum(F.when(F.col("dangling"), F.col("rank"))), F.lit(0.0)
             ).alias("dm")
         )
-        new_ids: list[int] = []
         new_ranks = local_checkpoint_tracked(
             ranks.select("id", "dangling")
             .join(contrib, F.col("id") == contrib.dst, "left")
@@ -179,15 +172,13 @@ def pagerank(
                     + damping
                     * (F.coalesce(F.col("inflow"), F.lit(0.0)) + F.col("dm") / n)
                 ).alias("rank"),
-            ),
-            ids_sink=new_ids,
+            )
         )
-        unpersist_ids(ranks.sparkSession, ranks_ids)
-        ranks, ranks_ids = new_ranks, new_ids
-    unpersist_ids(ranks.sparkSession, vertices_ids)
-    unpersist_ids(ranks.sparkSession, links_ids)
-    # the FINAL checkpoint backs the returned frame: register it so
-    # release_caches can free it after the caller materializes (same
+        unpersist_tracked(ranks)
+        ranks = new_ranks
+    unpersist_tracked(vertices)
+    unpersist_tracked(links)
+    # the FINAL checkpoint backs the returned frame: it stays registered,
+    # so release_caches frees it after the caller materializes (same
     # contract as connected_components' final labels table)
-    track_ids(ranks_ids)
     return ranks.select("id", "rank")

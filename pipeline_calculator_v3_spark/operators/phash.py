@@ -66,7 +66,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..shipping import ensure_pkg_shipped
@@ -164,16 +164,16 @@ def ahash_pairs(
     is LSH-style best-effort.  Invalid rows never match.
 
     All recursion frames are metadata-light: rows are (grp STRING, rest
-    BIGINT, hi, lo), and only members of over-cap groups ever enter the
-    next level.
+    BIGINT, hi, lo, n) with ``n`` the row's group size, and only members
+    of over-cap groups ever enter the next level.
 
     Lifetime contract (advice r13): unlike most operators this call
-    executes EAGERLY (one stats job per recursion level, plus
-    localCheckpoint actions on deep frontiers), and the returned
-    DataFrame references persisted/localCheckpoint state that does NOT
-    recompute once ``caching.release_caches`` drops it — materialize the
-    result (collect/write) BEFORE releasing caches, the caching.py
-    contract."""
+    executes EAGERLY (one stats job per recursion level above the
+    structural floor, one localCheckpoint per level below the first), and
+    the returned DataFrame references persisted/localCheckpoint state that
+    stays registered with ``caching`` and does NOT recompute once
+    ``caching.release_caches`` drops it — materialize the result
+    (collect/write) BEFORE releasing caches, the caching.py contract."""
     if max_hamming < 0:
         raise ValueError("max_hamming must be >= 0")
     if bucket_cap < 1:
@@ -230,65 +230,57 @@ def ahash_pairs(
 
     pair_frames = []
     pending = {48: level0}
-    level0_frame = True
     while pending:
         width = max(pending)
-        frame = pending.pop(width)
-        if level0_frame:
-            # Level 0 is one explode away from the persisted distinct set
-            # (cheap map-side re-derivation per consumer); checkpointing it
-            # would materialize 4N banded rows twice.
-            level0_frame = False
-        else:
+        # Each row carries its group's size, so a level splits into cold
+        # and hot groups with a filter.  A hot-key table joined back by
+        # broadcast builds a multi-MB hash relation per level and consumer;
+        # at bucket_cap=1 those filled most of an 8 GB driver heap.
+        frame = pending.pop(width).withColumn(
+            "n", F.count(F.lit(1)).over(Window.partitionBy("grp"))
+        )
+        # Level 0 (width 48) is one explode away from the persisted
+        # distinct set (cheap map-side re-derivation per consumer);
+        # checkpointing it would materialize 4N banded rows twice.
+        if width < 48:
             # Lineage cut per recursion level: the frontier is metadata-
             # light (hot-group members only), but chained explode+union
             # lineage across levels grows the logical plan super-linearly —
             # at deep recursion the plan string itself OOMs the driver
             # before any data does (measured with bucket_cap=1).  An eager
-            # localCheckpoint keeps every level's plan one hop deep.
+            # localCheckpoint keeps every level's plan one hop deep, and
+            # keeps the window's grp partitioning, so this level's stats,
+            # filters and pair self-joins read it without an exchange.
             frame = local_checkpoint_tracked(frame)
-            # no isEmpty probe here: the per-level stats aggregate below
-            # detects the empty frontier in the same single job
-        # counts is bounded metadata at EVERY scale: level 0 has at most
-        # 4 x 2^16 rows, deeper levels at most the (small) hot frontier —
-        # persist so the hot set is computed once, not once per consumer.
-        # ONE aggregate job decides this level's shape — group count
-        # (empty frame -> skip) and over-cap count fold the previous
-        # frame.isEmpty() / hot.isEmpty() actions into a single pass,
-        # and on the common no-hot path `counts` never persists (the
-        # level-0 aggregate over 4N banded rows was materializing even
-        # when nothing exceeded the cap; r13 clawback) and the
-        # broadcast-anti-join disappears entirely.
-        counts = frame.groupBy("grp").agg(F.count(F.lit(1)).alias("n"))
-        stats = counts.agg(
-            F.count(F.lit(1)).alias("n_groups"),
-            F.count_if(F.col("n") > bucket_cap).alias("n_hot"),
-        ).first()
+        if width < 4:
+            # Structural floor: members agree on 64-width >= 61 bits, so a
+            # group holds <= 2^3 distinct hashes — all-pairs is trivial
+            # regardless of the cap.
+            pair_frames.append(_grp_pairs(frame))
+            continue
+        # ONE aggregate job decides this level's shape: group count
+        # (empty frame -> skip) and over-cap count.  Grouping by grp never
+        # reads `n`, and neither does the no-hot path's pair join, so at
+        # level 0 the optimizer prunes the window from both.
+        stats = (
+            frame.groupBy("grp").agg(F.count(F.lit(1)).alias("c"))
+            .agg(
+                F.count(F.lit(1)).alias("n_groups"),
+                F.count_if(F.col("c") > bucket_cap).alias("n_hot"),
+            )
+            .first()
+        )
         if stats["n_groups"] == 0:
             continue
         if stats["n_hot"] == 0:
             pair_frames.append(_grp_pairs(frame))
             continue
-        # hot path: counts feeds the anti-join and the semi-join —
-        # persist so the groupBy computes once, not twice
-        counts = persist_tracked(counts)
-        hot = counts.where(F.col("n") > bucket_cap)
-        cold = frame.join(F.broadcast(hot.select("grp")), "grp", "left_anti")
-        pair_frames.append(_grp_pairs(cold))
-        if width < 4:
-            # Structural floor: members agree on 64-width >= 61 bits, so a
-            # group holds <= 2^3 distinct hashes — all-pairs is trivial
-            # regardless of the cap.
-            hotm = frame.join(
-                F.broadcast(hot.select("grp")), "grp", "left_semi"
-            )
-            pair_frames.append(_grp_pairs(hotm))
-            continue
+        pair_frames.append(_grp_pairs(frame.where(F.col("n") <= bucket_cap)))
+        hotm = frame.where(F.col("n") > bucket_cap)
         # Recurse: re-band the unmatched `width` bits into four sub-bands
         # (first gets the remainder).  Matching sub-band m removes its
         # bits from `rest`; the new width differs for m=0 when width % 4
         # != 0, so frames merge into `pending` keyed by remaining width.
-        hotm = frame.join(F.broadcast(hot.select("grp")), "grp", "left_semi")
         base = width // 4
         widths = [width - 3 * base, base, base, base]
         offsets = [0, widths[0], widths[0] + base, widths[0] + 2 * base]

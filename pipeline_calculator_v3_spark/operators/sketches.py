@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import persist_tracked, unpersist_tracked
+
 
 def mg_kernel(capacity: int):
     """Partition-local Misra-Gries pass: one bounded summary frame per
@@ -91,9 +93,9 @@ def misra_gries_topk(
         raise ValueError("need capacity > k > 0")
     values = df.select(F.col(col).alias("value"))
     value_type = values.schema["value"].dataType.simpleString()
-    summaries = values.mapInPandas(
+    summaries = persist_tracked(values.mapInPandas(
         mg_kernel(capacity), f"value {value_type}, est bigint, n_part bigint"
-    ).persist()
+    ))
     try:
         # ALL survivors are candidates: at most capacity rows per
         # partition, so the candidate table is bounded by capacity x
@@ -111,7 +113,7 @@ def misra_gries_topk(
         )
         n_total = summaries.agg(F.sum("n_part")).first()[0] or 0
     finally:
-        summaries.unpersist()
+        unpersist_tracked(summaries)
     exact.sort(key=lambda r: (-r["n"], r["value"]))
     top = exact[:k]
     covered = sum(r["n"] for r in exact)

@@ -75,19 +75,6 @@ _CDS_LOG_OFF = "-Xlog:cds=off -Xlog:cds+dynamic=off"  # the JVM shares stdout
 _CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
                   "SPARK_CLASSPATH")
 
-# G1 fails an allocation that needs a GC once it has stalled twice (JDK
-# 17's default) waiting for threads to leave JNI critical sections, which
-# local tasks enter back to back.  tests/test_phash.py's cap=1 case, whose
-# ~190 broadcast builds fill ~6 GB of the heap with 4 MB+ arrays, failed
-# that way ("Retried waiting for GCLocker too often allocating 16777218
-# words", then "Not enough memory to build and broadcast the table") in 3
-# of 6 fresh sessions with the archive, and in 0 of 6 with 100 stalls
-# allowed (a long session repeating it can still fail on a 128 MB page).
-# It rides on the archive's options: a launch without one is unchanged.
-_GCLOCKER_RETRIES = ("-XX:+UnlockDiagnosticVMOptions "
-                     "-XX:GCLockerRetryAllocationCount=100")
-
-
 def _cds_dir() -> str:
     cache = os.environ.get("XDG_CACHE_HOME") or os.path.join(
         os.path.expanduser("~"), ".cache")
@@ -295,7 +282,6 @@ def get_spark(app_name: str = "pipeline_calculator_v3_spark",
         return builder.getOrCreate()
     java_opts, empty_conf = archive
     # Spark puts defaultJavaOptions before a caller's --driver-java-options
-    builder = builder.config("spark.driver.defaultJavaOptions",
-                             f"{java_opts} {_GCLOCKER_RETRIES}")
+    builder = builder.config("spark.driver.defaultJavaOptions", java_opts)
     with _env("SPARK_CONF_DIR", empty_conf):
         return builder.getOrCreate()

@@ -37,7 +37,7 @@ import zlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import persist_tracked
@@ -345,33 +345,32 @@ def read_pipelines(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     # pipeline_id is 0-based PER FILE (reference :117); across a multi-file
     # glob the ids would collide and downstream per-pipeline grouping would
     # merge unrelated polylines (review r06).  A single file keeps its ids
-    # verbatim: they are already dense and 0-based, which is what the
-    # re-key below would give them.
+    # verbatim: its base is 0.  Several files re-key by the per-file base,
+    # so the global ids run 0..N-1 in (file, local id) order.  The bases
+    # (one row per file) are cached: the overlap plan reads the result
+    # several times per pass, and each read then re-runs only their
+    # broadcast, not the aggregate and the window.
     if len(raw.inputFiles()) <= 1:
         return parsed
-    # Re-key deterministically over (file, local id).  The unpartitioned
-    # row_number window runs over the LIGHTWEIGHT key pairs only — 16
-    # bytes x |pipelines| through the single-partition funnel, never the
-    # geometry polyline arrays (advice r06: windowing `parsed` directly
-    # would drag every vertex through one task) — and the dense ids
-    # broadcast-join back.  The keys are persisted, so each read of the
-    # result re-runs only the broadcast of the cached keys, not the
-    # distinct and the window.
-    from pyspark.sql import Window
-
-    w = Window.orderBy("file", "pipeline_id")
-    keys = persist_tracked(
-        parsed.select("file", "pipeline_id")
-        .distinct()
-        .withColumn(
-            "_global_id", (F.row_number().over(w) - 1).cast("bigint")
-        )
+    bases = persist_tracked(_file_bases(parsed, F.max("pipeline_id") + 1))
+    return parsed.join(F.broadcast(bases), ["file"]).select(
+        "file",
+        (F.col("_base") + F.col("pipeline_id")).alias("pipeline_id"),
+        "objectid", "name", "attrs", "geometry",
     )
+
+
+def _file_bases(parsed: DataFrame, n_ids: Column) -> DataFrame:
+    """(file, _base): how many ids the files sorted before each file use,
+    ``n_ids`` being one file's count.  The parser numbers each file's
+    features with a dense counter (``_parse_kml``), so base + local id is
+    unique across a multi-file glob.  The unpartitioned window runs over
+    ONE lightweight row per file, never the geometry arrays."""
+    wf = Window.orderBy("file").rowsBetween(Window.unboundedPreceding, -1)
     return (
-        parsed.join(F.broadcast(keys), ["file", "pipeline_id"])
-        .drop("pipeline_id")
-        .withColumnRenamed("_global_id", "pipeline_id")
-        .select("file", "pipeline_id", "objectid", "name", "attrs", "geometry")
+        parsed.groupBy("file").agg(n_ids.alias("_n"))
+        .withColumn("_base", F.coalesce(F.sum("_n").over(wf), F.lit(0)))
+        .select("file", "_base")
     )
 
 
@@ -392,8 +391,6 @@ def read_placemarks(spark: SparkSession, paths: str | list[str]) -> DataFrame:
                          "default_id", "name", "count"],
             )
 
-    from pyspark.sql import Window
-
     parsed = persist_tracked(
         _read_binary(spark, paths).mapInPandas(
             gen, PLACEMARKS_SCHEMA + ", local_idx int, default_id boolean"
@@ -409,14 +406,9 @@ def read_placemarks(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     # reference's PM_{placemark_count}, review r13) offset by a per-file
     # base (the total placemark count of preceding files).  A single file
     # is therefore reference-verbatim, mixed ids included; OBJECTID-derived
-    # ids are data and stay untouched.  The unpartitioned window runs over
-    # ONE lightweight row per file, like the pipelines re-key.
-    wf = Window.orderBy("file").rowsBetween(Window.unboundedPreceding, -1)
-    bases = (
-        parsed.groupBy("file").agg(F.max("local_idx").alias("_n"))
-        .withColumn("_base", F.coalesce(F.sum("_n").over(wf), F.lit(0)))
-        .select("file", "_base")
-    )
+    # ids are data and stay untouched.  local_idx is 1-based, so a file's
+    # count is its largest.
+    bases = _file_bases(parsed, F.max("local_idx"))
     return (
         parsed.join(F.broadcast(bases), ["file"], "left")
         .withColumn(

@@ -9,11 +9,11 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from pipeline_calculator_v3_spark import release_caches
+from pipeline_calculator_v3_spark import caching, release_caches
 from pipeline_calculator_v3_spark.caching import (
     local_checkpoint_tracked,
     persist_tracked,
-    unpersist_ids,
+    unpersist_tracked,
 )
 from pipeline_calculator_v3_spark.functions.geodesy import EARTH_RADIUS_M
 from pipeline_calculator_v3_spark.plans.overlap import analyze_pipelines
@@ -96,9 +96,8 @@ def _persisted(spark, pinned):
 
 
 def _checkpointed(spark, pinned):
-    ids = []
-    df = local_checkpoint_tracked(spark.range(0, 40), ids_sink=ids)
-    pinned.append(lambda: unpersist_ids(spark, ids))
+    df = local_checkpoint_tracked(spark.range(0, 40))
+    pinned.append(lambda: unpersist_tracked(df))
     return df
 
 
@@ -125,21 +124,36 @@ _CHECKPOINT_INPUTS = {
 @pytest.mark.parametrize("shape", list(_CHECKPOINT_INPUTS))
 def test_local_checkpoint_records_exactly_its_new_rdd(spark, shape):
     """The id read off the checkpointed frame's plan is the one RDD the
-    checkpoint adds to getPersistentRDDs, and freeing it frees the blocks."""
+    checkpoint adds to getPersistentRDDs, and freeing the frame frees the
+    blocks."""
     pinned = []
     try:
         df = _CHECKPOINT_INPUTS[shape](spark, pinned)
         before = persistent_ids(spark)
-        ids = []
-        out = local_checkpoint_tracked(df, ids_sink=ids)
+        out = local_checkpoint_tracked(df)
+        ids = [rdd_id for f, rdd_id in caching._PINNED if f is out]
         assert len(ids) == 1
         assert set(ids) == persistent_ids(spark) - before
         assert out.count() == df.count()
-        unpersist_ids(spark, ids)
+        unpersist_tracked(out)
         assert persistent_ids(spark) == before
     finally:
         for free in pinned:
             free()
+
+
+def test_unpersist_tracked_deregisters_a_checkpoint(spark):
+    """Freeing a checkpointed frame through the API also drops it from the
+    registry, so a following release_caches frees nothing else."""
+    release_caches(spark)
+    before = persistent_ids(spark)
+    out = local_checkpoint_tracked(spark.range(0, 40))
+    assert len(persistent_ids(spark) - before) == 1
+    unpersist_tracked(out)
+    assert persistent_ids(spark) == before
+    assert not any(f is out for f, _ in caching._PINNED)
+    release_caches(spark)
+    assert persistent_ids(spark) == before
 
 
 def test_minhash_releases_staged(spark, sf_dir):

@@ -128,7 +128,6 @@ def test_first_launch_dumps_and_the_next_maps(tmp_path):
     assert _state(second) == "mapped"
     assert caller in second["args"]
     assert f"-XX:SharedArchiveFile={final}" in second["args"]
-    assert "-XX:GCLockerRetryAllocationCount=100" in second["args"]
     assert second["rows"] == first["rows"]
     # published, and the stray pid files are gone
     assert _header(final) == session._CDS_MAGIC

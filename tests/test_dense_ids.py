@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pipeline_calculator_v3_spark.operators.ids import dense_ids
+from pipeline_calculator_v3_spark.session import scoped_conf
 
 
 @pytest.mark.parametrize("n,parts", [(1, 4), (7, 3), (1000, 8)])
@@ -16,7 +17,11 @@ def test_ids_are_dense_and_ordered(spark, n, parts):
     df = spark.range(n).select(
         (F.lit(10_000_000) - F.col("id") * 7).alias("k")
     )
-    out = dense_ids(df, ["k"], id_col="rid", n_partitions=parts).collect()
+    # dense_ids range-partitions into the session's shuffle partition
+    # count, read when the plan is built
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", str(parts)):
+        ranked = dense_ids(df, ["k"], id_col="rid")
+    out = ranked.collect()
     assert sorted(r.rid for r in out) == list(range(n))
     by_rank = sorted(out, key=lambda r: r.rid)
     keys = [r.k for r in by_rank]

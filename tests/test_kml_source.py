@@ -151,6 +151,25 @@ def test_multi_file_ids_dense_in_file_order(spark, tmp_path):
         (0, "a0"), (1, "a1"), (2, "b0")]
 
 
+def test_multi_file_ids_skip_empty_file_and_repeat_path(spark, tmp_path):
+    """A file with no pipelines takes no ids, and a path given twice is
+    read twice under the same ids."""
+    a, b, c = (str(tmp_path / n) for n in ("a.kml", "b.kml", "c.kml"))
+    (tmp_path / "a.kml").write_text(_lines_kml(["a0", "a1", "a2"]))
+    (tmp_path / "b.kml").write_text(KML.replace("LineString", "Point"))
+    (tmp_path / "c.kml").write_text(_lines_kml(["c0", "c1"]))
+
+    def ids(paths):
+        rows = read_pipelines(spark, paths).select("pipeline_id", "name")
+        return sorted((r.pipeline_id, r.name) for r in rows.collect())
+
+    assert ids([c, b, a]) == [
+        (0, "a0"), (1, "a1"), (2, "a2"), (3, "c0"), (4, "c1")]
+    assert ids([a, a, c]) == [
+        (0, "a0"), (0, "a0"), (1, "a1"), (1, "a1"), (2, "a2"), (2, "a2"),
+        (3, "c0"), (4, "c1")]
+
+
 def test_single_file_spread_with_ids_kept(spark, tmp_path):
     """One file is one parse task; pipelines holding more geometry than
     one AQE partition are spread by pipeline before they are cached (the

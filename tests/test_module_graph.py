@@ -1,4 +1,5 @@
-"""Every package module and top-level def is reachable from production code.
+"""Every package module and top-level def is reachable from production code,
+and only ``caching.py`` pins or frees executor state.
 
 A module or def that only tests use is dead weight the engine still
 carries: this parses the package with ``ast`` (no Spark, no imports
@@ -6,7 +7,8 @@ executed).  Each module under ``pipeline_calculator_v3_spark/`` — package
 ``__init__`` files and ``__main__`` aside — must be imported by another
 package module or by ``__spark_entry__.py``, and each undecorated
 top-level def or class must be named somewhere in those files outside its
-own body."""
+own body.  A bare ``.persist(`` or ``.localCheckpoint(`` elsewhere would
+pin state that ``release_caches`` cannot see."""
 
 from __future__ import annotations
 
@@ -127,3 +129,27 @@ def test_no_top_level_def_is_used_only_by_tests():
     assert not stray, f"top-level defs no production code uses: {stray}"
     stale = sorted(EXEMPT_DEFS.keys() - unused)
     assert not stale, f"exempt defs that gained a production use or are gone: {stale}"
+
+
+# DataFrame/RDD methods that pin or free executor state
+PIN_METHODS = {"persist", "unpersist", "cache", "localCheckpoint", "checkpoint"}
+
+
+def test_only_caching_pins_state():
+    offenders = []
+    for name, path in _package_modules().items():
+        if name == f"{PKG}.caching":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in PIN_METHODS
+            ):
+                offenders.append(
+                    f"{path.relative_to(ROOT)}:{node.lineno} .{node.func.attr}("
+                )
+    assert not offenders, (
+        f"pin/free calls outside caching.py (use persist_tracked, "
+        f"local_checkpoint_tracked, unpersist_tracked): {offenders}"
+    )

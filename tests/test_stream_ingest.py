@@ -218,9 +218,9 @@ def test_unpersist_tracked_deregisters(spark):
 
     df = spark.range(5)
     caching.persist_tracked(df)
-    assert any(t is df for t in caching._TRACKED_DFS)
+    assert any(t is df for t, _ in caching._PINNED)
     caching.unpersist_tracked(df)
-    assert not any(t is df for t in caching._TRACKED_DFS)
+    assert not any(t is df for t, _ in caching._PINNED)
 
 
 def test_null_id_docs_are_never_admitted(spark, tmp_path_factory):
@@ -266,7 +266,7 @@ def test_null_id_docs_are_never_admitted(spark, tmp_path_factory):
 def test_failed_batch_releases_caches(spark, tmp_path):
     """review r13: an exception mid-batch used to leak every persisted
     frame of the attempt — the cleanup now runs in a finally."""
-    from pipeline_calculator_v3_spark.caching import _TRACKED_DFS
+    from pipeline_calculator_v3_spark import caching
 
     work = str(tmp_path / "corpus_fail")
     # no index dirs exist -> _gen_paths raises FileNotFoundError inside
@@ -274,7 +274,7 @@ def test_failed_batch_releases_caches(spark, tmp_path):
     batch = spark.createDataFrame(
         [(1, "some document text that shingles fine", 1)], DOC_SCHEMA
     )
-    before = len(_TRACKED_DFS)
+    before = len(caching._PINNED)
     with pytest.raises(Exception):
         admit_batch(spark, batch, 0, work, min_jaccard=0.5)
-    assert len(_TRACKED_DFS) == before, "failure path leaked pinned frames"
+    assert len(caching._PINNED) == before, "failure path leaked pinned frames"
