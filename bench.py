@@ -6,7 +6,7 @@ Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {"q_...": sec, ...}, "sf": <sf>, ...}
 
-BENCH_LOCAL_r{N}.json gets the same object plus "layers": per headline
+BENCH_LOCAL.json gets the same object plus "layers": per headline
 query, the perfbench/eventlog.py counter blocks of its build and execution
 in the pass that gave the reported minimum, folded from the session's
 event log (one job group per query, pass and phase), each with the codegen
@@ -173,16 +173,6 @@ SCALE_TWINS = [
     "q_video_fingerprint_dedup",  # an uncapped hot frame goes quadratic
 ]
 SCALE_EXPONENT_MAX = 1.2
-
-
-def _this_round() -> int:
-    """1 + the highest driver-recorded round (BENCH_r{N}.json)."""
-    ns = [
-        int(m.group(1))
-        for p in os.listdir(REPO)
-        if (m := re.match(r"BENCH_r(\d+)\.json$", p))
-    ]
-    return (max(ns) + 1) if ns else 1
 
 
 @contextmanager
@@ -457,9 +447,9 @@ def main() -> None:
     print(json.dumps(out), flush=True)
     # The driver's capture of the line above can lose its head (VERDICT
     # r08 #4), so the complete object, with the per-query counter blocks,
-    # is also kept in-repo; the driver's BENCH_r{N}.json stays
-    # authoritative for rc/gates.
-    local = os.path.join(REPO, f"BENCH_LOCAL_r{_this_round():02d}.json")
+    # is also kept in-repo, in one file each run overwrites (the
+    # BENCH_r{N}.json records stay authoritative for rc/gates).
+    local = os.path.join(REPO, "BENCH_LOCAL.json")
     with open(local, "w") as f:
         json.dump({**out, "jvm": jvm, "layers": layers}, f, indent=1)
         f.write("\n")

@@ -110,22 +110,18 @@ def audio_fingerprint64(media: DataFrame) -> DataFrame:
     return media.mapInPandas(gen, AUDIOFP_SCHEMA)
 
 
-def audio_fp_pairs(
-    fps: DataFrame,
-    id_col: str = "media_id",
-    max_hamming: int = 3,
-) -> DataFrame:
+def audio_fp_pairs(fps: DataFrame) -> DataFrame:
     """Near-duplicate audio pairs by banded fingerprint matching.
 
     Returns (``id_a``, ``id_b``, ``hamming`` INT) with id_a < id_b.
     Delegates to the shared banded-Hamming join
     (operators/phash.py::ahash_pairs) on the renamed fingerprint words —
-    same completeness contract (exact for max_hamming <= 3), same
+    same completeness contract (exact at hamming <= 3), same
     invalid-rows-never-match rule, same filter-before-distinct plan."""
     from .phash import ahash_pairs
 
     renamed = fps.select(
-        fps[id_col], "valid",
+        fps["media_id"], "valid",
         fps["fp_hi"].alias("ahash_hi"), fps["fp_lo"].alias("ahash_lo"),
     )
-    return ahash_pairs(renamed, id_col=id_col, max_hamming=max_hamming)
+    return ahash_pairs(renamed, id_col="media_id", max_hamming=3)

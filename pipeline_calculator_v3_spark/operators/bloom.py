@@ -186,8 +186,6 @@ def bloom_prefilter_join(
     dim: DataFrame,
     fact_key: str,
     dim_key: str,
-    m_bits: int = DEFAULT_M_BITS,
-    n_hashes: int = DEFAULT_K,
     how: str = "inner",
 ) -> DataFrame:
     """fact ⋈ dim with the fact side pre-filtered by a bloom filter of the
@@ -204,7 +202,7 @@ def bloom_prefilter_join(
             f"got how={how!r} (outer/anti joins need the shed rows)"
         )
     bitmap = bloom_build(
-        dim.select(dim_key).distinct(), dim_key, m_bits, n_hashes
+        dim.select(dim_key).distinct(), dim_key, DEFAULT_M_BITS, DEFAULT_K
     )
-    pruned = bloom_filter_keys(fact, bitmap, fact_key, n_hashes=n_hashes)
+    pruned = bloom_filter_keys(fact, bitmap, fact_key, n_hashes=DEFAULT_K)
     return pruned.join(dim, pruned[fact_key] == dim[dim_key], how)

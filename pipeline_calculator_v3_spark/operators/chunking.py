@@ -30,8 +30,6 @@ def chunk_tokens(
     docs: DataFrame,
     max_len: int = 32,
     stride: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """One row per sliding token window: (id, chunk_idx, n_tokens,
     first_token, last_token).  Windows start at 0, stride, 2*stride, ...
@@ -40,10 +38,10 @@ def chunk_tokens(
     if stride <= 0 or max_len <= 0:
         raise ValueError("max_len and stride must be positive")
     base = docs.select(
-        F.col(id_col), tokens(F.lower(F.col(text_col))).alias("toks")
+        F.col("doc_id"), tokens(F.lower(F.col("text"))).alias("toks")
     ).where(F.size("toks") > 0)
     ex = base.select(
-        id_col,
+        "doc_id",
         "toks",
         F.posexplode(
             F.expr(f"sequence(0, size(toks) - 1, {stride})")
@@ -51,7 +49,7 @@ def chunk_tokens(
     )
     chunk = F.expr(f"slice(toks, start + 1, {max_len})")
     return ex.select(
-        id_col,
+        "doc_id",
         F.col("chunk_idx").cast("bigint").alias("chunk_idx"),
         F.size(chunk).cast("bigint").alias("n_tokens"),
         F.element_at(chunk, 1).alias("first_token"),

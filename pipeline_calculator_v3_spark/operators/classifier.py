@@ -102,8 +102,6 @@ def _feature_sql() -> dict[str, str]:
 
 def classify_quality(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     extra_cols: list[str] | None = None,
 ) -> DataFrame:
     """Score every document with the frozen linear quality model.
@@ -124,14 +122,14 @@ def classify_quality(
     output schema raise (advice r09 — the sibling gates already guard
     their reserved names)."""
     extras = list(extra_cols or [])
-    reserved = {"doc_id", "text", "tok", "z", "score", "keep", id_col, text_col}
+    reserved = {"doc_id", "text", "tok", "z", "score", "keep"}
     clash = sorted(set(extras) & reserved)
     if clash:
         raise ValueError(f"extra_cols collide with reserved names: {clash}")
     staged = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("text"),
-        tokens(F.lower(F.col(text_col))).alias("tok"),
+        F.col("doc_id").alias("doc_id"),
+        F.col("text").alias("text"),
+        tokens(F.lower(F.col("text"))).alias("tok"),
         *[F.col(c) for c in extras],
     ).where(F.size("tok") > 0)
     feats = _feature_cols(F.col("text"), F.col("tok"))

@@ -25,12 +25,10 @@ from ..caching import local_checkpoint_tracked, unpersist_tracked
 
 def connected_components(
     edges: DataFrame,
-    src: str = "id1",
-    dst: str = "id2",
     max_iter: int = 30,
     stats: dict | None = None,
 ) -> DataFrame:
-    """(src, dst) undirected edges -> (id, component) with component = min
+    """(id1, id2) undirected edges -> (id, component) with component = min
     node id in the component.
 
     Converges in O(log diameter) rounds via pointer-jumping; pass ``stats``
@@ -54,7 +52,7 @@ def connected_components(
     # checkpoint job (measured 2x the whole pair stage on the SemDeDup
     # twin, r08)
     e0 = local_checkpoint_tracked(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("id1").alias("a"), F.col("id2").alias("b"))
     )
     # Pin ONE hash-partitioning family across all rounds (the pagerank
     # move, guide §2.4): sym by its join side ``b``, labels by ``id``,
@@ -157,14 +155,12 @@ def dedup_clusters(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    src: str = "id1",
-    dst: str = "id2",
 ) -> DataFrame:
     """Full dedup decision table: every doc -> (cluster, keep flag).
 
     Docs in no pair form singleton clusters; within each cluster the minimum
     id survives (deterministic, same rule as fingerprint_dedup)."""
-    comp = connected_components(pairs, src, dst)
+    comp = connected_components(pairs)
     return (
         docs.select(F.col(id_col).alias("id"))
         .join(comp, "id", "left")
@@ -180,10 +176,6 @@ def dedup_clusters_best(
     docs: DataFrame,
     pairs: DataFrame,
     scores: DataFrame,
-    id_col: str = "doc_id",
-    score_col: str = "z",
-    src: str = "id1",
-    dst: str = "id2",
 ) -> DataFrame:
     """Quality-aware dedup decision table: every doc -> (cluster, keep),
     where each cluster's survivor is its HIGHEST-scoring member (ties to
@@ -191,7 +183,7 @@ def dedup_clusters_best(
     a curation pipeline actually wants from near-dup collapse: keep the
     best copy, not the first-crawled one.
 
-    ``scores`` is (id_col, score_col); docs absent from it (e.g. the
+    ``scores`` is (doc_id, z); docs absent from it (e.g. the
     quality classifier emits no row for token-less text) rank at -1e9 —
     harmless for singletons, last-pick inside real clusters.  The score
     must be DETERMINISTICALLY rounded upstream (classify_quality rounds
@@ -201,13 +193,13 @@ def dedup_clusters_best(
     cluster-keyed window — no per-cluster collects, no quadratic step."""
     from pyspark.sql import Window
 
-    comp = connected_components(pairs, src, dst)
+    comp = connected_components(pairs)
     base = (
-        docs.select(F.col(id_col).alias("id"))
+        docs.select(F.col("doc_id").alias("id"))
         .join(comp, "id", "left")
         .join(
             scores.select(
-                F.col(id_col).alias("id"), F.col(score_col).alias("__s")
+                F.col("doc_id").alias("id"), F.col("z").alias("__s")
             ),
             "id",
             "left",
@@ -220,7 +212,7 @@ def dedup_clusters_best(
     )
     w = Window.partitionBy("cluster").orderBy(F.desc("__s"), F.asc("id"))
     return base.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         "cluster",
         (F.row_number().over(w) == 1).alias("keep"),
     )

@@ -33,8 +33,6 @@ def compaction_plan(
     files: DataFrame,
     target_bytes: int,
     small_bytes: int | None = None,
-    id_col: str = "file_id",
-    bytes_col: str = "bytes",
     partition_cols: list[str] | None = None,
 ) -> DataFrame:
     """Assign every file to a rewrite group.
@@ -76,7 +74,7 @@ def compaction_plan(
     for reserved in ("compact", "group_id"):
         if reserved in files.columns:
             raise ValueError(f"'{reserved}' is reserved by compaction_plan")
-    fid, fbytes = F.col(id_col), F.col(bytes_col)
+    fid, fbytes = F.col("file_id"), F.col("bytes")
     pcols = list(partition_cols or [])
     small = files.where(fbytes < small_bytes)
     big = files.where(fbytes >= small_bytes)

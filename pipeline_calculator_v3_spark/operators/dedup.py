@@ -28,9 +28,16 @@ from ..functions.text import (
     tokens,
 )
 
+# The md5 MinHash shape every oracle-backed face runs (and the oracle CTEs
+# in queries_textml.py are formatted from): 16 lanes in 4 bands of 4 over
+# distinct word trigrams.
+MD5_HASHES = 16
+MD5_BANDS = 4
+MD5_ROWS = MD5_HASHES // MD5_BANDS
+SHINGLE_N = 3
 
-def fingerprint_dedup(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+
+def fingerprint_dedup(docs: DataFrame) -> DataFrame:
     """Exact dedup on normalized-text md5: keep the lowest id per group.
 
     Deterministic winner (min id) — unlike dropDuplicates, whose survivor is
@@ -44,19 +51,19 @@ def fingerprint_dedup(docs: DataFrame, text_col: str = "text",
     evidence of nothing.
     """
     base = docs.select(
-        F.md5(normalized_text(F.col(text_col))).alias("fp"), F.col(id_col)
+        F.md5(normalized_text(F.col("text"))).alias("fp"), F.col("doc_id")
     )
     grouped = (
         base.where(F.col("fp").isNotNull())
         .groupBy("fp")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count(F.lit(1)).cast("bigint").alias("n_copies"),
         )
     )
     singletons = base.where(F.col("fp").isNull()).select(
         "fp",
-        F.col(id_col).alias("keep_id"),
+        F.col("doc_id").alias("keep_id"),
         F.lit(1).cast("bigint").alias("n_copies"),
     )
     return grouped.unionByName(singletons)
@@ -141,11 +148,8 @@ def _verify_candidates(with_bands, staged, join_keys, min_jaccard):
 
 def minhash_lsh_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 32,
     bands: int = 8,
-    shingle_n: int = 3,
     min_jaccard: float = 0.5,
 ) -> DataFrame:
     """Near-duplicate pairs via banded MinHash-LSH + exact Jaccard verify.
@@ -154,15 +158,9 @@ def minhash_lsh_pairs(
     self-join on (band, key) -> distinct candidate pairs -> exact Jaccard on
     distinct shingle sets -> threshold.  Returns (id1, id2, jaccard).
 
-    This throughput variant is specialized to TRIGRAM shingles
-    (shingles_from_token_hashes unrolls its combiner for n=3); for other
-    shingle widths use :func:`minhash_lsh_pairs_md5`, which is generic.
+    Trigram shingles (shingles_from_token_hashes unrolls its combiner for
+    n=3), like the md5 family.
     """
-    if shingle_n != 3:
-        raise ValueError(
-            "minhash_lsh_pairs is specialized to shingle_n=3 (the unrolled "
-            "trigram combiner); use minhash_lsh_pairs_md5 for other widths"
-        )
     if num_hashes % bands != 0:
         raise ValueError(
             f"num_hashes ({num_hashes}) must divide evenly into bands "
@@ -175,17 +173,17 @@ def minhash_lsh_pairs(
     # the expression would re-run the whole signature per band).
     staged = (
         docs.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             # token hashes MATERIALIZED before shingling: inline they would
             # re-evaluate per element_at reference (~40x hash work)
-            token_hashes(F.col(text_col)).alias("th"),
+            token_hashes(F.col("text")).alias("th"),
         )
         # sub-shingle docs OUT before signatures: an empty shingle set keeps
         # the all-MAX_LONG init signature, so every short doc would band-
         # collide with every other and the Jaccard verify divides by zero
-        .where(F.size("th") >= shingle_n)
+        .where(F.size("th") >= SHINGLE_N)
         .withColumn(
-            "sh", F.array_distinct(shingles_from_token_hashes(F.col("th"), shingle_n))
+            "sh", F.array_distinct(shingles_from_token_hashes(F.col("th"), SHINGLE_N))
         )
         .drop("th")
         .withColumn("sig", minhash_signature_from_hashes(F.col("sh"), num_hashes))
@@ -222,11 +220,6 @@ def minhash_lsh_pairs(
 
 def minhash_lsh_pairs_md5(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
     min_jaccard: float = 0.5,
     tokens_col: str | None = None,
 ) -> DataFrame:
@@ -238,7 +231,7 @@ def minhash_lsh_pairs_md5(
     Signature element i = lexicographic MIN over shingles of
     ``md5(shingle || '|' || i)`` — md5 hex is identical in Spark and DuckDB
     and uniformly distributed, so ordering hex strings is as good a random
-    permutation as ordering ints.  Computed as explode + ``num_hashes``
+    permutation as ordering ints.  Computed as explode + ``MD5_HASHES``
     parallel min() aggregates: md5 and min stay inside whole-stage codegen
     with map-side partial aggregation, vs an interpreted HOF aggregate
     re-allocating a 16-wide array per shingle (measured 7.7 s -> ~2 s at
@@ -247,12 +240,12 @@ def minhash_lsh_pairs_md5(
 
     Same downstream shape: band-key explode -> self-join on the key ->
     distinct pairs -> exact Jaccard on the distinct shingle sets ->
-    threshold.  Docs with fewer than ``shingle_n`` tokens have no shingles
+    threshold.  Docs with fewer than ``SHINGLE_N`` tokens have no shingles
     and are excluded (both engines; an empty-set signature would otherwise
     collide globally).
 
     ``tokens_col`` (optional): a pre-materialized token-array column to use
-    instead of tokenizing ``text_col`` — pipeline callers that already
+    instead of tokenizing ``text`` — pipeline callers that already
     carry the token arrays (q_curation_e2e) skip the duplicate tokenizer
     pass.  The caller owns the contract that the column equals
     ``tokens(normalized_text(text))``.  Note the curation caller passes
@@ -265,46 +258,32 @@ def minhash_lsh_pairs_md5(
     from the standalone dedup queries fails a test instead of silently
     shipping.
     """
-    staged, _sig, with_bands = _md5_staged_bands(
-        docs, text_col, id_col, num_hashes, bands, shingle_n, tokens_col
-    )
+    staged, _sig, with_bands = _md5_staged_bands(docs, tokens_col)
     return _verify_candidates(with_bands, staged, ["key"], min_jaccard)
 
 
 def _md5_staged_bands(
-    docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-    tokens_col: str | None = None,
+    docs: DataFrame, tokens_col: str | None = None
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(staged, sig, with_bands) for the md5 LSH family: staged = (id,
-    distinct shingle set), sig = (id, m0..m{k-1} signature lanes),
-    with_bands = (id, band key).  Shared by the self-join pair face
-    (:func:`minhash_lsh_pairs_md5`), the bipartite incremental-ingest
-    match (:func:`minhash_lsh_match_md5`), and the sketch-accuracy probe
-    (:func:`minhash_sketch_error_md5`), so the signature derivation
+    """(staged, sig, with_bands) for the md5 LSH family over (doc_id,
+    text): staged = (id, distinct shingle set), sig = (id, m0..m15
+    signature lanes), with_bands = (id, band key).  Shared by the
+    self-join pair face (:func:`minhash_lsh_pairs_md5`), the bipartite
+    incremental-ingest match (:func:`minhash_lsh_match_md5`), and the
+    sketch-accuracy probe (:func:`minhash_sketch_error_md5`), so the
+    signature derivation
     cannot fork between them (review r08: the probe used to re-spell the
     lane formula).  Both staged and sig are persisted — callers with a
     bounded batch lifetime (streaming/ingest.py) unpersist all three
     returned frames after their terminal write."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must divide evenly into bands "
-            f"({bands}) — trailing signature lanes would be computed but "
-            "silently excluded from banding, changing the LSH S-curve"
-        )
-    rows = num_hashes // bands
     staged = (
         docs.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             # tokens MATERIALIZED before shingling (see shingles_from_tokens)
             (
                 F.col(tokens_col)
                 if tokens_col is not None
-                else tokens(normalized_text(F.col(text_col)))
+                else tokens(normalized_text(F.col("text")))
             ).alias("t"),
         )
         # short-doc filter on the CHEAP column: written as size(sh) > 0, the
@@ -313,10 +292,10 @@ def _md5_staged_bands(
         # HOF lambda re-runs the tokenizer (~50x/row; measured 0.25 s ->
         # 16.6 s).  size(t) >= n is the same predicate (shingles are empty
         # iff tokens < n) over one tokenizer pass.
-        .where(F.size("t") >= shingle_n)
+        .where(F.size("t") >= SHINGLE_N)
         .select(
             "id",
-            F.array_distinct(shingles_from_tokens(F.col("t"), shingle_n)).alias("sh"),
+            F.array_distinct(shingles_from_tokens(F.col("t"), SHINGLE_N)).alias("sh"),
         )
     )
     staged = persist_tracked(staged)  # reused: signature + shingle re-joins
@@ -326,7 +305,7 @@ def _md5_staged_bands(
         .agg(
             *[
                 F.min(F.md5(F.concat(F.col("s"), F.lit(f"|{i}")))).alias(f"m{i}")
-                for i in range(num_hashes)
+                for i in range(MD5_HASHES)
             ]
         )
     )  # the band join reads both sides from this (id x 16 hex) table;
@@ -340,10 +319,11 @@ def _md5_staged_bands(
                         ":",
                         F.lit(str(b)),
                         F.concat_ws(
-                            ",", *[F.col(f"m{b * rows + j}") for j in range(rows)]
+                            ",",
+                            *[F.col(f"m{b * MD5_ROWS + j}") for j in range(MD5_ROWS)],
                         ),
                     )
-                    for b in range(bands)
+                    for b in range(MD5_BANDS)
                 ]
             )
         ).alias("key"),
@@ -352,14 +332,7 @@ def _md5_staged_bands(
 
 
 def minhash_lsh_match_md5(
-    batch: DataFrame,
-    corpus: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-    min_jaccard: float = 0.5,
+    batch: DataFrame, corpus: DataFrame, min_jaccard: float = 0.5
 ) -> DataFrame:
     """Incremental-ingest near-dup match: which BATCH documents duplicate
     something already in the CORPUS — the shape a streaming/append pipeline
@@ -376,12 +349,8 @@ def minhash_lsh_match_md5(
 
     Returns (batch_id, corpus_id, jaccard) with jaccard >= min_jaccard.
     """
-    sb, _sigb, bb = _md5_staged_bands(
-        batch, text_col, id_col, num_hashes, bands, shingle_n
-    )
-    sc, _sigc, bc = _md5_staged_bands(
-        corpus, text_col, id_col, num_hashes, bands, shingle_n
-    )
+    sb, _sigb, bb = _md5_staged_bands(batch)
+    sc, _sigc, bc = _md5_staged_bands(corpus)
     cand = (
         bb.select(F.col("id").alias("batch_id"), "key")
         .join(bc.select(F.col("id").alias("corpus_id"), "key"), "key")
@@ -413,11 +382,7 @@ def minhash_lsh_match_md5(
 
 def simhash64_md5_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
     max_hamming: int = 16,
-    n_groups: int = 8,
     tokens_col: str | None = None,
 ) -> DataFrame:
     """SimHash near-dup candidate pairs on md5 bit lanes — the
@@ -430,7 +395,7 @@ def simhash64_md5_pairs(
     ``sum over distinct shingles of (2*bit_j(md5(shingle)) - 1)`` where
     bit_j reads the md5 hex digest MSB-first (bit j lives in hex nibble
     j//4 at in-nibble position j%4 from the high bit).  Docs with no
-    shingles (< ``shingle_n`` tokens) are excluded on both engines — an
+    shingles (< ``SHINGLE_N`` tokens) are excluded on both engines — an
     all-zero signature would otherwise collide globally.
 
     Shape (the scale path, mirroring the measured minhash-md5 lesson that
@@ -439,7 +404,7 @@ def simhash64_md5_pairs(
     shingles -> md5 -> 16 nibble columns (one conv each) -> 64 parallel
     SUM aggregates with map-side combine -> pack to one BIGINT -> 16-bit
     prefix blocking -> ``salted_self_pairs`` (hot blocks split
-    n_groups^2 ways, identical output) -> XOR bit_count hamming filter.
+    8^2 ways, identical output) -> XOR bit_count hamming filter.
 
     ``tokens_col`` (optional): a pre-materialized token-array column —
     same contract as :func:`minhash_lsh_pairs_md5`'s parameter (the
@@ -458,15 +423,15 @@ def simhash64_md5_pairs(
     tok = (
         F.col(tokens_col)
         if tokens_col
-        else tokens(normalized_text(F.col(text_col)))
+        else tokens(normalized_text(F.col("text")))
     )
     base = docs.select(
-        F.col(id_col).alias("id"), tok.alias("t")
-    ).where(F.size("t") >= shingle_n)
+        F.col("doc_id").alias("id"), tok.alias("t")
+    ).where(F.size("t") >= SHINGLE_N)
     hashed = base.select(
         "id",
         F.explode(
-            F.array_distinct(shingles_from_tokens(F.col("t"), shingle_n))
+            F.array_distinct(shingles_from_tokens(F.col("t"), SHINGLE_N))
         ).alias("s"),
     ).select("id", F.md5("s").alias("h"))
     # nibble extraction: TWO conv calls over the 8-char digest halves, then
@@ -522,7 +487,7 @@ def simhash64_md5_pairs(
         F.shiftright("sh64", 48).bitwiseAND(F.lit(65535)),
     )
     return (
-        salted_self_pairs(keyed, "block", "doc_id", n_groups=n_groups)
+        salted_self_pairs(keyed, "block", "doc_id")
         .where(F.col("a_doc_id") < F.col("b_doc_id"))
         .select(
             F.col("a_doc_id").alias("id1"),
@@ -535,16 +500,9 @@ def simhash64_md5_pairs(
     )
 
 
-def minhash_sketch_error_md5(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-) -> DataFrame:
+def minhash_sketch_error_md5(docs: DataFrame) -> DataFrame:
     """Sketch-accuracy probe: for every LSH candidate pair, the MinHash
-    ESTIMATE of Jaccard (matching signature lanes / num_hashes) next to
+    ESTIMATE of Jaccard (matching signature lanes / MD5_HASHES) next to
     the exact shingle-set Jaccard and their absolute error — the
     measurement that justifies trusting the sketch at a scale where the
     exact verify join is the cost you want to drop.  est is k/16 (exact
@@ -555,9 +513,7 @@ def minhash_sketch_error_md5(
     exact side reuses :func:`_verify_candidates` with threshold 0.0 (all
     candidates kept).  One extra join against the persisted signature
     table — no new shuffle family."""
-    staged, sig, with_bands = _md5_staged_bands(
-        docs, text_col, id_col, num_hashes, bands, shingle_n
-    )
+    staged, sig, with_bands = _md5_staged_bands(docs)
     pairs = _verify_candidates(with_bands, staged, ["key"], 0.0)
     # the SAME persisted signature table the band keys derive from — the
     # lanes cannot fork (review r08: a rebuilt copy of the lane formula
@@ -565,17 +521,17 @@ def minhash_sketch_error_md5(
     # est from the band keys)
     sa = sig.select(
         F.col("id").alias("id1"),
-        *[F.col(f"m{i}").alias(f"_a{i}") for i in range(num_hashes)],
+        *[F.col(f"m{i}").alias(f"_a{i}") for i in range(MD5_HASHES)],
     )
     sb = sig.select(
         F.col("id").alias("id2"),
-        *[F.col(f"m{i}").alias(f"_b{i}") for i in range(num_hashes)],
+        *[F.col(f"m{i}").alias(f"_b{i}") for i in range(MD5_HASHES)],
     )
     lanes = None
-    for i in range(num_hashes):
+    for i in range(MD5_HASHES):
         term = (F.col(f"_a{i}") == F.col(f"_b{i}")).cast("int")
         lanes = term if lanes is None else lanes + term
-    est = lanes.cast("double") / float(num_hashes)
+    est = lanes.cast("double") / float(MD5_HASHES)
     return (
         pairs.join(sa, "id1")
         .join(sb, "id2")
@@ -588,12 +544,7 @@ def minhash_sketch_error_md5(
     )
 
 
-def source_copy_matrix(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    source_col: str = "source",
-) -> DataFrame:
+def source_copy_matrix(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Cross-source duplication matrix — which sources duplicate which:
     per unordered source pair, how many near-dup document pairs cross it
     (the curation dashboard that finds mirror sites and wholesale
@@ -617,13 +568,13 @@ def source_copy_matrix(
     # silently inflate the diagonal instead of surfacing the missing
     # attribute (review r11)
     src = docs.select(
-        F.col(id_col),
-        F.coalesce(F.col(source_col), F.lit("(null)")).alias("_src"),
+        F.col("doc_id"),
+        F.coalesce(F.col("source"), F.lit("(null)")).alias("_src"),
     )
     labeled = (
         pairs.select(F.col("id1"), F.col("id2"))
-        .join(src.withColumnRenamed(id_col, "id1").withColumnRenamed("_src", "_s1"), "id1")
-        .join(src.withColumnRenamed(id_col, "id2").withColumnRenamed("_src", "_s2"), "id2")
+        .join(src.withColumnRenamed("doc_id", "id1").withColumnRenamed("_src", "_s1"), "id1")
+        .join(src.withColumnRenamed("doc_id", "id2").withColumnRenamed("_src", "_s2"), "id2")
     )
     return (
         labeled.select(
@@ -636,11 +587,7 @@ def source_copy_matrix(
     )
 
 
-def dedup_axes_report(
-    docs: DataFrame,
-    axes: dict[str, DataFrame],
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dedup_axes_report(docs: DataFrame, axes: dict[str, DataFrame]) -> DataFrame:
     """How the dedup axes AGREE — per combination of per-axis keep
     decisions, the document count and the smallest example id: the
     curation dashboard that answers "what does semantic dedup remove that
@@ -664,13 +611,13 @@ def dedup_axes_report(
     """
     if not axes:
         raise ValueError("axes must name at least one decision frame")
-    out = docs.select(F.col(id_col).alias("_id"))
+    out = docs.select(F.col("doc_id").alias("_id"))
     names = sorted(axes)
     for name in names:
         d = axes[name]
         out = out.join(
             d.select(
-                F.col(id_col).alias("_id"),
+                F.col("doc_id").alias("_id"),
                 F.col("keep").alias(f"keep_{name}"),
             ),
             "_id",

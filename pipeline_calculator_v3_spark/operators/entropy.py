@@ -67,32 +67,29 @@ def _run_fold(tok: Column) -> Column:
 
 
 def token_entropy(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    extra_cols: list[str] | None = None,
+    docs: DataFrame, extra_cols: list[str] | None = None
 ) -> DataFrame:
-    """Per-document token-distribution statistics.
+    """Per-document token-distribution statistics of ``text``.
 
-    Returns ``id_col``, any ``extra_cols`` passed through, ``n_tokens``
+    Returns ``doc_id``, any ``extra_cols`` passed through, ``n_tokens``
     BIGINT, ``n_types`` BIGINT (distinct tokens), ``entropy`` DOUBLE
     (nats, 6 dp, NULL for empty documents), ``ttr`` DOUBLE (type-token
     ratio, 6 dp, NULL for empty documents).
     """
     # NULL text is an empty document, not a dropped row (review r08:
     # NULL-propagating array ops silently lose the document).
-    tok = tokens(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
+    tok = tokens(F.lower(F.coalesce(F.col("text"), F.lit(""))))
     st = _run_fold(tok)
     n = F.size(tok).cast("double")
     out = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in (extra_cols or [])],
         n.cast("bigint").alias("n_tokens"),
         st.alias("_st"),
     )
     nn = F.col("n_tokens").cast("double")
     return out.select(
-        id_col,
+        "doc_id",
         *(extra_cols or []),
         "n_tokens",
         F.col("_st.types").alias("n_types"),
@@ -107,18 +104,12 @@ def token_entropy(
     )
 
 
-def entropy_profile(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_col: str = "lang",
-    bucket_width: float = 0.5,
-) -> DataFrame:
+def entropy_profile(docs: DataFrame) -> DataFrame:
     """Corpus diversity profile: document counts and mean diversity per
-    (group, entropy bucket) — the curation dashboard that decides where
+    (lang, entropy bucket) — the curation dashboard that decides where
     the low-entropy filter cut goes.
 
-    Buckets are ``floor(entropy / bucket_width) * bucket_width`` over the
+    Buckets are ``floor(entropy / 0.5) * 0.5`` over the
     ROUNDED per-document entropy (both engines bucket the same 6-dp
     value, so a boundary flip needs the true value within 5e-7 of a
     bucket edge AND cross-engine noise past the rounding grain — two
@@ -128,14 +119,12 @@ def entropy_profile(
     the profile is ONE hash aggregate on (group, bucket) — cardinality
     ~languages x ~dozens of buckets, partial-aggregated map-side.
     """
-    per_doc = token_entropy(
-        docs, id_col=id_col, text_col=text_col, extra_cols=[group_col]
-    )
+    per_doc = token_entropy(docs, extra_cols=["lang"])
     bucket = (
-        F.floor(F.col("entropy") / bucket_width) * F.lit(bucket_width)
+        F.floor(F.col("entropy") / 0.5) * F.lit(0.5)
     ).alias("entropy_bucket")
     return (
-        per_doc.groupBy(F.col(group_col), bucket)
+        per_doc.groupBy(F.col("lang"), bucket)
         .agg(
             F.count("*").alias("n_docs"),
             F.round(F.avg("entropy"), 6).alias("avg_entropy"),
@@ -144,5 +133,5 @@ def entropy_profile(
                 "avg_tokens"
             ),
         )
-        .orderBy(group_col, F.asc_nulls_first("entropy_bucket"))
+        .orderBy("lang", F.asc_nulls_first("entropy_bucket"))
     )

@@ -113,9 +113,7 @@ def with_hilbert_key(
     )
 
 
-def hilbert_sql_ctes(
-    x: str, y: str, bits: int, src: str, prefix: str = "h"
-) -> tuple[str, str]:
+def hilbert_sql_ctes(x: str, y: str, bits: int, src: str) -> tuple[str, str]:
     """The xy2d transform as a DuckDB CTE chain (one step per level —
     LINEAR text size, the with_hilbert_key projection chain's twin).
     ``x``/``y`` are SQL expressions over ``src`` for already-quantized
@@ -124,7 +122,7 @@ def hilbert_sql_ctes(
     ``hd`` (the Hilbert key), with working columns ``hx``/``hy``
     dropped."""
     steps = [
-        f"{prefix}0 AS (SELECT *, {x} AS hx, {y} AS hy,"
+        f"h0 AS (SELECT *, {x} AS hx, {y} AS hy,"
         f" CAST(0 AS BIGINT) AS hd FROM {src})"
     ]
     n = 0
@@ -135,18 +133,15 @@ def hilbert_sql_ctes(
         # same non-negative-invariant branch spelling as _hilbert_steps:
         # every hx/hy stays in [0, s), so // and % agree across engines
         steps.append(
-            f"""{prefix}{n + 1} AS (
+            f"""h{n + 1} AS (
     SELECT * EXCLUDE (hx, hy, hd),
            CASE WHEN {ry} = 1 THEN hx % {s}
                 WHEN {rx} = 1 THEN {s - 1} - hy ELSE hy END AS hx,
            CASE WHEN {ry} = 1 THEN hy % {s}
                 WHEN {rx} = 1 THEN {2 * s - 1} - hx ELSE hx END AS hy,
            hd + CAST({s} AS BIGINT) * {s} * xor(3 * {rx}, {ry}) AS hd
-    FROM {prefix}{n})"""
+    FROM h{n})"""
         )
         n += 1
-    final = f"{prefix}fin"
-    steps.append(
-        f"{final} AS (SELECT * EXCLUDE (hx, hy) FROM {prefix}{n})"
-    )
-    return ",\n".join(steps), final
+    steps.append(f"hfin AS (SELECT * EXCLUDE (hx, hy) FROM h{n})")
+    return ",\n".join(steps), "hfin"

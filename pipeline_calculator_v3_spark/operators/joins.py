@@ -16,10 +16,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def merge_join(left: DataFrame, right: DataFrame, on: list[str],
-               how: str = "inner") -> DataFrame:
-    """Force a sort-merge join (both sides shuffle + sort on the key)."""
-    return left.hint("merge").join(right.hint("merge"), on, how)
+def merge_join(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:
+    """Force a sort-merge inner join (both sides shuffle + sort on the key)."""
+    return left.hint("merge").join(right.hint("merge"), on, "inner")
 
 
 def salted_join(
@@ -27,27 +26,14 @@ def salted_join(
     right: DataFrame,
     key: str,
     n_salts: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-safe equi-join: the (large, skewed) left side gets a uniform
+    """Skew-safe inner equi-join: the (large, skewed) left side gets a uniform
     random-free salt derived from a row-stable hash of its other columns;
     the (smaller) right side is replicated once per salt value.
 
     Join key becomes (key, salt): a hot key's rows spread over ``n_salts``
     reducers instead of one.  Deterministic — the salt is a hash, not rand().
-
-    Only joins whose output is keyed by MATCHED or LEFT rows are sound
-    under right-side replication: right/full outer would emit each
-    unmatched right key once PER SALT REPLICA (n_salts-fold null-padded
-    row multiplication — review r06), so those modes raise.
     """
-    if how not in ("inner", "left", "left_outer", "leftouter",
-                   "left_semi", "semi", "leftsemi", "left_anti", "anti",
-                   "leftanti", "cross"):
-        raise ValueError(
-            f"salted_join: how={how!r} is unsound under right-side salt "
-            f"replication (unmatched right rows would multiply n_salts-fold)"
-        )
     lcols = [c for c in left.columns if c != key]
     salt = (
         F.pmod(F.xxhash64(*[F.col(c) for c in lcols]) if lcols else F.xxhash64(F.col(key)),
@@ -59,7 +45,7 @@ def salted_join(
     r = right.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )
-    return l.join(r, [key, "__salt"], how).drop("__salt")
+    return l.join(r, [key, "__salt"], "inner").drop("__salt")
 
 
 def salted_self_pairs(

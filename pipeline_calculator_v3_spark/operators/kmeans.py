@@ -246,8 +246,6 @@ def kmeans_assign(
     vecs: DataFrame,
     k: int = 8,
     iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids_sink: list | None = None,
     keep_vec: bool = False,
 ) -> DataFrame:
@@ -279,14 +277,14 @@ def kmeans_assign(
 
     vecs = persist_tracked(vecs)
     cents = (
-        vecs.orderBy(id_col)
+        vecs.orderBy("vec_id")
         .limit(k)
-        .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
+        .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
     )
     from ..functions.vectors import elementwise_mean
 
     for _ in range(iters):
-        assigned = _assign(vecs, cents, id_col, vec_col)
+        assigned = _assign(vecs, cents, "vec_id", "embedding")
         updated = elementwise_mean(
             assigned, ["cid"], "v", "cvec", round_dp=9
         )
@@ -309,5 +307,5 @@ def kmeans_assign(
         )
     if centroids_sink is not None:
         centroids_sink.append(cents)
-    out = _assign(vecs, cents, id_col, vec_col)
+    out = _assign(vecs, cents, "vec_id", "embedding")
     return out if keep_vec else out.select("vid", "cid", "sqd")

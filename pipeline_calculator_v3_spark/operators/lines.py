@@ -31,21 +31,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dedup_lines(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_docs: int = 2,
-    min_line_chars: int = 1,
-) -> DataFrame:
+def dedup_lines(docs: DataFrame, min_docs: int = 2) -> DataFrame:
     """Remove cross-document duplicate lines, keeping each duplicated
     line's first occurrence (minimum (id, pos)).
 
-    Lines shorter than ``min_line_chars`` after trim are exempt (blank
-    separators and stray punctuation stay verbatim).  Returns one row per
-    input document: id_col, ``text`` (kept lines re-joined with \\n),
+    Lines that are empty after trim are exempt (blank separators stay
+    verbatim).  Returns one row per
+    input document: ``doc_id``, ``text`` (kept lines re-joined with \\n),
     ``n_lines`` BIGINT, ``n_lines_removed`` BIGINT.  Documents whose
-    every line is removed keep a row with empty text; a NULL ``text_col``
+    every line is removed keep a row with empty text; a NULL ``text``
     is treated as empty text (the row is never dropped — review r08:
     posexplode of a NULL split yields no rows, which silently lost the
     document).
@@ -59,13 +53,13 @@ def dedup_lines(
 
     lines = persist_tracked(
         docs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.posexplode(
-                F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
+                F.split(F.coalesce(F.col("text"), F.lit("")), "\n")
             ).alias("pos", "line"),
         ).withColumn("_lh", F.unhex(F.md5("line")))
     )
-    eligible = F.length(F.trim(F.col("line"))) >= min_line_chars
+    eligible = F.length(F.trim(F.col("line"))) >= 1
     # one aggregate elects both facts per line: distinct-doc spread and
     # the global winner occurrence — keyed on the 16-byte digest so the
     # exchange never carries line text
@@ -73,8 +67,8 @@ def dedup_lines(
         lines.filter(eligible)
         .groupBy("_lh")
         .agg(
-            F.countDistinct(id_col).alias("_nd"),
-            F.min(F.struct(F.col(id_col).alias("i"), F.col("pos").alias("p"))).alias(
+            F.countDistinct("doc_id").alias("_nd"),
+            F.min(F.struct(F.col("doc_id").alias("i"), F.col("pos").alias("p"))).alias(
                 "_win"
             ),
         )
@@ -82,18 +76,18 @@ def dedup_lines(
         .select("_lh", "_win")
     )
     marked = lines.join(dup, "_lh", "left").select(
-        id_col,
+        "doc_id",
         "pos",
         "line",
         (
             F.col("_win").isNull()
             | (
-                (F.col("_win.i") == F.col(id_col))
+                (F.col("_win.i") == F.col("doc_id"))
                 & (F.col("_win.p") == F.col("pos"))
             )
         ).alias("_keep"),
     )
-    rebuilt = marked.groupBy(id_col).agg(
+    rebuilt = marked.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(

@@ -275,23 +275,16 @@ def synth_wav_media(docs: DataFrame) -> DataFrame:
     )
 
 
-def synth_wav_media_shifted(
-    docs: DataFrame, shift: int, rate: int = 22050
-) -> DataFrame:
+def synth_wav_media_shifted(docs: DataFrame, shift: int) -> DataFrame:
     """Transcoded COPIES of :func:`synth_wav_media` blobs: the SAME PCM16
     samples (:func:`_wav_samples`, still derived from ``doc_id``), a
-    fresh ``media_id = doc_id + shift``, and a container sample rate the
-    base generator can never emit (its rates are 8000 + (doc_id%4)*4000,
-    i.e. {8000, 12000, 16000, 20000} — a 16000 default would have made a
-    quarter of the plants byte-IDENTICAL, review r13) — the re-encoded
+    fresh ``media_id = doc_id + shift``, and a container sample rate
+    (22050) the base generator can never emit (its rates are 8000 +
+    (doc_id%4)*4000, i.e. {8000, 12000, 16000, 20000} — 16000 would have
+    made a quarter of the plants byte-IDENTICAL, review r13) — the re-encoded
     duplicate byte-exact dedup cannot catch (different bytes, identical
     acoustics).  The audio sibling of q_phash_image_dedup's shifted-id
     PNG plant."""
-    if rate in {8000, 12000, 16000, 20000}:
-        raise ValueError(
-            f"rate {rate} collides with a synth_wav_media rate — the "
-            "plant would be byte-identical for some doc_ids"
-        )
     from .wavcodec import encode_wav
 
     ensure_pkg_shipped(docs.sparkSession)
@@ -302,7 +295,7 @@ def synth_wav_media_shifted(
             for did in pdf["doc_id"]:
                 did = int(did)
                 ids.append(did + shift)
-                blobs.append(encode_wav(_wav_samples(did), rate))
+                blobs.append(encode_wav(_wav_samples(did), 22050))
             yield pd.DataFrame({"media_id": ids, "content": blobs})
 
     return docs.select("doc_id").mapInPandas(

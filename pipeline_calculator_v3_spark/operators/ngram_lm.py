@@ -39,11 +39,7 @@ from pyspark.sql import functions as F
 from ..functions.text import tokens
 
 
-def kn_bigram_probs(
-    docs: DataFrame,
-    text_col: str = "text",
-    discount: float = 0.75,
-) -> DataFrame:
+def kn_bigram_probs(docs: DataFrame, discount: float = 0.75) -> DataFrame:
     """Train the interpolated-KN bigram model over ``docs``.
 
     Returns one row per OBSERVED bigram: ``ctx``, ``nxt``, ``c`` BIGINT
@@ -58,7 +54,7 @@ def kn_bigram_probs(
         # D >= 1 could clip max(c - D, 0) at singleton bigrams and break
         # the closed-form normalization; D <= 0 is no smoothing at all
         raise ValueError("discount must be in (0, 1)")
-    tok = tokens(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
+    tok = tokens(F.lower(F.coalesce(F.col("text"), F.lit(""))))
     bigrams = docs.select(tok.alias("tok")).where(F.size("tok") > 1).select(
         F.explode(
             F.transform(

@@ -32,8 +32,6 @@ def pack_sequences(
     docs: DataFrame,
     budget: int = 512,
     n_shards: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """One row per packed training example: (shard, example_id, n_docs,
     n_tokens, first_doc, last_doc).  ``example_id`` restarts at 0 per shard;
@@ -41,9 +39,9 @@ def pack_sequences(
     if budget <= 0 or n_shards <= 0:
         raise ValueError("budget and n_shards must be positive")
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        shard_of(F.col(id_col), n_shards),
-        F.size(tokens(F.col(text_col))).cast("bigint").alias("ntok"),
+        F.col("doc_id").alias("doc_id"),
+        shard_of(F.col("doc_id"), n_shards),
+        F.size(tokens(F.col("text"))).cast("bigint").alias("ntok"),
     ).where(F.col("ntok") > 0)
     w = (
         Window.partitionBy("shard")
@@ -64,7 +62,7 @@ def pack_sequences(
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("ntok").cast("bigint").alias("n_tokens"),
-            # no cast: min/max keep id_col's own type, so string/UUID ids
+            # no cast: min/max keep doc_id's own type, so string/UUID ids
             # work (review r06: the bigint cast NULLed or ANSI-raised on
             # any non-numeric id; the registered query's ids are already
             # bigint, so its schema is unchanged)
@@ -98,12 +96,7 @@ def padding_audit_cap_sql(ntok_sql: str, seq_len: int) -> str:
     return f"(CASE\n{branches}\n        ELSE {seq_len} END)"
 
 
-def padding_audit(
-    docs: DataFrame,
-    seq_len: int = 512,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def padding_audit(docs: DataFrame, seq_len: int = 512) -> DataFrame:
     """Length-bucketed batching audit — the measurement behind choosing
     bucketed batching over naive pad-to-max: per power-of-two length
     bucket (capped at ``seq_len``; longer documents truncate to it),
@@ -127,13 +120,13 @@ def padding_audit(
     """
     if seq_len < 16:
         raise ValueError(f"seq_len must be >= 16, got {seq_len}")
-    ntok_raw = F.size(tokens(F.lower(F.col(text_col))))
+    ntok_raw = F.size(tokens(F.lower(F.col("text"))))
     ntok = F.least(ntok_raw, F.lit(seq_len))
     cap = F.lit(seq_len)
     for edge in reversed(bucket_edges(seq_len)[:-1]):
         cap = F.when(ntok <= edge, F.lit(edge)).otherwise(cap)
     staged = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         ntok.alias("ntok"),
         cap.cast("bigint").alias("bucket_cap"),
     ).where(F.col("ntok") > 0)

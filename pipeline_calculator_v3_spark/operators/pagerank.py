@@ -47,13 +47,7 @@ def _size_bytes(conf_value: str) -> int:
         return -1
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 10,
-    damping: float = 0.85,
-) -> DataFrame:
+def pagerank(edges: DataFrame, iterations: int = 10) -> DataFrame:
     """(src, dst) directed edges -> (id, rank), Sum(rank) == n_vertices
     (the random-surfer normalization where the uniform rank is 1.0).
 
@@ -62,7 +56,7 @@ def pagerank(
     conservation invariant (tests/test_pagerank.py) fails."""
     if iterations <= 0:
         raise ValueError("iterations must be positive")
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    e = edges.select(F.col("src").alias("src"), F.col("dst").alias("dst")).distinct()
     # "dangling" (no out-edges) is a STATIC vertex property: flag it once at
     # build time and carry it inside the ranks frame, so the per-round
     # dangling-mass term collapses from a distinct + anti-join exchange
@@ -167,9 +161,9 @@ def pagerank(
             .select(
                 "id",
                 "dangling",
-                (
-                    (1.0 - damping)
-                    + damping
+                (  # damping 0.85
+                    (1.0 - 0.85)
+                    + 0.85
                     * (F.coalesce(F.col("inflow"), F.lit(0.0)) + F.col("dm") / n)
                 ).alias("rank"),
             )

@@ -45,8 +45,6 @@ from ..functions.text import tokens
 
 def postings_index(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_postings: int = 16,
     salt_buckets: int = 32,
 ) -> DataFrame:
@@ -59,7 +57,7 @@ def postings_index(
     the document).  Postings beyond ``max_postings`` per term are dropped
     (the cap is the index budget; df/cf stay exact over ALL postings).
 
-    ``id_col`` must be numeric (the skew salt is ``id % salt_buckets``;
+    ``doc_id`` must be numeric (the skew salt is ``id % salt_buckets``;
     a hash salt would not replay in the oracle).
     """
     if max_postings < 1:
@@ -69,8 +67,8 @@ def postings_index(
     from ..caching import persist_tracked
 
     occ = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(tokens(F.lower(F.col(text_col)))).alias("pos", "term"),
+        F.col("doc_id").alias("doc_id"),
+        F.posexplode(tokens(F.lower(F.col("text")))).alias("pos", "term"),
     )
     # persisted: both the exact per-term stats and the salted top-k read
     # this aggregate; unpersisted, the corpus scan + explode + (term, doc)

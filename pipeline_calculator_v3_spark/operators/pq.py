@@ -53,8 +53,6 @@ def pq_train(
     m: int = 8,
     ksub: int = 16,
     iters: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Train per-subspace codebooks.  Returns (subspace BIGINT, code
     BIGINT, cent ARRAY<DOUBLE>) with ``m * ksub`` rows.
@@ -78,16 +76,16 @@ def pq_train(
     rows), so each step pins it back to a literal frame — without that,
     iteration i's plan replays all i-1 prior join+aggregate stages and
     the loop goes O(iters^2) in recomputed stages (review r11)."""
-    first = corpus.select(F.size(vec_col).alias("d")).first()
+    first = corpus.select(F.size("embedding").alias("d")).first()
     if first is None:
         raise ValueError("corpus is empty — nothing to train on")
     d = first["d"]
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
     dsub = d // m
-    seeds = corpus.orderBy(id_col).limit(ksub).select(
-        (F.row_number().over(Window.orderBy(id_col)) - 1).alias("code"),
-        F.col(vec_col).alias("v"),
+    seeds = corpus.orderBy("vec_id").limit(ksub).select(
+        (F.row_number().over(Window.orderBy("vec_id")) - 1).alias("code"),
+        F.col("embedding").alias("v"),
     )
     parts = None
     for i in range(m):
@@ -124,16 +122,16 @@ def pq_train(
         # corpus re-join per subspace, an O(m) recompute factor on the
         # hottest stage (review r13).  Same rows, same means.
         assigned = corpus.crossJoin(F.broadcast(_books_row(books))).select(
-            F.col(vec_col), _codes_expr(m, ksub, dsub, vec_col).alias("codes")
+            F.col("embedding"), _codes_expr(m, ksub, dsub, "embedding").alias("codes")
         )
         subvecs = assigned.select(
-            F.col(vec_col), F.posexplode("codes").alias("_i", "code")
+            F.col("embedding"), F.posexplode("codes").alias("_i", "code")
         ).select(
             F.col("_i").cast("bigint").alias("subspace"),
             F.col("code"),
             F.transform(
                 F.slice(
-                    F.col(vec_col),
+                    F.col("embedding"),
                     (F.col("_i") * dsub + 1).cast("int"),
                     F.lit(dsub),
                 ),
@@ -255,9 +253,6 @@ def pq_ivf_adc_topk(
     k_coarse: int = 100,
     n_lists: int = 32,
     nprobe: int = 4,
-    q_id: str = "vec_id",
-    c_id: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ (the FAISS IndexIVFPQ layout, ``by_residual=false``): an
     inverted-file coarse quantizer partitions the corpus into ``n_lists``
@@ -290,13 +285,13 @@ def pq_ivf_adc_topk(
         return F.transform(v, lambda x: x.cast("double"))
 
     cents = (
-        corpus.orderBy(c_id)
+        corpus.orderBy("vec_id")
         .limit(n_lists)
         .select(
-            F.row_number().over(Window.orderBy(c_id)).cast("bigint").alias(
+            F.row_number().over(Window.orderBy("vec_id")).cast("bigint").alias(
                 "list_id"
             ),
-            cast_d(F.col(vec_col)).alias("cent"),
+            cast_d(F.col("embedding")).alias("cent"),
         )
     )
     cents_row = cents.groupBy().agg(
@@ -327,13 +322,13 @@ def pq_ivf_adc_topk(
         corpus.crossJoin(F.broadcast(_books_row(codebooks)))
         .crossJoin(F.broadcast(cents_row))
         .select(
-            F.col(c_id).alias("cid"),
-            F.array_min(coarse_sc(vec_col))["list_id"].alias("list_id"),
-            _codes_expr(m, ksub, dsub, vec_col).alias("codes"),
+            F.col("vec_id").alias("cid"),
+            F.array_min(coarse_sc("embedding"))["list_id"].alias("list_id"),
+            _codes_expr(m, ksub, dsub, "embedding").alias("codes"),
         )
     )
     probes = (
-        queries.select(F.col(q_id).alias("qid"), F.col(vec_col).alias("_qv"))
+        queries.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("_qv"))
         .crossJoin(F.broadcast(_books_row(codebooks)))
         .crossJoin(F.broadcast(cents_row))
         .select(
@@ -361,10 +356,10 @@ def pq_ivf_adc_topk(
     # exact squared-L2 rescoring of the coarse survivors against the
     # full-precision vectors; per-query top-k on (sqdist ASC, cid ASC)
     qv = queries.select(
-        F.col(q_id).alias("qid"), cast_d(F.col(vec_col)).alias("_qd")
+        F.col("vec_id").alias("qid"), cast_d(F.col("embedding")).alias("_qd")
     )
     cv = corpus.select(
-        F.col(c_id).alias("cid"), cast_d(F.col(vec_col)).alias("_cd")
+        F.col("vec_id").alias("cid"), cast_d(F.col("embedding")).alias("_cd")
     )
     refined = (
         coarse.join(F.broadcast(qv), "qid")

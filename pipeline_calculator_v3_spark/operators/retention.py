@@ -27,8 +27,6 @@ from pyspark.sql import functions as F
 
 def cohort_retention(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     max_offset: int | None = None,
 ) -> DataFrame:
     """The day-cohort retention matrix.
@@ -42,10 +40,10 @@ def cohort_retention(
     (None keeps every observed offset).  NULL users/timestamps are
     excluded: they identify no cohort member."""
     base = events.where(
-        F.col(user_col).isNotNull() & F.col(ts_col).isNotNull()
+        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     ).select(
-        F.col(user_col).alias("user"),
-        F.to_date(F.col(ts_col)).alias("day"),
+        F.col("user_id").alias("user"),
+        F.to_date(F.col("ts")).alias("day"),
     )
     from ..caching import persist_tracked
 

@@ -64,9 +64,6 @@ def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 10,
-    q_id: str = "vec_id",
-    c_id: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k: broadcast queries x streamed corpus -> window rank.
     Returns (qid, cid, score, rank); qid != cid pairs only."""
@@ -74,12 +71,12 @@ def cosine_topk(
     # meets every query, so per-pair norm recomputation was ~2/3 of the
     # scan's arithmetic; dot / nullif(qn * cn, 0) is bit-identical
     q = queries.select(
-        F.col(q_id).alias("qid"), F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"),
+        norm(F.col("embedding")).alias("qn"),
     )
     c = corpus.select(
-        F.col(c_id).alias("cid"), F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("cn"),
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"),
+        norm(F.col("embedding")).alias("cn"),
     )
     scored = (
         F.broadcast(q)
@@ -165,9 +162,6 @@ def cosine_topk_ivf(
     n_centroids: int = 32,
     nprobe: int = 3,
     kmeans_iters: int = 0,
-    q_id: str = "vec_id",
-    c_id: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate cosine top-k via an IVF (inverted-file) index.
 
@@ -196,12 +190,12 @@ def cosine_topk_ivf(
     # corpus (the registry's _spread-synthesized input) re-runs its whole
     # upstream plan kmeans_iters + 2 times (review r11; operators/
     # kmeans.py persists its vector frame for the same reason)
-    corpus = persist_tracked(corpus.select(F.col(c_id), F.col(vec_col)))
+    corpus = persist_tracked(corpus.select(F.col("vec_id"), F.col("embedding")))
     cents = (
-        corpus.orderBy(c_id).limit(n_centroids)
+        corpus.orderBy("vec_id").limit(n_centroids)
         .select(
-            F.row_number().over(Window.orderBy(c_id)).alias("centroid_id"),
-            F.col(vec_col).alias("cent_v"),
+            F.row_number().over(Window.orderBy("vec_id")).alias("centroid_id"),
+            F.col("embedding").alias("cent_v"),
         )
     )
 
@@ -222,14 +216,14 @@ def cosine_topk_ivf(
             ).alias("_cents")
         )
 
-    def _scored(df, id_col, cents_df):
+    def _scored(df, cents_df):
         """(vid, v, _sc) with _sc = per-centroid (negcsim, centroid_id)
         structs: ascending struct order == (desc csim, asc centroid_id),
         the exact window order of the previous spelling."""
         base = df.select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).alias("v"),
-            norm(F.col(vec_col)).alias("_nv"),
+            F.col("vec_id").alias("vid"),
+            F.col("embedding").alias("v"),
+            norm(F.col("embedding")).alias("_nv"),
         )
         return base.crossJoin(F.broadcast(_carr(cents_df))).select(
             "vid",
@@ -248,8 +242,8 @@ def cosine_topk_ivf(
             ).alias("_sc"),
         )
 
-    def assign(df, id_col, keep_n, cents_df):
-        s = _scored(df, id_col, cents_df)
+    def assign(df, keep_n, cents_df):
+        s = _scored(df, cents_df)
         if keep_n == 1:
             # the CORPUS side: map-side argmin over the broadcast array —
             # never a window (review r06) and, since r09, never an
@@ -274,7 +268,7 @@ def cosine_topk_ivf(
         vanishing — operators/kmeans.py carries empties forward for
         exactly this reason, and a dropped row here would silently
         shrink the inverted-list count below n_centroids (review r11)."""
-        assigned = assign(corpus, c_id, 1, cents_df)
+        assigned = assign(corpus, 1, cents_df)
         means = elementwise_mean(
             assigned.select("centroid_id", "v"),
             ["centroid_id"], "v", "_m", round_dp=9,
@@ -290,8 +284,8 @@ def cosine_topk_ivf(
     for _ in range(kmeans_iters):
         cents = local_checkpoint_tracked(refine(cents))
 
-    c_assigned = assign(corpus, c_id, 1, cents)       # inverted lists
-    q_assigned = assign(queries, q_id, nprobe, cents)  # multi-probe
+    c_assigned = assign(corpus, 1, cents)       # inverted lists
+    q_assigned = assign(queries, nprobe, cents)  # multi-probe
     # candidate pairs are unique by construction — each corpus vector
     # joins exactly ONE list (array_min top-1) and a query probes nprobe
     # DISTINCT lists — so no dedup stage: a dropDuplicates here cost a
@@ -323,9 +317,6 @@ def cosine_topk_lsh(
     n_tables: int = 8,
     bits_per_table: int = 6,
     n_probes: int = 1,
-    q_id: str = "vec_id",
-    c_id: str = "vec_id",
-    vec_col: str = "embedding",
     plane_weights: list[list[float]] | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k: multi-table sign-random-projection LSH,
@@ -353,10 +344,10 @@ def cosine_topk_lsh(
     # inlining trap).  The query side is the small side, so the persist is
     # cheap; the corpus side computes its buckets exactly once either way.
     q_base = queries.select(
-        F.col(q_id).alias("qid"),
-        F.col(vec_col).alias("qv"),
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("qv"),
         _bucket_tables(
-            F.col(vec_col), n_tables, bits_per_table, plane_weights
+            F.col("embedding"), n_tables, bits_per_table, plane_weights
         ).alias("_buckets"),
     )
     if n_probes > 1:
@@ -379,11 +370,11 @@ def cosine_topk_lsh(
         F.explode(probe_col).alias("bucket"),
     )
     c = corpus.select(
-        F.col(c_id).alias("cid"),
-        F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("cn"),
+        F.col("vec_id").alias("cid"),
+        F.col("embedding").alias("cv"),
+        norm(F.col("embedding")).alias("cn"),
         F.explode(
-            _bucket_tables(F.col(vec_col), n_tables, bits_per_table,
+            _bucket_tables(F.col("embedding"), n_tables, bits_per_table,
                            plane_weights)
         ).alias("bucket"),
     )
@@ -433,17 +424,14 @@ def sign_prefix_block(vec: Column, sign_dims: int = 8) -> Column:
 
 def embedding_dedup_pairs(
     vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sign_dims: int = 8,
     min_cosine: float = 0.99,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the vector-space face of
     dedup (brief north star: 'embedding-cosine near-dup').
 
-    Plan: sign-prefix block (map-side, 2^sign_dims buckets) -> skew-safe
+    Plan: sign-prefix block (map-side, 2^8 buckets) -> skew-safe
     within-block pair generation (salted_self_pairs: a dense region's hot
-    bucket splits n_groups^2 ways) -> exact double-precision cosine ->
+    bucket splits 4^2 ways) -> exact double-precision cosine ->
     threshold.  Returns (id1, id2, cos_sim).  Never all-pairs: candidate
     count is sum of per-bucket quadratic terms, not N^2."""
     from .joins import salted_self_pairs
@@ -453,10 +441,10 @@ def embedding_dedup_pairs(
     # meets ~bucket_size partners — recomputing its norm per PAIR was
     # ~2/3 of the pair-stage HOF arithmetic
     base = vectors.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("v"),
-        sign_prefix_block(F.col(vec_col), sign_dims).alias("blk"),
-        norm(F.col(vec_col)).alias("nrm"),
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").alias("v"),
+        sign_prefix_block(F.col("embedding")).alias("blk"),
+        norm(F.col("embedding")).alias("nrm"),
     )
     pairs = salted_self_pairs(base, "blk", "vid", n_groups=4).where(
         F.col("a_vid") < F.col("b_vid")
@@ -668,12 +656,9 @@ def _pairs_cosine_join(
 
 def semantic_dedup_pairs(
     vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 8,
     iters: int = 1,
     min_cosine: float = 0.99,
-    n_groups: int = 4,
     assign_sink: list | None = None,
     centroids_sink: list | None = None,
 ) -> DataFrame:
@@ -685,7 +670,7 @@ def semantic_dedup_pairs(
     exact double-precision cosine pairs are scored ONLY within a cluster —
     never all-pairs; candidate count is the sum of per-cluster quadratic
     terms, and the within-cluster self-join is skew-salted
-    (salted_self_pairs) so a hot cluster splits n_groups^2 ways.  At 100 TB
+    (salted_self_pairs) so a hot cluster splits 4^2 ways.  At 100 TB
     the knob is k: clusters of ~N/k vectors bound each task's pair count;
     boundary pairs split across clusters are the documented recall trade
     (SemDeDup accepts it; sign-prefix blocking — embedding_dedup_pairs —
@@ -708,7 +693,7 @@ def semantic_dedup_pairs(
     # sides of the within-cluster self-join read this frame.
     assigned = persist_tracked(
         kmeans_assign(
-            vectors, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
+            vectors, k=k, iters=iters,
             centroids_sink=centroids_sink, keep_vec=True,
         ).select(
             "vid", "v", F.col("cid").alias("blk"), "sqd",
@@ -734,19 +719,15 @@ def semantic_dedup_pairs(
     # by tests/test_semantic_dedup.py.
     if k >= 64:
         return _pairs_cosine_arrow(
-            labeled, min_cosine, n_groups, block_out="cluster_id"
+            labeled, min_cosine, 4, block_out="cluster_id"
         )
-    return _pairs_cosine_join(labeled, min_cosine, n_groups)
+    return _pairs_cosine_join(labeled, min_cosine, 4)
 
 
 def embedding_contamination(
     train: DataFrame,
     eval_df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sign_dims: int = 8,
     min_cosine: float = 0.95,
-    n_groups: int = 4,
 ) -> DataFrame:
     """Semantic train/eval contamination: training vectors whose embedding
     is near-duplicate (cosine >= ``min_cosine``) to ANY evaluation vector —
@@ -761,31 +742,31 @@ def embedding_contamination(
     lowest eval id on exact ties).
 
     Skew: a hot block's work is |train_b| x |eval_b| in one task under a
-    plain join.  The EVAL side (small by contract) replicates ``n_groups``
+    plain join.  The EVAL side (small by contract) replicates 4
     ways and each train row picks one deterministic group, so the physical
-    key (blk, g) splits a hot block's bipartite workload n_groups ways
+    key (blk, g) splits a hot block's bipartite workload 4 ways
     with identical output — the one-sided analogue of salted_self_pairs.
 
     Returns (train_id, eval_id, cos_sim).
     """
-    blk = sign_prefix_block(F.col(vec_col), sign_dims)
-    g = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_groups)).cast("int")
+    blk = sign_prefix_block(F.col("embedding"))
+    g = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(4)).cast("int")
     # per-side norms hoisted out of the bipartite pair loop (r09): a train
     # row meets every blockmate eval row — same bit-identical cosine
     # decomposition as the self-join pair faces
     tb = train.select(
-        F.col(id_col).alias("train_id"),
-        F.col(vec_col).alias("tv"),
+        F.col("vec_id").alias("train_id"),
+        F.col("embedding").alias("tv"),
         blk.alias("blk"),
         g.alias("g"),
-        norm(F.col(vec_col)).alias("tn"),
+        norm(F.col("embedding")).alias("tn"),
     )
     eb = eval_df.select(
-        F.col(id_col).alias("eval_id"),
-        F.col(vec_col).alias("ev"),
+        F.col("vec_id").alias("eval_id"),
+        F.col("embedding").alias("ev"),
         blk.alias("blk"),
-        F.explode(F.array(*[F.lit(i) for i in range(n_groups)])).alias("g"),
-        norm(F.col(vec_col)).alias("en"),
+        F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("g"),
+        norm(F.col("embedding")).alias("en"),
     )
     scored = (
         tb.join(eb, ["blk", "g"])
@@ -821,8 +802,6 @@ def embedding_contamination(
 
 def knn_graph(
     vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     sign_dims: int = 4,
     assume_unit: bool = False,
@@ -859,10 +838,10 @@ def knn_graph(
     # nrm: per-row norm hoisted out of the per-pair cosine (r09, same
     # decomposition as semantic_dedup_pairs — bit-identical doubles)
     base = vectors.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("v"),
-        sign_prefix_block(F.col(vec_col), sign_dims).alias("blk"),
-        *([] if assume_unit else [norm(F.col(vec_col)).alias("nrm")]),
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").alias("v"),
+        sign_prefix_block(F.col("embedding"), sign_dims).alias("blk"),
+        *([] if assume_unit else [norm(F.col("embedding")).alias("nrm")]),
     )
     cos = (
         dot(F.col("a_v"), F.col("b_v"))
@@ -897,17 +876,17 @@ def knn_graph(
     )
 
 
-def int8_codes(unit_vec: Column, scale: int = 127) -> Column:
+def int8_codes(unit_vec: Column) -> Column:
     """Int8-style quantization codes for a UNIT-NORMALIZED vector:
-    ``floor(x * scale + 0.5)`` per element (|x| <= 1, so codes lie in
-    [-scale, scale]).  floor(+0.5) instead of round(): both engines
+    ``floor(x * 127 + 0.5)`` per element (|x| <= 1, so codes lie in
+    [-127, 127]).  floor(+0.5) instead of round(): both engines
     floor identically on identical doubles, with no half-even/half-up
     fork to adjudicate.  The integer dot of two code arrays is an EXACT
     BIGINT on every engine — the property the refine face's oracle
     leans on."""
     return F.transform(
         unit_vec,
-        lambda x: F.floor(x * scale + F.lit(0.5)).cast("bigint"),
+        lambda x: F.floor(x * 127 + F.lit(0.5)).cast("bigint"),
     )
 
 
@@ -927,13 +906,10 @@ def cosine_topk_ivf_refine(
     k_coarse: int = 30,
     n_centroids: int = 32,
     nprobe: int = 3,
-    q_id: str = "vec_id",
-    c_id: str = "vec_id",
-    unit_col: str = "uv",
 ) -> DataFrame:
     """IVF with a quantized coarse pass and an exact refine — the
     FAISS-style IVF+refine search shape, on the unit-normalized ingest
-    contract (``unit_col`` holds v/||v|| doubles, functions/vectors.py::
+    contract (``uv`` holds v/||v|| doubles, functions/vectors.py::
     unit_normalize): cosine collapses to a bare dot everywhere.
 
     Stage 1 (coarse): corpus vectors join their argmax-dot centroid's
@@ -963,10 +939,10 @@ def cosine_topk_ivf_refine(
     pairs are unique by construction — no dedup stage.
     """
     cents = (
-        corpus.orderBy(c_id).limit(n_centroids)
+        corpus.orderBy("vec_id").limit(n_centroids)
         .select(
-            F.row_number().over(Window.orderBy(c_id)).alias("centroid_id"),
-            F.col(unit_col).alias("cent_v"),
+            F.row_number().over(Window.orderBy("vec_id")).alias("centroid_id"),
+            F.col("uv").alias("cent_v"),
         )
     )
     carr = cents.groupBy().agg(
@@ -980,12 +956,12 @@ def cosine_topk_ivf_refine(
         ).alias("_cents")
     )
 
-    def scored(df, id_col):
+    def scored(df):
         # per-row (negdot, centroid_id) structs over the broadcast
         # centroid array: ascending struct order == (dot DESC, cid ASC)
         return df.select(
-            F.col(id_col).alias("vid"),
-            F.col(unit_col).alias("v"),
+            F.col("vec_id").alias("vid"),
+            F.col("uv").alias("v"),
         ).crossJoin(F.broadcast(carr)).select(
             "vid", "v",
             F.transform(
@@ -997,12 +973,12 @@ def cosine_topk_ivf_refine(
             ).alias("_sc"),
         )
 
-    c_assigned = scored(corpus, c_id).select(
+    c_assigned = scored(corpus).select(
         "vid",
         int8_codes(F.col("v")).alias("code"),
         F.array_min(F.col("_sc"))["centroid_id"].alias("centroid_id"),
     )
-    q_assigned = scored(queries, q_id).select(
+    q_assigned = scored(queries).select(
         "vid",
         int8_codes(F.col("v")).alias("code"),
         F.explode(
@@ -1035,8 +1011,8 @@ def cosine_topk_ivf_refine(
         .where(F.col("_cr") <= k_coarse)
         .drop("_cr")
     )
-    qu = queries.select(F.col(q_id).alias("qid"), F.col(unit_col).alias("quv"))
-    cu = corpus.select(F.col(c_id).alias("cid"), F.col(unit_col).alias("cuv"))
+    qu = queries.select(F.col("vec_id").alias("qid"), F.col("uv").alias("quv"))
+    cu = corpus.select(F.col("vec_id").alias("cid"), F.col("uv").alias("cuv"))
     refined = (
         coarse.join(F.broadcast(qu), "qid")
         .join(cu, "cid")

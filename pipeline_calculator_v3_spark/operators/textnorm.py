@@ -39,14 +39,11 @@ from ..shipping import ensure_pkg_shipped
 
 
 def nfc_normalize_docs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    extra_cols: list[str] | None = None,
+    docs: DataFrame, extra_cols: list[str] | None = None
 ) -> DataFrame:
-    """NFC-normalize ``text_col``.
+    """NFC-normalize ``text``.
 
-    Returns ``id_col``, any ``extra_cols`` (passed through with their
+    Returns ``doc_id``, any ``extra_cols`` (passed through with their
     original types), ``text`` (the raw input, NULL coalesced to ''),
     ``text_nfc``, ``changed`` BOOLEAN, ``n_cp_raw`` / ``n_cp_nfc``
     BIGINT codepoint counts (composition can only shrink or keep them).
@@ -55,20 +52,20 @@ def nfc_normalize_docs(
     extras = list(extra_cols or [])
     by_name = {f.name: f.dataType.simpleString() for f in docs.schema.fields}
     schema = ", ".join(
-        [f"{id_col} {by_name[id_col]}"]
+        [f"doc_id {by_name['doc_id']}"]
         + [f"{c} {by_name[c]}" for c in extras]
         + [
             "text string", "text_nfc string", "changed boolean",
             "n_cp_raw bigint", "n_cp_nfc bigint",
         ]
     )
-    cols = [id_col, *extras, text_col]
+    cols = ["doc_id", *extras, "text"]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            raw = pdf[text_col].fillna("")
+            raw = pdf["text"].fillna("")
             nfc = raw.map(lambda s: unicodedata.normalize("NFC", s))
-            out = pdf[[id_col, *extras]].copy()
+            out = pdf[["doc_id", *extras]].copy()
             out["text"] = raw
             out["text_nfc"] = nfc
             out["changed"] = raw.ne(nfc)
@@ -79,15 +76,10 @@ def nfc_normalize_docs(
     return docs.select(*cols).mapInPandas(gen, schema)
 
 
-def nfc_impact_report(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_col: str = "lang",
-) -> DataFrame:
+def nfc_impact_report(docs: DataFrame) -> DataFrame:
     """Per-group value-of-normalization report.
 
-    One row per ``group_col`` value: ``n_docs``, ``n_changed`` (documents
+    One row per ``lang`` value: ``n_docs``, ``n_changed`` (documents
     whose bytes changed under NFC), ``n_dup_docs_raw`` / ``n_dup_docs_nfc``
     (documents sharing a whitespace/case-normalized md5 fingerprint with
     another document in the group, before vs after NFC — the delta is
@@ -101,23 +93,23 @@ def nfc_impact_report(
 
     per_doc = persist_tracked(
         nfc_normalize_docs(
-            docs, id_col=id_col, text_col=text_col, extra_cols=[group_col]
+            docs, extra_cols=["lang"]
         ).select(
-            id_col, group_col, "changed",
+            "doc_id", "lang", "changed",
             fingerprint_md5(F.col("text")).alias("fp_raw"),
             fingerprint_md5(F.col("text_nfc")).alias("fp_nfc"),
         )
     )
 
     def dup_docs(fp: str, alias: str) -> DataFrame:
-        grp = per_doc.groupBy(group_col, fp).agg(F.count("*").alias("_n"))
+        grp = per_doc.groupBy("lang", fp).agg(F.count("*").alias("_n"))
         return (
             grp.where(F.col("_n") >= 2)
-            .groupBy(group_col)
+            .groupBy("lang")
             .agg(F.sum("_n").cast("bigint").alias(alias))
         )
 
-    base = per_doc.groupBy(group_col).agg(
+    base = per_doc.groupBy("lang").agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum(F.col("changed").cast("bigint")).cast("bigint").alias(
             "n_changed"
@@ -131,11 +123,11 @@ def nfc_impact_report(
     # group)
     def nullsafe_left(left: DataFrame, right: DataFrame) -> DataFrame:
         r = right.select(
-            F.col(group_col).alias("_g"),
-            *[c for c in right.columns if c != group_col],
+            F.col("lang").alias("_g"),
+            *[c for c in right.columns if c != "lang"],
         )
         return left.join(
-            r, left[group_col].eqNullSafe(F.col("_g")), "left"
+            r, left["lang"].eqNullSafe(F.col("_g")), "left"
         ).drop("_g")
 
     return (
@@ -144,7 +136,7 @@ def nfc_impact_report(
             dup_docs("fp_nfc", "n_dup_docs_nfc"),
         )
         .select(
-            group_col, "n_docs", "n_changed",
+            "lang", "n_docs", "n_changed",
             F.coalesce("n_dup_docs_raw", F.lit(0)).cast("bigint").alias(
                 "n_dup_docs_raw"
             ),
@@ -152,5 +144,5 @@ def nfc_impact_report(
                 "n_dup_docs_nfc"
             ),
         )
-        .orderBy(group_col)
+        .orderBy("lang")
     )

@@ -46,23 +46,17 @@ from ..functions.text import tokens
 _PAD = 1_000_000_000
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    w: int = 4,
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, k: int = 5, w: int = 4) -> DataFrame:
     """Select winnowing fingerprints per document.
 
-    Returns (``id_col``, ``fp`` 32-char md5 hex of the selected token
+    Returns (``doc_id``, ``fp`` 32-char md5 hex of the selected token
     k-gram, ``pos`` BIGINT 1-based gram position).  Documents shorter
     than t = k + w - 1 tokens yield no rows (below the guarantee
     threshold there is nothing to fingerprint — the paper's contract).
     """
     if k < 1 or w < 1:
         raise ValueError("k and w must be >= 1")
-    tok = tokens(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
+    tok = tokens(F.lower(F.coalesce(F.col("text"), F.lit(""))))
 
     def gram(i: Column) -> Column:
         return F.concat_ws(
@@ -76,7 +70,7 @@ def winnow_fingerprints(
         ),
     )
     staged = (
-        docs.select(F.col(id_col), tok.alias("_tok"))
+        docs.select(F.col("doc_id"), tok.alias("_tok"))
         # lower bound: the paper's t = k + w - 1 guarantee threshold.
         # Upper bound: positions at or beyond _PAD would emit an 11-char
         # NEGATIVE pad ('-000000001') that silently corrupts both the
@@ -87,7 +81,7 @@ def winnow_fingerprints(
             (F.size("_tok") >= k + w - 1)
             & (F.size("_tok") - (k - 1) < _PAD)
         )
-        .select(id_col, keys.alias("_keys"))
+        .select("doc_id", keys.alias("_keys"))
     )
     selected = F.array_distinct(
         F.transform(
@@ -96,9 +90,9 @@ def winnow_fingerprints(
         )
     )
     return staged.select(
-        id_col, F.explode(selected).alias("_sel")
+        "doc_id", F.explode(selected).alias("_sel")
     ).select(
-        id_col,
+        "doc_id",
         F.substring("_sel", 1, 32).alias("fp"),
         (F.lit(_PAD) - F.substring("_sel", 33, 10).cast("bigint")).alias(
             "pos"
@@ -106,11 +100,7 @@ def winnow_fingerprints(
     )
 
 
-def winnow_match_pairs(
-    fps: DataFrame,
-    id_col: str = "doc_id",
-    max_df: int = 16,
-) -> DataFrame:
+def winnow_match_pairs(fps: DataFrame, max_df: int = 16) -> DataFrame:
     """Candidate near-duplicate pairs from a fingerprint table: documents
     sharing at least one fingerprint seen in <= ``max_df`` documents.
 
@@ -123,13 +113,13 @@ def winnow_match_pairs(
         raise ValueError("max_df must be >= 2 (a pair needs two docs)")
     from ..caching import persist_tracked
 
-    docfp = persist_tracked(fps.select(id_col, "fp").distinct())
+    docfp = persist_tracked(fps.select("doc_id", "fp").distinct())
     keep = docfp.groupBy("fp").agg(
         F.count("*").alias("_df")
     ).where((F.col("_df") >= 2) & (F.col("_df") <= max_df)).select("fp")
     cand = docfp.join(keep, "fp")
-    a = cand.select(F.col("fp"), F.col(id_col).alias("id_a"))
-    b = cand.select(F.col("fp"), F.col(id_col).alias("id_b"))
+    a = cand.select(F.col("fp"), F.col("doc_id").alias("id_a"))
+    b = cand.select(F.col("fp"), F.col("doc_id").alias("id_b"))
     return (
         a.join(b, "fp")
         .where(F.col("id_a") < F.col("id_b"))

@@ -81,7 +81,7 @@ def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Per-segment z-score outlier detection
 # ---------------------------------------------------------------------------
 def zscore_anomaly_rollup(
-    frame: DataFrame, segment_col: str, value_col: str, threshold: float = 3.0
+    frame: DataFrame, segment_col: str, value_col: str
 ) -> DataFrame:
     """Reusable z-score rollup over any (segment, value) frame — the query
     below binds it to events(event_type, value); tests drive it directly
@@ -105,7 +105,7 @@ def zscore_anomaly_rollup(
         # abs_z NULL for every row, and summing all-NULL must yield 0 (as
         # the oracle's CASE does), not NULL
         F.sum(
-            F.when(F.col("abs_z") > threshold, F.lit(1)).otherwise(F.lit(0))
+            F.when(F.col("abs_z") > 3.0, F.lit(1)).otherwise(F.lit(0))
         )
         .cast("long")
         .alias("n_anomalies"),

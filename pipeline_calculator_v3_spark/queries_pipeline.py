@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from .caching import persist_tracked
 from .functions.text import fingerprint_md5, shingles_from_tokens, tokens
+from .operators.dedup import MD5_BANDS, MD5_HASHES, MD5_ROWS
 from .operators.sampling import hash_sample_predicate
 from .queries import query, t
 
@@ -1036,6 +1037,7 @@ _G8_DUCK = (
     "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]"
     " || ' ' || t[i+4] || ' ' || t[i+5] || ' ' || t[i+6] || ' ' || t[i+7]"
 )
+_MD5_BAND_IDS = ", ".join(f"({b})" for b in range(MD5_BANDS))
 
 
 @query(
@@ -1066,7 +1068,7 @@ sh3 AS (
 ),
 sigs AS (
     SELECT doc_id, sh,
-           list_transform(range(0, 16), i ->
+           list_transform(range(0, {MD5_HASHES}), i ->
                list_aggregate(list_transform(sh,
                    s -> md5(s || '|' || CAST(i AS VARCHAR))), 'min')) AS sig
     FROM sh3 WHERE len(sh) > 0
@@ -1074,8 +1076,8 @@ sigs AS (
 bands AS (
     SELECT doc_id,
            CAST(b AS VARCHAR) || ':' ||
-           list_aggregate(sig[b*4+1 : b*4+4], 'string_agg', ',') AS key
-    FROM sigs CROSS JOIN (VALUES (0), (1), (2), (3)) AS tb(b)
+           list_aggregate(sig[b*{MD5_ROWS}+1 : b*{MD5_ROWS}+{MD5_ROWS}], 'string_agg', ',') AS key
+    FROM sigs CROSS JOIN (VALUES {_MD5_BAND_IDS}) AS tb(b)
 ),
 cand AS (
     SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2

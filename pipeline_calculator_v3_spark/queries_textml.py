@@ -20,6 +20,9 @@ from .functions.text import (
 )
 from .functions.vectors import cosine_sql
 from .operators.dedup import (
+    MD5_BANDS,
+    MD5_HASHES,
+    MD5_ROWS,
     fingerprint_dedup,
     minhash_lsh_match_md5,
     minhash_lsh_pairs,
@@ -137,11 +140,13 @@ toks AS (
 
 # shingles -> signatures -> band keys: shared by the self-join pair chain
 # (_MD5_LSH_CTES) AND the bipartite incremental-ingest match
-# (q_dedup_incremental), so the signature derivation cannot fork.
+# (q_dedup_incremental), so the signature derivation cannot fork.  Lane
+# count and band layout are the Spark stager's constants.
+_MD5_BAND_IDS = ", ".join(f"({b})" for b in range(MD5_BANDS))
 _MD5_SIG_BAND_CTES = f"""{_MD5_SHINGLE_CTES},
 sigs AS (
     SELECT doc_id, sh,
-           list_transform(range(0, 16), i ->
+           list_transform(range(0, {MD5_HASHES}), i ->
                list_aggregate(list_transform(sh,
                    s -> md5(s || '|' || CAST(i AS VARCHAR))), 'min')) AS sig
     FROM toks
@@ -150,8 +155,8 @@ sigs AS (
 bands AS (
     SELECT doc_id,
            CAST(b AS VARCHAR) || ':' ||
-           list_aggregate(sig[b*4+1 : b*4+4], 'string_agg', ',') AS key
-    FROM sigs CROSS JOIN (VALUES (0), (1), (2), (3)) AS t(b)
+           list_aggregate(sig[b*{MD5_ROWS}+1 : b*{MD5_ROWS}+{MD5_ROWS}], 'string_agg', ',') AS key
+    FROM sigs CROSS JOIN (VALUES {_MD5_BAND_IDS}) AS t(b)
 )"""
 
 _MD5_LSH_CTES = f"""{_MD5_SIG_BAND_CTES},
@@ -196,9 +201,9 @@ def q_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH {_MD5_LSH_CTES},
 est AS (
     SELECT c.id1, c.id2,
-           list_sum(list_transform(range(1, 17),
+           list_sum(list_transform(range(1, {MD5_HASHES + 1}),
                i -> CASE WHEN a.sig[CAST(i AS INT)] = b.sig[CAST(i AS INT)]
-                         THEN 1 ELSE 0 END)) / 16.0 AS est_jaccard
+                         THEN 1 ELSE 0 END)) / {MD5_HASHES}.0 AS est_jaccard
     FROM cand c
     JOIN sigs a ON a.doc_id = c.id1
     JOIN sigs b ON b.doc_id = c.id2
@@ -360,7 +365,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _substring_dup_stats(base)
 
 
-def _substring_dup_stats(base: DataFrame, span_n: int = 8) -> DataFrame:
+def _substring_dup_stats(base: DataFrame) -> DataFrame:
     """(doc_id, ntok, dup_tokens, dup_frac) over a tokenized corpus
     ``base = (doc_id, t)`` — the substring-dedup pipeline shared by the
     documents-table query above and the growing-corpus scale twin.
@@ -391,12 +396,12 @@ def _substring_dup_stats(base: DataFrame, span_n: int = 8) -> DataFrame:
         hashed.select(
             "doc_id",
             F.posexplode(
-                shingles_from_token_hashes(F.col("th"), span_n)
+                shingles_from_token_hashes(F.col("th"), 8)
             ).alias("p", "sp"),
         ).select(
             "doc_id",
             (F.col("p") + 1).alias("s"),
-            (F.col("p") + span_n).alias("e"),
+            (F.col("p") + 8).alias("e"),
             F.col("sp").alias("h"),
         )
     )
@@ -1810,8 +1815,8 @@ def q_bm25_rank_xl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _synth_vecs_from_lineitem(lineitem, dim: int = 16) -> DataFrame:
-    """One deterministic ``dim``-float vector per order — the growing
+def _synth_vecs_from_lineitem(lineitem) -> DataFrame:
+    """One deterministic 16-float vector per order — the growing
     vector-corpus generator for the k-means scale twin.  Same
     aggregate-before-synthesize shape as ``_synth_docs_from_lineitem``:
     one (partkey, suppkey) survivor struct per order crosses the groupBy
@@ -1820,7 +1825,7 @@ def _synth_vecs_from_lineitem(lineitem, dim: int = 16) -> DataFrame:
         F.min(F.struct("l_partkey", "l_suppkey")).alias("ps")
     )
     vec = F.transform(
-        F.sequence(F.lit(1), F.lit(dim)),
+        F.sequence(F.lit(1), F.lit(16)),
         lambda d: (
             F.pmod(
                 F.col("ps.l_partkey") * d + F.col("ps.l_suppkey") * (d + 7),
@@ -3917,43 +3922,46 @@ corpus AS (
 """
 
 
-def _winnow_oracle(k: int = 5, w: int = 4, max_df: int = 16) -> str:
-    gram = " || ' ' || ".join(f"tok[i+{off}]" for off in range(k))
-    pad = 1_000_000_000
-    return f"""
+# Winnowing shape of q_winnow_code_dedup: the Spark face and its oracle
+# both read these.
+_WINNOW_K, _WINNOW_W, _WINNOW_MAX_DF = 5, 4, 16
+_WINNOW_GRAM = " || ' ' || ".join(f"tok[i+{off}]" for off in range(_WINNOW_K))
+
+
+@query(
+    "q_winnow_code_dedup",
+    oracle=f"""
 WITH {_WINNOW_CORPUS_CTE},
 t AS (
     SELECT doc_id, {_TOKENS} AS tok FROM corpus
-    WHERE len({_TOKENS}) >= {k + w - 1}
+    WHERE len({_TOKENS}) >= {_WINNOW_K + _WINNOW_W - 1}
 ),
 staged AS (
     SELECT doc_id,
-           list_transform(range(1, len(tok) - {k - 1} + 1),
-               i -> md5({gram}) || format('{{:010d}}', {pad} - i)) AS ks
+           list_transform(range(1, len(tok) - {_WINNOW_K - 1} + 1),
+               i -> md5({_WINNOW_GRAM}) || format('{{:010d}}', 1000000000 - i)) AS ks
     FROM t
 ),
 sel AS (
     SELECT doc_id,
            unnest(list_distinct(list_transform(
-               range(1, len(ks) - {w - 1} + 1),
-               j -> list_aggregate(list_slice(ks, j, j + {w - 1}), 'min')
+               range(1, len(ks) - {_WINNOW_W - 1} + 1),
+               j -> list_aggregate(list_slice(ks, j, j + {_WINNOW_W - 1}), 'min')
            ))) AS s
     FROM staged
 ),
 fps AS (SELECT DISTINCT doc_id, s[1:32] AS fp FROM sel),
 keep AS (
     SELECT fp FROM fps GROUP BY fp
-    HAVING count(*) >= 2 AND count(*) <= {max_df}
+    HAVING count(*) >= 2 AND count(*) <= {_WINNOW_MAX_DF}
 ),
 cand AS (SELECT f.doc_id, f.fp FROM fps f JOIN keep USING (fp))
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(count(*) AS BIGINT) AS n_shared
 FROM cand a JOIN cand b ON a.fp = b.fp AND a.doc_id < b.doc_id
 GROUP BY 1, 2
-"""
-
-
-@query("q_winnow_code_dedup", oracle=_winnow_oracle())
+""",
+)
 def q_winnow_code_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprint dedup (operators/winnow.py, k=5, w=4): md5
     token 5-grams concatenated with inverted zero-padded positions so one
@@ -3977,8 +3985,8 @@ def q_winnow_code_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     corpus = _spread(docs.unionByName(planted), spark)
-    fps = winnow_fingerprints(corpus, k=5, w=4)
-    return winnow_match_pairs(fps, max_df=16)
+    fps = winnow_fingerprints(corpus, k=_WINNOW_K, w=_WINNOW_W)
+    return winnow_match_pairs(fps, max_df=_WINNOW_MAX_DF)
 
 
 # ---------------------------------------------------------------------------

@@ -14,9 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def read_jsonl(
-    spark: SparkSession, path: str, schema: str, corrupt_col: str = "_corrupt"
-) -> DataFrame:
+def read_jsonl(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """JSONL corpus scan with an EXPLICIT schema and PERMISSIVE bad-row
     capture — the dominant training-corpus interchange format.
 
@@ -27,7 +25,7 @@ def read_jsonl(
     - PERMISSIVE + corrupt-record column: a million-file crawl always
       contains malformed lines; failing the job (FAILFAST) or silently
       dropping (DROPMALFORMED) both lose information — landing bad lines in
-      ``corrupt_col`` keeps them countable/quarantinable downstream, the
+      ``_corrupt`` keeps them countable/quarantinable downstream, the
       same skip-don't-crash semantics as the reference's KML parser
       (src/pipeline_calculator_v3.py:129-132).
 
@@ -36,11 +34,11 @@ def read_jsonl(
     (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) — cache or
     otherwise materialize the parsed frame before bad-row-only audits.
     """
-    full = f"{schema}, {corrupt_col} string"
+    full = f"{schema}, _corrupt string"
     return (
         spark.read.schema(full)
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
+        .option("columnNameOfCorruptRecord", "_corrupt")
         .json(path)
     )
 
@@ -53,22 +51,22 @@ def write_jsonl(df: DataFrame, path: str) -> None:
 
 
 def read_jsonl_quarantined(
-    spark: SparkSession, path: str, schema: str, corrupt_col: str = "_corrupt"
+    spark: SparkSession, path: str, schema: str
 ) -> tuple[DataFrame, DataFrame]:
     """(parsed, quarantined) from ONE cached permissive scan — the
     split every corpus ingest actually performs on :func:`read_jsonl`'s
     output: typed rows for lines that parsed, (raw line,) for lines that
-    did not.  The split predicate is `corrupt_col IS NULL` — Spark
+    did not.  The split predicate is `_corrupt IS NULL` — Spark
     leaves the column null exactly when the whole line parsed under the
     explicit schema.  Cached both because the split reads the scan twice
     and because of the corrupt-column-only restriction documented on
     :func:`read_jsonl`."""
     from ..caching import persist_tracked
 
-    raw = persist_tracked(read_jsonl(spark, path, schema, corrupt_col))
-    parsed = raw.where(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    quarantined = raw.where(F.col(corrupt_col).isNotNull()).select(
-        F.col(corrupt_col).alias("raw")
+    raw = persist_tracked(read_jsonl(spark, path, schema))
+    parsed = raw.where(F.col("_corrupt").isNull()).drop("_corrupt")
+    quarantined = raw.where(F.col("_corrupt").isNotNull()).select(
+        F.col("_corrupt").alias("raw")
     )
     return parsed, quarantined
 

@@ -169,7 +169,6 @@ def merge_stream_into_table(
     tiebreak: str,
     partition_by: list[str],
     key_cols: list[str],
-    max_files_per_trigger: int = 1,
     partitions_immutable: bool = False,
 ) -> None:
     """Fold every update file under ``updates_dir`` into the dataset at
@@ -208,7 +207,7 @@ def merge_stream_into_table(
             )
     stream = (
         spark.readStream.schema(updates_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(updates_dir)
     )
     part_str = [F.col(c).cast("string").alias(c) for c in partition_by]

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from ..caching import persist_tracked, unpersist_tracked
 from ..functions.text import normalized_text, tokens
 from ..operators.dedup import (
+    SHINGLE_N,
     _md5_staged_bands,
     _verify_candidates,
     jaccard_verify,
@@ -57,9 +58,7 @@ from ..operators.dedup import (
 from ..shipping import ensure_pkg_shipped
 
 
-def _short_doc_frames(
-    batch_df: DataFrame, shingle_n: int
-) -> tuple[DataFrame, DataFrame]:
+def _short_doc_frames(batch_df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(staged, bands) rows for documents BELOW the shingle width.
 
     The shared md5 stager excludes sub-shingle docs (its oracle contract),
@@ -73,12 +72,12 @@ def _short_doc_frames(
 
     NULL text coalesces to '' BEFORE normalization (the rule the
     entropy/ngram/winnow operators follow): normalized_text(NULL) is NULL,
-    size(tokens(NULL)) = -1 < shingle_n, so NULL-text docs always take
+    size(tokens(NULL)) = -1 < SHINGLE_N, so NULL-text docs always take
     this path — without the coalesce they'd get a NULL band key (NULL
     never equi-joins) and be re-admitted on every redelivery, the exact
     failure this frame exists to close (ADVICE r11)."""
     norm = normalized_text(F.coalesce(F.col("text"), F.lit("")))
-    short = batch_df.where(F.size(tokens(norm)) < shingle_n).select(
+    short = batch_df.where(F.size(tokens(norm)) < SHINGLE_N).select(
         F.col("doc_id").alias("id"), norm.alias("_nt")
     )
     staged = short.select("id", F.array(F.col("_nt")).alias("sh"))
@@ -160,9 +159,6 @@ def admit_batch(
     batch_id: int,
     work_dir: str,
     min_jaccard: float = 0.5,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
 ) -> None:
     """One micro-batch through the near-dup admission gate (module
     docstring steps 1-5).  Exposed module-level so redelivery can be
@@ -176,9 +172,7 @@ def admit_batch(
     batch_df = batch_df.where(F.col("doc_id").isNotNull())
     if batch_df.isEmpty():
         return
-    base_staged, sig, base_bands = _md5_staged_bands(
-        batch_df, "text", "doc_id", num_hashes, bands, shingle_n
-    )
+    base_staged, sig, base_bands = _md5_staged_bands(batch_df)
     # every pinned frame goes through this list so the finally below can
     # release them even when the batch FAILS mid-flight — an exception
     # before the cleanup used to leak 4 persisted frames per replay
@@ -189,7 +183,6 @@ def admit_batch(
         _admit_batch_body(
             spark, batch_df, batch_id, work_dir, min_jaccard,
             base_staged, base_bands, pinned,
-            shingle_n,
         )
     finally:
         for frame in pinned:
@@ -198,9 +191,9 @@ def admit_batch(
 
 def _admit_batch_body(
     spark, batch_df, batch_id, work_dir, min_jaccard,
-    base_staged, base_bands, pinned, shingle_n,
+    base_staged, base_bands, pinned,
 ) -> None:
-    short_staged, short_bands = _short_doc_frames(batch_df, shingle_n)
+    short_staged, short_bands = _short_doc_frames(batch_df)
     # the unions WRAP the stager's persisted frames — the bases (not the
     # wrappers) are what the cleanup loop releases
     staged = base_staged.unionByName(short_staged)
@@ -273,10 +266,6 @@ def ingest_stream_dedup(
     base_docs: DataFrame,
     work_dir: str,
     min_jaccard: float = 0.5,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Seed the index from ``base_docs`` (gen 0), then fold every update
     file under ``updates_dir`` through the near-dup admission gate, one
@@ -288,14 +277,12 @@ def ingest_stream_dedup(
     # NULL-id seed docs are as untrackable as NULL-id batch docs (the
     # admit_batch rule) — an index row with id NULL never equi-joins
     base_docs = base_docs.where(F.col("doc_id").isNotNull())
-    seed_staged, _seed_sig, seed_bands = _md5_staged_bands(
-        base_docs, "text", "doc_id", num_hashes, bands, shingle_n
-    )
+    seed_staged, _seed_sig, seed_bands = _md5_staged_bands(base_docs)
     try:
         # seed-side short docs take the same degenerate path as batches —
         # a sub-shingle seed doc must be matchable, or its exact copy in
         # any later batch sails through the gate (review r11)
-        sshort_staged, sshort_bands = _short_doc_frames(base_docs, shingle_n)
+        sshort_staged, sshort_bands = _short_doc_frames(base_docs)
         _write_index(
             base_docs.select("doc_id", "gen"),
             seed_bands.select("id", "key").unionByName(sshort_bands),
@@ -310,14 +297,12 @@ def ingest_stream_dedup(
 
     def _admit_batch(batch_df: DataFrame, batch_id: int) -> None:
         admit_batch(
-            spark, batch_df, batch_id, work_dir,
-            min_jaccard=min_jaccard, num_hashes=num_hashes,
-            bands=bands, shingle_n=shingle_n,
+            spark, batch_df, batch_id, work_dir, min_jaccard=min_jaccard
         )
 
     stream = (
         spark.readStream.schema(updates_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(updates_dir)
     )
     q = (

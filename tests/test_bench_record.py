@@ -1,5 +1,5 @@
 """bench.py's per-query record: the event-log fold that writes the
-"layers" entry of BENCH_LOCAL_r{N}.json (no Spark session needed)."""
+"layers" entry of BENCH_LOCAL.json (no Spark session needed)."""
 
 from __future__ import annotations
 

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from pipeline_calculator_v3_spark.operators.dedup import (
     fingerprint_dedup,
     minhash_lsh_pairs,
-    minhash_lsh_pairs_md5,
     source_copy_matrix,
 )
 from pipeline_calculator_v3_spark.operators.similarity import cosine_topk_ivf
@@ -35,14 +34,8 @@ def test_minhash_parameter_guards(spark):
     docs = spark.createDataFrame(
         [(1, "a b c d e f")], "doc_id long, text string"
     )
-    with pytest.raises(ValueError, match="shingle_n=3"):
-        minhash_lsh_pairs(docs, shingle_n=2)
     with pytest.raises(ValueError, match="divide evenly"):
         minhash_lsh_pairs(docs, num_hashes=20, bands=8)
-    with pytest.raises(ValueError, match="divide evenly"):
-        minhash_lsh_pairs_md5(docs, num_hashes=10, bands=4)
-    # the md5 face IS the generic-width variant: shingle_n=2 must build
-    minhash_lsh_pairs_md5(docs, shingle_n=2).columns
 
 
 def test_source_copy_matrix_null_source_bins_explicitly(spark):

@@ -105,9 +105,7 @@ def test_md5_variant_recall(spark, corpus):
     theory, same planted families."""
     from pipeline_calculator_v3_spark.operators.dedup import minhash_lsh_pairs_md5
 
-    pairs = minhash_lsh_pairs_md5(
-        corpus, num_hashes=16, bands=4, min_jaccard=0.7
-    ).collect()
+    pairs = minhash_lsh_pairs_md5(corpus, min_jaccard=0.7).collect()
     got = {(r.id1, r.id2) for r in pairs}
 
     fam = corpus.where(F.col("family") >= 0).select("doc_id", "family").collect()

@@ -1,5 +1,6 @@
 """Every package module and top-level def is reachable from production code,
-and only ``caching.py`` pins or frees executor state.
+only ``caching.py`` pins or frees executor state, and every option has a
+caller.
 
 A module or def that only tests use is dead weight the engine still
 carries: this parses the package with ``ast`` (no Spark, no imports
@@ -8,7 +9,15 @@ executed).  Each module under ``pipeline_calculator_v3_spark/`` — package
 package module or by ``__spark_entry__.py``, and each undecorated
 top-level def or class must be named somewhere in those files outside its
 own body.  A bare ``.persist(`` or ``.localCheckpoint(`` elsewhere would
-pin state that ``release_caches`` cannot see."""
+pin state that ``release_caches`` cannot see.
+
+Option rule: each defaulted parameter of a package top-level function must
+be set by some call in the package, ``__spark_entry__.py``, ``bench.py``,
+``scripts/``, ``perfbench/`` or ``tests/`` — by keyword, by a positional
+argument at or past its index, or by ``*args``/``**kwargs`` (which count as
+setting every parameter).  Calls resolve through import aliases and
+package re-exports.  A parameter no call sets has one value in use: it is
+a constant, and belongs in the body."""
 
 from __future__ import annotations
 
@@ -153,3 +162,147 @@ def test_only_caching_pins_state():
         f"pin/free calls outside caching.py (use persist_tracked, "
         f"local_checkpoint_tracked, unpersist_tracked): {offenders}"
     )
+
+
+# Besides the package itself, the files whose calls count as setting a
+# package function's options.
+CALLER_FILES = ("__spark_entry__.py", "bench.py")
+CALLER_DIRS = ("scripts", "perfbench", "tests")
+
+# Defaulted parameters kept although no caller sets them, each with its
+# reason, keyed "module.function.parameter".
+EXEMPT_OPTIONS: dict[str, str] = {}
+
+
+def _caller_files() -> dict[str, Path]:
+    files = _package_modules()
+    for rel in CALLER_FILES:
+        files[rel.removesuffix(".py")] = ROOT / rel
+    for d in CALLER_DIRS:
+        for path in sorted((ROOT / d).rglob("*.py")):
+            files[".".join(path.relative_to(ROOT).with_suffix("").parts)] = path
+    return files
+
+
+def _aliases(module: str, path: Path, tree: ast.Module, top_only: bool):
+    """Local name -> dotted targets the file binds it to by import, relative
+    imports resolved; ``top_only`` keeps module-level imports only (the
+    names a module re-exports)."""
+    package = module.split(".")
+    if path.name != "__init__.py":
+        package = package[:-1]
+    nodes = tree.body if top_only else ast.walk(tree)
+    out: dict[str, set[str]] = {}
+    for node in nodes:
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.asname:
+                    out.setdefault(alias.asname, set()).add(alias.name)
+                else:
+                    head = alias.name.split(".")[0]
+                    out.setdefault(head, set()).add(head)
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                base = package[: len(package) - node.level + 1]
+                target = ".".join(base + ([node.module] if node.module else []))
+            else:
+                target = node.module or ""
+            for alias in node.names:
+                out.setdefault(alias.asname or alias.name, set()).add(
+                    f"{target}.{alias.name}"
+                )
+    return out
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None]]:
+    """(name, positional index or None for keyword-only) of each defaulted
+    parameter."""
+    positional = fn.args.posonlyargs + fn.args.args
+    first = len(positional) - len(fn.args.defaults)
+    out = [(a.arg, i) for i, a in enumerate(positional) if i >= first]
+    out += [
+        (a.arg, None)
+        for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+        if d is not None
+    ]
+    return out
+
+
+def _dotted(node: ast.AST) -> list[str] | None:
+    parts = []
+    while isinstance(node, ast.Attribute):
+        parts.append(node.attr)
+        node = node.value
+    if not isinstance(node, ast.Name):
+        return None
+    return [node.id] + parts[::-1]
+
+
+def never_set_options() -> list[str]:
+    """Every defaulted parameter of a package top-level function that no
+    call in the caller files sets, as "module.function.parameter"."""
+    mods = _package_modules()
+    files = _caller_files()
+    trees = {name: ast.parse(p.read_text(), str(p)) for name, p in files.items()}
+    defs = {}  # "module.function" -> FunctionDef
+    for name in mods:
+        for stmt in trees[name].body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs[f"{name}.{stmt.name}"] = stmt
+    exports = {name: _aliases(name, mods[name], trees[name], True) for name in mods}
+
+    def canonical(dotted: str, depth: int = 0) -> str | None:
+        if dotted in defs:
+            return dotted
+        mod, _, attr = dotted.rpartition(".")
+        if depth < 8 and mod in exports and attr in exports[mod]:
+            for target in exports[mod][attr]:
+                found = canonical(target, depth + 1)
+                if found:
+                    return found
+        return None
+
+    set_params: dict[str, set[str]] = {d: set() for d in defs}
+    for name, tree in trees.items():
+        aliases = _aliases(name, files[name], tree, False)
+        for stmt in tree.body if name in mods else ():
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                aliases.setdefault(stmt.name, set()).add(f"{name}.{stmt.name}")
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            parts = _dotted(node.func)
+            if not parts or parts[0] not in aliases:
+                continue
+            for base in aliases[parts[0]]:
+                target = canonical(".".join([base] + parts[1:]))
+                if target is None:
+                    continue
+                params = _defaulted(defs[target])
+                if any(isinstance(a, ast.Starred) for a in node.args) or any(
+                    k.arg is None for k in node.keywords
+                ):
+                    set_params[target].update(p for p, _ in params)
+                    continue
+                set_params[target].update(k.arg for k in node.keywords)
+                set_params[target].update(
+                    p for p, i in params if i is not None and i < len(node.args)
+                )
+    return sorted(
+        f"{target.removeprefix(PKG + '.')}.{p}"
+        for target, fn in defs.items()
+        for p, _ in _defaulted(fn)
+        if p not in set_params[target]
+    )
+
+
+def test_every_option_has_a_caller():
+    """A defaulted parameter that no caller sets is a constant spelled as
+    an option: fold it into the body."""
+    never = never_set_options()
+    stray = [o for o in never if o not in EXEMPT_OPTIONS]
+    assert not stray, (
+        f"{len(stray)} options no caller sets (make them constants): {stray}"
+    )
+    stale = sorted(EXEMPT_OPTIONS.keys() - set(never))
+    assert not stale, f"exempt options that gained a caller or are gone: {stale}"

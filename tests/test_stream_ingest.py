@@ -120,7 +120,7 @@ def test_batch_caches_released(spark, tmp_path):
         [(i, f"seed doc {i} alpha beta gamma delta", 0) for i in range(4)],
         "doc_id long, text string, gen long",
     )
-    st, sg, bd = _md5_staged_bands(base, "text", "doc_id", 16, 4, 3)
+    st, sg, bd = _md5_staged_bands(base)
     _write_index(base.select("doc_id", "gen"), bd, st, str(tmp_path), "b0")
     for f in (sg, st):
         f.unpersist()
