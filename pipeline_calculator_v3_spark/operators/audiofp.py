@@ -124,4 +124,4 @@ def audio_fp_pairs(fps: DataFrame) -> DataFrame:
         fps["media_id"], "valid",
         fps["fp_hi"].alias("ahash_hi"), fps["fp_lo"].alias("ahash_lo"),
     )
-    return ahash_pairs(renamed, id_col="media_id", max_hamming=3)
+    return ahash_pairs(renamed)

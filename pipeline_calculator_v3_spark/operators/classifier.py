@@ -127,8 +127,8 @@ def classify_quality(
     if clash:
         raise ValueError(f"extra_cols collide with reserved names: {clash}")
     staged = docs.select(
-        F.col("doc_id").alias("doc_id"),
-        F.col("text").alias("text"),
+        "doc_id",
+        "text",
         tokens(F.lower(F.col("text"))).alias("tok"),
         *[F.col(c) for c in extras],
     ).where(F.size("tok") > 0)

@@ -28,13 +28,18 @@ from ..functions.text import (
     tokens,
 )
 
-# The md5 MinHash shape every oracle-backed face runs (and the oracle CTEs
-# in queries_textml.py are formatted from): 16 lanes in 4 bands of 4 over
-# distinct word trigrams.
+# The md5 MinHash shape every oracle-backed face runs: 16 lanes in 4 bands
+# of 4 over distinct word trigrams.  The oracle SQL is formatted from the
+# same constants: the SHINGLE_N-gram lambda over a DuckDB token list ``t``
+# and the band ids as VALUES rows.
 MD5_HASHES = 16
 MD5_BANDS = 4
 MD5_ROWS = MD5_HASHES // MD5_BANDS
 SHINGLE_N = 3
+SHINGLE_SQL = "i -> " + " || ' ' || ".join(
+    ["t[i]"] + [f"t[i+{k}]" for k in range(1, SHINGLE_N)]
+)
+MD5_BAND_IDS_SQL = ", ".join(f"({b})" for b in range(MD5_BANDS))
 
 
 def fingerprint_dedup(docs: DataFrame) -> DataFrame:
@@ -331,9 +336,7 @@ def _md5_staged_bands(
     return staged, sig, with_bands
 
 
-def minhash_lsh_match_md5(
-    batch: DataFrame, corpus: DataFrame, min_jaccard: float = 0.5
-) -> DataFrame:
+def minhash_lsh_match_md5(batch: DataFrame, corpus: DataFrame) -> DataFrame:
     """Incremental-ingest near-dup match: which BATCH documents duplicate
     something already in the CORPUS — the shape a streaming/append pipeline
     actually runs (dedup the increment against the existing table without
@@ -347,7 +350,7 @@ def minhash_lsh_match_md5(
     reports its best corpus match (max Jaccard, lowest corpus id on exact
     ties, via map-side ``max_by``).
 
-    Returns (batch_id, corpus_id, jaccard) with jaccard >= min_jaccard.
+    Returns (batch_id, corpus_id, jaccard) with jaccard >= 0.5.
     """
     sb, _sigb, bb = _md5_staged_bands(batch)
     sc, _sigc, bc = _md5_staged_bands(corpus)
@@ -357,9 +360,7 @@ def minhash_lsh_match_md5(
         .select("batch_id", "corpus_id")
         .dropDuplicates(["batch_id", "corpus_id"])
     )
-    scored = jaccard_verify(
-        cand, sb, sc, "batch_id", "corpus_id", min_jaccard
-    )
+    scored = jaccard_verify(cand, sb, sc, "batch_id", "corpus_id", 0.5)
     # min_by over (-jaccard, corpus_id): max jaccard, exact ties to the
     # LOWEST corpus id — only the (double) score is negated, so the rule
     # holds for string ids too (advice r08: -F.col(string) silently casts

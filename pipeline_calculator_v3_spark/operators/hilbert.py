@@ -77,19 +77,16 @@ def with_hilbert_key(
     lat_col: str,
     lon_col: str,
     bits: int = 16,
-    key_col: str = "hkey",
 ) -> DataFrame:
-    """``df`` plus a Hilbert key column over ``bits``-bit quantized
+    """``df`` plus a Hilbert key column ``hkey`` over ``bits``-bit quantized
     (lat, lon) cells — a BIGINT in [0, 4^bits) usable as a sort/cluster/
     range-partition key.  2*bits <= 62.  NULL/NaN/+-Inf coordinates
     yield a NULL key (the zorder_key quarantine rule: a clamped bad
     coordinate would pollute a corner tile's file statistics)."""
     if not 1 <= bits <= 31:
         raise ValueError(f"bits must be in [1, 31], got {bits}")
-    if key_col in df.columns or "_hx" in df.columns or "_hy" in df.columns:
-        raise ValueError(
-            f"column names {key_col!r}, '_hx', '_hy' are reserved"
-        )
+    if {"hkey", "_hx", "_hy"} & set(df.columns):
+        raise ValueError("column names 'hkey', '_hx', '_hy' are reserved")
     lat, lon = F.col(lat_col), F.col(lon_col)
     keyed = _hilbert_steps(
         df.select(
@@ -98,7 +95,7 @@ def with_hilbert_key(
             _quantize(lat, -90.0, 90.0, bits).alias("_hy"),
         ),
         bits,
-        key_col,
+        "hkey",
     )
     inf = float("inf")
     bad = (
@@ -108,17 +105,17 @@ def with_hilbert_key(
         | (F.abs(lon.cast("double")) == F.lit(inf))
     )
     return keyed.withColumn(
-        key_col,
-        F.when(bad, F.lit(None).cast("bigint")).otherwise(F.col(key_col)),
+        "hkey",
+        F.when(bad, F.lit(None).cast("bigint")).otherwise(F.col("hkey")),
     )
 
 
-def hilbert_sql_ctes(x: str, y: str, bits: int, src: str) -> tuple[str, str]:
+def hilbert_sql_ctes(x: str, y: str, bits: int, src: str) -> str:
     """The xy2d transform as a DuckDB CTE chain (one step per level —
     LINEAR text size, the with_hilbert_key projection chain's twin).
     ``x``/``y`` are SQL expressions over ``src`` for already-quantized
-    cells.  Returns ``(cte_chain, final_name)``: join the chain into a
-    ``WITH`` list; the final CTE carries every ``src`` column plus
+    cells.  Returns the CTE chain to join into a ``WITH`` list; its final
+    CTE, ``hfin``, carries every ``src`` column plus
     ``hd`` (the Hilbert key), with working columns ``hx``/``hy``
     dropped."""
     steps = [
@@ -144,4 +141,4 @@ def hilbert_sql_ctes(x: str, y: str, bits: int, src: str) -> tuple[str, str]:
         )
         n += 1
     steps.append(f"hfin AS (SELECT * EXCLUDE (hx, hy) FROM h{n})")
-    return ",\n".join(steps), "hfin"
+    return ",\n".join(steps)

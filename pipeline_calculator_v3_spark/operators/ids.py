@@ -35,9 +35,8 @@ from pyspark.sql import functions as F
 def dense_ids(
     df: DataFrame,
     order_by: list[str],
-    id_col: str = "rid",
 ) -> DataFrame:
-    """``df`` + a dense BIGINT ``id_col`` in [0, N) ordered by
+    """``df`` + a dense BIGINT ``rid`` in [0, N) ordered by
     ``order_by`` — semantics of a global row_number, physical plan of a
     range exchange + parallel per-partition windows."""
     if not order_by:
@@ -82,7 +81,7 @@ def dense_ids(
             "*",
             (F.row_number().over(w_local) + F.col("_off") - 1)
             .cast("bigint")
-            .alias(id_col),
+            .alias("rid"),
         )
         .drop("_pid", "_off")
     )

@@ -25,25 +25,24 @@ def salted_join(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    n_salts: int = 8,
 ) -> DataFrame:
     """Skew-safe inner equi-join: the (large, skewed) left side gets a uniform
     random-free salt derived from a row-stable hash of its other columns;
     the (smaller) right side is replicated once per salt value.
 
-    Join key becomes (key, salt): a hot key's rows spread over ``n_salts``
+    Join key becomes (key, salt): a hot key's rows spread over 8
     reducers instead of one.  Deterministic — the salt is a hash, not rand().
     """
     lcols = [c for c in left.columns if c != key]
     salt = (
         F.pmod(F.xxhash64(*[F.col(c) for c in lcols]) if lcols else F.xxhash64(F.col(key)),
-               F.lit(n_salts))
+               F.lit(8))
         .cast("int")
         .alias("__salt")
     )
     l = left.withColumn("__salt", salt)
     r = right.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
+        "__salt", F.explode(F.array(*[F.lit(i) for i in range(8)]))
     )
     return l.join(r, [key, "__salt"], "inner").drop("__salt")
 

@@ -39,11 +39,10 @@ def sqdist(a: Column, b: Column) -> Column:
     )
 
 
-def _assign_hof(
-    vecs: DataFrame, cents: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    """(id, vec, cid, sqdist) — each vector's nearest centroid, as a PURE
-    MAP: the centroid table collapses to ONE broadcast row holding a
+def _assign_hof(vecs: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vid, v, cid, sqd) — each ``vec_id``/``embedding`` row's nearest
+    centroid, as a PURE MAP: the centroid table collapses to ONE broadcast
+    row holding a
     cid-sorted array of (cid, cvec) structs, and the per-vector winner is
     ``array_min`` over the per-centroid (sqd, cid) structs — lexicographic
     struct ordering IS the (asc sqdist, asc cid) tie rule, unchanged from
@@ -73,7 +72,7 @@ def _assign_hof(
         F.transform(
             F.col("_cents"),
             lambda c: F.struct(
-                sqdist(F.col(vec_col), c["cvec"]).alias("sqd"),
+                sqdist(F.col("embedding"), c["cvec"]).alias("sqd"),
                 c["cid"].alias("cid"),
             ),
         )
@@ -81,8 +80,8 @@ def _assign_hof(
     return (
         vecs.crossJoin(F.broadcast(carr))
         .select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).alias("v"),
+            F.col("vec_id").alias("vid"),
+            F.col("embedding").alias("v"),
             best.alias("_b"),
         )
         .select(
@@ -172,9 +171,7 @@ def _kernel_batches(batches, cids, C, row_chunk: int, out_schema):
         )
 
 
-def _assign(
-    vecs: DataFrame, cents: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
+def _assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     """(vid, v, cid, sqd) via ONE Arrow map stage (guide §4.2): centroids
     are k bounded rows — collected once per Lloyd pass (the q_heavy_hitters
     bounded-metadata precedent; the vectors themselves never reach the
@@ -200,7 +197,7 @@ def _assign(
         for r in rows
     )
     if not clean:
-        return _assign_hof(vecs, cents, id_col, vec_col)
+        return _assign_hof(vecs, cents)
     import numpy as np
 
     from ..shipping import ensure_pkg_shipped
@@ -211,7 +208,9 @@ def _assign(
     k = len(cids)
     # bound the (rows x k) distance temporaries to ~8M doubles per chunk
     row_chunk = max(1024, (8 << 20) // max(k, 1))
-    src = vecs.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
+    src = vecs.select(
+        F.col("vec_id").alias("vid"), F.col("embedding").alias("v")
+    )
     in_fields = src.schema.fields
     cid_type = cents.schema["cid"].dataType.simpleString()
     out_ddl = (
@@ -284,7 +283,7 @@ def kmeans_assign(
     from ..functions.vectors import elementwise_mean
 
     for _ in range(iters):
-        assigned = _assign(vecs, cents, "vec_id", "embedding")
+        assigned = _assign(vecs, cents)
         updated = elementwise_mean(
             assigned, ["cid"], "v", "cvec", round_dp=9
         )
@@ -307,5 +306,5 @@ def kmeans_assign(
         )
     if centroids_sink is not None:
         centroids_sink.append(cents)
-    out = _assign(vecs, cents, "vec_id", "embedding")
+    out = _assign(vecs, cents)
     return out if keep_vec else out.select("vid", "cid", "sqd")

@@ -110,7 +110,7 @@ def decode_media(media: DataFrame) -> DataFrame:
     return media.mapInPandas(gen, DECODE_SCHEMA)
 
 
-def byte_histogram_features(media: DataFrame, bins: int = 16) -> DataFrame:
+def byte_histogram_features(media: DataFrame) -> DataFrame:
     """Feature extraction: normalized byte histogram as array<float> — the
     shape of an embedding pipeline (decode -> fixed-size vector)."""
     ensure_pkg_shipped(media.sparkSession)
@@ -129,10 +129,10 @@ def byte_histogram_features(media: DataFrame, bins: int = 16) -> DataFrame:
                 # tests/test_multimodal.py).
                 blob = bytes(content) if content is not None else b""
                 if len(blob) < HEADER_SIZE or blob[:4] != MAGIC:
-                    hist = np.zeros(bins, dtype=np.int64)
+                    hist = np.zeros(16, dtype=np.int64)
                 else:
                     payload = np.frombuffer(blob[HEADER_SIZE:], dtype=np.uint8)
-                    hist, _ = np.histogram(payload, bins=bins, range=(0, 256))
+                    hist, _ = np.histogram(payload, bins=16, range=(0, 256))
                 total = max(hist.sum(), 1)
                 ids.append(int(mid))
                 feats.append((hist / total).astype(np.float32))

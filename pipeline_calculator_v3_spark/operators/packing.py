@@ -39,7 +39,7 @@ def pack_sequences(
     if budget <= 0 or n_shards <= 0:
         raise ValueError("budget and n_shards must be positive")
     base = docs.select(
-        F.col("doc_id").alias("doc_id"),
+        "doc_id",
         shard_of(F.col("doc_id"), n_shards),
         F.size(tokens(F.col("text"))).cast("bigint").alias("ntok"),
     ).where(F.col("ntok") > 0)

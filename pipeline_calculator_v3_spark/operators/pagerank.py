@@ -56,7 +56,7 @@ def pagerank(edges: DataFrame, iterations: int = 10) -> DataFrame:
     conservation invariant (tests/test_pagerank.py) fails."""
     if iterations <= 0:
         raise ValueError("iterations must be positive")
-    e = edges.select(F.col("src").alias("src"), F.col("dst").alias("dst")).distinct()
+    e = edges.select("src", "dst").distinct()
     # "dangling" (no out-edges) is a STATIC vertex property: flag it once at
     # build time and carry it inside the ranks frame, so the per-round
     # dangling-mass term collapses from a distinct + anti-join exchange

@@ -148,7 +148,6 @@ def _grp_pairs(members: DataFrame) -> DataFrame:
 
 def ahash_pairs(
     hashes: DataFrame,
-    id_col: str = "media_id",
     max_hamming: int = 3,
     bucket_cap: int = 1024,
 ) -> DataFrame:
@@ -186,7 +185,7 @@ def ahash_pairs(
     # one (advice r13) — one skinny-row exchange buys the guarantee.
     members = persist_tracked(
         hashes.where(F.col("valid")).select(
-            F.col(id_col).alias("id"), "ahash_hi", "ahash_lo"
+            F.col("media_id").alias("id"), "ahash_hi", "ahash_lo"
         ).distinct()
     )
     distinct = persist_tracked(

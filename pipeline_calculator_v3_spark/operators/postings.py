@@ -67,7 +67,7 @@ def postings_index(
     from ..caching import persist_tracked
 
     occ = docs.select(
-        F.col("doc_id").alias("doc_id"),
+        "doc_id",
         F.posexplode(tokens(F.lower(F.col("text")))).alias("pos", "term"),
     )
     # persisted: both the exact per-term stats and the salted top-k read

@@ -122,7 +122,7 @@ def pq_train(
         # corpus re-join per subspace, an O(m) recompute factor on the
         # hottest stage (review r13).  Same rows, same means.
         assigned = corpus.crossJoin(F.broadcast(_books_row(books))).select(
-            F.col("embedding"), _codes_expr(m, ksub, dsub, "embedding").alias("codes")
+            F.col("embedding"), _codes_expr(m, ksub, dsub).alias("codes")
         )
         subvecs = assigned.select(
             F.col("embedding"), F.posexplode("codes").alias("_i", "code")
@@ -180,8 +180,8 @@ def _shape_of(codebooks: DataFrame) -> tuple[int, int, int]:
     return int(mk["mm"]) + 1, int(mk["k"]), dsub
 
 
-def _codes_expr(m: int, ksub: int, dsub: int, vec_col: str) -> Column:
-    """The ARRAY<BIGINT> code word for ``vec_col`` against the broadcast
+def _codes_expr(m: int, ksub: int, dsub: int) -> Column:
+    """The ARRAY<BIGINT> code word for ``embedding`` against the broadcast
     ``_cb`` codebook row: per subspace, argmin squared L2 (ties -> lowest
     code) — one HOF expression, no exchanges, no UDFs.  Each subspace
     block comes off ``_cb`` by POSITION (slice at i*ksub+1): the codebook
@@ -195,9 +195,9 @@ def _codes_expr(m: int, ksub: int, dsub: int, vec_col: str) -> Column:
                 F.transform(
                     F.slice(F.col("_cb"), i * ksub + 1, ksub),
                     lambda c: F.struct(
-                        _sqdist(_sub(F.col(vec_col), i, dsub), c["cent"]).alias(
-                            "dist"
-                        ),
+                        _sqdist(
+                            _sub(F.col("embedding"), i, dsub), c["cent"]
+                        ).alias("dist"),
                         c["code"].alias("code"),
                     ),
                 )
@@ -324,7 +324,7 @@ def pq_ivf_adc_topk(
         .select(
             F.col("vec_id").alias("cid"),
             F.array_min(coarse_sc("embedding"))["list_id"].alias("list_id"),
-            _codes_expr(m, ksub, dsub, "embedding").alias("codes"),
+            _codes_expr(m, ksub, dsub).alias("codes"),
         )
     )
     probes = (

@@ -313,33 +313,31 @@ def cosine_topk_ivf(
 def cosine_topk_lsh(
     queries: DataFrame,
     corpus: DataFrame,
-    k: int = 10,
-    n_tables: int = 8,
-    bits_per_table: int = 6,
     n_probes: int = 1,
     plane_weights: list[list[float]] | None = None,
 ) -> DataFrame:
-    """Approximate cosine top-k: multi-table sign-random-projection LSH,
+    """Approximate cosine top-10: multi-table sign-random-projection LSH,
     optionally MULTI-PROBE.  ``plane_weights`` switches the hyperplane
     family to a driver-side literal matrix (see :func:`md5_plane_weights`
     — the oracle-checkable face).
 
     A single wide bucket has near-zero recall (neighbors rarely agree on all
-    bits); the standard fix is L narrower tables — a candidate only needs to
-    collide in ONE table.  Candidates = union over tables (explode + equi-join
-    + pair dedup), then exact rescoring.  Recall tunes with (L, bits).
+    bits); the standard fix is 8 narrower 6-bit tables — a candidate only
+    needs to collide in ONE table.  Candidates = union over tables (explode
+    + equi-join + pair dedup), then exact rescoring.  Recall tunes with
+    (tables, bits).
 
     ``n_probes`` > 1 additionally probes the query's Hamming-neighbor
     buckets (single-bit flips, up to n_probes-1 of them) in every table —
     the standard trade that buys coarse-table recall WITHOUT corpus-side
     cost: the corpus still stores one bucket per table; only the (small)
     query side fans out.  At 100 TB that asymmetry is the whole point —
-    corpus bucket size (shuffle + rescoring volume) is set by bits_per_table
-    alone, while recall scales with probes x tables."""
+    corpus bucket size (shuffle + rescoring volume) is set by the bits per
+    table alone, while recall scales with probes x tables."""
     # Stage the base bucket array through a persisted projection before
     # building probe variants: each variant references the array, and
     # Catalyst's project-collapse would otherwise inline the FULL
-    # n_tables x bits plane-dot computation once per probe (HOF
+    # tables x bits plane-dot computation once per probe (HOF
     # subexpressions are excluded from reuse — the repo's documented
     # inlining trap).  The query side is the small side, so the persist is
     # cheap; the corpus side computes its buckets exactly once either way.
@@ -347,13 +345,13 @@ def cosine_topk_lsh(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qv"),
         _bucket_tables(
-            F.col("embedding"), n_tables, bits_per_table, plane_weights
+            F.col("embedding"), 8, 6, plane_weights
         ).alias("_buckets"),
     )
     if n_probes > 1:
         q_base = persist_tracked(q_base)
         variants = [F.col("_buckets")]
-        for b in range(min(n_probes - 1, bits_per_table)):
+        for b in range(min(n_probes - 1, 6)):
             # flip hash bit b — above the _TABLE_ID_BITS table-id field
             flip = F.lit(1 << (b + _TABLE_ID_BITS)).cast("long")
             variants.append(
@@ -374,8 +372,7 @@ def cosine_topk_lsh(
         F.col("embedding").alias("cv"),
         norm(F.col("embedding")).alias("cn"),
         F.explode(
-            _bucket_tables(F.col("embedding"), n_tables, bits_per_table,
-                           plane_weights)
+            _bucket_tables(F.col("embedding"), 8, 6, plane_weights)
         ).alias("bucket"),
     )
     cand = (
@@ -394,7 +391,7 @@ def cosine_topk_lsh(
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("cid"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 10)
     )
 
 
@@ -422,17 +419,14 @@ def sign_prefix_block(vec: Column, sign_dims: int = 8) -> Column:
     return F.when(F.size(vec) >= F.lit(sign_dims), F.concat(*bits))
 
 
-def embedding_dedup_pairs(
-    vectors: DataFrame,
-    min_cosine: float = 0.99,
-) -> DataFrame:
+def embedding_dedup_pairs(vectors: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the vector-space face of
     dedup (brief north star: 'embedding-cosine near-dup').
 
     Plan: sign-prefix block (map-side, 2^8 buckets) -> skew-safe
     within-block pair generation (salted_self_pairs: a dense region's hot
     bucket splits 4^2 ways) -> exact double-precision cosine ->
-    threshold.  Returns (id1, id2, cos_sim).  Never all-pairs: candidate
+    threshold 0.99.  Returns (id1, id2, cos_sim).  Never all-pairs: candidate
     count is sum of per-bucket quadratic terms, not N^2."""
     from .joins import salted_self_pairs
 
@@ -458,7 +452,7 @@ def embedding_dedup_pairs(
             F.col("b_vid").alias("id2"),
             cos.alias("cos_sim"),
         )
-        .where(F.col("cos_sim") >= min_cosine)
+        .where(F.col("cos_sim") >= 0.99)
     )
 
 
@@ -657,8 +651,6 @@ def _pairs_cosine_join(
 def semantic_dedup_pairs(
     vectors: DataFrame,
     k: int = 8,
-    iters: int = 1,
-    min_cosine: float = 0.99,
     assign_sink: list | None = None,
     centroids_sink: list | None = None,
 ) -> DataFrame:
@@ -676,7 +668,8 @@ def semantic_dedup_pairs(
     (SemDeDup accepts it; sign-prefix blocking — embedding_dedup_pairs —
     is the overlapping-block alternative).
 
-    Returns (id1, id2, cluster_id, cos_sim), id1 < id2, deterministic on
+    Returns (id1, id2, cluster_id, cos_sim) with cos_sim >= 0.99 after one
+    Lloyd iteration, id1 < id2, deterministic on
     both engines (kmeans determinism contract + exact cosine).  Pass
     ``assign_sink`` / ``centroids_sink`` (lists) to also receive the
     (vid, cid, sqd) assignment and (cid, cvec) centroid frames — the
@@ -693,7 +686,7 @@ def semantic_dedup_pairs(
     # sides of the within-cluster self-join read this frame.
     assigned = persist_tracked(
         kmeans_assign(
-            vectors, k=k, iters=iters,
+            vectors, k=k, iters=1,
             centroids_sink=centroids_sink, keep_vec=True,
         ).select(
             "vid", "v", F.col("cid").alias("blk"), "sqd",
@@ -719,18 +712,17 @@ def semantic_dedup_pairs(
     # by tests/test_semantic_dedup.py.
     if k >= 64:
         return _pairs_cosine_arrow(
-            labeled, min_cosine, 4, block_out="cluster_id"
+            labeled, 0.99, 4, block_out="cluster_id"
         )
-    return _pairs_cosine_join(labeled, min_cosine, 4)
+    return _pairs_cosine_join(labeled, 0.99, 4)
 
 
 def embedding_contamination(
     train: DataFrame,
     eval_df: DataFrame,
-    min_cosine: float = 0.95,
 ) -> DataFrame:
     """Semantic train/eval contamination: training vectors whose embedding
-    is near-duplicate (cosine >= ``min_cosine``) to ANY evaluation vector —
+    is near-duplicate (cosine >= 0.95) to ANY evaluation vector —
     the vector-space face of benchmark decontamination (the n-gram face is
     q_contamination; paraphrased leaks that share no 8-gram still land next
     to their source in embedding space).
@@ -778,7 +770,7 @@ def embedding_contamination(
                 / F.nullif(F.col("tn") * F.col("en"), F.lit(0.0))
             ).alias("cos_sim"),
         )
-        .where(F.col("cos_sim") >= min_cosine)
+        .where(F.col("cos_sim") >= 0.95)
     )
     # min_by over (-cos, eval_id): max cosine, exact ties to the LOWEST
     # eval id — only the (double) score is negated, so the rule holds for

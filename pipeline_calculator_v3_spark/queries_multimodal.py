@@ -123,7 +123,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     hex of the utf-8 text and re-bins it.  float32 on both sides (numpy
     float32 cast == DuckDB REAL cast, same IEEE rounding)."""
     media = synth_media(_spread(t(spark, sf_dir, "documents"), spark))
-    feats = byte_histogram_features(media, bins=16)
+    feats = byte_histogram_features(media)
     return feats.select(
         "media_id",
         F.posexplode("features").alias("bin", "value"),
@@ -301,7 +301,7 @@ def q_phash_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 10_000_000).alias("doc_id"), "text", "n_chars"
     )
     media = synth_png_media(_spread(docs.unionByName(planted), spark))
-    return ahash_pairs(ahash64(media), max_hamming=3).select(
+    return ahash_pairs(ahash64(media)).select(
         "id_a", "id_b", F.col("hamming").cast("bigint").alias("hamming")
     )
 

@@ -17,7 +17,13 @@ from pyspark.sql import functions as F
 
 from .caching import persist_tracked
 from .functions.text import fingerprint_md5, shingles_from_tokens, tokens
-from .operators.dedup import MD5_BANDS, MD5_HASHES, MD5_ROWS
+from .operators.dedup import (
+    MD5_BAND_IDS_SQL,
+    MD5_HASHES,
+    MD5_ROWS,
+    SHINGLE_N,
+    SHINGLE_SQL,
+)
 from .operators.sampling import hash_sample_predicate
 from .queries import query, t
 
@@ -1037,7 +1043,6 @@ _G8_DUCK = (
     "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]"
     " || ' ' || t[i+4] || ' ' || t[i+5] || ' ' || t[i+6] || ' ' || t[i+7]"
 )
-_MD5_BAND_IDS = ", ".join(f"({b})" for b in range(MD5_BANDS))
 
 
 @query(
@@ -1062,8 +1067,8 @@ exact AS (
 ),
 sh3 AS (
     SELECT doc_id,
-           list_distinct(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-                         i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
+           list_distinct(list_transform(range(1, greatest(len(t) - {SHINGLE_N - 1}, 0) + 1),
+                         {SHINGLE_SQL})) AS sh
     FROM exact
 ),
 sigs AS (
@@ -1077,7 +1082,7 @@ bands AS (
     SELECT doc_id,
            CAST(b AS VARCHAR) || ':' ||
            list_aggregate(sig[b*{MD5_ROWS}+1 : b*{MD5_ROWS}+{MD5_ROWS}], 'string_agg', ',') AS key
-    FROM sigs CROSS JOIN (VALUES {_MD5_BAND_IDS}) AS tb(b)
+    FROM sigs CROSS JOIN (VALUES {MD5_BAND_IDS_SQL}) AS tb(b)
 ),
 cand AS (
     SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2

@@ -1370,4 +1370,4 @@ def q_dense_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem").select(
         "l_orderkey", F.col("l_linenumber").cast("bigint").alias("l_linenumber")
     )
-    return dense_ids(li, ["l_orderkey", "l_linenumber"], id_col="rid")
+    return dense_ids(li, ["l_orderkey", "l_linenumber"])

@@ -504,7 +504,7 @@ def _hilbert_oracle() -> str:
 
     qlat = quantize_sql("lat", -90.0, 90.0, _HBITS)
     qlon = quantize_sql("lon", -180.0, 180.0, _HBITS)
-    chain, final = hilbert_sql_ctes(qlon, qlat, _HBITS, "zpts")
+    chain = hilbert_sql_ctes(qlon, qlat, _HBITS, "zpts")
     return f"""
 WITH {_ZPTS_CTE},
 {chain}
@@ -513,7 +513,7 @@ SELECT CAST(hd >> {_HTILE_SHIFT} AS BIGINT) AS tile,
        MIN(hd) AS min_h, MAX(hd) AS max_h,
        ROUND(MIN(lat), 6) AS lat_lo, ROUND(MAX(lat), 6) AS lat_hi,
        ROUND(MIN(lon), 6) AS lon_lo, ROUND(MAX(lon), 6) AS lon_hi
-FROM {final}
+FROM hfin
 GROUP BY tile
 """
 
@@ -540,7 +540,7 @@ def q_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         (((F.col("o_orderkey") * 37) % 18000) / 100.0 - 90.0).alias("lat"),
         (((F.col("o_orderkey") * 101) % 36000) / 100.0 - 180.0).alias("lon"),
     )
-    keyed = with_hilbert_key(pts, "lat", "lon", _HBITS, key_col="hkey")
+    keyed = with_hilbert_key(pts, "lat", "lon", _HBITS)
     return keyed.groupBy(
         F.shiftright("hkey", _HTILE_SHIFT).cast("bigint").alias("tile")
     ).agg(

@@ -714,7 +714,6 @@ def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             updates_schema,
             base,
             os.path.join(work, "corpus"),
-            min_jaccard=0.5,
         )
         out = read_admitted(
             spark, os.path.join(work, "corpus"), updates_schema

@@ -20,9 +20,11 @@ from .functions.text import (
 )
 from .functions.vectors import cosine_sql
 from .operators.dedup import (
-    MD5_BANDS,
+    MD5_BAND_IDS_SQL,
     MD5_HASHES,
     MD5_ROWS,
+    SHINGLE_N,
+    SHINGLE_SQL,
     fingerprint_dedup,
     minhash_lsh_match_md5,
     minhash_lsh_pairs,
@@ -133,8 +135,8 @@ _MD5_SHINGLE_CTES = f"""tk AS (
 ),
 toks AS (
     SELECT doc_id,
-           list_distinct(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
-                         i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
+           list_distinct(list_transform(range(1, greatest(len(t) - {SHINGLE_N - 1}, 0) + 1),
+                         {SHINGLE_SQL})) AS sh
     FROM tk
 )"""
 
@@ -142,7 +144,6 @@ toks AS (
 # (_MD5_LSH_CTES) AND the bipartite incremental-ingest match
 # (q_dedup_incremental), so the signature derivation cannot fork.  Lane
 # count and band layout are the Spark stager's constants.
-_MD5_BAND_IDS = ", ".join(f"({b})" for b in range(MD5_BANDS))
 _MD5_SIG_BAND_CTES = f"""{_MD5_SHINGLE_CTES},
 sigs AS (
     SELECT doc_id, sh,
@@ -156,7 +157,7 @@ bands AS (
     SELECT doc_id,
            CAST(b AS VARCHAR) || ':' ||
            list_aggregate(sig[b*{MD5_ROWS}+1 : b*{MD5_ROWS}+{MD5_ROWS}], 'string_agg', ',') AS key
-    FROM sigs CROSS JOIN (VALUES {_MD5_BAND_IDS}) AS t(b)
+    FROM sigs CROSS JOIN (VALUES {MD5_BAND_IDS_SQL}) AS t(b)
 )"""
 
 _MD5_LSH_CTES = f"""{_MD5_SIG_BAND_CTES},
@@ -274,9 +275,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard, lowest corpus id on ties)."""
     d = _spread(t(spark, sf_dir, "documents"), spark)
     is_batch = F.pmod(F.col("doc_id"), F.lit(20)) == 0
-    return minhash_lsh_match_md5(
-        d.where(is_batch), d.where(~is_batch), min_jaccard=0.5
-    )
+    return minhash_lsh_match_md5(d.where(is_batch), d.where(~is_batch))
 
 
 # Exact substring dedup (the Lee et al. 2022 "Deduplicating Training Data
@@ -756,11 +755,11 @@ def q_similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     HALF the corpus-side fan-out and ~27% fewer rescored candidates than
     16x4 — multi-probe buys coarse-table recall without corpus-side cost,
     which is the asymmetry that matters when the corpus is the 100 TB side.
-    bits_per_table still scales ~log2(N / target_bucket) with corpus size."""
+    The bits per table still scale ~log2(N / target_bucket) with corpus
+    size."""
     e = _spread(t(spark, sf_dir, "embeddings"), spark)
     return cosine_topk_lsh(
-        e.where(F.col("vec_id") < 8), e, k=10,
-        n_tables=8, bits_per_table=6, n_probes=7,
+        e.where(F.col("vec_id") < 8), e, n_probes=7,
         plane_weights=_lsh_md5_weights(),
     )
 
@@ -853,12 +852,10 @@ def q_similarity_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # methods' branches — unpersisted it would recompute per method
     exact = persist_tracked(cosine_topk(q, e, k=10).select("qid", "cid"))
     approx = {
-        "lsh": cosine_topk_lsh(q, e, k=10, n_tables=8, bits_per_table=6,
-                               n_probes=7),
+        "lsh": cosine_topk_lsh(q, e, n_probes=7),
         # the md5-plane family backing the oracle-checked ANN-LSH entry
         # (r08): same index shape, seed-searched 'plane3' weights
-        "lsh_md5": cosine_topk_lsh(q, e, k=10, n_tables=8, bits_per_table=6,
-                                   n_probes=7,
+        "lsh_md5": cosine_topk_lsh(q, e, n_probes=7,
                                    plane_weights=_lsh_md5_weights()),
         "ivf": cosine_topk_ivf(q, e, k=10, n_centroids=32, nprobe=3),
     }
@@ -931,7 +928,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import embedding_dedup_pairs
 
     corpus = _planted_embedding_corpus(spark, sf_dir)
-    return embedding_dedup_pairs(_spread(corpus, spark), min_cosine=0.99)
+    return embedding_dedup_pairs(_spread(corpus, spark))
 
 
 @query(
@@ -1132,7 +1129,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import semantic_dedup_pairs
 
     corpus = _spread(_planted_embedding_corpus(spark, sf_dir), spark)
-    pairs = semantic_dedup_pairs(corpus, k=32, iters=1, min_cosine=0.99)
+    pairs = semantic_dedup_pairs(corpus, k=32)
     return dedup_clusters(corpus, pairs, id_col="vec_id")
 
 
@@ -1189,8 +1186,7 @@ def q_dedup_semantic_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     asg_sink: list = []
     cen_sink: list = []
     pairs = semantic_dedup_pairs(
-        corpus, k=32, iters=1, min_cosine=0.99,
-        assign_sink=asg_sink, centroids_sink=cen_sink,
+        corpus, k=32, assign_sink=asg_sink, centroids_sink=cen_sink,
     )
     comp = connected_components(pairs)
     cos_cent = (
@@ -1288,7 +1284,7 @@ def q_contamination_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _spread(_planted_embedding_corpus(spark, sf_dir), spark)
     is_eval = (F.col("vec_id") % 10 == 0) & (F.col("vec_id") < 100000)
     return embedding_contamination(
-        corpus.where(~is_eval), corpus.where(is_eval), min_cosine=0.95
+        corpus.where(~is_eval), corpus.where(is_eval)
     )
 
 
@@ -1918,7 +1914,7 @@ def q_dedup_semantic_xl(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = persist_tracked(base.unionByName(twins))
     n = corpus.count()
     k = max(8, n // 500)
-    pairs = semantic_dedup_pairs(corpus, k=k, iters=1, min_cosine=0.99)
+    pairs = semantic_dedup_pairs(corpus, k=k)
     out = dedup_clusters(corpus, pairs, id_col="vec_id")
     return out.agg(
         F.count("*").cast("bigint").alias("n_vectors"),

@@ -188,7 +188,7 @@ def q_join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s_suppkey").alias("skey"), "s_name"
     )
     return (
-        salted_join(li, s, key="skey", n_salts=8)
+        salted_join(li, s, key="skey")
         .groupBy("s_name")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),

@@ -158,7 +158,6 @@ def admit_batch(
     batch_df: DataFrame,
     batch_id: int,
     work_dir: str,
-    min_jaccard: float = 0.5,
 ) -> None:
     """One micro-batch through the near-dup admission gate (module
     docstring steps 1-5).  Exposed module-level so redelivery can be
@@ -181,7 +180,7 @@ def admit_batch(
     pinned = [base_staged, sig]
     try:
         _admit_batch_body(
-            spark, batch_df, batch_id, work_dir, min_jaccard,
+            spark, batch_df, batch_id, work_dir,
             base_staged, base_bands, pinned,
         )
     finally:
@@ -190,7 +189,7 @@ def admit_batch(
 
 
 def _admit_batch_body(
-    spark, batch_df, batch_id, work_dir, min_jaccard,
+    spark, batch_df, batch_id, work_dir,
     base_staged, base_bands, pinned,
 ) -> None:
     short_staged, short_bands = _short_doc_frames(batch_df)
@@ -222,12 +221,12 @@ def _admit_batch_body(
     # bipartite batch-vs-corpus verify through the ONE shared Jaccard
     # spelling (jaccard_verify; review r13 — this was the third hand copy)
     corpus_rejected = (
-        jaccard_verify(cand, staged, idx_sh, "bid", "cid", min_jaccard)
+        jaccard_verify(cand, staged, idx_sh, "bid", "cid", 0.5)
         .select(F.col("bid").alias("doc_id"))
         .distinct()
     )
     internal_rejected = (
-        _verify_candidates(with_bands, staged, ["key"], min_jaccard)
+        _verify_candidates(with_bands, staged, ["key"], 0.5)
         .select(F.col("id2").alias("doc_id"))  # greedy lowest-id-wins
         .distinct()
     )
@@ -265,7 +264,6 @@ def ingest_stream_dedup(
     updates_schema: str,
     base_docs: DataFrame,
     work_dir: str,
-    min_jaccard: float = 0.5,
 ) -> None:
     """Seed the index from ``base_docs`` (gen 0), then fold every update
     file under ``updates_dir`` through the near-dup admission gate, one
@@ -296,9 +294,7 @@ def ingest_stream_dedup(
         unpersist_tracked(seed_staged)
 
     def _admit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        admit_batch(
-            spark, batch_df, batch_id, work_dir, min_jaccard=min_jaccard
-        )
+        admit_batch(spark, batch_df, batch_id, work_dir)
 
     stream = (
         spark.readStream.schema(updates_schema)

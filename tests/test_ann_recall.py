@@ -43,5 +43,5 @@ def test_short_embedding_quarantined_not_fatal(spark):
         "vec_id", sign_prefix_block(F.col("embedding"), 8).alias("k")).collect()}
     assert keys[3] is None and keys[4] is None and keys[1] is not None
     got = [(r.id1, r.id2) for r in
-           embedding_dedup_pairs(vecs, min_cosine=0.99).collect()]
+           embedding_dedup_pairs(vecs).collect()]
     assert got == [(1, 2)]

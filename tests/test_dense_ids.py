@@ -20,7 +20,7 @@ def test_ids_are_dense_and_ordered(spark, n, parts):
     # dense_ids range-partitions into the session's shuffle partition
     # count, read when the plan is built
     with scoped_conf(spark, "spark.sql.shuffle.partitions", str(parts)):
-        ranked = dense_ids(df, ["k"], id_col="rid")
+        ranked = dense_ids(df, ["k"])
     out = ranked.collect()
     assert sorted(r.rid for r in out) == list(range(n))
     by_rank = sorted(out, key=lambda r: r.rid)

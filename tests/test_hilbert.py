@@ -101,11 +101,11 @@ def test_matches_duckdb_cte_replay(spark, duck, sf_dir):
     qlon = quantize_sql(
         "(event_id % 3600) / 10.0 - 180.0", -180.0, 180.0, bits
     )
-    chain, final = hilbert_sql_ctes(qlon, qlat, bits, "src")
+    chain = hilbert_sql_ctes(qlon, qlat, bits, "src")
     sql = f"""
 WITH src AS (SELECT event_id FROM events),
 {chain}
-SELECT event_id, hd FROM {final}
+SELECT event_id, hd FROM hfin
 """
     want = {int(r[0]): int(r[1]) for r in duck.execute(sql).fetchall()}
     assert len(got) == len(want) >= 1000

@@ -168,11 +168,11 @@ def test_arrow_assign_bit_identical_to_hof(spark, sf_dir):
     def assert_same(vecs, cents, tag):
         a = {
             r.vid: (r.cid, r.sqd)
-            for r in _assign(vecs, cents, "vec_id", "embedding").collect()
+            for r in _assign(vecs, cents).collect()
         }
         b = {
             r.vid: (r.cid, r.sqd)
-            for r in _assign_hof(vecs, cents, "vec_id", "embedding").collect()
+            for r in _assign_hof(vecs, cents).collect()
         }
         assert set(a) == set(b), tag
         for k in a:

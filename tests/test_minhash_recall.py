@@ -164,7 +164,7 @@ def test_incremental_match_flags_planted_batch_dup(spark):
     )
     out = {
         r.batch_id: (r.corpus_id, r.jaccard)
-        for r in minhash_lsh_match_md5(batch, corpus, min_jaccard=0.5).collect()
+        for r in minhash_lsh_match_md5(batch, corpus).collect()
     }
     assert set(out) == {100}
     assert out[100] == (1, 1.0)  # ties break to the lowest corpus id

@@ -15,8 +15,9 @@ Option rule: each defaulted parameter of a package top-level function must
 be set by some call in the package, ``__spark_entry__.py``, ``bench.py``,
 ``scripts/``, ``perfbench/`` or ``tests/`` — by keyword, by a positional
 argument at or past its index, or by ``*args``/``**kwargs`` (which count as
-setting every parameter).  Calls resolve through import aliases and
-package re-exports.  A parameter no call sets has one value in use: it is
+setting every parameter).  An argument that is the parameter's own default
+literal sets nothing.  Calls resolve through import aliases and package
+re-exports.  A parameter no call sets has one value in use: it is
 a constant, and belongs in the body."""
 
 from __future__ import annotations
@@ -214,18 +215,32 @@ def _aliases(module: str, path: Path, tree: ast.Module, top_only: bool):
     return out
 
 
-def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None]]:
-    """(name, positional index or None for keyword-only) of each defaulted
-    parameter."""
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None, ast.expr]]:
+    """(name, positional index or None for keyword-only, default) of each
+    defaulted parameter."""
     positional = fn.args.posonlyargs + fn.args.args
     first = len(positional) - len(fn.args.defaults)
-    out = [(a.arg, i) for i, a in enumerate(positional) if i >= first]
+    out = [
+        (a.arg, i, d)
+        for i, (a, d) in enumerate(zip(positional[first:], fn.args.defaults),
+                                   first)
+    ]
     out += [
-        (a.arg, None)
+        (a.arg, None, d)
         for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
         if d is not None
     ]
     return out
+
+
+def _is_default(arg: ast.expr, default: ast.expr) -> bool:
+    """True when a call passes the parameter's own default literal, which
+    sets nothing."""
+    try:
+        a, d = ast.literal_eval(arg), ast.literal_eval(default)
+    except ValueError:
+        return False
+    return type(a) is type(d) and a == d
 
 
 def _dotted(node: ast.AST) -> list[str] | None:
@@ -282,16 +297,20 @@ def never_set_options() -> list[str]:
                 if any(isinstance(a, ast.Starred) for a in node.args) or any(
                     k.arg is None for k in node.keywords
                 ):
-                    set_params[target].update(p for p, _ in params)
+                    set_params[target].update(p for p, _, _ in params)
                     continue
-                set_params[target].update(k.arg for k in node.keywords)
-                set_params[target].update(
-                    p for p, i in params if i is not None and i < len(node.args)
-                )
+                passed = {k.arg: k.value for k in node.keywords}
+                for p, i, d in params:
+                    if i is not None and i < len(node.args):
+                        arg = node.args[i]
+                    else:
+                        arg = passed.get(p)
+                    if arg is not None and not _is_default(arg, d):
+                        set_params[target].add(p)
     return sorted(
         f"{target.removeprefix(PKG + '.')}.{p}"
         for target, fn in defs.items()
-        for p, _ in _defaulted(fn)
+        for p, _, _ in _defaulted(fn)
         if p not in set_params[target]
     )
 

@@ -56,7 +56,7 @@ def test_decode_golden(golden_media):
 def test_features_golden(golden_media):
     feats = {
         r.media_id: r.features
-        for r in byte_histogram_features(golden_media, bins=16).collect()
+        for r in byte_histogram_features(golden_media).collect()
     }
     # blob 1: bytes 0..230 step 10 -> bin k (width 16) gets bytes
     # [16k, 16k+16): exact expected histogram, normalized by 24
@@ -126,7 +126,7 @@ def test_codec_seam_edge_variants(spark):
             assert decoded[i].n_frames == n_frames, f"blob {i} frame count"
     # features: never crash; invalid/empty payloads yield the zero vector
     feats = {r.media_id: np.array(r.features)
-             for r in byte_histogram_features(media, bins=16).collect()}
+             for r in byte_histogram_features(media).collect()}
     assert feats[1].sum() == 0.0 and feats[6].sum() == 0.0
     assert feats[2].sum() == pytest.approx(1.0)  # 9 payload bytes histogrammed
     # frames: partial trailing frame dropped, invalid blobs skipped

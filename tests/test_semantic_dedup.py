@@ -27,7 +27,7 @@ def test_planted_family_recall(spark, sf_dir):
     planted twin lands across a cluster boundary (deterministic — assert
     exact recall 1.0, not a floor)."""
     corpus = _planted_embedding_corpus(spark, sf_dir)
-    pairs = semantic_dedup_pairs(corpus, k=8, iters=1, min_cosine=0.99)
+    pairs = semantic_dedup_pairs(corpus, k=8)
     got = {(r["id1"], r["id2"]) for r in pairs.collect()}
     planted = {(v, v + 100000) for v in range(50)}
     assert planted <= got
@@ -46,7 +46,7 @@ def test_pairs_carry_their_cluster(spark, sf_dir):
         r["vid"]: r["cid"]
         for r in kmeans_assign(corpus, k=8, iters=1).collect()
     }
-    for r in semantic_dedup_pairs(corpus, k=8, iters=1).collect():
+    for r in semantic_dedup_pairs(corpus, k=8).collect():
         assert assigned[r["id1"]] == r["cluster_id"]
         assert assigned[r["id2"]] == r["cluster_id"]
 
@@ -63,7 +63,7 @@ def test_family_transitive_closure(spark):
         (11, [0.0, -1.0]),
     ]
     vecs = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    pairs = semantic_dedup_pairs(vecs, k=2, iters=1, min_cosine=0.99)
+    pairs = semantic_dedup_pairs(vecs, k=2)
     decision = {
         r["vec_id"]: (r["cluster"], r["keep"])
         for r in dedup_clusters(vecs, pairs, id_col="vec_id").collect()

@@ -58,7 +58,6 @@ def ingest_run(spark, tmp_path_factory):
         "doc_id bigint, text string, gen bigint",
         base,
         corpus,
-        min_jaccard=0.5,
     )
     return corpus
 
@@ -100,7 +99,7 @@ def test_redelivery_is_idempotent(spark, ingest_run, admitted):
     before_bands, before_sh = _index_rows(spark, ingest_run)
     gen2 = spark.createDataFrame(GEN2_ROWS, DOC_SCHEMA)
     # redeliver the SECOND micro-batch (batch_id=1, which wrote b2)
-    admit_batch(spark, gen2, 1, ingest_run, min_jaccard=0.5)
+    admit_batch(spark, gen2, 1, ingest_run)
     rows = read_admitted(spark, ingest_run, DOC_SCHEMA).collect()
     assert {r.doc_id: r.gen for r in rows} == {1: 0, 11: 1, 21: 2}
     assert _index_rows(spark, ingest_run) == (before_bands, before_sh)
@@ -162,7 +161,7 @@ def test_short_docs_cannot_be_readmitted(spark, tmp_path_factory):
     ingest_stream_dedup(
         spark, updates + "/g*.parquet",
         "doc_id bigint, text string, gen bigint",
-        base, corpus, min_jaccard=0.5,
+        base, corpus,
     )
     rows = {
         r.doc_id: r.gen
@@ -199,7 +198,7 @@ def test_null_text_docs_dedupe_like_empty(spark, tmp_path_factory):
     ingest_stream_dedup(
         spark, updates + "/g*.parquet",
         "doc_id bigint, text string, gen bigint",
-        base, corpus, min_jaccard=0.5,
+        base, corpus,
     )
     rows = {
         r.doc_id: r.gen
@@ -247,7 +246,7 @@ def test_null_id_docs_are_never_admitted(spark, tmp_path_factory):
     ingest_stream_dedup(
         spark, updates + "/g*.parquet",
         "doc_id bigint, text string, gen bigint",
-        base, corpus, min_jaccard=0.5,
+        base, corpus,
     )
     rows = {
         r.doc_id: r.gen
@@ -255,7 +254,7 @@ def test_null_id_docs_are_never_admitted(spark, tmp_path_factory):
     }
     assert rows == {1: 0, 10: 1}
     # redelivery of the same batch admits nothing new (idempotent)
-    admit_batch(spark, batch, 0, corpus, min_jaccard=0.5)
+    admit_batch(spark, batch, 0, corpus)
     rows2 = {
         r.doc_id: r.gen
         for r in read_admitted(spark, corpus, DOC_SCHEMA).collect()
@@ -276,5 +275,5 @@ def test_failed_batch_releases_caches(spark, tmp_path):
     )
     before = len(caching._PINNED)
     with pytest.raises(Exception):
-        admit_batch(spark, batch, 0, work, min_jaccard=0.5)
+        admit_batch(spark, batch, 0, work)
     assert len(caching._PINNED) == before, "failure path leaked pinned frames"
